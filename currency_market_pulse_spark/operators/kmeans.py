@@ -1,40 +1,53 @@
-"""Distributed Lloyd's k-means over an embedding column — the
+"""Deterministic Lloyd's k-means over an embedding column — the
 centroid trainer the IVF coarse quantizer docstring promises
 (queries/ivf.py cites pyspark.ml KMeans for production; this is the
-DataFrame-only, engine-portable variant that a DuckDB oracle can
-replay step for step).
+engine-portable variant that a DuckDB oracle can replay step for
+step).
 
 Determinism contract (what makes it differential-testable):
 
-- seeds: the k vectors with the lexicographically smallest
-  md5('km|' || id) — portable hash order, no RNG, selected with
-  orderBy+limit (TakeOrdered, never a global sort materialization).
+- training set: the ``TRAIN_ROWS`` vectors with the lexicographically
+  smallest md5('km|' || id) — portable hash order, no RNG.
+- seeds: the first k rows of the training set, i.e. the k
+  hash-smallest vectors of the corpus.
 - assignment: nearest centroid by squared Euclidean distance ROUNDED
   to 6 decimals before the argmin; ties break to the lowest cell id.
   Rounding absorbs the ~1e-15 fold-order noise between engines.
-- update: per-cell per-dimension mean, rounded to 6 — so the NEXT
-  iteration's inputs are bitwise identical on both engines no matter
-  the partial-aggregation order.  Cells that lose all members drop
-  (deterministically, on both sides).
+- update: per-cell per-dimension mean over the training set, rounded
+  to 6 — so the NEXT iteration's inputs are bitwise identical on both
+  engines no matter the summation order.  Cells that lose all members
+  drop (deterministically, on both sides); surviving cells keep their
+  ids.
+- final assignment: every corpus vector against the trained
+  centroids, same distance rule.
 
-Scale design: centroids are a k-row DataFrame broadcast into the
-assignment join — the corpus never shuffles for assignment; the update
-is one explode (vec -> dim rows) + partial-aggregated mean per
-(cell, dim), i.e. the same cost shape as any wide aggregate.  Each
-iteration's centroid relation is localCheckpoint-ed (k rows) so the
-iterative lineage stays O(1)-deep (the components lesson,
-operators/components.py).  The only driver-side data is the k-row
-codebook itself, collected once per iteration into the BLAS kernel's
-task closure — broadcast-scale by construction (see
-assign_cells_blas for why a joined column was worse)."""
+Scale design (the FAISS posture): training collects a BOUNDED sample
+— ``orderBy(hash, id).limit(TRAIN_ROWS)`` plans as
+TakeOrderedAndProject, so at most TRAIN_ROWS vectors (32 MiB of
+float64 at dim 64) reach the driver — and runs every Lloyd iteration
+there in numpy; per-iteration Spark jobs cost more in scheduling than
+the arithmetic.  The corpus is then read ONCE by ``encode_blas``.  At
+every gated scale (sf1 = 20,000 vectors) the sample IS the corpus."""
 
 from __future__ import annotations
 
+import sys
+
+import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window, functions as F
 
 from currency_market_pulse_spark.functions.text import seeded_md5
 
+# The encode kernel calls ``nearest`` on the executors, whose Python
+# workers need not have this package on their path (a driver may
+# import it from any working directory): ship this module by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
 KMEANS_SEED_TAG = "km"
+
+#: rows the trainers collect (hash-smallest, see module docstring)
+TRAIN_ROWS = 65_536
 
 
 def _sq_dist(a, b):
@@ -70,14 +83,13 @@ def assign_cells(emb: DataFrame, centroids: DataFrame,
                  id_col: str = "vec_id",
                  vec_col: str = "embedding") -> DataFrame:
     """(id, cell, dist): nearest centroid per vector (broadcast join;
-    dist rounded to 6, ties to the lowest cell).
+    dist rounded to 6, ties to the lowest cell) — the Catalyst fold
+    twin of ``assign_cells_blas``, kept as its differential reference
+    (tests/test_kmeans.py).
 
     The argmin is a hash aggregate over lexicographic min(struct(dist,
-    cell)) — NOT a row_number window: the aggregate partially combines
-    map-side (k-fold less shuffle volume) and skips the per-partition
-    sort a window pays, which matters when assignment runs once per
-    Lloyd iteration.  struct ordering = (dist asc, cell asc), exactly
-    the window's tie rule."""
+    cell)); struct ordering = (dist asc, cell asc), exactly the
+    oracle's tie rule."""
     scored = (emb.select(F.col(id_col), F.col(vec_col))
               .crossJoin(F.broadcast(centroids))
               .withColumn("dist", F.round(
@@ -88,20 +100,130 @@ def assign_cells(emb: DataFrame, centroids: DataFrame,
                     F.col("_m.dist").alias("dist")))
 
 
-def update_centroids(emb: DataFrame, assigned: DataFrame,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
-    """(cell, centroid): per-cell per-dim mean, rounded to 6 and
-    re-packed in dimension order."""
-    dims = (emb.select(F.col(id_col), F.col(vec_col))
-            .join(assigned.select(id_col, "cell"), id_col)
-            .select("cell", F.posexplode(vec_col).alias("pos", "v")))
-    means = (dims.groupBy("cell", "pos")
-             .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("m")))
-    return (means.groupBy("cell")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"]).alias("centroid")))
+def train_sample(emb: DataFrame, id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> np.ndarray:
+    """The ``TRAIN_ROWS`` hash-smallest vectors as a float64 matrix in
+    hash order — one bounded collect (TakeOrderedAndProject)."""
+    h = seeded_md5(KMEANS_SEED_TAG, F.col(id_col).cast("string"))
+    rows = (emb.select(F.col(vec_col), F.col(id_col), h.alias("_h"))
+            .orderBy("_h", id_col).limit(TRAIN_ROWS).select(vec_col)
+            .collect())
+    return np.array([r[0] for r in rows], dtype=np.float64)
+
+
+def nearest(X: np.ndarray, C: np.ndarray):
+    """(round-6 squared distances n x k, argmin row per vector): all
+    distances in one |x|^2 + |c|^2 - 2XC^T matmul; numpy's argmin
+    returns the first minimum, so with cells ascending it IS the
+    tie-to-lowest-cell rule."""
+    d = np.round(np.square(X).sum(1)[:, None]
+                 + np.square(C).sum(1)[None, :] - 2.0 * (X @ C.T), 6)
+    return d, d.argmin(1)
+
+
+def lloyd(X: np.ndarray, k: int, n_iter: int):
+    """(cell ids, centroids) after ``n_iter`` Lloyd iterations over the
+    hash-ordered training matrix ``X`` (module docstring contract)."""
+    cells, C = np.arange(min(k, len(X)), dtype=np.int32), X[:k]
+    for _ in range(n_iter):
+        _, rows = nearest(X, C)
+        live, inv, counts = np.unique(rows, return_inverse=True,
+                                      return_counts=True)
+        sums = np.zeros((len(live), X.shape[1]))
+        np.add.at(sums, inv, X)
+        cells, C = cells[live], np.round(sums / counts[:, None], 6)
+    return cells, C
+
+
+def centroid_frame(spark, cells: np.ndarray, C: np.ndarray) -> DataFrame:
+    """(cell, centroid) relation of a driver-side codebook.  From pandas
+    so that, with Arrow on (session.py), it is a LocalRelation: a list
+    would plan as a Python-deserialized RDD that every scan re-runs."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame({"cell": cells, "centroid": C.tolist()}),
+        "cell int, centroid array<double>")
+
+
+def codebook(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of ``centroid_frame``: (cell ids ascending, matrix)."""
+    rows = sorted((r["cell"], list(r["centroid"]))
+                  for r in centroids.select("cell", "centroid").collect())
+    return (np.array([c for c, _ in rows], dtype=np.int32),
+            np.array([v for _, v in rows], dtype=np.float64))
+
+
+def encode_blas(emb: DataFrame, coarse=None, codebooks=(), sub_dim: int = 0,
+                id_col: str = "vec_id", vec_col: str = "embedding",
+                with_alt: bool = False) -> DataFrame:
+    """The one corpus pass of an IVF / PQ / IVF-PQ index: per Arrow
+    batch, (id[, cell, dist[, alt_dist]], c0..c{m-1}).
+
+    - ``coarse``: (cell ids, centroids) — nearest cell and its round-6
+      distance (``nearest``); ``with_alt`` adds ``alt_dist``, the min
+      distance to any OTHER cell (the silhouette's ``b`` term).
+    - ``codebooks``: m (code ids, codewords) pairs — code ``c{s}`` is
+      the nearest codeword to slice s (``sub_dim`` wide) of the
+      vector, or of its RESIDUAL against the coarse centroid when
+      ``coarse`` is given (IVF-PQ).
+
+    Codebooks ship in the TASK CLOSURE, not as a joined column: a
+    crossJoin against a packed codebook row repeats the k*dim array
+    PER ROW through Arrow (measured at sf10, k=800: ~400 KB x every
+    corpus row) — once per task is the pyspark.ml posture."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    fields = [T.StructField("vec_id", T.LongType())]
+    if coarse is not None:
+        fields += [T.StructField("cell", T.IntegerType()),
+                   T.StructField("dist", T.DoubleType())]
+        if with_alt:
+            fields.append(T.StructField("alt_dist", T.DoubleType()))
+    fields += [T.StructField(f"c{s}", T.IntegerType())
+               for s in range(len(codebooks))]
+    src = emb.select(F.col(id_col).alias("_id"),
+                     F.col(vec_col).alias("_vec"))
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.array(list(pdf["_vec"]), dtype=np.float64)
+            out = {"vec_id": pdf["_id"].to_numpy()}
+            if coarse is not None:
+                # cells can DROP during Lloyd: ids map matrix row -> cell
+                cell_ids, C = coarse
+                d, rows = nearest(X, C)
+                out["cell"] = cell_ids[rows]
+                out["dist"] = d[np.arange(len(d)), rows]
+                if with_alt:
+                    d[np.arange(len(d)), rows] = np.inf
+                    out["alt_dist"] = d.min(1)
+                X = X - C[rows]
+            for s, (code_ids, B) in enumerate(codebooks):
+                _, rows = nearest(X[:, s * sub_dim:(s + 1) * sub_dim], B)
+                out[f"c{s}"] = code_ids[rows]
+            yield pd.DataFrame(out)
+
+    out = src.mapInPandas(kernel, T.StructType(fields))
+    if id_col != "vec_id":
+        out = out.withColumnRenamed("vec_id", id_col)
+    return out
+
+
+def assign_cells_blas(emb: DataFrame, centroids: DataFrame,
+                      id_col: str = "vec_id",
+                      vec_col: str = "embedding",
+                      with_alt: bool = False) -> DataFrame:
+    """BLAS twin of ``assign_cells`` against a stored (cell, centroid)
+    relation: (id, cell, dist[, alt_dist]) via ``encode_blas``.  The
+    matmul form is n*k*dim flops instead of n*k interpreted folds; the
+    round-6 hand-off keeps it bitwise-aligned with the sequential-fold
+    oracle."""
+    return encode_blas(emb, codebook(centroids), id_col=id_col,
+                       vec_col=vec_col, with_alt=with_alt)
 
 
 def kmeans_fit(emb: DataFrame, k: int = 8, n_iter: int = 2,
@@ -112,26 +234,9 @@ def kmeans_fit(emb: DataFrame, k: int = 8, n_iter: int = 2,
     quantizer plus the corpus partition it induces, i.e. exactly the
     two relations an IVF index stores (queries/ivf.py
     sim_ivf_kmeans_topk probes them)."""
-    # EAGER localCheckpoints, measured deliberately: the lazy variant
-    # (components.py's trick) was tried and is ~2.5x SLOWER here —
-    # each of the chain's downstream branches (assignment, update,
-    # consumers) races to materialize the un-checkpointed centroid
-    # RDD separately under AQE, recomputing the prefix; a k-row eager
-    # checkpoint per hand-off is a sub-0.3s job that every later
-    # stage then reads for free (sf0.1: eager 2.9s vs lazy 7.1s
-    # end-to-end train).
-    # Assignment runs through the BLAS kernel (assign_cells_blas, the
-    # matmul Lloyd inner loop — n*k*dim flops instead of n*k
-    # interpreted folds; required at the corpus-adaptive k).  The
-    # Catalyst fold twin (assign_cells) stays as the differential
-    # reference, equality pinned by tests/test_kmeans.py.
-    centroids = seed_centroids(emb, k, id_col, vec_col).localCheckpoint()
-    assigned = assign_cells_blas(emb, centroids, id_col, vec_col)
-    for _ in range(n_iter):
-        centroids = update_centroids(
-            emb, assigned, id_col, vec_col).localCheckpoint()
-        assigned = assign_cells_blas(emb, centroids, id_col, vec_col)
-    return centroids, assigned
+    coarse = lloyd(train_sample(emb, id_col, vec_col), k, n_iter)
+    return (centroid_frame(emb.sparkSession, *coarse),
+            encode_blas(emb, coarse, id_col=id_col, vec_col=vec_col))
 
 
 def kmeans_assign(emb: DataFrame, k: int = 8, n_iter: int = 2,
@@ -140,75 +245,3 @@ def kmeans_assign(emb: DataFrame, k: int = 8, n_iter: int = 2,
     """Final (id, cell, dist) after ``n_iter`` Lloyd iterations from
     the deterministic seeds."""
     return kmeans_fit(emb, k, n_iter, id_col, vec_col)[1]
-
-
-def assign_cells_blas(emb: DataFrame, centroids: DataFrame,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      with_alt: bool = False) -> DataFrame:
-    """BLAS twin of ``assign_cells``: per Arrow batch, all n x k
-    squared distances in one |x|^2 + |c|^2 - 2XC^T matmul, rounded to
-    6 and argmin'd with the same tie-to-lowest-cell rule (numpy argmin
-    returns the first minimum; cells are sorted ascending).
-
-    Why it exists: the Catalyst crossJoin+fold assignment is n*k
-    interpreted 64-dim lambda folds — at the corpus-adaptive k
-    (queries/ivf.py coarse_k) that made TRAINING the bottleneck
-    (sf1, k=80: 40s vs 8.7s at k=8).  The matmul form is the standard
-    Lloyd inner loop; the round-6 hand-off keeps it bitwise-aligned
-    with the sequential-fold oracle exactly as the other proven BLAS
-    twins (cell_pairs_blas, topk_numpy).
-
-    ``with_alt``: also emit ``alt_dist`` = min rounded distance to any
-    OTHER cell — the silhouette's ``b`` term for free, replacing a
-    second n x k relation."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    fields = [T.StructField("vec_id", T.LongType()),
-              T.StructField("cell", T.IntegerType()),
-              T.StructField("dist", T.DoubleType())]
-    if with_alt:
-        fields.append(T.StructField("alt_dist", T.DoubleType()))
-    out_schema = T.StructType(fields)
-
-    # The codebook ships in the TASK CLOSURE, not as a joined column:
-    # a crossJoin against the packed 1-row relation repeats the k*dim
-    # array PER ROW through Arrow (measured at sf10, k=800: ~400 KB x
-    # every corpus row — the serialization, not the math, became the
-    # bottleneck).  Collecting k rows at plan-build time is the same
-    # broadcast-scale data the join hint would ship, fetched once per
-    # task instead of once per row — the pyspark.ml posture.
-    rows = sorted((r["cell"], list(r["centroid"]))
-                  for r in centroids.select("cell", "centroid").collect())
-    cell_ids = np.array([c for c, _ in rows], dtype=np.int32)
-    C = np.array([v for _, v in rows], dtype=np.float64)
-    src = emb.select(F.col(id_col).alias("_id"),
-                     F.col(vec_col).alias("_vec"))
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # cells can DROP during Lloyd (non-contiguous ids);
-            # cell_ids maps matrix row -> actual id.  Rows are
-            # cell-ascending, so numpy's first-minimum argmin IS
-            # tie-to-lowest-cell.
-            X = np.array(list(pdf["_vec"]), dtype=np.float64)
-            d = (np.square(X).sum(1)[:, None] + np.square(C).sum(1)[None, :]
-                 - 2.0 * (X @ C.T))
-            d = np.round(d, 6)
-            rows = d.argmin(1)
-            out = {"vec_id": pdf["_id"].to_numpy(),
-                   "cell": cell_ids[rows],
-                   "dist": d[np.arange(len(d)), rows]}
-            if with_alt:
-                d[np.arange(len(d)), rows] = np.inf
-                out["alt_dist"] = d.min(1)
-            yield pd.DataFrame(out)
-
-    out = src.mapInPandas(kernel, out_schema)
-    if id_col != "vec_id":
-        out = out.withColumnRenamed("vec_id", id_col)
-    return out

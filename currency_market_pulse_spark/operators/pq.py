@@ -15,30 +15,46 @@ Determinism contract (differential-testable like operators/kmeans.py,
 whose trainer this reuses wholesale):
 
 - each subspace trains an independent Lloyd k-means on the sliced
-  sub-vectors — same md5-ordered seed rows for every subspace (the
-  hash covers only vec_id), same round-6 distance/mean discipline;
+  sub-vectors of the same bounded training sample (the TRAIN_ROWS
+  hash-smallest rows — the hash covers only vec_id, so every subspace
+  sees the same rows and the same seeds), same round-6 distance/mean
+  discipline;
 - codes: per-subspace nearest-centroid cell, ties to the lowest cell;
 - ADC distance: round-6 per-subspace table entries, summed left to
   right, the sum rounded to 6 — identical fold on both engines.
 
-Scale shape: training = m independent k-means (broadcast assignment,
-partial-agg update — nothing new); encoding = ONE broadcast join per
-subspace fused into a scan of the corpus (the codebooks are m*k rows
-total); search = query-local table build (m*k entries, broadcast) +
-a scan of the CODES relation (4 ints/row, not 256 bytes/row) with
-m lookups per row.  The corpus's full-precision vectors are never
-read at search time — that is the entire point."""
+Scale shape: training = one bounded collect of at most TRAIN_ROWS
+vectors (operators/kmeans.py train_sample) and m small numpy Lloyd
+chains on the driver; encoding = ONE ``encode_blas`` pass over the
+corpus with the m*k-row codebooks in the task closure (under IVF-PQ
+the same pass also assigns the coarse cell and forms the residual);
+search = query-local table build (m*k entries, broadcast) + a scan of
+the CODES relation (4 ints/row, not 256 bytes/row) with m lookups per
+row.  The corpus's full-precision vectors are never read at search
+time — that is the entire point."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
 
-from currency_market_pulse_spark.operators.kmeans import _sq_dist, kmeans_fit
+from currency_market_pulse_spark.operators.kmeans import (
+    _sq_dist, centroid_frame, codebook, encode_blas, lloyd, nearest,
+    train_sample,
+)
 
 PQ_M = 4          #: subspaces
 PQ_SUB_DIM = 16   #: dims per subspace (m * sub_dim = embedding dim)
 PQ_K = 8          #: centroids per subspace codebook
 PQ_ITER = 1       #: Lloyd iterations per subspace
+
+
+def _train_codebooks(X, m: int, sub_dim: int, k: int, n_iter: int):
+    """m (code ids, codewords) pairs: one Lloyd chain per sub_dim-wide
+    slice of the hash-ordered training matrix."""
+    return [lloyd(X[:, s * sub_dim:(s + 1) * sub_dim], k, n_iter)
+            for s in range(m)]
 
 
 def pq_fit(emb: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
@@ -51,29 +67,10 @@ def pq_fit(emb: DataFrame, m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
     centroid) relation for subspace ``s`` (k rows, centroid of length
     ``sub_dim``); ``codes`` is (id, c0..c{m-1}) — the compressed
     corpus."""
-    # The m subspace chains are independent; train them CONCURRENTLY
-    # (thread-per-subspace job submission — the standard Spark pattern
-    # for independent jobs).  Each chain's eager k-row checkpoints are
-    # sub-second scheduling-bound jobs, so serial submission made the
-    # build wall-clock ~m x the chain latency for no reason; the
-    # cluster runs the tiny jobs side by side.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def train(s: int):
-        sub = emb.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias(vec_col))
-        return kmeans_fit(sub, k, n_iter, id_col, vec_col)
-
-    with ThreadPoolExecutor(max_workers=m) as pool:
-        trained = list(pool.map(train, range(m)))
-    codebooks: list[DataFrame] = []
-    codes: DataFrame | None = None
-    for s, (cents, assigned) in enumerate(trained):
-        codebooks.append(cents)
-        part = assigned.select(F.col(id_col), F.col("cell").alias(f"c{s}"))
-        codes = part if codes is None else codes.join(part, id_col)
-    return codebooks, codes
+    books = _train_codebooks(train_sample(emb, id_col, vec_col),
+                             m, sub_dim, k, n_iter)
+    return ([centroid_frame(emb.sparkSession, *b) for b in books],
+            encode_blas(emb, None, books, sub_dim, id_col, vec_col))
 
 
 def pq_encode(emb: DataFrame, codebooks: list[DataFrame],
@@ -81,37 +78,21 @@ def pq_encode(emb: DataFrame, codebooks: list[DataFrame],
               id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
     """Encode vectors against FROZEN codebooks: (id, c0..c{m-1}),
-    nearest codeword per subspace (BLAS argmin, ties to lowest cell —
-    identical to the training-time assignment, so an append batch's
-    codes are bit-equal to what a full re-encode would produce).
-
-    This is the maintenance path an IVF-PQ deployment runs on ingest
-    (streaming/ivf_stream.py): training is occasional, encoding is
-    continuous.  Cost: m broadcast codebooks (k rows each) against one
-    scan of the batch — no shuffle, no training."""
-    from currency_market_pulse_spark.operators.kmeans import (
-        assign_cells_blas,
-    )
-
-    codes: DataFrame | None = None
-    for s in range(m):
-        sub = emb.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias(vec_col))
-        part = (assign_cells_blas(sub, codebooks[s], id_col, vec_col)
-                .select(F.col(id_col), F.col("cell").alias(f"c{s}")))
-        codes = part if codes is None else codes.join(part, id_col)
-    return codes
+    nearest codeword per subspace — the ``encode_blas`` kernel pq_fit
+    encodes with, so an append batch's codes are bit-equal to what a
+    full re-encode would produce.  One scan of the batch; no shuffle,
+    no training."""
+    return encode_blas(emb, None, [codebook(cb) for cb in codebooks[:m]],
+                       sub_dim, id_col, vec_col)
 
 
 def residuals(emb: DataFrame, assigned: DataFrame, centroids: DataFrame,
               id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
     """(id, cell, residual-as-vec_col): vector minus its assigned
-    coarse centroid — the relation PQ encodes under IVF-PQ (residuals
-    concentrate near zero; see ivfpq_topk step 2).  Broadcast join on
-    the k-row centroid relation; shared by the batch ivfpq_fit and the
-    streaming encode path."""
+    coarse centroid — the relation PQ encodes under IVF-PQ.  The
+    relational reference for the residual step ``encode_blas`` fuses
+    (tests/test_ivfpq_stream.py re-encodes through it)."""
     return (emb.join(assigned.select(id_col, "cell"), id_col)
             .join(F.broadcast(centroids), "cell")
             .select(F.col(id_col), F.col("cell"),
@@ -124,23 +105,25 @@ def ivfpq_fit(emb: DataFrame,
               coarse_k: int = 8, coarse_iter: int = 2,
               m: int = PQ_M, sub_dim: int = PQ_SUB_DIM,
               k: int = PQ_K, n_iter: int = PQ_ITER,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              coarse: tuple[DataFrame, DataFrame] | None = None
+              id_col: str = "vec_id", vec_col: str = "embedding"
               ) -> tuple[DataFrame, list[DataFrame], DataFrame]:
     """Build the IVF-PQ index: ``(coarse_centroids, codebooks,
-    members)`` where members = (id, c0..c{m-1}, cell) — every vector's
-    RESIDUAL PQ code plus its coarse cell.  This is the relation an
-    IVF-PQ deployment persists; searches (``ivfpq_topk``) only read
-    it.  ``coarse``: optional pretrained (centroids, assigned)."""
-    cents_c, assigned_c = (coarse if coarse is not None
-                           else kmeans_fit(emb, coarse_k, coarse_iter,
-                                           id_col, vec_col))
-    res = residuals(emb, assigned_c, cents_c, id_col, vec_col)
-    codebooks, codes = pq_fit(
-        res.select(id_col, vec_col),
-        m, sub_dim, k, n_iter, id_col, vec_col)
-    members = codes.join(assigned_c.select(id_col, "cell"), id_col)
-    return cents_c, codebooks, members
+    members)`` where members = (id, cell, dist, c0..c{m-1}) — every
+    vector's coarse cell and distance plus its RESIDUAL PQ code, from
+    one ``encode_blas`` pass.  This is the relation an IVF-PQ
+    deployment persists; searches (``ivfpq_topk``) only read it.
+
+    Both quantizers train on the driver from the one bounded sample:
+    the coarse Lloyd chain on the vectors, then the m subspace chains
+    on the sample's residuals against its nearest trained centroid."""
+    X = train_sample(emb, id_col, vec_col)
+    coarse = lloyd(X, coarse_k, coarse_iter)
+    _, rows = nearest(X, coarse[1])
+    books = _train_codebooks(X - coarse[1][rows], m, sub_dim, k, n_iter)
+    spark = emb.sparkSession
+    return (centroid_frame(spark, *coarse),
+            [centroid_frame(spark, *b) for b in books],
+            encode_blas(emb, coarse, books, sub_dim, id_col, vec_col))
 
 
 def ivfpq_topk(emb: DataFrame, query_pred, k_neighbors: int = 3,
@@ -150,13 +133,10 @@ def ivfpq_topk(emb: DataFrame, query_pred, k_neighbors: int = 3,
                k: int = PQ_K, n_iter: int = PQ_ITER,
                id_col: str = "vec_id",
                vec_col: str = "embedding",
-               coarse: tuple[DataFrame, DataFrame] | None = None,
                index: tuple[DataFrame, list[DataFrame], DataFrame]
                | None = None) -> DataFrame:
     """IVF-PQ: the production ANN composition (coarse quantizer prunes
     candidates, residual PQ compresses them, ADC scores codes).
-    ``coarse``: optional pretrained (centroids, assigned) pair — e.g.
-    the session-shared quantizer — to skip retraining step 1.
 
     1. train the coarse quantizer (Lloyd k-means, operators/kmeans.py)
        and assign every vector to a cell;
@@ -181,7 +161,7 @@ def ivfpq_topk(emb: DataFrame, query_pred, k_neighbors: int = 3,
     cents_c, codebooks, members = (
         index if index is not None
         else ivfpq_fit(emb, coarse_k, coarse_iter, m, sub_dim, k,
-                       n_iter, id_col, vec_col, coarse=coarse))
+                       n_iter, id_col, vec_col))
 
     q = emb.filter(query_pred).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
@@ -195,55 +175,8 @@ def ivfpq_topk(emb: DataFrame, query_pred, k_neighbors: int = 3,
                      F.zip_with(F.col("_qv"), F.col("centroid"),
                                 lambda x, y: x.cast("double") - y)
                      .alias("_qres")))
-    # r17 (guide §2.4/§3): ADC as ONE broadcast distance-table lookup
-    # instead of m per-subspace broadcast joins.  The old shape built m
-    # separate broadcast relations, each re-evaluating the probe
-    # subtree (m broadcast-build jobs, m BroadcastHashJoins over the
-    # members relation — 4x the plan for the same arithmetic).  This is
-    # also the textbook IVF-PQ search shape: per (query, probed cell),
-    # ONE m*k-entry lookup table of subspace distances, broadcast once;
-    # each member row then scores with m map lookups — the members
-    # relation (the corpus-sized side) is traversed by exactly one
-    # join.  Bit-identical: each per-subspace distance is the same
-    # round(_sq_dist(slice, centroid), 6) as before, and the final sum
-    # adds them in the same s = 0..m-1 order.
-    cb_all = codebooks[0].select(
-        F.lit(0).alias("_s"), F.col("cell").alias("_code"), "centroid")
-    for s in range(1, m):
-        cb_all = cb_all.unionAll(codebooks[s].select(
-            F.lit(s).alias("_s"), F.col("cell").alias("_code"),
-            "centroid"))
-    qslices = probe.select(
-        "query_id", "cell",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).alias("_s"),
-                     F.slice("_qres", s * sub_dim + 1, sub_dim)
-                      .alias("_qs"))
-            for s in range(m)])).alias("_sub")
-    ).select("query_id", "cell", F.col("_sub._s").alias("_s"),
-             F.col("_sub._qs").alias("_qs"))
-    qtab = (qslices.join(F.broadcast(cb_all), "_s")
-            .select("query_id", "cell",
-                    (F.col("_s") * k + F.col("_code")).cast("int")
-                     .alias("_key"),
-                    F.round(_sq_dist(F.col("_qs"), F.col("centroid")), 6)
-                     .alias("_d"))
-            .groupBy("query_id", "cell")
-            .agg(F.map_from_entries(F.collect_list(
-                F.struct(F.col("_key"), F.col("_d")))).alias("_tab")))
-    adc = members.join(F.broadcast(qtab), "cell")
-    total = F.element_at("_tab", F.col("c0").cast("int"))
-    for s in range(1, m):
-        total = total + F.element_at(
-            "_tab", (F.lit(s * k) + F.col(f"c{s}")).cast("int"))
-    out = (adc.filter(F.col(id_col) != F.col("query_id"))
-           .select("query_id", F.col(id_col).alias("neighbor_id"),
-                   F.round(total, 6).alias("adc_dist")))
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    # r17: no terminal ORDER BY (presentation only; see
-    # operators/similarity.py topk_bruteforce)
-    return (out.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k_neighbors))
+    return _adc_topk(members, probe, "_qres", codebooks, m, sub_dim, k,
+                     k_neighbors, id_col, cell=("cell",))
 
 
 def pq_adc_topk(emb: DataFrame, query_pred, k_neighbors: int = 3,
@@ -258,43 +191,54 @@ def pq_adc_topk(emb: DataFrame, query_pred, k_neighbors: int = 3,
     codebooks, codes = pq_fit(emb, m, sub_dim, k, n_iter, id_col, vec_col)
     q = emb.filter(query_pred).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    # r17: same one-broadcast distance-table ADC as ivfpq_topk (see
-    # there) — per query, one m*k-entry lookup map; the code relation
-    # joins once instead of m times.  Bit-identical distances and
-    # summation order.
-    cb_all = codebooks[0].select(
-        F.lit(0).alias("_s"), F.col("cell").alias("_code"), "centroid")
-    for s in range(1, m):
-        cb_all = cb_all.unionAll(codebooks[s].select(
-            F.lit(s).alias("_s"), F.col("cell").alias("_code"),
-            "centroid"))
-    qslices = q.select(
-        "query_id",
+    return _adc_topk(codes, q, "_qv", codebooks, m, sub_dim, k,
+                     k_neighbors, id_col)
+
+
+def _adc_topk(codes: DataFrame, queries: DataFrame, qcol: str,
+              codebooks: list[DataFrame], m: int, sub_dim: int, k: int,
+              k_neighbors: int, id_col: str, cell=()) -> DataFrame:
+    """ADC top-k of ``queries`` (query_id, *cell, qcol) over ``codes``
+    (id, *cell, c0..c{m-1}): (query_id, neighbor_id, adc_dist, rn).
+
+    Per query (and probed cell) ONE m*k-entry lookup table of round-6
+    subspace distances, broadcast once; each code row then scores with
+    m map lookups summed in s = 0..m-1 order and rounded to 6.  The
+    corpus-sized side is traversed by exactly one join, where m
+    per-subspace broadcast joins would each re-evaluate the query
+    subtree (r17)."""
+    keys = ["query_id", *cell]
+    cb_all = reduce(DataFrame.unionAll, [
+        cb.select(F.lit(s).alias("_s"), F.col("cell").alias("_code"),
+                  "centroid") for s, cb in enumerate(codebooks[:m])])
+    qslices = queries.select(
+        *keys,
         F.explode(F.array(*[
             F.struct(F.lit(s).alias("_s"),
-                     F.slice("_qv", s * sub_dim + 1, sub_dim)
-                      .alias("_qs"))
+                     F.slice(qcol, s * sub_dim + 1, sub_dim).alias("_qs"))
             for s in range(m)])).alias("_sub")
-    ).select("query_id", F.col("_sub._s").alias("_s"),
+    ).select(*keys, F.col("_sub._s").alias("_s"),
              F.col("_sub._qs").alias("_qs"))
     qtab = (qslices.join(F.broadcast(cb_all), "_s")
-            .select("query_id",
+            .select(*keys,
                     (F.col("_s") * k + F.col("_code")).cast("int")
                      .alias("_key"),
                     F.round(_sq_dist(F.col("_qs"), F.col("centroid")), 6)
                      .alias("_d"))
-            .groupBy("query_id")
+            .groupBy(*keys)
             .agg(F.map_from_entries(F.collect_list(
                 F.struct(F.col("_key"), F.col("_d")))).alias("_tab")))
-    adc = codes.crossJoin(F.broadcast(qtab))
+    adc = (codes.join(F.broadcast(qtab), list(cell)) if cell
+           else codes.crossJoin(F.broadcast(qtab)))
     total = F.element_at("_tab", F.col("c0").cast("int"))
     for s in range(1, m):
         total = total + F.element_at(
             "_tab", (F.lit(s * k) + F.col(f"c{s}")).cast("int"))
-    scored = (adc.filter(F.col(id_col) != F.col("query_id"))
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
-                      F.round(total, 6).alias("adc_dist")))
+    out = (adc.filter(F.col(id_col) != F.col("query_id"))
+           .select("query_id", F.col(id_col).alias("neighbor_id"),
+                   F.round(total, 6).alias("adc_dist")))
     w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    # r17: no terminal ORDER BY (presentation only)
-    return (scored.withColumn("rn", F.row_number().over(w))
+    # no terminal ORDER BY (presentation only; see
+    # operators/similarity.py topk_bruteforce)
+    return (out.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k_neighbors))

@@ -14,8 +14,8 @@ geometry it prunes.
 
 Pipeline (every stage an existing engine operator):
 
-1. train: ``kmeans_fit`` (operators/kmeans.py) — deterministic Lloyd,
-   broadcast assignment, no driver data dependency.
+1. train: ``kmeans_fit`` (operators/kmeans.py) — deterministic Lloyd
+   on a bounded driver-side sample, one BLAS assignment pass.
 2. candidate pairs: self-join ON the cell id (shuffle key = cell),
    ``id_a < id_b`` dedup, sequential-fold cosine rounded to 6.
 3. prune rule: DROP every vector that has an in-cell near-duplicate

@@ -3,10 +3,16 @@ structures a production deployment builds ONCE, before queries run.
 
 The engine keeps two kinds of state per (session, sf_dir):
 
-- **trained indexes** — the corpus-adaptive coarse quantizer (Lloyd
-  chain) and the IVF-PQ codebooks/codes (queries/ivf.py
-  ``_shared_coarse`` / ``_shared_ivfpq``).  These are the relations an
-  ANN deployment persists offline (FAISS trains its quantizer before
+- **trained indexes** — the corpus-adaptive coarse quantizer and the
+  IVF-PQ codebooks/codes (queries/ivf.py ``_shared_coarse`` /
+  ``_shared_ivfpq``).  Both quantizers train on the driver from one
+  bounded sample (at most ``TRAIN_ROWS`` hash-smallest vectors,
+  operators/kmeans.py — the whole corpus at every gated scale), and
+  one encode pass over the corpus yields the single persisted
+  (id, cell, dist, c0..c3) relation both handles project.  So the
+  ``coarse_quantizer`` timing carries the whole index build and
+  ``ivfpq_index`` is a cache hit.  These are the relations an ANN
+  deployment persists offline (FAISS trains its quantizer before
   serving; an IVF index on 100 TB of embeddings is a batch job, not a
   per-query side effect).
 - **shared scan relations** — the dedup family's token pass and its
@@ -45,7 +51,7 @@ def prepare_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         fn()
         times[name] = round(time.time() - t0, 3)
 
-    # trained ANN structures (centroids + assignment, then PQ codes)
+    # trained ANN index: one sample, one encode pass (see docstring)
     _timed("coarse_quantizer", lambda: qi._shared_coarse(spark, sf_dir))
     _timed("ivfpq_index", lambda: qi._shared_ivfpq(spark, sf_dir))
     # dedup family: token pass + persisted derived candidate relations

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from currency_market_pulse_spark.functions.vectors import (
     ORACLE_EMB_CTE, cosine, dot, norm, oracle_cosine_sql,
 )
+from currency_market_pulse_spark.operators.kmeans import TRAIN_ROWS
 from currency_market_pulse_spark.queries.registry import extra_query, query
 from currency_market_pulse_spark.sources.catalog import load_table
 
@@ -147,26 +148,28 @@ def _coarse_k_sql(emb: str = "emb") -> str:
     return (f"(SELECT greatest({KMEANS_K}, CAST(ceil(count(*) / "
             f"{COARSE_CELL_TARGET}.0) AS BIGINT)) FROM {emb})")
 
-# Session-shared trained coarse quantizer (the queries/dedup.py corpus
-# cache pattern): five query families consume the SAME corpus-adaptive
-# (k = coarse_k(n), 2-iter) Lloyd chain over the same embeddings table — k-means cells, the
-# silhouette gate, trained-IVF search, IVF-PQ's coarse stage, SemDeDup
-# and the registered cell-bounded embedding dedup.  Training it once
-# per (session, sf_dir) and persisting the two relations an IVF index
-# actually stores — centroids (k rows) and the assignment
-# (id, cell, dist — 3 narrow columns, the index's posting-list key) —
-# is exactly what a production deployment does: the quantizer is
-# built offline once, not retrained per query.
+# Session-shared trained IVF-PQ index (the queries/dedup.py corpus
+# cache pattern): six query families consume the SAME corpus-adaptive
+# (k = coarse_k(n), 2-iter) coarse quantizer over the same embeddings
+# table — k-means cells, the silhouette gate, trained-IVF search,
+# IVF-PQ, SemDeDup and the registered cell-bounded embedding dedup.
+# Training it once per (session, sf_dir) and persisting the ONE
+# relation the index stores — (id, cell, dist, c0..c3) from
+# operators/pq.py ivfpq_fit's single encode pass — is exactly what a
+# production deployment does: the quantizers are built offline once,
+# not retrained per query.  The coarse assignment and the IVF-PQ
+# members are projections of it.
 _COARSE_CACHE: "OrderedDict[tuple[str, str], dict]" = None  # type: ignore
 
 
-def _shared_coarse(spark: SparkSession, sf_dir: str):
-    """(centroids, assigned) for the session-shared trained quantizer,
-    both persisted; assigned is materialized on first use."""
+def _shared_index(spark: SparkSession, sf_dir: str) -> dict:
+    """{"centroids", "codebooks", "encoded"} for ``sf_dir``: centroids
+    and codebooks are local relations, ``encoded`` is persisted and
+    materialized on first use."""
     global _COARSE_CACHE
     from collections import OrderedDict
 
-    from currency_market_pulse_spark.operators.kmeans import kmeans_fit
+    from currency_market_pulse_spark.operators.pq import ivfpq_fit
 
     if _COARSE_CACHE is None:
         _COARSE_CACHE = OrderedDict()
@@ -175,58 +178,52 @@ def _shared_coarse(spark: SparkSession, sf_dir: str):
     if entry is None:
         while len(_COARSE_CACHE) >= 4:
             _, old = _COARSE_CACHE.popitem(last=False)
-            # unpersist exactly the DataFrames we persisted; tuples
-            # (the ivfpq index handle) hold only localCheckpointed or
-            # already-listed relations
-            for v in old.values():
-                if isinstance(v, DataFrame):
-                    v.unpersist(blocking=False)
+            old["encoded"].unpersist(blocking=False)
         emb = load_table(spark, sf_dir, "embeddings")
         k = coarse_k(emb.count())   # one count at index-BUILD time
+        cents, codebooks, encoded = ivfpq_fit(emb, k, KMEANS_ITER)
         # compressed parquet makes the corpus 1-2 input splits even at
-        # sf1 (the queries/dedup.py corpus-cache lesson): repartition
-        # so the per-iteration BLAS assignment and mean update use the
-        # full executor pool — the shuffle is corpus rows, trivial
-        # next to the train it parallelizes.
-        emb = emb.repartition(spark.sparkContext.defaultParallelism)
-        cents, assigned = kmeans_fit(emb, k, KMEANS_ITER)
-        assigned = assigned.persist()
-        assigned.count()   # materialize once; every consumer reuses
-        entry = {"centroids": cents, "assigned": assigned}
+        # sf1 (the queries/dedup.py corpus-cache lesson): spread the
+        # persisted index so every search over it uses the full
+        # executor pool.  Spreading the narrow encoded rows, not the
+        # vectors, keeps the sample's TakeOrdered free of a shuffle.
+        encoded = encoded.repartition(
+            spark.sparkContext.defaultParallelism).persist()
+        encoded.count()   # materialize once; every consumer reuses
+        entry = {"centroids": cents, "codebooks": codebooks,
+                 "encoded": encoded}
         _COARSE_CACHE[key] = entry
     else:
         _COARSE_CACHE.move_to_end(key)
-    return entry["centroids"], entry["assigned"]
+    return entry
+
+
+def _shared_coarse(spark: SparkSession, sf_dir: str):
+    """(centroids, assigned) of the session-shared coarse quantizer;
+    assigned = (vec_id, cell, dist), a projection of the persisted
+    index relation."""
+    entry = _shared_index(spark, sf_dir)
+    return (entry["centroids"],
+            entry["encoded"].select("vec_id", "cell", "dist"))
 
 
 def _shared_ivfpq(spark: SparkSession, sf_dir: str):
-    """Session-shared IVF-PQ index over the shared coarse quantizer:
-    (coarse_centroids, codebooks, members) with the members relation —
-    the (id, c0..c3, cell) codes an IVF-PQ deployment persists —
-    cached and materialized once.  Codebooks are m*k-row checkpointed
-    relations already; members is 6 small ints per corpus row."""
-    from currency_market_pulse_spark.operators.pq import ivfpq_fit
-
-    cents, assigned = _shared_coarse(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    entry = _COARSE_CACHE[key]
-    if "ivfpq" not in entry:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cc, codebooks, members = ivfpq_fit(emb, coarse=(cents, assigned))
-        members = members.persist()
-        members.count()
-        entry["ivfpq"] = (cc, codebooks, members)
-        # the persisted members relation is listed under its own key
-        # so the eviction loop (isinstance DataFrame) finds it
-        entry["ivfpq_members"] = members
-    return entry["ivfpq"]
+    """Session-shared IVF-PQ index: (coarse_centroids, codebooks,
+    members), members = the persisted (id, cell, dist, c0..c3)
+    relation itself."""
+    entry = _shared_index(spark, sf_dir)
+    return entry["centroids"], entry["codebooks"], entry["encoded"]
 
 
 def _kmeans_ctes(k: int | str = KMEANS_K, n_iter: int = KMEANS_ITER,
-                 dim: int = _DIM, emb: str = "emb", sfx: str = "") -> str:
+                 dim: int = _DIM, emb: str = "emb", sfx: str = "",
+                 train_rows: int = TRAIN_ROWS) -> str:
     """The Lloyd-iteration CTE chain (assumes the ``emb``-named CTE in
-    scope): hash-ordered seeds, per-iteration (round-6 distance argmin
-    -> round-6 per-dim means).  Rounding at every hand-off keeps both
+    scope): the ``train_rows`` hash-smallest rows as the training set
+    (operators/kmeans.py train_sample), seeds = its first k rows,
+    per-iteration (round-6 distance argmin -> round-6 per-dim means)
+    over the training set, then the final assignment ``a{n_iter}``
+    over all of ``emb``.  Rounding at every hand-off keeps both
     engines' fold-order noise below the comparison threshold, so the
     iterations stay bitwise-aligned.  Shared by the trainer histogram
     query, the trained-IVF search oracle, the SemDeDup oracle, and —
@@ -236,28 +233,31 @@ def _kmeans_ctes(k: int | str = KMEANS_K, n_iter: int = KMEANS_ITER,
             "i -> (e.embedding[i] - c.centroid[i]) * "
             "(e.embedding[i] - c.centroid[i])), 'sum'), 6)"
             ).format(n=dim + 1)
+    train = f"emb_train{sfx}"
     parts = [f"""
-s0{sfx} AS MATERIALIZED (SELECT vec_id, embedding,
+{train} AS MATERIALIZED (SELECT vec_id, embedding,
               md5('km|' || CAST(vec_id AS VARCHAR)) AS h
-       FROM {emb} ORDER BY h, vec_id LIMIT {k}),
+       FROM {emb} ORDER BY h, vec_id LIMIT {train_rows}),
+s0{sfx} AS MATERIALIZED (SELECT * FROM {train} ORDER BY h, vec_id LIMIT {k}),
 cent0{sfx} AS MATERIALIZED (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS cell,
                  embedding AS centroid
           FROM s0{sfx})"""]
     for i in range(n_iter + 1):
+        src = emb if i == n_iter else train
         parts.append(f"""
 a{i}{sfx} AS MATERIALIZED (SELECT vec_id, cell, dist FROM (
   SELECT vec_id, cell, dist,
          row_number() OVER (PARTITION BY vec_id
                             ORDER BY dist, cell) AS rn
   FROM (SELECT e.vec_id, c.cell, {dist} AS dist
-        FROM {emb} e CROSS JOIN cent{i}{sfx} c) d) t
+        FROM {src} e CROSS JOIN cent{i}{sfx} c) d) t
  WHERE rn = 1)""")
         if i < n_iter:
             parts.append(f"""
 cent{i + 1}{sfx} AS MATERIALIZED (
   SELECT cell, list(m ORDER BY pos) AS centroid FROM (
     SELECT a.cell, d.pos, round(avg(e.embedding[d.pos]), 6) AS m
-    FROM a{i}{sfx} a JOIN {emb} e USING (vec_id),
+    FROM a{i}{sfx} a JOIN {train} e USING (vec_id),
          (SELECT unnest(range(1, {dim + 1})) AS pos) d
     GROUP BY a.cell, d.pos) mm
   GROUP BY cell)""")
@@ -266,12 +266,14 @@ cent{i + 1}{sfx} AS MATERIALIZED (
 
 def _kmeans_oracle(k: int | str | None = None,
                    n_iter: int = KMEANS_ITER,
-                   dim: int = _DIM) -> str:
+                   dim: int = _DIM,
+                   train_rows: int = TRAIN_ROWS) -> str:
     """Step-for-step DuckDB replay of operators/kmeans.py, final cell
     histogram."""
     k = _coarse_k_sql() if k is None else k
 
-    return (f"WITH {ORACLE_EMB_CTE},{_kmeans_ctes(k, n_iter, dim)}" + f"""
+    ctes = _kmeans_ctes(k, n_iter, dim, train_rows=train_rows)
+    return (f"WITH {ORACLE_EMB_CTE},{ctes}" + f"""
 SELECT cell, count(*) AS n_vecs, round(avg(dist), 6) AS avg_dist
 FROM a{n_iter} GROUP BY cell ORDER BY cell
 """)
@@ -279,11 +281,13 @@ FROM a{n_iter} GROUP BY cell ORDER BY cell
 
 @extra_query("sim_kmeans_cells", oracle=_kmeans_oracle())
 def sim_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd's k-means (operators/kmeans.py): cell sizes
-    and mean squared distance after 2 deterministic iterations from
-    md5-ordered seeds — the coarse-quantizer trainer for the IVF
-    index, fully relational (broadcast assignment join + exploded
-    mean update, no driver collect)."""
+    """Lloyd's k-means (operators/kmeans.py): cell sizes and mean
+    squared distance after 2 deterministic iterations from md5-ordered
+    seeds — the coarse-quantizer trainer for the IVF index.  Training
+    runs on the driver over a bounded sample (one TakeOrdered collect
+    of at most TRAIN_ROWS hash-smallest vectors — the whole corpus at
+    every gated scale); the assignment is one BLAS pass over the
+    corpus."""
     _, assigned = _shared_coarse(spark, sf_dir)
     return (assigned.groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n_vecs"),
@@ -293,7 +297,8 @@ def sim_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _silhouette_oracle(k: int | str | None = None,
                        n_iter: int = KMEANS_ITER,
-                       dim: int = _DIM) -> str:
+                       dim: int = _DIM,
+                       train_rows: int = TRAIN_ROWS) -> str:
     """Simplified-silhouette replay: the shared Lloyd chain to its
     final centroids/assignment, then per vector a = assigned (min)
     squared distance, b = min squared distance to any OTHER centroid,
@@ -304,7 +309,8 @@ def _silhouette_oracle(k: int | str | None = None,
             "i -> (e.embedding[i] - c.centroid[i]) * "
             "(e.embedding[i] - c.centroid[i])), 'sum'), 6)"
             ).format(n=dim + 1)
-    return (f"WITH {ORACLE_EMB_CTE},{_kmeans_ctes(k, n_iter, dim)}" + f"""
+    ctes = _kmeans_ctes(k, n_iter, dim, train_rows=train_rows)
+    return (f"WITH {ORACLE_EMB_CTE},{ctes}" + f"""
 , alld AS (SELECT e.vec_id, c.cell, {dist} AS dist
            FROM emb e CROSS JOIN cent{n_iter} c),
 bmin AS (SELECT d.vec_id, min(d.dist) AS b
@@ -361,7 +367,8 @@ def sim_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kmeans_ivf_oracle(k: int | str | None = None,
                        n_iter: int = KMEANS_ITER,
-                       dim: int = _DIM) -> str:
+                       dim: int = _DIM,
+                       train_rows: int = TRAIN_ROWS) -> str:
     """Trained-IVF search replay: the Lloyd chain (shared CTEs) to its
     final centroids, nprobe=2 probe of the trained quantizer with the
     SAME rounded squared-distance math the trainer uses, then exact
@@ -375,7 +382,7 @@ def _kmeans_ivf_oracle(k: int | str | None = None,
             ).format(n=dim + 1)
     cos = oracle_cosine_sql("q.embedding", "m2.embedding")
     return f"""
-WITH {ORACLE_EMB_CTE},{_kmeans_ctes(k, n_iter, dim)},
+WITH {ORACLE_EMB_CTE},{_kmeans_ctes(k, n_iter, dim, train_rows=train_rows)},
 probe AS (
   SELECT vec_id AS query_id, cell FROM (
     SELECT e.vec_id, c.cell,
@@ -590,7 +597,8 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semdedup_oracle(k: int | str | None = None,
                      n_iter: int = KMEANS_ITER,
-                     dim: int = _DIM, threshold: float = 0.4) -> str:
+                     dim: int = _DIM, threshold: float = 0.4,
+                     train_rows: int = TRAIN_ROWS) -> str:
     """Replay of operators/semdedup.py: the shared Lloyd chain to its
     final assignment, in-cell pair join at the rounded-cosine
     threshold, lower-id prune rule, per-cell summary."""
@@ -598,7 +606,7 @@ def _semdedup_oracle(k: int | str | None = None,
 
     cos = oracle_cosine_sql("x.embedding", "y.embedding")
     return f"""
-WITH {ORACLE_EMB_CTE},{_kmeans_ctes(k, n_iter, dim)},
+WITH {ORACLE_EMB_CTE},{_kmeans_ctes(k, n_iter, dim, train_rows=train_rows)},
 mem AS (SELECT a.vec_id, a.cell, e.embedding
         FROM a{n_iter} a JOIN emb e USING (vec_id)),
 pairs AS (
@@ -639,7 +647,8 @@ def semdedup_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cell_pairs_oracle(k: int | str | None = None,
                        n_iter: int = KMEANS_ITER,
-                       dim: int = _DIM, threshold: float = 0.4) -> str:
+                       dim: int = _DIM, threshold: float = 0.4,
+                       train_rows: int = TRAIN_ROWS) -> str:
     """Replay of the cell-bounded near-dup pair generation: shared
     Lloyd chain -> in-cell pair join at the rounded-cosine threshold,
     pairs emitted (not just per-cell counts)."""
@@ -647,7 +656,7 @@ def _cell_pairs_oracle(k: int | str | None = None,
 
     cos = oracle_cosine_sql("x.embedding", "y.embedding")
     return f"""
-WITH {ORACLE_EMB_CTE},{_kmeans_ctes(k, n_iter, dim)},
+WITH {ORACLE_EMB_CTE},{_kmeans_ctes(k, n_iter, dim, train_rows=train_rows)},
 mem AS (SELECT a.vec_id, a.cell, e.embedding
         FROM a{n_iter} a JOIN emb e USING (vec_id))
 SELECT x.cell AS cell, x.vec_id AS id_a, y.vec_id AS id_b,
@@ -691,7 +700,8 @@ def dedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_train_ctes(m: int = 4, sub_dim: int = 16, k: int = 8,
-                   n_iter: int = 1, emb: str = "emb") -> str:
+                   n_iter: int = 1, emb: str = "emb",
+                   train_rows: int = TRAIN_ROWS) -> str:
     """CTE fragment for PQ TRAINING+ENCODING over the ``emb``-named
     relation (raw vectors, or residuals for IVF-PQ): per-subspace
     slices, m independent Lloyd chains (suffix _p{s}), the ``codes``
@@ -703,7 +713,8 @@ def _pq_train_ctes(m: int = 4, sub_dim: int = 16, k: int = 8,
         f"FROM {emb})"
         for s in range(m))
     chains = ",".join(
-        _kmeans_ctes(k, n_iter, sub_dim, emb=f"sub{s}", sfx=f"_p{s}")
+        _kmeans_ctes(k, n_iter, sub_dim, emb=f"sub{s}", sfx=f"_p{s}",
+                     train_rows=train_rows)
         for s in range(m))
     code_cols = ", ".join(f"x{s}.cell AS c{s}" for s in range(m))
     code_joins = " ".join(
@@ -715,7 +726,8 @@ codes AS MATERIALIZED (SELECT x0.vec_id, {code_cols}
 
 
 def _pq_ctes(m: int = 4, sub_dim: int = 16, k: int = 8,
-             n_iter: int = 1) -> str:
+             n_iter: int = 1,
+             train_rows: int = TRAIN_ROWS) -> str:
     """CTE fragment replaying operators/pq.py raw-vector search
     (assumes ``emb`` in scope; ends with the ``adc`` relation):
     training+encoding (_pq_train_ctes), per-query subspace distance
@@ -734,7 +746,7 @@ qd{s} AS MATERIALIZED (
         f"JOIN qd{s} d{s} ON d{s}.cell = x.c{s}"
         + ("" if s == 0 else f" AND d{s}.query_id = d0.query_id")
         for s in range(m))
-    return f"""{_pq_train_ctes(m, sub_dim, k, n_iter)},
+    return f"""{_pq_train_ctes(m, sub_dim, k, n_iter, train_rows=train_rows)},
 {qds},
 adc AS MATERIALIZED (
   SELECT d0.query_id, x.vec_id AS neighbor_id,
@@ -744,9 +756,10 @@ adc AS MATERIALIZED (
 
 
 def _pq_oracle(m: int = 4, sub_dim: int = 16, k: int = 8,
-               n_iter: int = 1) -> str:
+               n_iter: int = 1,
+               train_rows: int = TRAIN_ROWS) -> str:
     return f"""
-WITH {ORACLE_EMB_CTE},{_pq_ctes(m, sub_dim, k, n_iter)}
+WITH {ORACLE_EMB_CTE},{_pq_ctes(m, sub_dim, k, n_iter, train_rows)}
 SELECT query_id, neighbor_id, adc_dist, rn FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id
             ORDER BY adc_dist, neighbor_id) AS rn
@@ -779,7 +792,8 @@ PQ_RECALL_BUFFERS = (10, 25, 50, 100)
 
 
 def _pq_recall_oracle(m: int = 4, sub_dim: int = 16, k: int = 8,
-                      n_iter: int = 1, dim: int = _DIM) -> str:
+                      n_iter: int = 1, dim: int = _DIM,
+                      train_rows: int = TRAIN_ROWS) -> str:
     """PQ quantization error as a measured curve: recall of the EXACT
     squared-L2 top-3 within the top-T ADC candidates, per buffer size
     T (same metric as ADC, so the gap is pure quantization, not a
@@ -790,7 +804,7 @@ def _pq_recall_oracle(m: int = 4, sub_dim: int = 16, k: int = 8,
           ).format(n=dim + 1)
     bufs = ", ".join(f"({b})" for b in PQ_RECALL_BUFFERS)
     return f"""
-WITH {ORACLE_EMB_CTE},{_pq_ctes(m, sub_dim, k, n_iter)},
+WITH {ORACLE_EMB_CTE},{_pq_ctes(m, sub_dim, k, n_iter, train_rows)},
 exact3 AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -870,7 +884,8 @@ def _ivfpq_oracle(ck: int | str | None = None,
                   coarse_iter: int = KMEANS_ITER,
                   nprobe: int = 2, m: int = 4, sub_dim: int = 16,
                   pk: int = 8, pq_iter: int = 1,
-                  dim: int = _DIM) -> str:
+                  dim: int = _DIM,
+                  train_rows: int = TRAIN_ROWS) -> str:
     """Replay of operators/pq.py ivfpq_topk end to end: coarse Lloyd
     chain (sfx _c), residual relation, PQ training on residuals
     (_pq_train_ctes over ``res``), nprobe coarse probe, per-probed-cell
@@ -898,14 +913,16 @@ qd{s} AS MATERIALIZED (
         for s in range(m))
     return f"""
 WITH {ORACLE_EMB_CTE},
-{_kmeans_ctes(ck, ci, dim, emb="emb", sfx="_c")},
+{_kmeans_ctes(ck, ci, dim, emb="emb", sfx="_c",
+               train_rows=train_rows)},
 res AS MATERIALIZED (
   SELECT e.vec_id,
          list_transform(range(1, {dim + 1}),
                         i -> e.embedding[i] - c.centroid[i]) AS embedding
   FROM emb e JOIN a{ci}_c a USING (vec_id)
   JOIN cent{ci}_c c ON c.cell = a.cell),
-{_pq_train_ctes(m, sub_dim, pk, pq_iter, emb="res")},
+{_pq_train_ctes(m, sub_dim, pk, pq_iter, emb="res",
+                train_rows=train_rows)},
 members AS MATERIALIZED (SELECT cd.vec_id, a.cell, {code_cols}
             FROM codes cd JOIN a{ci}_c a USING (vec_id)),
 probe AS (

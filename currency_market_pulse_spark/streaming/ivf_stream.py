@@ -70,7 +70,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.utils import AnalysisException
 
 from currency_market_pulse_spark.operators.kmeans import (
-    assign_cells_blas, kmeans_fit,
+    assign_cells_blas, encode_blas, kmeans_fit,
 )
 
 _VECTORS_SCHEMA = "vec_id bigint, embedding array<double>, batch_id bigint"
@@ -104,18 +104,21 @@ class StreamingIVFIndex:
         """Fit the coarse quantizer on ``emb`` (vec_id, embedding) and
         write all three standing relations.  k defaults to the
         corpus-adaptive coarse_k rule."""
+        self._write_partition(
+            emb.select("vec_id", "embedding"), self.vectors_path,
+            TRAIN_BATCH_ID)
+        self._fit(emb, k, n_iter)
+
+    def _fit(self, emb: DataFrame, k: int | None, n_iter: int) -> int:
+        """Train on ``emb`` and write the centroids, then the postings
+        under the training id.  Returns k."""
         if k is None:
             from currency_market_pulse_spark.queries.ivf import coarse_k
             k = coarse_k(emb.count())
         centroids, assigned = kmeans_fit(emb, k=k, n_iter=n_iter)
-        (centroids.select("cell", "centroid")
-         .write.mode("overwrite").parquet(self.centroids_path))
-        self._write_partition(
-            emb.select("vec_id", "embedding"), self.vectors_path,
-            TRAIN_BATCH_ID)
-        self._write_partition(
-            assigned.select("vec_id", "cell", "dist"), self.assign_path,
-            TRAIN_BATCH_ID)
+        self._write_centroids(centroids)
+        self._write_partition(assigned, self.assign_path, TRAIN_BATCH_ID)
+        return k
 
     # -- streaming maintenance ----------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -224,31 +227,29 @@ class StreamingIVFIndex:
         """Full rebuild from the standing vector store.  MUST run with
         the ingest query stopped and checkpoint-quiescent (module
         docstring).  Returns the new k."""
-        import os
-        import shutil
-
-        emb = self.read_vectors(spark)
-        if k is None:
-            from currency_market_pulse_spark.queries.ivf import coarse_k
-            k = coarse_k(emb.count())
-        centroids, assigned = kmeans_fit(emb, k=k, n_iter=n_iter)
         # new centroids first (k rows, atomic enough for a stopped
         # stream), then the posting rewrite under the training id,
         # then retire the streamed posting partitions the rewrite
         # superseded — the vector store is untouched (it IS the corpus)
-        (centroids.select("cell", "centroid")
-         .write.mode("overwrite").parquet(self.centroids_path))
-        self._write_partition(
-            assigned.select("vec_id", "cell", "dist"), self.assign_path,
-            TRAIN_BATCH_ID)
-        for name in os.listdir(self.assign_path):
-            if (name.startswith("batch_id=")
-                    and name != f"batch_id={TRAIN_BATCH_ID}"):
-                shutil.rmtree(os.path.join(self.assign_path, name),
-                              ignore_errors=True)
+        k = self._fit(self.read_vectors(spark), k, n_iter)
+        self._retire_streamed(self.assign_path)
         return k
 
     # -- internals -----------------------------------------------------
+    def _write_centroids(self, centroids: DataFrame) -> None:
+        (centroids.select("cell", "centroid")
+         .write.mode("overwrite").parquet(self.centroids_path))
+
+    @staticmethod
+    def _retire_streamed(path: str) -> None:
+        import os
+        import shutil
+
+        for name in os.listdir(path):
+            if (name.startswith("batch_id=")
+                    and name != f"batch_id={TRAIN_BATCH_ID}"):
+                shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+
     @staticmethod
     def _write_partition(df: DataFrame, path: str, batch_id: int) -> None:
         (df.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
@@ -264,11 +265,12 @@ class StreamingIVFPQIndex(StreamingIVFIndex):
     maintenance above PLUS residual PQ codes per micro-batch.
 
     Training persists the per-subspace codebooks alongside the coarse
-    relations; each micro-batch then (a) coarse-assigns as the parent
-    does and (b) encodes the batch's RESIDUALS against the FROZEN
-    codebooks (operators/pq.py pq_encode — m broadcast codebooks, no
-    shuffle, no training), appending (vec_id, c0..c{m-1}) codes
-    batch-id idempotently.  The standing (codes join assignments)
+    relations; each micro-batch then, in ONE pass of the
+    operators/kmeans.py encode_blas kernel (the one ``pq_encode`` and
+    the batch build run — no shuffle, no training), coarse-assigns as
+    the parent does and encodes the batch's RESIDUALS against the
+    FROZEN codebooks, appending (vec_id, c0..c{m-1}) codes batch-id
+    idempotently.  The standing (codes join assignments)
     relation is exactly the ``members`` relation ``ivfpq_topk``
     searches (tests/test_ivfpq_stream.py probes it).
 
@@ -295,51 +297,38 @@ class StreamingIVFPQIndex(StreamingIVFIndex):
         return f"vec_id bigint, {cols}, batch_id bigint"
 
     # -- offline training ---------------------------------------------
-    def train(self, emb: DataFrame, k: int | None = None,
-              n_iter: int = 2) -> None:
-        from currency_market_pulse_spark.operators.pq import (
-            pq_fit, residuals,
-        )
+    def _fit(self, emb: DataFrame, k: int | None, n_iter: int) -> int:
+        """Coarse quantizer + residual codebooks from one bounded
+        sample (operators/pq.py ivfpq_fit), then centroids, postings,
+        codebooks and codes from its single encode pass."""
+        from currency_market_pulse_spark.operators.pq import ivfpq_fit
 
-        super().train(emb, k, n_iter)
-        spark = emb.sparkSession
-        cents = self.read_centroids(spark)
-        assigned = self.read_assignments(spark)
-        res = residuals(
-            emb.select("vec_id",
-                       F.transform("embedding", lambda x: x.cast("double"))
-                       .alias("embedding")),
-            assigned, cents)
-        codebooks, codes = pq_fit(
-            res.select("vec_id", "embedding"),
-            self.m, self.sub_dim, self.pq_k, self.pq_iter)
+        if k is None:
+            from currency_market_pulse_spark.queries.ivf import coarse_k
+            k = coarse_k(emb.count())
+        centroids, codebooks, encoded = ivfpq_fit(
+            emb, k, n_iter, self.m, self.sub_dim, self.pq_k, self.pq_iter)
+        self._write_centroids(centroids)
+        self._write_encoded(encoded, TRAIN_BATCH_ID)
         self._write_codebooks(codebooks)
-        self._write_partition(codes, self.codes_path, TRAIN_BATCH_ID)
+        return k
 
     # -- streaming maintenance ----------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from currency_market_pulse_spark.operators.pq import (
-            pq_encode, residuals,
-        )
+        from currency_market_pulse_spark.operators.kmeans import codebook
 
         spark = batch.sparkSession
-        centroids = self.read_centroids(spark)
         vecs = batch.select(
             "vec_id",
             F.transform("embedding",
                         lambda x: x.cast("double")).alias("embedding"))
         self._write_partition(vecs, self.vectors_path, batch_id)
-        assigned = assign_cells_blas(vecs, centroids).persist()
-        try:
-            self._write_partition(
-                assigned.select("vec_id", "cell", "dist"),
-                self.assign_path, batch_id)
-            codes = pq_encode(
-                residuals(vecs, assigned, centroids),
-                self.read_codebooks(spark), self.m, self.sub_dim)
-            self._write_partition(codes, self.codes_path, batch_id)
-        finally:
-            assigned.unpersist()
+        # one fused pass: coarse cell + dist and the residual codes
+        # against the FROZEN codebooks (pq_encode's kernel)
+        self._write_encoded(encode_blas(
+            vecs, codebook(self.read_centroids(spark)),
+            [codebook(cb) for cb in self.read_codebooks(spark)],
+            self.sub_dim), batch_id)
 
     # -- reads ---------------------------------------------------------
     def read_codebooks(self, spark: SparkSession) -> list[DataFrame]:
@@ -366,30 +355,24 @@ class StreamingIVFPQIndex(StreamingIVFIndex):
     # -- retrain -------------------------------------------------------
     def retrain(self, spark: SparkSession, k: int | None = None,
                 n_iter: int = 2) -> int:
-        import os
-        import shutil
-
-        from currency_market_pulse_spark.operators.pq import (
-            pq_fit, residuals,
-        )
-
         new_k = super().retrain(spark, k, n_iter)
-        res = residuals(self.read_vectors(spark),
-                        self.read_assignments(spark),
-                        self.read_centroids(spark))
-        codebooks, codes = pq_fit(
-            res.select("vec_id", "embedding"),
-            self.m, self.sub_dim, self.pq_k, self.pq_iter)
-        self._write_codebooks(codebooks)
-        self._write_partition(codes, self.codes_path, TRAIN_BATCH_ID)
-        for name in os.listdir(self.codes_path):
-            if (name.startswith("batch_id=")
-                    and name != f"batch_id={TRAIN_BATCH_ID}"):
-                shutil.rmtree(os.path.join(self.codes_path, name),
-                              ignore_errors=True)
+        self._retire_streamed(self.codes_path)
         return new_k
 
     # -- internals -----------------------------------------------------
+    def _write_encoded(self, encoded: DataFrame, batch_id: int) -> None:
+        """Postings and codes: two projections of one encode pass."""
+        encoded = encoded.persist()
+        try:
+            self._write_partition(encoded.select("vec_id", "cell", "dist"),
+                                  self.assign_path, batch_id)
+            self._write_partition(
+                encoded.select("vec_id",
+                               *[f"c{s}" for s in range(self.m)]),
+                self.codes_path, batch_id)
+        finally:
+            encoded.unpersist()
+
     def _write_codebooks(self, codebooks: list[DataFrame]) -> None:
         union = None
         for s, cb in enumerate(codebooks):

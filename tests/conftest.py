@@ -28,9 +28,9 @@ def spark():
 # the complete suite takes ~50 min wall, which exceeds the external
 # verify budget — the r17 driver run was truncated mid-suite with zero
 # failures, recording tests_ok=false for a green tree.  The multi-
-# minute streaming soaks / crash-replay / property sweeps below are
-# SKIPPED by default (visible as `s`, never deselected, never deleted)
-# so the core suite — every unit test, every operator test, and the
+# minute streaming soaks / crash-replay / property sweeps (marked
+# ``slow``) are SKIPPED by default (visible as `s`, never deselected,
+# never deleted) so the core suite — every unit test, every operator test, and the
 # full library-tier oracle gate (test_extra_queries) — completes well
 # inside the budget (~15-18 min measured).  Set SPARK_FULL_TESTS=1 to
 # run everything (CI / release gate; used for this round's committed
@@ -39,50 +39,10 @@ def spark():
 # Selection rule: measured call duration >= 12 s in the committed
 # full-suite run (pytest --durations, 2026-08-18, 432 passed in
 # 51:22), EXCLUDING tests/test_extra_queries.py — oracle-differential
-# correctness stays in the fast suite regardless of cost.
-_SLOW_TESTS = {
-    "tests/test_ann_maintain.py::test_ann_maintain_cli",
-    "tests/test_ann_maintain.py::test_handover_serves_before_during_after",
-    "tests/test_backfill_handoff.py::test_backfill_plus_stream_equals_all_streaming",
-    "tests/test_backfill_handoff.py::test_backfill_then_attached_stream_query",
-    "tests/test_components.py::test_pagerank_mass_conserved_and_hub_ranked",
-    "tests/test_components.py::test_star_matches_propagation_on_random_graphs",
-    "tests/test_components.py::test_star_matches_propagation_with_random_self_loops",
-    "tests/test_decontam_stream.py::test_stream_flags_leak_and_matches_batch_operator",
-    "tests/test_dedup.py::test_shingle_df_cap_drops_hot_shingles",
-    "tests/test_ivfpq_stream.py::test_replayed_batch_codes_idempotent",
-    "tests/test_ivfpq_stream.py::test_retrain_rebuilds_codebooks_and_codes",
-    "tests/test_ivfpq_stream.py::test_standing_index_is_searchable",
-    "tests/test_neardup_stream.py::test_collect_cap_path_matches",
-    "tests/test_neardup_stream.py::test_compaction_crash_recovery",
-    "tests/test_neardup_stream.py::test_compaction_preserves_results_and_bounds_tail",
-    "tests/test_neardup_stream.py::test_major_compaction_merges_segments",
-    "tests/test_neardup_stream.py::test_rebucketed_index_serves_identical_dups",
-    "tests/test_neardup_stream.py::test_recovery_and_probe_independent_of_listing_order",
-    "tests/test_neardup_stream.py::test_sharded_index_equals_unsharded",
-    "tests/test_neardup_stream.py::test_sharded_index_with_marker_store",
-    "tests/test_neardup_stream.py::test_sharded_overcap_degrades_to_distributed",
-    "tests/test_neardup_stream.py::test_sharded_restart_continues",
-    "tests/test_neardup_stream.py::test_tiered_compaction_spares_largest_segment",
-    "tests/test_neardup_stream.py::test_volume_guard_routes_long_docs_to_distributed",
-    "tests/test_neardup_stream.py::test_within_batch_near_dup_flagged",
-    "tests/test_pipeline_crash_restart.py::test_composition_crash_restart_equals_uninterrupted",
-    "tests/test_pipeline_stream.py::test_composed_pipeline_end_to_end",
-    "tests/test_pipeline_stream.py::test_composed_pipeline_marker_segment_store",
-    "tests/test_pipeline_stream.py::test_composed_pipeline_with_document_screens",
-    "tests/test_pipeline_stream.py::test_fused_doc_legs_equal_independent",
-    "tests/test_pipeline_stream.py::test_pipeline_cli_once",
-    "tests/test_pipeline_stream.py::test_view_rebuild_window_bounds_boot",
-    "tests/test_pipeline_stream.py::test_view_source_modes_agree_and_invalid_pairing_refused",
-    "tests/test_segment_store.py::test_backfill_marker_store_crash_then_rerun",
-    "tests/test_segment_store.py::test_marker_store_crash_windows[after_commit]",
-    "tests/test_segment_store.py::test_marker_store_crash_windows[first_copy]",
-    "tests/test_segment_store.py::test_marker_store_crash_windows[first_marker]",
-    "tests/test_segment_store.py::test_marker_store_crash_windows[last_marker]",
-    "tests/test_segment_store.py::test_marker_store_equals_rename_store",
-    "tests/test_segment_store.py::test_probe_under_stale_listing_misses_at_most_one_trigger",
-    "tests/test_trends_property.py::test_trends_matches_duckdb_on_random_trades",
-}
+# correctness stays in the fast suite regardless of cost.  Slow tests
+# carry the ``slow`` marker (registered in pyproject.toml under
+# --strict-markers), so the mark travels with the test through a
+# rename instead of living in a list of node ids here.
 
 
 def pytest_collection_modifyitems(config, items):
@@ -91,5 +51,5 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="multi-minute soak/stream test; set SPARK_FULL_TESTS=1")
     for item in items:
-        if item.nodeid in _SLOW_TESTS:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from currency_market_pulse_spark.operators.pq import ivfpq_topk
@@ -75,6 +76,7 @@ FAR = _clusters4(6, [(50, 50, 50, 50)], start_id=500)
 FAR_IDS = {vid for vid, _ in FAR}
 
 
+@pytest.mark.slow
 def test_handover_serves_before_during_after(spark, tmp_path):
     idx = _index(tmp_path)
     idx.train(_vecs(spark, _clusters4(
@@ -148,6 +150,7 @@ def test_handover_serves_before_during_after(spark, tmp_path):
         q2.stop()
 
 
+@pytest.mark.slow
 def test_ann_maintain_cli(spark, tmp_path, capsys):
     from currency_market_pulse_spark.__main__ import main
 

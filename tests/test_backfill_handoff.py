@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from currency_market_pulse_spark.streaming.backfill import (
@@ -72,6 +73,7 @@ def _index_fingerprint(nd, spark):
     }
 
 
+@pytest.mark.slow
 def test_backfill_plus_stream_equals_all_streaming(spark, tmp_path):
     cold, rest = _corpus()
 
@@ -110,6 +112,7 @@ def test_backfill_plus_stream_equals_all_streaming(spark, tmp_path):
         _index_fingerprint(nd_b, spark)
 
 
+@pytest.mark.slow
 def test_backfill_then_attached_stream_query(spark, tmp_path):
     """The handoff through the real streaming machinery: seed via
     backfill, then attach a file-source stream for the remainder."""

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import Row
 
 from currency_market_pulse_spark.operators.components import (
@@ -48,6 +49,7 @@ def test_star_handles_long_chain_in_log_rounds(spark):
     assert out == {i: 0 for i in range(41)}
 
 
+@pytest.mark.slow
 def test_star_matches_propagation_on_random_graphs(spark):
     rng = random.Random(42)
     for trial in range(3):
@@ -72,6 +74,7 @@ def test_self_pair_only_nodes_are_singletons_in_both(spark):
     assert star == plain
 
 
+@pytest.mark.slow
 def test_star_matches_propagation_with_random_self_loops(spark):
     rng = random.Random(7)
     for trial in range(2):
@@ -83,6 +86,7 @@ def test_star_matches_propagation_with_random_self_loops(spark):
         assert a == b, f"trial {trial}: {a} vs {b}"
 
 
+@pytest.mark.slow
 def test_pagerank_mass_conserved_and_hub_ranked(spark):
     """Fixed-point PageRank: total mass stays ~PR_UNIT (floor-division
     leakage bounded by n per division site), a node every other node

@@ -8,6 +8,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from currency_market_pulse_spark.operators import decontam as C
 from currency_market_pulse_spark.streaming.decontam_stream import (
     StreamingDecontam,
@@ -27,6 +29,7 @@ def _write(path, rows, mtime):
     os.utime(path, (mtime, mtime))
 
 
+@pytest.mark.slow
 def test_stream_flags_leak_and_matches_batch_operator(spark, tmp_path):
     ev = spark.createDataFrame(
         [(100, LEAK), (101, "held out evaluation prompt squad entry")],

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from currency_market_pulse_spark.operators import dedup as D
@@ -75,6 +76,7 @@ def test_minhash_lsh_catches_identical_docs(spark):
     assert (0, 2) not in cand and (1, 2) not in cand
 
 
+@pytest.mark.slow
 def test_shingle_df_cap_drops_hot_shingles(spark):
     """Document-frequency cap (VERDICT r1 item 9): shingles shared by
     more than max_shingle_df docs are excluded from candidate

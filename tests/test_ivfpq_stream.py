@@ -6,6 +6,7 @@ standing members relation must be searchable by the batch ivfpq_topk."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from currency_market_pulse_spark.operators.pq import pq_encode, residuals
@@ -76,6 +77,7 @@ def test_streamed_codes_equal_batch_encode(spark, tmp_path):
     assert set(members.columns) == {"vec_id", "c0", "c1", "cell"}
 
 
+@pytest.mark.slow
 def test_replayed_batch_codes_idempotent(spark, tmp_path):
     idx = _index(tmp_path)
     idx.train(_vecs(spark, _clusters4(5, [(0, 0, 0, 0), (8, 8, 8, 8)])),
@@ -88,6 +90,7 @@ def test_replayed_batch_codes_idempotent(spark, tmp_path):
     assert idx.read_codes(spark).count() == 14
 
 
+@pytest.mark.slow
 def test_retrain_rebuilds_codebooks_and_codes(spark, tmp_path):
     idx = _index(tmp_path)
     idx.train(_vecs(spark, _clusters4(8, [(0, 0, 0, 0), (1, 1, 1, 1)])),
@@ -113,6 +116,7 @@ def test_retrain_rebuilds_codebooks_and_codes(spark, tmp_path):
     assert standing == twin
 
 
+@pytest.mark.slow
 def test_standing_index_is_searchable(spark, tmp_path):
     """ivfpq_topk over the STREAM-maintained index (the stored
     centroids/codebooks/members handed in via ``index=``): the exact

@@ -144,3 +144,59 @@ def test_blas_assignment_matches_catalyst(spark):
                for r in assign_cells_blas(emb, cents).collect())
     assert a == b and len(a) > 0
     assert any(c > 3 for _, c, _ in a)   # remapped ids exercised
+
+
+def test_training_collect_is_bounded(spark, monkeypatch):
+    """The trainers' one driver collect is planned as
+    TakeOrderedAndProject(limit=TRAIN_ROWS): bounded before it
+    materialises, never a collect of the corpus."""
+    from currency_market_pulse_spark.operators import kmeans
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    cls, plans = type(emb), []
+    collect = cls.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", recording_collect)
+    X = kmeans.train_sample(emb)
+    assert len(plans) == 1
+    assert f"TakeOrderedAndProject(limit={kmeans.TRAIN_ROWS}," in plans[0]
+    assert X.shape == (emb.count(), 64)
+
+def test_capped_sample_matches_capped_oracles(spark, monkeypatch):
+    """Past TRAIN_ROWS the trainers fit on the hash-smallest sample and
+    only the final assignment/encode reads the whole corpus.  Cap the
+    sample at 100 of sf0.01's 500 vectors: the shared index (coarse
+    quantizer and IVF-PQ codebooks) must stay EXACT against oracles
+    that replay the same cap — and the cap must change the answer."""
+    from collections import OrderedDict
+
+    from currency_market_pulse_spark.operators import kmeans
+    from currency_market_pulse_spark.oracle import (
+        check_against_oracle, duck_con,
+    )
+    from currency_market_pulse_spark.queries import ivf
+    from tests.conftest import EXTRA_SF_DIR
+
+    cap = 100
+    assert load_table(spark, EXTRA_SF_DIR, "embeddings").count() > cap
+    monkeypatch.setattr(kmeans, "TRAIN_ROWS", cap)
+    # a private index cache: the capped index never serves other tests
+    monkeypatch.setattr(ivf, "_COARSE_CACHE", OrderedDict())
+    con = duck_con(EXTRA_SF_DIR)
+    try:
+        for fn, oracle in ((ivf.sim_kmeans_cells, ivf._kmeans_oracle),
+                           (ivf.sim_ivfpq_topk, ivf._ivfpq_oracle)):
+            capped = oracle(train_rows=cap)
+            assert (con.execute(capped).fetchall()
+                    != con.execute(oracle()).fetchall()), fn.__name__
+            verdict, n = check_against_oracle(spark, con, fn, capped,
+                                              EXTRA_SF_DIR)
+            assert verdict == "EXACT" and n > 0, (fn.__name__, verdict)
+    finally:
+        con.close()
+        for entry in ivf._COARSE_CACHE.values():
+            entry["encoded"].unpersist()

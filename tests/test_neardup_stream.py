@@ -8,6 +8,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from currency_market_pulse_spark.streaming.neardup_stream import (
     StreamingNearDup,
 )
@@ -60,6 +62,7 @@ def test_stream_flags_cross_batch_near_dup(spark, tmp_path):
         == {1, 2, 3}
 
 
+@pytest.mark.slow
 def test_within_batch_near_dup_flagged(spark, tmp_path):
     """Two near-identical docs arriving in the SAME micro-batch: the
     higher id is flagged against the lower (first-owner convention),
@@ -162,6 +165,7 @@ def _corpus(n, salt=""):
             for i in range(n)]
 
 
+@pytest.mark.slow
 def test_compaction_preserves_results_and_bounds_tail(spark, tmp_path):
     """A run WITH compaction flags exactly the dups a run WITHOUT it
     flags, folds the tail into base segments, and keeps probing
@@ -207,6 +211,7 @@ def test_compaction_preserves_results_and_bounds_tail(spark, tmp_path):
     assert any(d.startswith("segment=") for d in os.listdir(base))
 
 
+@pytest.mark.slow
 def test_major_compaction_merges_segments(spark, tmp_path):
     """When the segment count would exceed max_segments, compaction
     merges all existing segments into one — file count stays bounded."""
@@ -224,6 +229,7 @@ def test_major_compaction_merges_segments(spark, tmp_path):
     assert nd.read_bands(spark).select("doc_id").distinct().count() == 9
 
 
+@pytest.mark.slow
 def test_compaction_crash_recovery(spark, tmp_path):
     """Both crash points of the compaction protocol: (a) manifest+tmp
     left behind => rolled back, every row still probed exactly once;
@@ -392,6 +398,7 @@ def test_exact_replay_is_idempotent(spark, tmp_path):
     assert nd.read_hashes(spark).count() == 1
 
 
+@pytest.mark.slow
 def test_tiered_compaction_spares_largest_segment(spark, tmp_path):
     """Size-tiered major compaction (r12): when the segment count
     exceeds max_segments, only the SMALLEST max_segments//2+1 are
@@ -430,6 +437,7 @@ def test_tiered_compaction_spares_largest_segment(spark, tmp_path):
     assert got == {i for i, _ in big} | {100, 101}
 
 
+@pytest.mark.slow
 def test_rebucketed_index_serves_identical_dups(spark, tmp_path):
     """Bucket-count scaling (r12): an index whose compaction rescaled
     n_buckets (tiny target_bucket_bytes) serves exactly the dups the
@@ -462,6 +470,7 @@ def test_rebucketed_index_serves_identical_dups(spark, tmp_path):
     assert (4, 1, 1.0) in scaled                # exact dup found
 
 
+@pytest.mark.slow
 def test_collect_cap_path_matches(spark, tmp_path):
     """Batches over hash_collect_cap take the fully distributed exact
     stage (window-owner + anti-join, no driver-side per-row dicts) —
@@ -560,6 +569,7 @@ def test_max_segments_validation():
                      dups_path="z", max_segments=1)  # boundary ok
 
 
+@pytest.mark.slow
 def test_recovery_and_probe_independent_of_listing_order(
         spark, tmp_path, monkeypatch):
     """VERDICT r12 directive 2: the index store's driver-side protocol
@@ -635,6 +645,7 @@ def test_recovery_and_probe_independent_of_listing_order(
     assert {30, 50, 70} <= flagged
 
 
+@pytest.mark.slow
 def test_sharded_index_equals_unsharded(spark, tmp_path):
     """shards=S is dup-for-dup and index-content equal to shards=1
     (VERDICT r14 directive 3): sharding is by BAND HASH, so an LSH
@@ -689,6 +700,7 @@ def test_sharded_index_equals_unsharded(spark, tmp_path):
                 == nd1.read_shingles(spark).count())
 
 
+@pytest.mark.slow
 def test_sharded_restart_continues(spark, tmp_path):
     """A sharded index survives a handler restart (per-root recovery
     covers every shard root) and keeps flagging against pre-restart
@@ -713,6 +725,7 @@ def test_sharded_restart_continues(spark, tmp_path):
     assert dups.get(9) == 1
 
 
+@pytest.mark.slow
 def test_sharded_index_with_marker_store(spark, tmp_path):
     """Sharding composes with the object-store marker protocol: every
     shard root is independently claimed/stamped and publishes through
@@ -751,6 +764,7 @@ def test_sharded_index_with_marker_store(spark, tmp_path):
             assert _os.path.exists(_os.path.join(p, "_committed"))
 
 
+@pytest.mark.slow
 def test_sharded_overcap_degrades_to_distributed(spark, tmp_path):
     """ADVICE r15 low: shards>1 with a micro-batch over
     hash_collect_cap used to raise inside foreachBatch — the engine
@@ -795,6 +809,7 @@ def test_sharded_overcap_degrades_to_distributed(spark, tmp_path):
     assert {71, 72, 73} <= {n for n, _, _ in _dup_set(ref, spark)}
 
 
+@pytest.mark.slow
 def test_volume_guard_routes_long_docs_to_distributed(spark, tmp_path):
     """VERDICT r15 "what's wrong 2": the dict path collects the
     batch's SHINGLE relation driver-side, which scales with

@@ -24,6 +24,8 @@ import json
 import os
 import time
 
+import pytest
+
 from currency_market_pulse_spark.streaming import txn_sink as ts
 from currency_market_pulse_spark.streaming.pipeline import (
     _SINK_STREAM_SCHEMA, run_composed_pipeline,
@@ -149,6 +151,7 @@ def _plant(tmp_path, tag, req_files, doc_files):
         _write(docs / name, rows)
 
 
+@pytest.mark.slow
 def test_composition_crash_restart_equals_uninterrupted(
         spark, tmp_path, monkeypatch):
     last = None

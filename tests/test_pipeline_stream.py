@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 
 def _write(path, rows):
     with open(path, "w") as f:
@@ -46,6 +48,7 @@ def _plant(tmp_path):
     return req, docs
 
 
+@pytest.mark.slow
 def test_composed_pipeline_end_to_end(spark, tmp_path):
     from currency_market_pulse_spark.streaming.pipeline import (
         run_composed_pipeline,
@@ -83,6 +86,7 @@ def test_composed_pipeline_end_to_end(spark, tmp_path):
     assert [(d.new_id, d.dup_of) for d in dups] == [(2, 1)]
 
 
+@pytest.mark.slow
 def test_pipeline_cli_once(spark, tmp_path):
     from currency_market_pulse_spark.__main__ import main
 
@@ -104,6 +108,7 @@ def test_pipeline_cli_once(spark, tmp_path):
                        "closed_trend_windows": 1}
 
 
+@pytest.mark.slow
 def test_composed_pipeline_with_document_screens(spark, tmp_path):
     """Round-7 composition: the same doc stream also feeds the
     count-min heavy-hitter tracker and (with an eval set supplied)
@@ -147,6 +152,7 @@ def test_composed_pipeline_with_document_screens(spark, tmp_path):
     assert res == {1, 2}            # k=32 > corpus: reservoir holds all
 
 
+@pytest.mark.slow
 def test_view_rebuild_window_bounds_boot(spark, tmp_path):
     """Bounded live-view rebuild (VERDICT r10 directive 4): a restart
     with view_rebuild_days=N rebuilds the trends view from only the
@@ -257,6 +263,7 @@ def test_composed_pipeline_bucketed_gateway(spark, tmp_path):
     assert (w.n_trades, w.min, w.max) == (3, 1.1, 2.0)
 
 
+@pytest.mark.slow
 def test_view_source_modes_agree_and_invalid_pairing_refused(
         spark, tmp_path):
     """r14: the manifest-log view (default) and the legacy listing
@@ -292,6 +299,7 @@ def test_view_source_modes_agree_and_invalid_pairing_refused(
     assert views["manifest"]          # the scenario closed a window
 
 
+@pytest.mark.slow
 def test_composed_pipeline_marker_segment_store(spark, tmp_path):
     """r14: the composed pipeline runs its near-dup index on the
     OBJECT-STORE publication protocol (neardup_store='marker' — no
@@ -375,6 +383,7 @@ def test_gateway_auto_is_the_default(spark, tmp_path):
     assert dead[0].user_id == "hot" and dead[0].retry_after_ms == 1000
 
 
+@pytest.mark.slow
 def test_fused_doc_legs_equal_independent(spark, tmp_path):
     """r15 directive 1's equality gate: the FUSED doc side (one
     read+tokenize per trigger, shared by near-dup, CMS, decontam,

@@ -116,6 +116,7 @@ def _assert_scenario_bit(state):
     assert 50 not in hashes  # exact copies are never indexed
 
 
+@pytest.mark.slow
 def test_marker_store_equals_rename_store(spark, tmp_path):
     """Crash-free: the no-rename marker protocol produces bit-identical
     index state and dup log to the atomic-rename default."""
@@ -132,6 +133,7 @@ def test_marker_store_equals_rename_store(spark, tmp_path):
 
 @pytest.mark.parametrize("window", ["first_copy", "first_marker",
                                     "last_marker", "after_commit"])
+@pytest.mark.slow
 def test_marker_store_crash_windows(spark, tmp_path, window):
     """Recovery equality with NO atomic rename anywhere: crash the
     publish at every window class — mid-copy (some objects visible,
@@ -294,6 +296,7 @@ def test_clean_uncommitted_scoped_to_intent_segment(tmp_path):
     assert os.path.exists(os.path.join(root, "base", "segment=7"))
 
 
+@pytest.mark.slow
 def test_backfill_marker_store_crash_then_rerun(spark, tmp_path):
     """A backfill seeding through the marker store that crashes
     mid-publish is re-runnable: the fresh-index gate first rolls the
@@ -491,6 +494,7 @@ def test_stale_discovery_never_serves_uncommitted_and_converges(
                for _ in range(2))
 
 
+@pytest.mark.slow
 def test_probe_under_stale_listing_misses_at_most_one_trigger(
         spark, tmp_path):
     """Probe level: a trigger inside the staleness window reads a

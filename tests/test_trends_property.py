@@ -11,6 +11,7 @@ import math
 
 import duckdb
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from currency_market_pulse_spark.operators.trends import trends
@@ -34,6 +35,7 @@ trade = st.tuples(offset_s, rate, st.sampled_from(["EUR", "GBP"]))
 
 @settings(max_examples=12, deadline=None)
 @given(rows=st.lists(trade, min_size=1, max_size=60))
+@pytest.mark.slow
 def test_trends_matches_duckdb_on_random_trades(spark, rows):
     pdf = pd.DataFrame({
         "currency_from": [cf for _, _, cf in rows],
