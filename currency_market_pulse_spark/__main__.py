@@ -86,12 +86,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     pl.add_argument("--window-ms", type=int, default=1000)
     pl.add_argument("--once", action="store_true",
                     help="process available files then exit")
-    pl.add_argument("--neardup-store", choices=["rename", "marker"],
-                    default="rename",
-                    help="near-dup segment publication protocol: "
-                         "atomic-rename (POSIX/HDFS) or the "
-                         "object-store marker protocol "
-                         "(streaming/segment_store.py)")
     pl.add_argument("--txn-publication", choices=["rename", "put"],
                     default="rename",
                     help="trade-sink file publication: atomic rename "
@@ -136,13 +130,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                          "(idx_bands, idx_shingles, idx_hashes, dups) "
                          "— the composed pipeline's --out-dir layout")
     bf.add_argument("--threshold", type=float, default=0.5)
-    bf.add_argument("--neardup-store", choices=["rename", "marker"],
-                    default="rename",
-                    help="segment publication protocol for the seeded "
-                         "index — MUST match the store the pipeline "
-                         "will later be run with (the index root is "
-                         "stamped on first publish and a mismatched "
-                         "open fails fast; streaming/segment_store.py)")
 
     am = sub.add_parser(
         "ann-maintain",
@@ -212,7 +199,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             pipe = run_composed_pipeline(
                 spark, args.requests_dir, args.docs_dir, args.out_dir,
                 window_ms=args.window_ms, limit=args.limit,
-                neardup_store=args.neardup_store,
                 txn_publication=args.txn_publication,
                 neardup_shards=args.neardup_shards,
                 gateway_buckets=gb,
@@ -246,17 +232,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             docs = (spark.read.schema(schema).json(args.docs_path)
                     if is_json
                     else spark.read.schema(schema).parquet(args.docs_path))
-            from currency_market_pulse_spark.streaming.segment_store \
-                import MarkerSegmentStore, RenameSegmentStore
             nd = StreamingNearDup(
                 bands_path=f"{args.index_dir}/idx_bands",
                 shingles_path=f"{args.index_dir}/idx_shingles",
                 hashes_path=f"{args.index_dir}/idx_hashes",
                 dups_path=f"{args.index_dir}/dups",
-                threshold=args.threshold,
-                segment_store=(MarkerSegmentStore()
-                               if args.neardup_store == "marker"
-                               else RenameSegmentStore()))
+                threshold=args.threshold)
             # persist + count BEFORE the bootstrap: the count both
             # materializes the cache every bootstrap stage then reads
             # and avoids re-scanning the corpus for the summary line

@@ -242,13 +242,11 @@ class _ManifestStreamReader(DataSourceStreamReader):
     def _keep(self, trade_date: str) -> bool:
         """cutoffDate semantics, pinned (ADVICE r14 low): when a
         cutoff is set, UNDATED files (no trade_date= partition in the
-        recorded path) are dropped too — matching the listing-based
-        view mode, whose ``trade_date >= cutoff`` filter drops
-        null-trade_date rows.  The two view_source modes the pipeline
-        documents as equivalent now agree for any future sink layout
-        that emits unpartitioned files (unreachable with the current
-        sink, which filters null time_placed — but the invariant is
-        now tested, not assumed)."""
+        recorded path) are dropped too — the same rows a
+        ``trade_date >= cutoff`` filter over the sink drops (SQL drops
+        null comparisons).  Unreachable with the current sink, which
+        filters null time_placed — but the invariant is tested, not
+        assumed."""
         if self.cutoff is None:
             return True
         if not trade_date:

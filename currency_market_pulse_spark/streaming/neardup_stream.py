@@ -66,8 +66,8 @@ A/B).  Tier-merge segments take ids from a reserved range
 IS the compacting batch id (replay-idempotency relies on that).
 
 Bucket-count scaling: each segment records its own bucket count in a
-``_meta.json`` written into the segment directory BEFORE the
-atomic rename (so it travels with the data through every crash
+``_meta.json`` written into the staged segment directory BEFORE
+publication (so it travels with the data through every crash
 window).  At compaction time the new segment's count is sized from
 its input bytes — ``next_pow2(bytes / target_bucket_bytes)`` clamped
 to [``n_buckets``, ``max_buckets``] — so a 100x-grown index gets
@@ -85,18 +85,20 @@ new segment to a hidden tmp dir, durably record intent (a manifest
 listing the consumed dirs), PUBLISH through the segment store's
 commit point, THEN delete the consumed dirs.  Publication and
 discovery go through the ``segment_store`` seam
-(streaming/segment_store.py): the default RenameSegmentStore commits
-with one atomic directory rename (POSIX/HDFS); MarkerSegmentStore is
-the object-store twin — per-object copies plus a conditional-PUT
-commit marker, no rename anywhere — with recovery equality across
-both test-pinned under injected crashes (tests/test_segment_store.py).
-``_recover_root`` runs at the top of every batch: intent without the
-store's commit record => the publish never committed, drop staging
-and any uncommitted partials (every row still lives in its consumed
-dir); intent with it => finish the deletes.  At no point does a
-reader see a row in zero or two places, and reads list COMMITTED
-segments only (a marker store exposes partially-uploaded dirs to
-listings; ``discover_committed`` excludes them).
+(streaming/segment_store.py): MarkerSegmentStore publishes with
+per-object copies plus a conditional-PUT commit marker, no rename
+anywhere, so the same protocol runs on POSIX disks and object stores
+— recovery equality is test-pinned under injected crashes
+(tests/test_segment_store.py).  ``_recover_root`` runs at the top of
+every batch: intent without the store's commit record => the publish
+never committed, drop staging and the uncommitted partial (every row
+still lives in its consumed dir); intent with it => finish the
+deletes.  Any OTHER marker-less segment, or an intent whose consumed
+sources are partly gone, is refused before anything is modified, not
+skipped: its rows may exist nowhere else.  At no point does a reader
+see a row in zero or two places, and reads list COMMITTED segments only
+(partially-uploaded dirs are visible to listings;
+``discover_committed`` excludes them).
 
 Replay interplay: only batch ids STRICTLY BELOW the current one are
 ever compacted — Structured Streaming can only replay the newest
@@ -132,8 +134,7 @@ from pyspark.sql.utils import AnalysisException
 from currency_market_pulse_spark.functions.text import tokens
 from currency_market_pulse_spark.operators import dedup as D
 from currency_market_pulse_spark.streaming.segment_store import (
-    RenameSegmentStore,
-    claim_root,
+    MarkerSegmentStore,
 )
 
 # Explicit index schemas: the standing relations are read with these
@@ -248,6 +249,17 @@ _STD_FETCH_CAP = 5_000
 
 _TMPSEG = "_compacting_segment"
 _SEGMETA = "_meta.json"
+#: how to open a root published by the rename segment store, which
+#: older versions used by default and which wrote no commit markers
+#: (a visible segment dir was committed by existing)
+RENAME_ROOT_UPGRADE = (
+    "To upgrade a root published by the rename segment store, once, "
+    "with the pipeline stopped: if _compaction_manifest exists and "
+    "base/segment=<its segment> exists, delete every path its "
+    "consumed list names; delete _compacting_segment and "
+    "_compaction_manifest; create an empty _committed file in every "
+    "base/segment=* dir; delete _store_protocol if present; restart.  "
+    "Any other root: inspect it by hand.")
 #: tier-merge segments take ids from here up — minor segments' id IS
 #: the compacting batch id (replay idempotency keys on it), so the
 #: ranges must never collide; 10**12 batch ids at a 1 s trigger is
@@ -398,11 +410,10 @@ class StreamingNearDup:
     #: driver-side from the single foreachBatch thread; None = off.
     events_path: str | None = None
     #: segment publication/discovery seam (streaming/segment_store.py):
-    #: RenameSegmentStore (default — atomic-rename commit, POSIX/HDFS)
-    #: or MarkerSegmentStore (object-store twin: per-object PUTs +
-    #: conditional-PUT commit marker, no rename anywhere).  Recovery
-    #: equality across both is test-pinned (test_segment_store.py).
-    segment_store: "object | None" = None
+    #: None = MarkerSegmentStore (per-object PUTs + conditional-PUT
+    #: commit marker, no rename anywhere).  Tests pass fault-hooked or
+    #: stale-listing subclasses here.
+    segment_store: "MarkerSegmentStore | None" = None
     #: ops introspection: after every process_batch, a dict of
     #: {stage: seconds} wall timings for the batch's driver-side
     #: sections (recover, exact collects, probe, write wave) —
@@ -430,7 +441,7 @@ class StreamingNearDup:
 
     def __post_init__(self):
         if self.segment_store is None:
-            self.segment_store = RenameSegmentStore()
+            self.segment_store = MarkerSegmentStore()
         if self.hashes_path is None:
             self.hashes_path = self.bands_path + "_hashes"
         if self.shards < 1:
@@ -464,14 +475,8 @@ class StreamingNearDup:
 
     def _segments(self, root: str) -> list[tuple[int, str]]:
         """discover_committed(): only fully committed segments — a
-        partially published one (possible on marker stores, where
-        objects appear one PUT at a time) is never read or compacted.
-
-        Claims the root first (protocol stamp): without this a
-        marker-store READER pointed at a rename-owned root would see
-        zero commit markers and silently probe an empty index —
-        fail-fast beats silently missing every standing near-dup."""
-        claim_root(self.segment_store, root)
+        partially published one (objects appear one PUT at a time) is
+        never read or compacted."""
         return self.segment_store.committed(root)
 
     def _recover_root(self, root: str) -> None:
@@ -481,12 +486,53 @@ class StreamingNearDup:
         deletes; uncommitted => drop staging + the ONE partial the
         intent names (its rows all still live in the consumed
         sources).  Cheap driver-side checks — runs every batch.
-        The root is first claimed for this store's protocol
-        (``claim_root``: stamp on first open, fail fast on mismatch
-        — the two stores' commit records are mutually destructive,
-        ADVICE r14)."""
+
+        Before changing anything, the root is refused (``ValueError``,
+        nothing modified) when recovery cannot prove a marker-less
+        ``segment=`` dir is a crashed publish:
+
+        - a marker-less dir that no pending intent names;
+        - a pending intent whose consumed sources are partly gone —
+          marker publication deletes them only after the marker
+          exists, so its segment was committed by another protocol
+          and holds rows that exist nowhere else;
+        - any marker-less dir in a root stamped by the rename segment
+          store (``_store_protocol`` reads ``rename``), whose visible
+          segments were committed by existing.
+
+        Such dirs come from the rename-based store older versions
+        defaulted to; ``RENAME_ROOT_UPGRADE`` is the one-time fix.
+        ``is_committed`` (a HEAD on the marker key) is used, not the
+        listing-based ``committed()``, so a stale listing cannot trip
+        the check."""
         store = self.segment_store
-        claim_root(store, root)
+        intent = store.read_intent(root)
+        pending = (intent if intent is not None
+                   and not store.is_committed(root, intent["segment"])
+                   else None)
+        try:
+            with open(os.path.join(root, "_store_protocol")) as f:
+                rename_root = f.read().strip() == "rename"
+        except OSError:
+            rename_root = False
+        partial = (f"segment={pending['segment']}"
+                   if pending is not None and not rename_root else None)
+        base = os.path.join(root, "base")
+        unmarked = sorted(
+            d for d in (os.listdir(base) if os.path.isdir(base) else [])
+            if d.startswith("segment=") and d != partial
+            and not store.is_committed(root, int(d.split("=", 1)[1])))
+        missing = sorted(
+            rel for rel in (pending or {}).get("consumed", [])
+            if not os.path.exists(os.path.join(root, rel)))
+        if unmarked or missing:
+            raise ValueError(
+                f"index root {root!r} holds segments without a commit "
+                f"marker that recovery cannot prove are crashed "
+                f"publishes (unexplained: {unmarked}; pending intent's "
+                f"missing sources: {missing}).  They may hold rows that "
+                "exist nowhere else, so the index refuses to skip or "
+                "delete them.  " + RENAME_ROOT_UPGRADE)
         # crashed tail-staging dirs (dot-hidden, never listed by
         # Spark): pure garbage — their batch replays wholesale
         tail = os.path.join(root, "tail")
@@ -496,16 +542,12 @@ class StreamingNearDup:
                     shutil.rmtree(os.path.join(tail, d),
                                   ignore_errors=True)
         tmp = os.path.join(root, _TMPSEG)
-        intent = store.read_intent(root)
         if intent is None:
             # nothing in flight (intents are cleared only after
-            # commit), so nothing to sweep: a blanket marker-less
-            # sweep here would eat segments another protocol
-            # committed (ADVICE r14 high) — claim_root above plus the
-            # intent-scoped clean below make that impossible
-            shutil.rmtree(tmp, ignore_errors=True)  # pre-intent garbage
+            # commit): only pre-intent staging garbage to drop
+            shutil.rmtree(tmp, ignore_errors=True)
             return
-        if store.is_committed(root, intent["segment"]):
+        if pending is None:
             for rel in intent["consumed"]:
                 shutil.rmtree(os.path.join(root, rel),
                               ignore_errors=True)
@@ -627,8 +669,8 @@ class StreamingNearDup:
         ``base/segment=<segment_id>`` under the crash-safe manifest
         protocol (module docstring).  The new segment's bucket count
         is sized from its input bytes and recorded in its _meta.json
-        (written into the tmp dir BEFORE the atomic rename, so data
-        and meta become visible together in every crash window)."""
+        (written into the tmp dir BEFORE publication, so data and
+        meta become committed together in every crash window)."""
         consumed = ([os.path.join("tail", os.path.basename(p))
                      for _, p in tails]
                     + [os.path.join("base", os.path.basename(p))
@@ -651,9 +693,8 @@ class StreamingNearDup:
         with open(os.path.join(tmp, _SEGMETA), "w") as f:
             json.dump({"n_buckets": n, "input_bytes": input_bytes}, f)
         # intent -> durable_publish -> delete consumed -> clear: the
-        # commit point lives inside the store (atomic rename, or the
-        # marker store's conditional-PUT commit marker) — the protocol
-        # above it is store-agnostic (segment_store.py)
+        # commit point lives inside the store (the conditional-PUT
+        # commit marker, segment_store.py)
         store = self.segment_store
         store.record_intent(root, segment_id, consumed)
         store.publish(root, tmp, segment_id)
@@ -786,11 +827,9 @@ class StreamingNearDup:
                         json.dump({"n_buckets": n,
                                    "output_bytes": _dir_bytes(dest)}, f)
 
-                # recovery first: claims the root for this store's
-                # protocol (fail-fast on mismatch) and rolls a
-                # crashed prior seed forward/back, so a re-run after
-                # a mid-seed crash is clean instead of stuck on a
-                # marker-less partial
+                # recovery first: rolls a crashed prior seed
+                # forward/back, so a re-run after a mid-seed crash is
+                # clean instead of stuck on a marker-less partial
                 self._recover_root(root)
                 tmp = os.path.join(root, _TMPSEG)
                 shutil.rmtree(tmp, ignore_errors=True)
@@ -808,9 +847,9 @@ class StreamingNearDup:
                     shutil.rmtree(tmp)
                     os.rename(tmp2, tmp)
                 # intent -> publish -> clear, same as the compactor:
-                # without the intent a crash inside a marker-store
-                # publish would leave an unprovable partial that
-                # recovery could never safely delete
+                # without the intent a crash inside a publish would
+                # leave an unprovable partial that recovery could
+                # never safely delete
                 self.segment_store.record_intent(root, segment_id, [])
                 self.segment_store.publish(root, tmp, segment_id)
                 self.segment_store.clear_intent(root)

@@ -7,7 +7,7 @@ compose.yml) —
       -> rate-limit GATEWAY (stateful sliding window per user,
          payload carried through; rejects get retry_after)
       -> parse + normalize admitted payloads (P1..P6 chain)
-      -> ParquetTradesSink (date-partitioned, batch-id idempotent)
+      -> TxnParquetTradesSink (date-partitioned, write-once)
       -> LIVE trends view (manifest-log stream OVER THE SINK's txn
          commit log -> watermarked window aggregation -> in-memory
          queryable table; sources/txn_log_source.py — O(new batches)
@@ -18,15 +18,15 @@ compose.yml) —
       reservoir sample of everything ingested (constant k-row state,
       reservoir_stream.py)
 
-Up to six concurrent streaming queries (two chained through storage,
-four document-side probes); the trends view consumes the SINK's
-files, not the source — so the composition exercises the storage
-hand-off exactly as the reference's trends service reads what the
-importer wrote.  Rejected requests land in a dead-letter parquet with
-their retry_after_ms, mirroring the consumer's HTTP 429 path
-(ratelimit.go:38-62 via rest/api.go).
+Three concurrent streaming queries (import and trends chained through
+storage, one query driving all four document-side consumers); the
+trends view consumes the SINK's files, not the source — so the
+composition exercises the storage hand-off exactly as the reference's
+trends service reads what the importer wrote.  Rejected requests land
+in a dead-letter parquet with their retry_after_ms, mirroring the
+consumer's HTTP 429 path (ratelimit.go:38-62 via rest/api.go).
 
-Delivery semantics: the import sink defaults to the WRITE-ONCE
+Delivery semantics: the import sink is the WRITE-ONCE
 transactional sink (streaming/txn_sink.py — manifest-committed
 publication, every visible file immutable and added exactly once), so
 BOTH the storage AND the live view's file stream are exactly-once
@@ -35,16 +35,11 @@ directive 3; tests/test_txn_sink.py covers the full crash matrix —
 crash before the manifest commit, mid-publish with divergent replayed
 data, post-publish no-op — and proves a readStream.parquet live view
 running THROUGH an injected mid-publish crash-replay of the import
-query ends bit-for-bit equal to the batch result).  The
-pre-r8 gap, kept here for the record: with the plain overwrite sink
-(``txn_sink=False``) a replayed batch rewrites its partition with NEW
-file names, which a path-keyed file source treats as fresh input —
-storage stays exactly-once but the live view double-counts.  That
-mode remains for layout-compatibility comparisons only.
+query ends bit-for-bit equal to the batch result).
 
 At 100 TB nothing here changes shape: the gateway partitions by
-user_id (state ~ in-window requests per user), the sink's dynamic
-partition overwrite keeps replay exactly-once, the live view's state
+user_id (state ~ in-window requests per user), the sink's manifest
+commit keeps replay exactly-once, the live view's state
 is bounded by the watermark, and the near-dup probe runs at
 batch x index cost (queries/dedup.py dedup_incremental).
 """
@@ -65,7 +60,6 @@ from currency_market_pulse_spark.streaming.cms_stream import (
 from currency_market_pulse_spark.streaming.decontam_stream import (
     StreamingDecontam,
 )
-from currency_market_pulse_spark.streaming.importer import ParquetTradesSink
 from currency_market_pulse_spark.streaming.txn_sink import (
     TxnParquetTradesSink,
 )
@@ -80,6 +74,23 @@ from currency_market_pulse_spark.streaming.ratelimiter import (
     rate_limit_gateway_bucketed,
 )
 from currency_market_pulse_spark.streaming.trends_stream import trends_live
+
+#: processing-time trigger of the import and trends legs — the
+#: importer's 1 s flush (streaming/importer.py FLUSH_INTERVAL); the doc
+#: leg uses it too unless ``doc_trigger`` is given
+TRIGGER = "1 second"
+#: event-time lateness the live trends view accepts before a window
+#: closes (trends_stream.trends_live)
+WATERMARK = "10 minutes"
+#: size of the uniform reservoir sample of ingested docs
+RESERVOIR_K = 32
+#: the txn sink writes a Delta-style columnar log checkpoint every N
+#: batches (~2 min at the 1 s trigger): the manifest view's rebuild
+#: reads one checkpoint + <= N manifests instead of O(committed
+#: batches) (txn_sink.py / txn_log_source.py; VERDICT r14 directive
+#: 2).  The write is driver-side, O(history) bytes, but off the
+#: per-trigger path for the other N-1 batches.
+TXN_CHECKPOINT_EVERY = 128
 
 #: how many per-trigger fused-doc timing dicts ComposedPipeline.doc_leg_s
 #: retains (newest wins) — bounds driver memory on long-lived pipelines
@@ -123,11 +134,11 @@ class ComposedPipeline:
     #: the RESOLVED gateway state layout: None = per-user fold,
     #: int = hash-slot bucket count (after "auto" promotion applied)
     gateway_buckets: "int | None" = None
-    #: fused doc mode only: one dict per trigger with the shared-scan
-    #: and per-consumer wall seconds ({batch_id, n_docs, read_tokenize,
-    #: neardup, cms, decontam, reservoir, total}) — appended from the
-    #: single doc foreachBatch thread; tools/stream_bench.py reads it
-    #: for the per-leg p50/p95 the separate queries used to report.
+    #: one dict per doc trigger with the shared-scan and per-consumer
+    #: wall seconds ({batch_id, n_docs, read_tokenize, neardup, cms,
+    #: decontam, reservoir, total}) — appended from the single doc
+    #: foreachBatch thread; tools/stream_bench.py reads it for the
+    #: per-consumer p50/p95.
     #: RING BUFFER (VERDICT r16 directive 4): a long-lived pipeline
     #: appends one dict per trigger forever (~31M/year at a 1 s tier),
     #: so only the newest DOC_LEG_RETAIN entries are retained — the
@@ -225,11 +236,7 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           window_ms: int = DEFAULT_WINDOW_MS,
                           limit: int = DEFAULT_LIMIT,
                           trends_view: str = "pipeline_trends_live",
-                          watermark: str = "10 minutes",
-                          trigger: str | None = "1 second",
                           eval_df: DataFrame | None = None,
-                          txn_sink: bool = True,
-                          reservoir_k: int = 32,
                           requests_stream: DataFrame | None = None,
                           view_rebuild_days: int | None = None,
                           doc_trigger: str | None = None,
@@ -239,21 +246,16 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           neardup_shards: int = 1,
                           gateway_buckets: "int | str | None" = "auto",
                           expected_rows_per_trigger: int | None = None,
-                          view_source: str = "manifest",
-                          neardup_store: str = "rename",
-                          txn_checkpoint_every: int | None = 128,
                           txn_retain_manifests: int | None = 256,
                           txn_publication: str = "rename",
-                          doc_fused: bool = True,
-                          allow_doc_ckpt_reset: bool = False,
                           ) -> ComposedPipeline:
     """Start the full composition and return its handles.
 
     ``requests_dir``: JSON-lines files in the ingest schema (the HTTP
     body shape, api.go:16-25).  ``docs_dir``: JSON-lines (doc_id,
     text) documents for the document-side probes — near-dup index,
-    count-min heavy hitters, a uniform ``reservoir_k``-row reservoir
-    sample (0 disables), and (when ``eval_df`` is given) the
+    count-min heavy hitters, a uniform ``RESERVOIR_K``-row reservoir
+    sample, and (when ``eval_df`` is given) the
     decontaminate-at-ingest screen.  ``out_dir``: all durable output
     (trades parquet, dead letters, indexes, checkpoints).
     ``requests_stream``: alternative ingest front door — a streaming
@@ -263,14 +265,6 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     ``view_rebuild_days``: bound the live view's rebuild-from-storage
     window to the newest N trade-date partitions' horizon (VERDICT r10
     directive 4) — see the query-2 comment for semantics and cost.
-    ``view_source``: "manifest" (default — the txn commit-log feed,
-    bounded per-trigger cost) or "listing" (the pre-r14
-    readStream.parquet file stream, O(total sink files) per trigger;
-    only valid pairing for ``txn_sink=False``).
-    ``neardup_store``: "rename" (default — atomic-rename segment
-    commit, POSIX/HDFS) or "marker" (the object-store publication
-    protocol: per-object PUTs + conditional-PUT commit marker, no
-    rename anywhere — streaming/segment_store.py).
     ``doc_trigger`` / ``doc_files_per_trigger``: run the BACKGROUND
     document probes (near-dup, CMS, decontam, reservoir) on a slower,
     batchier trigger than the latency-critical import/trends legs —
@@ -279,13 +273,10 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     (state commits, python round trips) and their scheduling
     collisions with the import leg's tasks (FAIR shares slots but
     never preempts a running task — SCALE.md Round 12).  Defaults
-    keep every query on ``trigger`` at 1 file per trigger (the r11
+    keep every query on ``TRIGGER`` at 1 file per trigger (the r11
     behavior)."""
     import os
 
-    if neardup_store not in ("rename", "marker"):
-        raise ValueError(f"unknown neardup_store {neardup_store!r} "
-                         "(expected 'rename' or 'marker')")
     # "auto" gateway promotion is the DEFAULT (r15 directive 6,
     # decided r16): it resolves up front against the declared offered
     # rate — None (per-user state) below the unit-pinned
@@ -303,54 +294,35 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     elif isinstance(gateway_buckets, str):
         raise ValueError(f"gateway_buckets={gateway_buckets!r} "
                          "(expected an int, None, or 'auto')")
-    if view_source not in ("manifest", "listing"):
-        raise ValueError(f"unknown view_source {view_source!r} "
-                         "(expected 'manifest' or 'listing')")
-    if view_source == "manifest" and not txn_sink:
-        raise ValueError("view_source='manifest' requires txn_sink=True "
-                         "(the plain sink writes no manifest log); "
-                         "pass view_source='listing'")
 
-    # ---- doc-checkpoint MIGRATION guard (ADVICE r16, medium): the
-    # fused doc side checkpoints under ckpt_docs; the independent legs
-    # checkpoint under ckpt_{neardup,cms,decontam,reservoir}.  Batch-id
-    # idempotency does NOT protect across a mode switch — a fresh
-    # checkpoint restarts at batch 0 with NEW batch-id boundaries, so
-    # CMS per-batch delta partitions double-count every previously
-    # processed doc and near-dup re-probes docs already in the standing
-    # index.  Fail fast when a resume would silently re-ingest; the
-    # migration path is: drain the old deployment, move/clear out_dir's
-    # doc outputs (cms/, decontam_flags/, reservoir/, dups/ + index),
-    # then restart with allow_doc_ckpt_reset=True (or a fresh out_dir).
-    _legacy_legs = [n for n in ("ckpt_neardup", "ckpt_cms",
-                                "ckpt_decontam", "ckpt_reservoir")
-                    if os.path.isdir(os.path.join(out_dir, n))
-                    and os.listdir(os.path.join(out_dir, n))]
-    _fused_ckpt = (os.path.isdir(os.path.join(out_dir, "ckpt_docs"))
-                   and os.listdir(os.path.join(out_dir, "ckpt_docs")))
-    if not allow_doc_ckpt_reset:
-        if doc_fused and _legacy_legs and not _fused_ckpt:
-            raise RuntimeError(
-                "doc_fused=True would start a fresh ckpt_docs checkpoint "
-                f"while legacy per-leg checkpoints exist ({_legacy_legs}): "
-                "the doc dir would be re-ingested from batch 0 with new "
-                "batch-id boundaries (CMS deltas double-count, near-dup "
-                "re-probes indexed docs). Either resume with "
-                "doc_fused=False, or clear the doc outputs and pass "
-                "allow_doc_ckpt_reset=True.")
-        if not doc_fused and _fused_ckpt and not _legacy_legs:
-            raise RuntimeError(
-                "doc_fused=False would start fresh per-leg checkpoints "
-                "while a fused ckpt_docs checkpoint exists: the doc dir "
-                "would be re-ingested from batch 0 (same double-count "
-                "hazard). Either resume with doc_fused=True, or clear "
-                "the doc outputs and pass allow_doc_ckpt_reset=True.")
+    # doc-checkpoint migration guard: the doc side checkpoints under
+    # ckpt_docs; older deployments ran one query per doc leg under
+    # ckpt_{neardup,cms,decontam,reservoir}.  A fresh ckpt_docs
+    # restarts the doc dir at batch 0 with new batch-id boundaries, so
+    # CMS deltas would double-count every processed doc and near-dup
+    # would re-probe indexed docs.  Fail fast before any query starts;
+    # the migration is to clear out_dir's doc outputs (cms/,
+    # decontam_flags/, reservoir/, dups/, the index and the per-leg
+    # checkpoints), or to use a fresh out_dir.
+    legacy_legs = [n for n in ("ckpt_neardup", "ckpt_cms",
+                               "ckpt_decontam", "ckpt_reservoir")
+                   if os.path.isdir(os.path.join(out_dir, n))
+                   and os.listdir(os.path.join(out_dir, n))]
+    docs_ckpt = os.path.join(out_dir, "ckpt_docs")
+    if legacy_legs and not (os.path.isdir(docs_ckpt)
+                            and os.listdir(docs_ckpt)):
+        raise RuntimeError(
+            f"per-leg doc checkpoints {legacy_legs} exist in {out_dir!r} "
+            "but ckpt_docs does not: a fresh ckpt_docs would re-ingest "
+            "the doc dir from batch 0 (CMS deltas double-count, near-dup "
+            "re-probes indexed docs).  Clear the doc outputs and the "
+            "per-leg checkpoints, or use a fresh out_dir.")
 
     def _in_pool(name, start_fn):
         # one FAIR pool per streaming query (session.py sets
         # spark.scheduler.mode=FAIR): the pool name is a thread-local
         # property inherited by the query's execution thread at
-        # start(), so the six queries' micro-batch jobs share task
+        # start(), so the three queries' micro-batch jobs share task
         # slots fairly instead of head-of-line-blocking each other.
         sc = spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", f"stream-{name}")
@@ -398,19 +370,11 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         requests, window_ms, limit, buckets=gateway_buckets)
         if gateway_buckets
         else rate_limit_gateway(requests, window_ms, limit))
-    # write-once txn sink by default: the live view's file stream is
+    # write-once txn sink: the live view's file stream is
     # exactly-once under crash-replay (module docstring; txn_sink.py)
-    # txn_checkpoint_every: Delta-style checkpoint compaction of the
-    # sink's txn log — bounds the manifest view's rebuild-from-scratch
-    # to one columnar read + <=interval manifest JSONs instead of
-    # O(committed batches) (txn_sink.py / txn_log_source.py; VERDICT
-    # r14 directive 2).  128 batches ~= one checkpoint every ~2 min at
-    # the 1 s trigger; the write is driver-side, O(history) bytes but
-    # OFF the per-trigger path for the other 127 batches.
     # txn_publication="put" runs the object-store file-publication
     # twin (copy+fsync, no cross-directory rename — txn_sink.py
-    # OBJECT-STORE PUBLICATION); requires the manifest-fed view,
-    # which is the default pairing anyway.
+    # OBJECT-STORE PUBLICATION).
     # txn_retain_manifests: bound _txn/'s FILE COUNT too — manifests
     # below the durable checkpoint floor are deleted (re-derivable
     # from the checkpoint), keeping the log at O(interval + retain)
@@ -422,11 +386,10 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     # served) — the composed pipeline is the long-lived deployment
     # surface, and an unbounded control log is an operational leak
     # even when never read.
-    sink = (TxnParquetTradesSink(trades_path,
-                                 checkpoint_every=txn_checkpoint_every,
-                                 retain_manifests=txn_retain_manifests,
-                                 publication=txn_publication)
-            if txn_sink else ParquetTradesSink(trades_path))
+    sink = TxnParquetTradesSink(trades_path,
+                                checkpoint_every=TXN_CHECKPOINT_EVERY,
+                                retain_manifests=txn_retain_manifests,
+                                publication=txn_publication)
 
     def import_batch(batch: DataFrame, batch_id: int) -> None:
         # TWO actions consume this micro-batch (sink + dead letter);
@@ -475,9 +438,8 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     # query AND restores an idle point between batches.
     writer = (decisions.writeStream
               .option("checkpointLocation", f"{out_dir}/ckpt_import")
-              .outputMode("append").foreachBatch(import_batch))
-    if trigger:
-        writer = writer.trigger(processingTime=trigger)
+              .outputMode("append").foreachBatch(import_batch)
+              .trigger(processingTime=TRIGGER))
     q_import = _in_pool("import", writer.start)
 
     # ---- query 2: live trends OVER THE SINK's files (storage hand-off)
@@ -509,56 +471,28 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         if dates:
             cutoff = (max(_dt.date.fromisoformat(x) for x in dates)
                       - _dt.timedelta(days=view_rebuild_days - 1))
-    # view_source="manifest" (default, VERDICT r13 directive 1): feed
-    # the view from the txn sink's per-batch manifest LOG
-    # (sources/txn_log_source.py) — per-trigger cost is O(new
-    # batches) manifest probes, never a directory listing.  The old
-    # "listing" mode (readStream.parquet over the sink tree) re-lists
-    # the WHOLE sink every trigger to diff its seen-set — O(total
-    # files in history) driver-side work, measured growing 1.6 ->
-    # 3.7 s view p95 across the r13 900 s soak (~4,000 files);
-    # retained only for the plain-overwrite sink, which writes no
-    # manifests (and whose replay double-counting the txn sink was
-    # built to fix — module docstring).
-    if view_source == "manifest":
-        from currency_market_pulse_spark.sources.txn_log_source import (
-            TxnTradesManifestDataSource,
-        )
-        spark.dataSource.register(TxnTradesManifestDataSource)
-        reader = (spark.readStream.format("txn_trades")
-                  .option("path", trades_path))
-        if cutoff is not None:
-            reader = reader.option("cutoffDate", cutoff.isoformat())
-        sink_stream = reader.load()
-    else:
-        sink_stream = (spark.readStream.schema(_SINK_STREAM_SCHEMA)
-                       .parquet(trades_path))
-        if cutoff is not None:
-            # filter on the partition column: pruned files contribute
-            # only listing cost, never content reads
-            sink_stream = sink_stream.filter(
-                F.col("trade_date") >= F.lit(cutoff))
-    trends_writer = (trends_live(sink_stream, watermark=watermark)
+    # the view reads the txn sink's per-batch manifest LOG
+    # (sources/txn_log_source.py, VERDICT r13 directive 1) —
+    # per-trigger cost is O(new batches) manifest probes, never a
+    # directory listing (a readStream.parquet view re-lists the WHOLE
+    # sink every trigger: measured growing 1.6 -> 3.7 s view p95
+    # across the r13 900 s soak, ~4,000 files).
+    from currency_market_pulse_spark.sources.txn_log_source import (
+        TxnTradesManifestDataSource,
+    )
+    spark.dataSource.register(TxnTradesManifestDataSource)
+    reader = (spark.readStream.format("txn_trades")
+              .option("path", trades_path))
+    if cutoff is not None:
+        reader = reader.option("cutoffDate", cutoff.isoformat())
+    trends_writer = (trends_live(reader.load(), watermark=WATERMARK)
                      .writeStream.format("memory").queryName(trends_view)
                      .option("checkpointLocation", f"{out_dir}/ckpt_trends")
-                     .outputMode("append"))
-    if trigger:
-        trends_writer = trends_writer.trigger(processingTime=trigger)
+                     .outputMode("append")
+                     .trigger(processingTime=TRIGGER))
     q_trends = _in_pool("trends", trends_writer.start)
 
-    # ---- query 3: streaming near-dup index probe over the doc stream
-    d_trigger = doc_trigger if doc_trigger is not None else trigger
-    d_files = str(doc_files_per_trigger)
-
-    def _doc_stream():
-        return (spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", d_files).json(docs_dir))
-
-    from currency_market_pulse_spark.streaming.segment_store import (
-        MarkerSegmentStore, RenameSegmentStore,
-    )
-    seg_store = (MarkerSegmentStore() if neardup_store == "marker"
-                 else RenameSegmentStore())
+    # ---- query 3: the document consumers over one doc stream
     nd = StreamingNearDup(bands_path=f"{out_dir}/idx_bands",
                           shingles_path=f"{out_dir}/idx_shingles",
                           hashes_path=f"{out_dir}/idx_hashes",
@@ -569,7 +503,6 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           # write (minor fold / tier major) — cheap,
                           # and the soak bench reads it back
                           events_path=f"{out_dir}/compaction_events.jsonl",
-                          segment_store=seg_store,
                           # band-hash sharding: S independent index
                           # roots probed concurrently, dup-for-dup
                           # equal to shards=1 (neardup_stream.py)
@@ -581,11 +514,8 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         sd = StreamingDecontam(eval_df,
                                eval_index_path=f"{out_dir}/eval_idx",
                                flags_path=f"{out_dir}/decontam_flags")
-    rs = None
-    if reservoir_k:
-        rs = StreamingReservoir(
-            reservoir_path=f"{out_dir}/reservoir", k=reservoir_k,
-            weight_col=None)
+    rs = StreamingReservoir(reservoir_path=f"{out_dir}/reservoir",
+                            k=RESERVOIR_K, weight_col=None)
 
     pipe_handle = ComposedPipeline(
         spark=spark,
@@ -594,108 +524,86 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         decontam=sd, heavy_hitters=hh, reservoir=rs,
         gateway_buckets=gateway_buckets)
 
-    if doc_fused:
-        # ---- queries 3-6 FUSED (VERDICT r15 directive 1): ONE doc
-        # stream, ONE foreachBatch that reads + tokenizes the batch
-        # once and drives all four doc consumers off the shared
-        # cached relations.  The four independent legs each re-read
-        # and re-tokenized the SAME file every trigger — 3 of 4
-        # doc-side scans+tokenizations were redundant by construction
-        # (measured: composed tier-1 near-dup p50 3,559 ms vs
-        # 1,900 ms solo).  Every consumer stays batch-id idempotent,
-        # so the single checkpoint replays one batch into all four
-        # handlers safely; outputs are bit-equal to the independent
-        # legs (tokens() is deterministic — pinned in
-        # tests/test_pipeline_stream.py).  Trade-off, stated: the
-        # legs now share one query, so one leg's failure stops the
-        # doc side as a unit (the import/trends legs are unaffected),
-        # and per-leg timings come from doc_leg_s instead of
-        # per-query progress.
-        import time as _time
+    # ---- ONE doc stream, ONE foreachBatch that reads + tokenizes the
+    # batch once and drives all four doc consumers off the shared
+    # cached relations (VERDICT r15 directive 1).  Separate per-consumer
+    # queries each re-read and re-tokenized the SAME file every
+    # trigger (measured: composed tier-1 near-dup p50 3,559 ms vs
+    # 1,900 ms solo; fused legs sustained +64% docs/s,
+    # OPTIMIZATION_r17.md).  Every consumer stays batch-id idempotent,
+    # so the single checkpoint replays one batch into all four
+    # handlers safely; outputs are bit-equal to each consumer's own
+    # ``attach()`` (tokens() is deterministic — pinned in
+    # tests/test_pipeline_stream.py).  Trade-off, stated: the
+    # consumers share one query, so one consumer's failure stops the
+    # doc side as a unit (the import/trends legs are unaffected), and
+    # per-consumer timings come from doc_leg_s instead of per-query
+    # progress.
+    import time as _time
+    from concurrent.futures import ThreadPoolExecutor
 
-        from currency_market_pulse_spark.functions.text import tokens
+    from currency_market_pulse_spark.functions.text import tokens
 
-        from concurrent.futures import ThreadPoolExecutor
+    def doc_batch(batch: DataFrame, batch_id: int) -> None:
+        t0 = _time.time()
+        batch = batch.persist()
+        toks = batch.select(
+            "doc_id", tokens(F.col("text")).alias("_t")).persist()
+        legs = {"batch_id": batch_id}
 
-        def doc_batch(batch: DataFrame, batch_id: int) -> None:
-            t0 = _time.time()
-            batch = batch.persist()
-            toks = batch.select(
-                "doc_id", tokens(F.col("text")).alias("_t")).persist()
-            legs = {"batch_id": batch_id}
+        def _timed(fn, *a, **kw) -> float:
+            # worker threads get fresh JVM threads outside the
+            # query's FAIR pool — pin them back to the doc pool
+            spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", "stream-docs")
+            t = _time.time()
+            fn(*a, **kw)
+            return round(_time.time() - t, 4)
 
-            def _timed(fn, *a, **kw) -> float:
-                # worker threads get fresh JVM threads outside the
-                # query's FAIR pool — pin them back to the doc pool
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "stream-docs")
-                t = _time.time()
-                fn(*a, **kw)
-                return round(_time.time() - t, 4)
+        try:
+            # one pass materializes BOTH caches (toks reads batch)
+            legs["n_docs"] = toks.count()
+            legs["read_tokenize"] = round(_time.time() - t0, 4)
+            # the near-dup probe runs FIRST and alone — its
+            # driver-orchestrated collect sequence is the doc
+            # side's critical path, and light-leg jobs queuing
+            # under it were measured at +0.8 s on its p50; the
+            # three light consumers then overlap with EACH OTHER
+            # over the same caches (their wall is dominated by
+            # fixed job-scheduling floor, so the overlap recovers
+            # most of what sequentializing them would cost).
+            legs["neardup"] = _timed(
+                nd.process_batch, batch, batch_id, toks=toks)
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                futs = {"cms": pool.submit(
+                    _timed, hh.process_batch, batch, batch_id,
+                    toks=toks)}
+                if sd is not None:
+                    futs["decontam"] = pool.submit(
+                        _timed, sd.process_batch, batch, batch_id,
+                        toks=toks)
+                futs["reservoir"] = pool.submit(
+                    _timed, rs.process_batch, batch, batch_id)
+                for name, fut in futs.items():
+                    legs[name] = fut.result()
+        finally:
+            toks.unpersist()
+            batch.unpersist()
+        legs["total"] = round(_time.time() - t0, 4)
+        try:
+            legs["rdd_cache_entries"] = (
+                spark.sparkContext._jsc.getPersistentRDDs().size())
+        except Exception:
+            pass
+        pipe_handle.doc_leg_s.append(legs)
 
-            try:
-                # one pass materializes BOTH caches (toks reads batch)
-                legs["n_docs"] = toks.count()
-                legs["read_tokenize"] = round(_time.time() - t0, 4)
-                # the near-dup probe runs FIRST and alone — its
-                # driver-orchestrated collect sequence is the doc
-                # side's critical path, and light-leg jobs queuing
-                # under it were measured at +0.8 s on its p50; the
-                # three light consumers then overlap with EACH OTHER
-                # over the same caches (their wall is dominated by
-                # fixed job-scheduling floor, so the overlap recovers
-                # most of what sequentializing them would cost).
-                legs["neardup"] = _timed(
-                    nd.process_batch, batch, batch_id, toks=toks)
-                with ThreadPoolExecutor(max_workers=3) as pool:
-                    futs = {"cms": pool.submit(
-                        _timed, hh.process_batch, batch, batch_id,
-                        toks=toks)}
-                    if sd is not None:
-                        futs["decontam"] = pool.submit(
-                            _timed, sd.process_batch, batch, batch_id,
-                            toks=toks)
-                    if rs is not None:
-                        futs["reservoir"] = pool.submit(
-                            _timed, rs.process_batch, batch, batch_id)
-                    for name, fut in futs.items():
-                        legs[name] = fut.result()
-            finally:
-                toks.unpersist()
-                batch.unpersist()
-            legs["total"] = round(_time.time() - t0, 4)
-            try:
-                legs["rdd_cache_entries"] = (
-                    spark.sparkContext._jsc.getPersistentRDDs().size())
-            except Exception:
-                pass
-            pipe_handle.doc_leg_s.append(legs)
-
-        doc_writer = (_doc_stream().writeStream
-                      .foreachBatch(doc_batch)
-                      .option("checkpointLocation", f"{out_dir}/ckpt_docs")
-                      .outputMode("update"))
-        if d_trigger:
-            doc_writer = doc_writer.trigger(processingTime=d_trigger)
-        pipe_handle.queries = [q_import, q_trends,
-                               _in_pool("docs", doc_writer.start)]
-        return pipe_handle
-
-    # ---- queries 3-6 as INDEPENDENT legs (doc_fused=False): each
-    # consumer re-reads and re-tokenizes the doc stream — kept for
-    # the fused-vs-independent equality gate and A/B measurement
-    q_dedup = _in_pool("neardup", lambda: nd.attach(
-        _doc_stream(), f"{out_dir}/ckpt_neardup", trigger=d_trigger))
-    queries = [q_import, q_trends, q_dedup]
-    queries.append(_in_pool("cms", lambda: hh.attach(
-        _doc_stream(), f"{out_dir}/ckpt_cms", trigger=d_trigger)))
-    if sd is not None:
-        queries.append(_in_pool("decontam", lambda: sd.attach(
-            _doc_stream(), f"{out_dir}/ckpt_decontam",
-            trigger=d_trigger)))
-    if rs is not None:
-        queries.append(_in_pool("reservoir", lambda: rs.attach(
-            _doc_stream(), f"{out_dir}/ckpt_reservoir",
-            trigger=d_trigger)))
-    pipe_handle.queries = queries
+    doc_writer = (spark.readStream.schema("doc_id long, text string")
+                  .option("maxFilesPerTrigger", str(doc_files_per_trigger))
+                  .json(docs_dir).writeStream
+                  .foreachBatch(doc_batch)
+                  .option("checkpointLocation", f"{out_dir}/ckpt_docs")
+                  .outputMode("update")
+                  .trigger(processingTime=doc_trigger or TRIGGER))
+    pipe_handle.queries = [q_import, q_trends,
+                           _in_pool("docs", doc_writer.start)]
     return pipe_handle

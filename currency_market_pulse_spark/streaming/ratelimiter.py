@@ -17,11 +17,9 @@ per-user request rate inside one window.
 
 from __future__ import annotations
 
-import json as _json
 from collections.abc import Iterator
 from typing import Any
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -163,18 +161,6 @@ def rate_limit_gateway(requests: DataFrame,
 #: bucket-keyed state: the in-window timestamp lists of EVERY user in
 #: the bucket, as parallel arrays (a map encoded the way the state
 #: encoder likes).
-#: packed twin of BUCKET_STATE_SCHEMA (state_codec="packed"): users
-#: as one JSON blob, per-user entry counts and the flattened
-#: timestamps as raw int64 buffers — 3 binary cells per bucket
-#: instead of a nested array<array<long>> (the megacard stress
-#: attributed ~+330 ms p50 to nested-value serialization; this is
-#: the A/B, kept only where measured to win).
-BUCKET_STATE_PACKED_SCHEMA = T.StructType([
-    T.StructField("users_json", T.BinaryType()),
-    T.StructField("counts", T.BinaryType()),
-    T.StructField("ts_flat", T.BinaryType()),
-])
-
 BUCKET_STATE_SCHEMA = T.StructType([
     T.StructField("users", T.ArrayType(T.StringType())),
     T.StructField("recents",
@@ -241,39 +227,13 @@ def select_gateway_buckets(rows_per_trigger: int | None,
 
 
 def _make_bucket_fold(window_ms: int, limit: int,
-                      late_allowance_ms: int,
-                      state_codec: str = "arrow"):
-    packed = state_codec == "packed"
-
+                      late_allowance_ms: int):
     def fold(key, pdfs, state) -> "pd.DataFrame":
         if state.hasTimedOut:
             state.remove()
             return
-        if packed:
-            # binary-packed bucket state (r14 directive 8 A/B): the
-            # per-user timestamp lists flattened into three buffers —
-            # users (one JSON blob), per-user counts (int64 numpy),
-            # timestamps (one flat int64 numpy) — so the state store
-            # serializes 3 binary cells instead of a nested
-            # array<array<long>> of python ints
-            if state.exists:
-                ub, cb, tb = state.get
-                users = _json.loads(ub.decode()) if ub else []
-                counts = (np.frombuffer(cb, np.int64)
-                          if cb else np.empty(0, np.int64))
-                flat = (np.frombuffer(tb, np.int64)
-                        if tb else np.empty(0, np.int64))
-                m = {}
-                pos = 0
-                for u, c in zip(users, counts):
-                    c = int(c)
-                    m[u] = flat[pos:pos + c].tolist()
-                    pos += c
-            else:
-                m = {}
-        else:
-            users, recents = (state.get if state.exists else ([], []))
-            m = dict(zip(users, (list(r) for r in recents)))
+        users, recents = (state.get if state.exists else ([], []))
+        m = dict(zip(users, (list(r) for r in recents)))
         chunks = list(pdfs)
         rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
         if len(rows) > 1:
@@ -316,16 +276,7 @@ def _make_bucket_fold(window_ms: int, limit: int,
                "admitted": ok_out,
                "retry_after_ms": pd.array(retry_out, dtype="Int64"),
                "payload": rows["payload"].to_numpy()}
-        if packed:
-            ub = _json.dumps(list(m.keys()),
-                             separators=(",", ":")).encode()
-            counts = np.fromiter((len(v) for v in m.values()),
-                                 np.int64, len(m))
-            flat = np.fromiter(
-                (t_ for v in m.values() for t_ in v), np.int64)
-            state.update((ub, counts.tobytes(), flat.tobytes()))
-        else:
-            state.update((list(m.keys()), list(m.values())))
+        state.update((list(m.keys()), list(m.values())))
         state.setTimeoutDuration(window_ms)
         yield pd.DataFrame(out)
 
@@ -337,8 +288,7 @@ def rate_limit_gateway_bucketed(
         window_ms: int = DEFAULT_WINDOW_MS,
         limit: int = DEFAULT_LIMIT,
         buckets: int = DEFAULT_GATEWAY_BUCKETS,
-        late_allowance_ms: int | None = None,
-        state_codec: str = "arrow") -> DataFrame:
+        late_allowance_ms: int | None = None) -> DataFrame:
     """The gateway keyed by ``xxhash64(user_id) % buckets`` instead of
     by raw user_id — Redis-Cluster hash slots in Spark terms.
 
@@ -388,16 +338,10 @@ def rate_limit_gateway_bucketed(
     keyed = requests.withColumn(
         "_bucket", F.pmod(F.xxhash64("user_id"),
                           F.lit(buckets)).cast("int"))
-    if state_codec not in ("arrow", "packed"):
-        raise ValueError(f"unknown state_codec {state_codec!r} "
-                         "(expected 'arrow' or 'packed')")
     return (keyed.groupBy("_bucket")
             .applyInPandasWithState(
-                _make_bucket_fold(window_ms, limit, late_allowance_ms,
-                                  state_codec=state_codec),
+                _make_bucket_fold(window_ms, limit, late_allowance_ms),
                 outputStructType=GATEWAY_OUTPUT_SCHEMA,
-                stateStructType=(BUCKET_STATE_PACKED_SCHEMA
-                                 if state_codec == "packed"
-                                 else BUCKET_STATE_SCHEMA),
+                stateStructType=BUCKET_STATE_SCHEMA,
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.ProcessingTimeTimeout))

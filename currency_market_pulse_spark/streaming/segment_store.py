@@ -14,20 +14,15 @@ as an interface:
   recoverably uncommitted (never half-read by a reader).
 - ``committed`` — **discover_committed()**: the exact set of
   committed segments, never including a partially-published one,
-  independent of listing ORDER (test-pinned r13) and — with the
-  marker store — of listing-vs-PUT visibility races.
+  independent of listing ORDER (test-pinned r13) and of
+  listing-vs-PUT visibility races.
 
-Two implementations:
-
-``RenameSegmentStore`` (default, POSIX/HDFS-class filesystems):
-commit point = one atomic directory rename; a visible segment dir IS
-a committed segment, so discovery is a plain listing.  This is
-byte-for-byte the pre-r14 behavior.
-
-``MarkerSegmentStore`` (the object-store twin): stores like S3 have
-NO rename — objects appear one PUT at a time, so a segment's files
-become listable before the segment is whole.  The protocol therefore
-separates visibility from commitment the way Delta/Iceberg do:
+One implementation, ``MarkerSegmentStore``, which needs no rename
+and so runs unchanged on POSIX disks and on object stores.  Stores
+like S3 have NO rename — objects appear one PUT at a time, so a
+segment's files become listable before the segment is whole.  The
+protocol therefore separates visibility from commitment the way
+Delta/Iceberg do:
 
 1. upload every segment file under its final path (each PUT atomic
    per object; the directory is visible but UNCOMMITTED);
@@ -36,8 +31,9 @@ separates visibility from commitment the way Delta/Iceberg do:
    O_CREAT|O_EXCL): it succeeds for exactly one publisher, so two
    racing attempts cannot both commit divergent contents;
 3. discovery returns only marker-bearing segments; recovery deletes
-   marker-less partials (their rows still live in the consumed
-   sources, which are only deleted after the marker exists).
+   the marker-less partial a pending intent names (its rows still
+   live in the consumed sources, which are only deleted after the
+   marker exists).
 
 Underscore-prefixed control files (``_committed``, the intent
 manifest) are invisible to Spark's file listings, so a reader that
@@ -85,155 +81,6 @@ from typing import Callable
 
 _INTENT = "_compaction_manifest"
 _MARKER = "_committed"
-_PROTOCOL = "_store_protocol"
-
-
-def claim_root(store, root: str) -> None:
-    """Stamp (or verify) which publication protocol owns ``root``.
-
-    The two stores interpret the SAME on-disk layout through opposite
-    commit records: rename treats any visible ``segment=`` dir as
-    committed, marker treats marker-less dirs as crashed partials to
-    delete.  Opening a root with the wrong store is therefore not
-    merely wrong — it is destructive (a marker-mode recovery would
-    rmtree every rename-committed segment, whose consumed sources are
-    already gone).  So the FIRST store to open a root writes a
-    ``_store_protocol`` stamp, and every later open fails fast on a
-    mismatch instead of reinterpreting the other protocol's state.
-
-    Legacy roots (populated before stamps existed) are adopted by
-    inspecting the segments' own commit records — both protocols
-    published without a stamp historically, so the stamp's absence
-    does not imply rename (ADVICE r15 medium).  Every dir carrying a
-    ``_committed`` marker is marker-published; a rename store never
-    writes one.  All-marked => marker; none-marked => rename UNLESS a
-    pending intent names one of the unmarked segments (then the root
-    may be a marker root whose only publications crashed mid-PUT —
-    refuse, ADVICE r16); mixed => marker only if the marker-less dirs
-    are exactly the pending intent's segment (the one crash window
-    marker publication allows), else refuse and ask for manual
-    intervention.
-
-    The stamp itself is published content-first: bytes land in a
-    private tmp object, then one atomic ``os.link`` makes them
-    visible (the create-if-absent conditional-PUT twin — a real
-    object PUT is likewise never visible half-written).  Exactly one
-    claimant wins the link; a loser re-reads the winner's stamp,
-    which by construction is never visible empty (ADVICE r15 low).
-    """
-    stamp = os.path.join(root, _PROTOCOL)
-
-    def _read() -> str | None:
-        try:
-            with open(stamp) as f:
-                return f.read().strip() or None
-        except OSError:
-            return None
-
-    def _stamp_create(value: str) -> bool:
-        """Atomically create ``stamp`` with ``value`` as its content;
-        True if this claimant won, False if the stamp already exists
-        (loser must re-read).  Content-first link => a visible stamp
-        always has its full bytes."""
-        os.makedirs(root, exist_ok=True)
-        tmp = f"{stamp}.claim.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(value)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, stamp)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-
-    owner = _read()
-    if owner is None:
-        # Legacy (pre-stamp) root: let the segments' commit records
-        # say which protocol published them.
-        base = os.path.join(root, "base")
-        try:
-            segs = sorted(d for d in os.listdir(base)
-                          if d.startswith("segment="))
-        except OSError:
-            segs = []
-        if segs:
-            unmarked = [d for d in segs if not os.path.exists(
-                os.path.join(base, d, _MARKER))]
-            try:
-                with open(os.path.join(root, _INTENT)) as f:
-                    _pending = json.load(f).get("segment")
-            except (OSError, ValueError):
-                _pending = None
-            if not unmarked:
-                owner = "marker"
-            elif len(unmarked) == len(segs):
-                # ADVICE r16 (low): a pre-stamp MARKER root whose ONLY
-                # segment(s) crashed mid-publish is observationally
-                # all-unmarked — identical to a rename root — except
-                # that the pending intent still names the crashed
-                # segment (intents clear only after commit).  Adopting
-                # it as 'rename' would treat the partial as committed
-                # and finish consumed-source deletes, losing rows.
-                # Mirror the mixed branch's guard: refuse when an
-                # intent explains an unmarked segment.
-                if _pending is not None and (
-                        f"segment={_pending}" in unmarked):
-                    raise ValueError(
-                        f"index root {root!r} has no protocol stamp, "
-                        f"every segment lacks a _committed marker, AND "
-                        f"a pending intent names segment={_pending!r}: "
-                        "this is either a rename root with a stray "
-                        "intent or a marker root whose only "
-                        "publication(s) crashed mid-PUT — the two "
-                        "demand opposite recoveries.  Refusing to "
-                        "guess; inspect the root manually.")
-                owner = "rename"
-            else:
-                # Mixed: tolerable only as marker's one crash window —
-                # an uncommitted partial always has a live intent
-                # naming it (intents clear only after commit).
-                if unmarked == [f"segment={_pending}"]:
-                    owner = "marker"
-                else:
-                    raise ValueError(
-                        f"index root {root!r} has no protocol stamp "
-                        f"and mixed commit records: segments "
-                        f"{unmarked} lack a _committed marker while "
-                        "others carry one, and no pending intent "
-                        "explains the gap.  Refusing to guess — "
-                        "inspect the root manually (marker-less dirs "
-                        "are either rename-committed data or crashed "
-                        "marker partials; the two demand opposite "
-                        "recoveries).")
-    if owner is None:
-        if _stamp_create(store.protocol):
-            return
-        owner = _read()  # lost the race: the winner's stamp is whole
-    if owner == store.protocol:
-        if _read() is None:  # adopt a legacy root: stamp it
-            if not _stamp_create(owner):
-                owner = _read()  # concurrent adopter: verify below
-                if owner == store.protocol:
-                    return
-                # fall through to the mismatch error
-            else:
-                return
-        else:
-            return
-    raise ValueError(
-        f"index root {root!r} was published under the {owner!r} "
-        f"protocol but is being opened with the {store.protocol!r} "
-        "store — refusing: the stores' commit records are mutually "
-        "destructive (a marker-mode recovery would delete rename-"
-        "committed segments; a rename-mode read would scan "
-        "uncommitted marker partials).  Re-open with "
-        f"--neardup-store {owner}, or point at a fresh index root.")
 
 
 class InjectedCrash(RuntimeError):
@@ -249,76 +96,15 @@ def _fsync_file(path: str) -> None:
 
 
 @dataclass
-class RenameSegmentStore:
-    """Atomic-rename publication (POSIX / HDFS): visibility == commit.
-
-    ``publish`` is one os.rename of the staged dir into
-    ``base/segment=<id>``; ``committed`` lists segment dirs (their
-    existence is the commit record).  Identical to the pre-r14
-    protocol in streaming/neardup_stream.py.
-    """
-
-    protocol = "rename"
-
-    def record_intent(self, root: str, segment_id: int,
-                      consumed: list[str]) -> None:
-        manifest = os.path.join(root, _INTENT)
-        with open(manifest + ".tmp", "w") as f:
-            json.dump({"segment": segment_id, "consumed": consumed}, f)
-        os.replace(manifest + ".tmp", manifest)
-
-    def read_intent(self, root: str) -> dict | None:
-        try:
-            with open(os.path.join(root, _INTENT)) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
-    def clear_intent(self, root: str) -> None:
-        try:
-            os.remove(os.path.join(root, _INTENT))
-        except OSError:
-            pass
-
-    def publish(self, root: str, staged_dir: str,
-                segment_id: int) -> None:
-        os.makedirs(os.path.join(root, "base"), exist_ok=True)
-        os.rename(staged_dir,
-                  os.path.join(root, "base", f"segment={segment_id}"))
-
-    def is_committed(self, root: str, segment_id: int) -> bool:
-        return os.path.isdir(
-            os.path.join(root, "base", f"segment={segment_id}"))
-
-    def committed(self, root: str) -> list[tuple[int, str]]:
-        base = os.path.join(root, "base")
-        if not os.path.isdir(base):
-            return []
-        out = []
-        for d in os.listdir(base):
-            if d.startswith("segment="):
-                out.append((int(d.split("=", 1)[1]),
-                            os.path.join(base, d)))
-        return sorted(out)
-
-    def clean_uncommitted(self, root: str,
-                          segment_id: int | None = None) -> None:
-        # visibility == commit: nothing can be visible-yet-uncommitted
-        pass
-
-
-@dataclass
 class MarkerSegmentStore:
-    """No-rename publication (object-store twin): per-object copies +
-    a conditional-PUT ``_committed`` marker.  See module docstring.
+    """No-rename publication: per-object copies + a conditional-PUT
+    ``_committed`` marker.  See module docstring.
 
     ``fault``: optional hook called with a label at every crash
     window (``copy:<relpath>`` before each object lands,
     ``before_marker``, ``after_marker``); raising from it simulates
     the crash — the fault-injection tests' entry point.
     """
-
-    protocol = "marker"
 
     fault: Callable[[str], None] | None = field(default=None)
 
@@ -406,33 +192,18 @@ class MarkerSegmentStore:
                             os.path.join(base, d)))
         return sorted(out)
 
-    def clean_uncommitted(self, root: str,
-                          segment_id: int | None = None) -> None:
-        """Delete visible-but-uncommitted partials (crashed publishes).
-        Safe because consumed sources are only deleted AFTER the
-        marker exists — an uncommitted segment's rows all still live
-        in their sources.  Called from single-threaded recovery only
-        (no publish can be concurrently in flight).
-
-        ``segment_id`` scopes the sweep to the one segment a pending
-        intent names (an uncommitted partial ALWAYS has a live intent
-        — intents are cleared only after commit), so recovery never
-        deletes a marker-less dir it cannot prove is a crashed
-        publish (ADVICE r14 high: a blanket sweep would eat another
-        protocol's committed segments).  ``segment_id=None`` keeps
-        the full sweep for explicit admin use on a root the caller
-        KNOWS is marker-owned throughout."""
-        base = os.path.join(root, "base")
-        if segment_id is not None:
-            d = os.path.join(base, f"segment={segment_id}")
-            if not os.path.exists(os.path.join(d, _MARKER)):
-                shutil.rmtree(d, ignore_errors=True)
-            return
-        if not os.path.isdir(base):
-            return
-        for d in os.listdir(base):
-            if (d.startswith("segment=")
-                    and not os.path.exists(
-                        os.path.join(base, d, _MARKER))):
-                shutil.rmtree(os.path.join(base, d),
-                              ignore_errors=True)
+    def clean_uncommitted(self, root: str, segment_id: int) -> None:
+        """Delete the visible-but-uncommitted partial of a crashed
+        publish of ``segment_id``.  Safe because consumed sources are
+        only deleted AFTER the marker exists — an uncommitted
+        segment's rows all still live in their sources.  Called from
+        single-threaded recovery only (no publish can be concurrently
+        in flight), for the one segment a pending intent names (an
+        uncommitted partial ALWAYS has a live intent — intents are
+        cleared only after commit).  A marker-less dir no intent
+        explains is never deleted: it may hold rows whose sources are
+        gone, so the index refuses such a root instead
+        (neardup_stream.py ``_recover_root``)."""
+        d = os.path.join(root, "base", f"segment={segment_id}")
+        if not os.path.exists(os.path.join(d, _MARKER)):
+            shutil.rmtree(d, ignore_errors=True)

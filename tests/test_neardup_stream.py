@@ -726,45 +726,6 @@ def test_sharded_restart_continues(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_sharded_index_with_marker_store(spark, tmp_path):
-    """Sharding composes with the object-store marker protocol: every
-    shard root is independently claimed/stamped and publishes through
-    conditional-PUT commit markers; dup log equals the rename-store
-    sharded run."""
-    import os as _os
-
-    from currency_market_pulse_spark.streaming.segment_store import (
-        MarkerSegmentStore, RenameSegmentStore,
-    )
-
-    batches = {0: [(1, BASE)], 1: [(2, DISTINCT)],
-               2: _corpus(2, salt="m"), 3: [(9, NEAR)]}
-
-    def run(tag, store):
-        nd = StreamingNearDup(
-            bands_path=str(tmp_path / f"{tag}_bands"),
-            shingles_path=str(tmp_path / f"{tag}_shingles"),
-            dups_path=str(tmp_path / f"{tag}_dups"),
-            compact_every=2, n_buckets=4, shards=2,
-            segment_store=store)
-        _run_batches(nd, spark, batches)
-        return nd
-
-    nd_m = run("mk", MarkerSegmentStore())
-    nd_r = run("rn", RenameSegmentStore())
-    assert _dup_set(nd_m, spark) == _dup_set(nd_r, spark)
-    assert (sorted(map(tuple, nd_m.read_bands(spark).collect()))
-            == sorted(map(tuple, nd_r.read_bands(spark).collect())))
-    # every shard root is stamped with the marker protocol and its
-    # committed segments carry markers
-    for root in nd_m._band_roots() + nd_m._shingle_roots():
-        with open(_os.path.join(root, "_store_protocol")) as f:
-            assert f.read().strip() == "marker"
-        for _i, p in MarkerSegmentStore().committed(root):
-            assert _os.path.exists(_os.path.join(p, "_committed"))
-
-
-@pytest.mark.slow
 def test_sharded_overcap_degrades_to_distributed(spark, tmp_path):
     """ADVICE r15 low: shards>1 with a micro-batch over
     hash_collect_cap used to raise inside foreachBatch — the engine

@@ -263,83 +263,6 @@ def test_composed_pipeline_bucketed_gateway(spark, tmp_path):
     assert (w.n_trades, w.min, w.max) == (3, 1.1, 2.0)
 
 
-@pytest.mark.slow
-def test_view_source_modes_agree_and_invalid_pairing_refused(
-        spark, tmp_path):
-    """r14: the manifest-log view (default) and the legacy listing
-    view produce the SAME trends rows over the same ingest; the
-    manifest mode without the txn sink (no commit log to read) is
-    refused up front."""
-    import pytest
-
-    from currency_market_pulse_spark.streaming.pipeline import (
-        run_composed_pipeline,
-    )
-
-    with pytest.raises(ValueError, match="txn_sink"):
-        run_composed_pipeline(
-            spark, "unused", "unused", str(tmp_path / "nope"),
-            txn_sink=False, view_source="manifest")
-
-    views = {}
-    for mode in ("manifest", "listing"):
-        (tmp_path / mode).mkdir()
-        req, docs = _plant(tmp_path / mode)
-        pipe = run_composed_pipeline(
-            spark, str(req), str(docs), str(tmp_path / mode / "out"),
-            window_ms=1000, limit=2, trends_view=f"vsm_{mode}",
-            view_source=mode)
-        try:
-            pipe.wait_for(trades=4, dead=1, dups=1, windows=1)
-            views[mode] = sorted(
-                tuple(r) for r in spark.table(f"vsm_{mode}").collect())
-        finally:
-            pipe.stop()
-    assert views["manifest"] == views["listing"]
-    assert views["manifest"]          # the scenario closed a window
-
-
-@pytest.mark.slow
-def test_composed_pipeline_marker_segment_store(spark, tmp_path):
-    """r14: the composed pipeline runs its near-dup index on the
-    OBJECT-STORE publication protocol (neardup_store='marker' — no
-    rename anywhere in segment commit) with outputs identical to the
-    default rename store, live compactions included."""
-    from currency_market_pulse_spark.streaming.pipeline import (
-        run_composed_pipeline,
-    )
-
-    import pytest
-
-    with pytest.raises(ValueError, match="neardup_store"):
-        run_composed_pipeline(spark, "u", "u", str(tmp_path / "no"),
-                              neardup_store="s3")
-
-    outs = {}
-    for store in ("rename", "marker"):
-        (tmp_path / store).mkdir()
-        req, docs = _plant(tmp_path / store)
-        # compact every batch so the marker protocol's publish path
-        # actually runs inside the composition
-        pipe = run_composed_pipeline(
-            spark, str(req), str(docs), str(tmp_path / store / "out"),
-            window_ms=1000, limit=2, trends_view=f"nds_{store}",
-            neardup_compact_every=1, neardup_store=store)
-        try:
-            pipe.wait_for(trades=4, dead=1, dups=1, windows=1)
-            outs[store] = (
-                sorted((r.new_id, r.dup_of, round(r.jaccard, 6))
-                       for r in pipe.neardup.read_dups(spark).collect()),
-                sorted(map(tuple,
-                           pipe.neardup.read_bands(spark).collect())),
-                pipe.counts()[:3],
-            )
-        finally:
-            pipe.stop()
-    assert outs["rename"] == outs["marker"]
-    assert outs["marker"][0]          # a near-dup was actually flagged
-
-
 def test_gateway_auto_is_the_default(spark, tmp_path):
     """r15 directive 6, decided r16: the composed pipeline defaults
     to gateway_buckets='auto'.  With no declared offered rate the
@@ -383,85 +306,141 @@ def test_gateway_auto_is_the_default(spark, tmp_path):
     assert dead[0].user_id == "hot" and dead[0].retry_after_ms == 1000
 
 
-@pytest.mark.slow
 def test_fused_doc_legs_equal_independent(spark, tmp_path):
-    """r15 directive 1's equality gate: the FUSED doc side (one
-    read+tokenize per trigger, shared by near-dup, CMS, decontam,
-    reservoir — the default) produces outputs bit-equal to the four
-    independent legs (doc_fused=False), over a multi-batch corpus
-    with exact copies, near-dups, a distinct doc, and a compaction
-    inside the run.  Also pins the fused handle's per-leg timing
-    record."""
+    """r15 directive 1's equality gate: the pipeline's ONE doc query
+    (one read+tokenize per trigger, shared by near-dup, CMS, decontam,
+    reservoir) produces outputs bit-equal to the four consumers each
+    run through its own ``attach()`` over the same doc dir, over a
+    two-batch corpus with exact copies, near-dups, a distinct doc,
+    and a compaction inside the run.  Also pins the handle's per-leg
+    timing record."""
     import os as _os
+    import time
 
+    from currency_market_pulse_spark.streaming.cms_stream import (
+        StreamingHeavyHitters,
+    )
+    from currency_market_pulse_spark.streaming.decontam_stream import (
+        StreamingDecontam,
+    )
+    from currency_market_pulse_spark.streaming.neardup_stream import (
+        StreamingNearDup,
+    )
     from currency_market_pulse_spark.streaming.pipeline import (
-        run_composed_pipeline,
+        RESERVOIR_K, run_composed_pipeline,
+    )
+    from currency_market_pulse_spark.streaming.reservoir_stream import (
+        StreamingReservoir,
     )
 
-    def run(tag, fused):
-        base = tmp_path / tag
-        base.mkdir()
-        req, docs = _plant(base)
-        _write(docs / "d3.json", [{"doc_id": 3, "text": BASE},
-                                  {"doc_id": 4, "text": DISTINCT}])
-        _write(docs / "d4.json", [{"doc_id": 5,
-                                   "text": NEAR.replace("dusk",
-                                                        "noon")}])
-        for i, name in enumerate(["d1.json", "d2.json",
-                                  "d3.json", "d4.json"]):
-            _os.utime(docs / name,
-                      (2_000_000 + i * 100, 2_000_000 + i * 100))
-        ev = spark.createDataFrame([(900, BASE)],
-                                   "doc_id long, text string")
-        pipe = run_composed_pipeline(
-            spark, str(req), str(docs), str(base / "out"),
-            window_ms=1000, limit=2, eval_df=ev,
-            trends_view=f"fde_{tag}", neardup_compact_every=2,
-            doc_fused=fused)
-        try:
-            pipe.wait_for(trades=4, dead=1, dups=3, windows=1)
-            out = pipe.wait_quiescent(stable_secs=4.0)
-            assert out[2] >= 3
-            nd, hh, sd, rs = (pipe.neardup, pipe.heavy_hitters,
-                              pipe.decontam, pipe.reservoir)
-            result = {
-                "dups": sorted((r.new_id, r.dup_of,
-                                round(r.jaccard, 9))
-                               for r in nd.read_dups(spark).collect()),
-                "bands": sorted(map(tuple,
-                                    nd.read_bands(spark).collect())),
-                "hashes": sorted(map(tuple,
-                                     nd.read_hashes(spark).collect())),
-                "shingles": sorted(map(tuple, nd.read_shingles(spark)
-                                       .collect())),
-                "sketch": sorted(map(tuple, hh.merged_sketch(spark)
-                                     .collect())),
-                "hh": sorted(map(tuple, hh.heavy_hitters(spark)
-                                 .collect())),
-                "flags": sorted(
-                    (r.doc_id, r.eval_doc_id, r.n_overlap)
-                    for r in sd.read_flags(spark).collect()),
-                "reservoir": sorted(map(tuple, rs.read_reservoir(spark)
-                                        .collect())),
-            }
-            if fused:
-                legs = pipe.doc_leg_s
-                assert legs and all(
-                    k in legs[-1] for k in
-                    ("read_tokenize", "neardup", "cms", "decontam",
-                     "reservoir", "total", "n_docs"))
-        finally:
-            pipe.stop()
-        return result
+    req, docs = _plant(tmp_path)
+    # two doc files = two micro-batches; compact_every=1 folds batch 0
+    # into a committed base segment before batch 1 probes it
+    _write(docs / "d2.json", [{"doc_id": 2, "text": NEAR},
+                              {"doc_id": 3, "text": BASE},
+                              {"doc_id": 4, "text": DISTINCT},
+                              {"doc_id": 5,
+                               "text": NEAR.replace("dusk", "noon")}])
+    for i, name in enumerate(["d1.json", "d2.json"]):
+        _os.utime(docs / name, (2_000_000 + i * 100, 2_000_000 + i * 100))
+    ev = spark.createDataFrame([(900, BASE)], "doc_id long, text string")
 
-    fused = run("fused", True)
-    indep = run("indep", False)
+    def outputs(nd, hh, sd, rs):
+        return {
+            "dups": sorted((r.new_id, r.dup_of, round(r.jaccard, 9))
+                           for r in nd.read_dups(spark).collect()),
+            "bands": sorted(map(tuple, nd.read_bands(spark).collect())),
+            "hashes": sorted(map(tuple, nd.read_hashes(spark).collect())),
+            "shingles": sorted(map(tuple,
+                                   nd.read_shingles(spark).collect())),
+            "sketch": sorted(map(tuple,
+                                 hh.merged_sketch(spark).collect())),
+            "hh": sorted(map(tuple, hh.heavy_hitters(spark).collect())),
+            "flags": sorted((r.doc_id, r.eval_doc_id, r.n_overlap)
+                            for r in sd.read_flags(spark).collect()),
+            "reservoir": sorted(map(tuple,
+                                    rs.read_reservoir(spark).collect())),
+        }
+
+    out = tmp_path / "out"
+    pipe = run_composed_pipeline(
+        spark, str(req), str(docs), str(out), window_ms=1000, limit=2,
+        eval_df=ev, trends_view="fde_fused", neardup_compact_every=1)
+    try:
+        deadline = time.time() + 120
+        while not any(leg["batch_id"] == 1 for leg in pipe.doc_leg_s):
+            pipe._raise_if_failed()
+            assert time.time() < deadline, "doc query never reached batch 1"
+            time.sleep(0.5)
+        legs = list(pipe.doc_leg_s)
+    finally:
+        pipe.stop()
+    fused = outputs(pipe.neardup, pipe.heavy_hitters, pipe.decontam,
+                    pipe.reservoir)
+    assert all(k in legs[-1] for k in
+               ("read_tokenize", "neardup", "cms", "decontam",
+                "reservoir", "total", "n_docs"))
+
+    # reference: each consumer on its own query over the same files,
+    # one file per micro-batch like the pipeline's doc stream
+    ref = tmp_path / "ref"
+    consumers = (
+        StreamingNearDup(bands_path=str(ref / "idx_bands"),
+                         shingles_path=str(ref / "idx_shingles"),
+                         hashes_path=str(ref / "idx_hashes"),
+                         dups_path=str(ref / "dups"), compact_every=1),
+        StreamingHeavyHitters(sketch_path=str(ref / "cms_sketch"),
+                              cand_path=str(ref / "cms_cand")),
+        StreamingDecontam(ev, eval_index_path=str(ref / "eval_idx"),
+                          flags_path=str(ref / "decontam_flags")),
+        StreamingReservoir(reservoir_path=str(ref / "reservoir"),
+                           k=RESERVOIR_K, weight_col=None),
+    )
+    for i, c in enumerate(consumers):
+        q = c.attach(spark.readStream.schema("doc_id long, text string")
+                     .option("maxFilesPerTrigger", "1").json(str(docs)),
+                     str(ref / f"ckpt_{i}"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    indep = outputs(*consumers)
+
     assert fused == indep
     # the scenario actually exercised every output
     assert fused["dups"] and fused["flags"] and fused["sketch"]
     assert {n for n, _, _ in fused["dups"]} == {2, 3, 5}
     assert (3, 1, 1.0) in fused["dups"]          # exact copy
+    # the compaction published a committed segment inside the pipeline
+    assert pipe.neardup._segments(pipe.neardup.bands_path)
     assert {r[0] for r in fused["reservoir"]} == {1, 2, 3, 4, 5}
+
+
+def test_doc_ckpt_mode_switch_fails_fast(tmp_path):
+    """An out_dir holding the per-leg doc checkpoints of an older
+    deployment (one query per doc leg) must not silently start a fresh
+    ckpt_docs: the doc dir would re-ingest from batch 0 with new
+    batch-id boundaries (CMS deltas double-count, near-dup re-probes
+    indexed docs).  The pipeline fails fast before starting any
+    query, and touches nothing."""
+    import os
+
+    import pytest
+
+    from currency_market_pulse_spark.streaming.pipeline import (
+        run_composed_pipeline,
+    )
+
+    out = tmp_path / "out"
+    legacy = out / "ckpt_neardup" / "offsets"
+    legacy.mkdir(parents=True)
+    (legacy / "0").write_text("{}")
+    # spark=None proves the guard fires before ANY Spark work
+    with pytest.raises(RuntimeError, match="ckpt_docs"):
+        run_composed_pipeline(None, str(tmp_path / "req"),
+                              str(tmp_path / "docs"), str(out))
+    assert os.path.exists(str(legacy / "0"))
+    assert sorted(os.listdir(out)) == ["ckpt_neardup"]
 
 
 def test_doc_leg_timings_ring_buffer():
@@ -481,41 +460,3 @@ def test_doc_leg_timings_ring_buffer():
     # newest retained, oldest evicted
     assert pipe.doc_leg_s[-1]["batch_id"] == DOC_LEG_RETAIN + 249
     assert pipe.doc_leg_s[0]["batch_id"] == 250
-
-
-def test_doc_ckpt_mode_switch_fails_fast(tmp_path):
-    """ADVICE r16 (medium): switching doc_fused across a resume
-    silently abandons the other mode's checkpoints — the doc dir
-    would re-ingest from batch 0 with new batch-id boundaries (CMS
-    deltas double-count, near-dup re-probes indexed docs).  The
-    pipeline must fail fast BEFORE starting any query, in both
-    directions, unless the caller opts into the reset."""
-    import os
-
-    import pytest
-
-    from currency_market_pulse_spark.streaming.pipeline import (
-        run_composed_pipeline,
-    )
-
-    out = tmp_path / "out"
-    legacy = out / "ckpt_neardup" / "offsets"
-    legacy.mkdir(parents=True)
-    (legacy / "0").write_text("{}")
-    # spark=None proves the guard fires before ANY Spark work
-    with pytest.raises(RuntimeError, match="ckpt_docs"):
-        run_composed_pipeline(None, str(tmp_path / "req"),
-                              str(tmp_path / "docs"), str(out),
-                              doc_fused=True)
-    # reverse direction: fused checkpoint present, independent resume
-    out2 = tmp_path / "out2"
-    fused = out2 / "ckpt_docs" / "offsets"
-    fused.mkdir(parents=True)
-    (fused / "0").write_text("{}")
-    with pytest.raises(RuntimeError, match="per-leg"):
-        run_composed_pipeline(None, str(tmp_path / "req"),
-                              str(tmp_path / "docs"), str(out2),
-                              doc_fused=False)
-    # nothing was created/cleared by the refusals
-    assert os.path.exists(str(legacy / "0"))
-    assert os.path.exists(str(fused / "0"))

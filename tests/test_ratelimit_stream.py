@@ -335,71 +335,3 @@ def test_pipeline_rejects_unknown_gateway_buckets_string(spark, tmp_path):
         run_composed_pipeline(
             spark, str(tmp_path / "req"), str(tmp_path / "docs"),
             str(tmp_path / "out"), gateway_buckets="automatic")
-
-
-def test_packed_state_codec_equals_arrow(spark, tmp_path):
-    """state_codec="packed" (binary-packed bucket state: users JSON
-    blob + int64 count/timestamp buffers) makes IDENTICAL decisions
-    to the default nested-array state — across multi-batch streams,
-    bucket collisions, over-limit bursts, and state carried between
-    micro-batches (the encode/decode round-trip is exercised on
-    every trigger after the first)."""
-    import json as _json
-    import os
-    import time as _t
-
-    from currency_market_pulse_spark.streaming.ratelimiter import (
-        rate_limit_gateway_bucketed,
-    )
-
-    def mk_events():
-        evs = []
-        eid = 0
-        for b in range(3):
-            for i in range(5):
-                evs.append({"user_id": "burst", "event_id": eid,
-                            "ts_ms": 1000 + b * 700 + i * 10}); eid += 1
-            evs.append({"user_id": "steady", "event_id": eid,
-                        "ts_ms": 1000 + b * 700}); eid += 1
-            evs.append({"user_id": f"once{b}", "event_id": eid,
-                        "ts_ms": 1000 + b * 700}); eid += 1
-        return evs
-
-    def run(tag, codec):
-        src = tmp_path / f"in_{tag}"
-        src.mkdir()
-        evs = mk_events()
-        for b in range(3):
-            p = src / f"f{b}.json"
-            with open(p, "w") as f:
-                for e in evs[b * 7:(b + 1) * 7]:
-                    f.write(_json.dumps(e | {"payload": "p" +
-                            str(e["event_id"])}) + "\n")
-            os.utime(p, (1_000_000 + b * 100,) * 2)
-        stream = (spark.readStream
-                  .schema("user_id string, event_id long, ts_ms long, "
-                          "payload string")
-                  .option("maxFilesPerTrigger", "1").json(str(src)))
-        out = rate_limit_gateway_bucketed(
-            stream, window_ms=1000, limit=3, buckets=2,
-            state_codec=codec)
-        q = (out.writeStream.format("memory").queryName(f"pc_{tag}")
-             .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-             .outputMode("append").start())
-        try:
-            deadline = _t.time() + 90
-            while _t.time() < deadline:
-                if spark.table(f"pc_{tag}").count() >= 21:
-                    break
-                _t.sleep(0.5)
-            return sorted(map(tuple, spark.table(f"pc_{tag}")
-                              .collect()))
-        finally:
-            q.stop()
-
-    arrow = run("arrow", "arrow")
-    packed = run("packed", "packed")
-    assert len(arrow) == 21
-    assert arrow == packed
-    rejected = [r for r in arrow if not r[4]]
-    assert rejected, "scenario must exercise rejection paths"

@@ -1,14 +1,10 @@
 """The segment publication seam (VERDICT r13 directive 2): the
 near-dup index's durability contract — durable_publish /
-discover_committed — executed against BOTH implementations:
-
-- RenameSegmentStore (default): atomic-rename commit, the pre-r14
-  protocol byte-for-byte;
-- MarkerSegmentStore: the object-store twin with NO rename anywhere —
-  per-object copies become visible one at a time, commit is a single
-  conditional-PUT marker object — under injected crashes at every
-  window class (mid-copy, at the commit boundary, after commit
-  before source cleanup).
+discover_committed — executed against MarkerSegmentStore, which has
+NO rename anywhere: per-object copies become visible one at a time,
+commit is a single conditional-PUT marker object.  It runs under
+injected crashes at every window class (mid-copy, at the commit
+boundary, after commit before source cleanup).
 
 The scenario mirrors
 test_neardup_stream.py::test_recovery_and_probe_independent_of_listing_order
@@ -26,7 +22,7 @@ from currency_market_pulse_spark.streaming.neardup_stream import (
     StreamingNearDup,
 )
 from currency_market_pulse_spark.streaming.segment_store import (
-    InjectedCrash, MarkerSegmentStore, RenameSegmentStore,
+    InjectedCrash, MarkerSegmentStore,
 )
 
 BASE = ("the quick brown fox jumps over the lazy dog while the calm "
@@ -116,24 +112,11 @@ def _assert_scenario_bit(state):
     assert 50 not in hashes  # exact copies are never indexed
 
 
-@pytest.mark.slow
-def test_marker_store_equals_rename_store(spark, tmp_path):
-    """Crash-free: the no-rename marker protocol produces bit-identical
-    index state and dup log to the atomic-rename default."""
-    rename_state, _, _ = _run(spark, tmp_path, "ren",
-                              lambda _f: RenameSegmentStore())
-    marker_state, labels, _ = _run(spark, tmp_path, "mrk",
-                                   lambda f: MarkerSegmentStore(fault=f))
-    assert rename_state == marker_state
-    _assert_scenario_bit(marker_state)
-    # the run exercised real publishes through the marker protocol
-    assert any(l.startswith("copy:") for l in labels)
-    assert "before_marker" in labels and "after_marker" in labels
-
-
-@pytest.mark.parametrize("window", ["first_copy", "first_marker",
-                                    "last_marker", "after_commit"])
-@pytest.mark.slow
+@pytest.mark.parametrize("window", [
+    pytest.param("first_copy", marks=pytest.mark.slow),
+    "first_marker",
+    pytest.param("last_marker", marks=pytest.mark.slow),
+    pytest.param("after_commit", marks=pytest.mark.slow)])
 def test_marker_store_crash_windows(spark, tmp_path, window):
     """Recovery equality with NO atomic rename anywhere: crash the
     publish at every window class — mid-copy (some objects visible,
@@ -157,6 +140,10 @@ def test_marker_store_crash_windows(spark, tmp_path, window):
         lambda f: MarkerSegmentStore(fault=f), crash_at=idx + 1)
     assert crashed is not None
     assert crash_state == clean_state
+    _assert_scenario_bit(crash_state)
+    # the run exercised real publishes through the marker protocol
+    assert any(l.startswith("copy:") for l in labels)
+    assert "before_marker" in labels and "after_marker" in labels
 
 
 def test_committed_excludes_partial_segments(spark, tmp_path):
@@ -179,7 +166,7 @@ def test_committed_excludes_partial_segments(spark, tmp_path):
         f.write("not parquet — must never be opened")
     assert store.committed(root) == committed_before
     assert _state(nd, spark) == before       # reads skip the partial
-    store.clean_uncommitted(root)
+    store.clean_uncommitted(root, 777)
     assert not os.path.exists(partial)
 
 
@@ -206,78 +193,151 @@ def test_marker_commit_is_single_winner(tmp_path):
     assert [i for i, _p in store.committed(root)] == [5]
 
 
-# ---- protocol stamping (ADVICE r14 high + medium) -------------------
+# ---- marker-less segments outside a pending intent ------------------
 #
-# The two stores read the SAME layout through opposite commit records,
-# so opening a root with the wrong store used to be destructive: a
-# marker-mode recovery swept every marker-less dir — i.e. every
-# rename-committed segment (whose consumed sources are long gone).
-# The root is now stamped with its publication protocol on first open
-# and a mismatched open fails fast; uncommitted-partial cleanup is
-# additionally scoped to the one segment a pending intent names.
-
-from currency_market_pulse_spark.streaming.segment_store import (  # noqa: E402
-    claim_root,
-)
+# The only marker-less segment dir that can legitimately exist is the
+# partial a pending intent names, while every source it consumes is
+# still present.  Any other one (e.g. published by a rename-based
+# store, which wrote no marker) may hold rows whose consumed sources
+# are gone: skipping it would silently drop them from the probe,
+# deleting it would lose them.  Recovery refuses the root instead,
+# before it modifies anything.
 
 
 def _df(spark, b):
     return spark.createDataFrame(_BATCHES[b], "doc_id long, text string")
 
 
-def test_protocol_mismatch_refused_and_nondestructive(spark, tmp_path):
-    """Opening a rename-committed index with the marker store refuses
-    up front — and, critically, deletes NOTHING (the pre-fix behavior
-    rmtree'd every committed segment on the first _recover_root)."""
-    nd = _mk_nd(tmp_path, "pm", RenameSegmentStore())
-    for b in (0, 1, 2):          # batch 2 compacts -> committed segs
-        nd.process_batch(_df(spark, b), b)
-    segs = {root: RenameSegmentStore().committed(root)
-            for root in (nd.bands_path, nd.shingles_path,
-                         nd.hashes_path)}
-    assert segs[nd.bands_path], "scenario must commit a segment"
-    before = _state(nd, spark)
-    nd2 = _mk_nd(tmp_path, "pm", MarkerSegmentStore())  # same paths
-    with pytest.raises(ValueError, match="protocol"):
-        nd2.process_batch(_df(spark, 3), 3)
-    for root, s in segs.items():
-        assert RenameSegmentStore().committed(root) == s
-    assert _state(nd, spark) == before
-    # the rename store still opens it fine
-    nd3 = _mk_nd(tmp_path, "pm", RenameSegmentStore())
-    nd3.process_batch(_df(spark, 3), 3)
-
-
-def test_legacy_unstamped_root_owned_by_rename(tmp_path):
-    """A root populated before stamps existed (segments, no stamp) is
-    adopted as rename-owned — rename was the only protocol that ever
-    published unstamped (including the backfill CLI's seed).  The
-    marker store must refuse it; the rename store adopts + stamps."""
-    root = str(tmp_path / "legacy")
-    seg = os.path.join(root, "base", "segment=0")
+def _seg(root, sid, marked):
+    seg = os.path.join(root, "base", f"segment={sid}")
     os.makedirs(seg)
     with open(os.path.join(seg, "part-0.parquet"), "w") as f:
         f.write("data")
-    with pytest.raises(ValueError, match="rename"):
-        claim_root(MarkerSegmentStore(), root)
-    assert os.path.exists(os.path.join(seg, "part-0.parquet"))
-    claim_root(RenameSegmentStore(), root)   # adopts
-    with open(os.path.join(root, "_store_protocol")) as f:
-        assert f.read().strip() == "rename"
-    # now stamped: the refusal is symmetric and still non-destructive
-    with pytest.raises(ValueError, match="protocol"):
-        claim_root(MarkerSegmentStore(), root)
+    if marked:
+        open(os.path.join(seg, "_committed"), "w").close()
+    return seg
 
 
-def test_marker_root_refuses_rename_store(tmp_path):
-    """Reverse switch (ADVICE r14 medium): a marker-owned root opened
-    with the rename store would treat uncommitted partials as
-    committed — refused by the same stamp."""
-    root = str(tmp_path / "midx")
-    claim_root(MarkerSegmentStore(), root)
-    with pytest.raises(ValueError, match="protocol"):
-        claim_root(RenameSegmentStore(), root)
-    claim_root(MarkerSegmentStore(), root)   # idempotent for the owner
+def _intent(root, sid, consumed=()):
+    with open(os.path.join(root, "_compaction_manifest"), "w") as f:
+        json.dump({"segment": sid, "consumed": list(consumed)}, f)
+
+
+def _tree(*roots):
+    """Every file under ``roots`` with its bytes."""
+    out = {}
+    for r in roots:
+        for d, _sub, files in os.walk(r):
+            for f in files:
+                p = os.path.join(d, f)
+                with open(p, "rb") as fh:
+                    out[p] = fh.read()
+    return out
+
+
+def test_protocol_mismatch_refused_and_nondestructive(spark, tmp_path):
+    """An index whose committed segments carry no commit marker (what
+    a rename-based publication protocol leaves behind) is refused on
+    the first ``process_batch`` — and, critically, NOTHING under it is
+    deleted or written: no probe, no tail, no sweep."""
+    nd = _mk_nd(tmp_path, "pm", MarkerSegmentStore())
+    for b in (0, 1, 2):          # batch 2 compacts -> committed segs
+        nd.process_batch(_df(spark, b), b)
+    roots = (nd.bands_path, nd.shingles_path, nd.hashes_path)
+    for root in roots:
+        segs = MarkerSegmentStore().committed(root)
+        assert segs, "scenario must commit a segment"
+        for _sid, seg in segs:    # strip the commit records
+            os.remove(os.path.join(seg, "_committed"))
+    before = _tree(*roots, nd.dups_path)
+    nd2 = _mk_nd(tmp_path, "pm", MarkerSegmentStore())  # same paths
+    with pytest.raises(ValueError, match="commit marker"):
+        nd2.process_batch(_df(spark, 3), 3)
+    assert _tree(*roots, nd.dups_path) == before
+
+
+def test_legacy_unstamped_root_owned_by_rename(tmp_path):
+    """A root populated by a rename-based protocol (segments, no
+    commit markers, no intent) is refused by recovery, and refused
+    again on every reopen — the segment is never deleted."""
+    nd = _mk_nd(tmp_path, "legacy", MarkerSegmentStore())
+    root = nd.bands_path
+    seg = _seg(root, 0, marked=False)
+    for _ in range(2):
+        with pytest.raises(ValueError, match="commit marker"):
+            nd._recover_root(root)
+        with open(os.path.join(seg, "part-0.parquet")) as f:
+            assert f.read() == "data"
+    assert os.listdir(os.path.join(root, "base")) == ["segment=0"]
+    # the upgrade (RENAME_ROOT_UPGRADE): mark the segment committed
+    open(os.path.join(seg, "_committed"), "w").close()
+    nd._recover_root(root)
+    assert [i for i, _ in nd.segment_store.committed(root)] == [0]
+
+
+def test_legacy_marker_root_adopted_by_marker_store(tmp_path):
+    """A root written before stamps existed whose segments all carry
+    ``_committed`` markers is the marker store's own: recovery opens
+    it as is, every segment stays committed, and no stamp or other
+    file is added (recovery is idempotent)."""
+    nd = _mk_nd(tmp_path, "legmk", MarkerSegmentStore())
+    root = nd.bands_path
+    for sid in (0, 1):
+        _seg(root, sid, marked=True)
+    before = _tree(root)
+    for _ in range(2):
+        nd._recover_root(root)
+        assert [i for i, _ in nd.segment_store.committed(root)] == [0, 1]
+        assert _tree(root) == before
+
+
+def test_legacy_mixed_root_refused_without_intent(tmp_path):
+    """Mixed commit records (some segments marked, some not) with no
+    pending intent explaining the gap: the marker-less dir may hold
+    rows that exist nowhere else, so recovery refuses the root and
+    deletes nothing — manual intervention required."""
+    nd = _mk_nd(tmp_path, "legmix", MarkerSegmentStore())
+    root = nd.bands_path
+    for sid, marked in ((0, True), (1, False)):
+        _seg(root, sid, marked)
+    before = _tree(root)
+    with pytest.raises(ValueError, match="commit marker"):
+        nd._recover_root(root)
+    assert _tree(root) == before
+
+
+def test_legacy_all_unmarked_with_intent_refused(tmp_path):
+    """An all-unmarked root with a pending intent: recovery may drop
+    only a partial it can prove is marker publication's crash window —
+    the ONE segment the intent names, with every consumed source still
+    present (marker publication deletes them only after the marker
+    exists).  Otherwise the root is refused before anything is
+    modified, and kept byte for byte:
+
+    - the intent names a DIFFERENT segment (explains none of them);
+    - the intent names the segment but some consumed source is gone
+      (a rename-committed segment caught mid-delete: its rows exist
+      nowhere else);
+    - the intent names one segment and another is unmarked;
+    - the root is stamped by the rename store (its segments were
+      committed by existing)."""
+    cases = (("foreign", [3], 99, [], None),
+             ("gone", [3], 3, ["tail/batch_id=0"], None),
+             ("own", [3, 4], 3, [], None),
+             ("stamped", [3], 3, [], "rename"))
+    for tag, sids, pending, consumed, stamp in cases:
+        nd = _mk_nd(tmp_path, tag, MarkerSegmentStore())
+        root = nd.bands_path
+        for sid in sids:
+            _seg(root, sid, marked=False)
+        _intent(root, pending, consumed)
+        if stamp is not None:
+            with open(os.path.join(root, "_store_protocol"), "w") as f:
+                f.write(stamp)
+        before = _tree(root)
+        with pytest.raises(ValueError, match="commit marker"):
+            nd._recover_root(root)
+        assert _tree(root) == before, tag
 
 
 def test_clean_uncommitted_scoped_to_intent_segment(tmp_path):
@@ -334,74 +394,26 @@ def test_backfill_marker_store_crash_then_rerun(spark, tmp_path):
     assert _state(nd2, spark)[1:] == _state(_nd_clean, spark)[1:]
 
 
-def test_legacy_marker_root_adopted_by_marker_store(tmp_path):
-    """ADVICE r15 medium: a pre-stamp root whose segments all carry
-    _committed markers was marker-published — the old all-legacy-is-
-    rename rule misadopted it, refusing its real owner and telling
-    the operator to reopen with the rename store (which would scan
-    crashed uncommitted partials as committed data).  claim_root now
-    reads the segments' own commit records: all-marked => marker."""
-    root = str(tmp_path / "legmk")
-    for sid in (0, 1):
-        seg = os.path.join(root, "base", f"segment={sid}")
-        os.makedirs(seg)
-        with open(os.path.join(seg, "part-0.parquet"), "w") as f:
-            f.write("data")
-        open(os.path.join(seg, "_committed"), "w").close()
-    with pytest.raises(ValueError, match="marker"):
-        claim_root(RenameSegmentStore(), root)
-    claim_root(MarkerSegmentStore(), root)   # adopts + stamps
-    with open(os.path.join(root, "_store_protocol")) as f:
-        assert f.read().strip() == "marker"
-    with pytest.raises(ValueError, match="protocol"):
-        claim_root(RenameSegmentStore(), root)
-    claim_root(MarkerSegmentStore(), root)   # idempotent for the owner
-
-
-def test_legacy_mixed_root_refused_without_intent(tmp_path):
-    """Mixed commit records (some segments marked, some not) with no
-    pending intent explaining the gap: neither protocol can prove
-    ownership — the marker-less dirs are either rename-committed data
-    or crashed marker partials, and the two demand opposite
-    recoveries.  claim_root refuses BOTH stores, non-destructively."""
-    root = str(tmp_path / "legmix")
-    for sid, marked in ((0, True), (1, False)):
-        seg = os.path.join(root, "base", f"segment={sid}")
-        os.makedirs(seg)
-        with open(os.path.join(seg, "part-0.parquet"), "w") as f:
-            f.write("data")
-        if marked:
-            open(os.path.join(seg, "_committed"), "w").close()
-    for store in (RenameSegmentStore(), MarkerSegmentStore()):
-        with pytest.raises(ValueError, match="mixed"):
-            claim_root(store, root)
-    # nothing deleted, nothing stamped — manual intervention required
-    assert not os.path.exists(os.path.join(root, "_store_protocol"))
-    for sid in (0, 1):
-        assert os.path.exists(os.path.join(
-            root, "base", f"segment={sid}", "part-0.parquet"))
-
-
 def test_legacy_mixed_root_with_intent_is_marker_crash(tmp_path):
     """Mixed commit records WHERE the marker-less segment is exactly
-    the one a pending intent names: that is marker publication's one
-    legal crash window (intents clear only after commit), so the root
-    is provably marker-owned — adopted as marker, refused to rename."""
-    root = str(tmp_path / "legcrash")
-    for sid, marked in ((0, True), (1, False)):
-        seg = os.path.join(root, "base", f"segment={sid}")
-        os.makedirs(seg)
-        with open(os.path.join(seg, "part-0.parquet"), "w") as f:
-            f.write("partial" if not marked else "data")
-        if marked:
-            open(os.path.join(seg, "_committed"), "w").close()
-    with open(os.path.join(root, "_compaction_manifest"), "w") as f:
-        json.dump({"segment": 1, "consumed": []}, f)
-    with pytest.raises(ValueError, match="marker"):
-        claim_root(RenameSegmentStore(), root)
-    claim_root(MarkerSegmentStore(), root)   # adopts + stamps
-    with open(os.path.join(root, "_store_protocol")) as f:
-        assert f.read().strip() == "marker"
+    the one a pending intent names, with its consumed sources all
+    present: that is marker publication's one legal crash window
+    (intents clear only after commit), so recovery deletes that
+    partial and clears the intent instead of refusing the root; the
+    committed segment and the sources stay."""
+    nd = _mk_nd(tmp_path, "legcrash", MarkerSegmentStore())
+    root = nd.bands_path
+    paths = {sid: _seg(root, sid, marked)
+             for sid, marked in ((0, True), (1, False))}
+    src = os.path.join(root, "tail", "batch_id=0")
+    os.makedirs(src)
+    _intent(root, 1, ["tail/batch_id=0"])
+    nd._recover_root(root)
+    assert not os.path.exists(paths[1])
+    assert not os.path.exists(os.path.join(root, "_compaction_manifest"))
+    assert os.path.exists(os.path.join(paths[0], "part-0.parquet"))
+    assert os.path.isdir(src)
+    assert [i for i, _ in nd.segment_store.committed(root)] == [0]
 
 
 # ---- stale-listing fault injection (VERDICT r15 directive 5) --------
@@ -466,7 +478,6 @@ def test_stale_discovery_never_serves_uncommitted_and_converges(
     excluded in EVERY round."""
     store = _StaleListingStore()
     root = str(tmp_path / "idx")
-    claim_root(store, root)
     for sid in (0, 1):
         staged = str(tmp_path / f"stage{sid}")
         os.makedirs(staged)
@@ -529,35 +540,3 @@ def test_probe_under_stale_listing_misses_at_most_one_trigger(
         [(98, BASE)], "doc_id long, text string"), 4)
     dups = {r.new_id: r.dup_of for r in nd.read_dups(spark).collect()}
     assert dups.get(98) == 1    # settled index serves the match again
-
-
-def test_legacy_all_unmarked_with_intent_refused(tmp_path):
-    """ADVICE r16 (low): a pre-stamp MARKER root whose ONLY segment
-    crashed mid-publish is all-unmarked — observationally identical
-    to a rename root — except the pending intent still names the
-    crashed segment.  Adopting it as rename would treat the partial
-    as committed (and rename recovery would finish consumed-source
-    deletes, losing rows), so claim_root refuses BOTH stores and
-    asks for manual inspection, non-destructively."""
-    root = str(tmp_path / "legsolo")
-    seg = os.path.join(root, "base", "segment=3")
-    os.makedirs(seg)
-    with open(os.path.join(seg, "part-0.parquet"), "w") as f:
-        f.write("partial")
-    with open(os.path.join(root, "_compaction_manifest"), "w") as f:
-        json.dump({"segment": 3, "consumed": []}, f)
-    for store in (RenameSegmentStore(), MarkerSegmentStore()):
-        with pytest.raises(ValueError, match="pending intent"):
-            claim_root(store, root)
-    # nothing stamped, nothing deleted
-    assert not os.path.exists(os.path.join(root, "_store_protocol"))
-    assert os.path.exists(os.path.join(seg, "part-0.parquet"))
-    # an intent naming a DIFFERENT segment does not poison adoption:
-    # the unmarked segments are not explained by it, and an
-    # all-unmarked root with a stale foreign intent is still the
-    # rename shape
-    with open(os.path.join(root, "_compaction_manifest"), "w") as f:
-        json.dump({"segment": 99, "consumed": []}, f)
-    claim_root(RenameSegmentStore(), root)
-    with open(os.path.join(root, "_store_protocol")) as f:
-        assert f.read().strip() == "rename"

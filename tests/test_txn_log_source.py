@@ -354,10 +354,9 @@ def test_checkpoint_incremental_and_replay_safe(tmp_path):
 
 def test_cutoff_drops_undated_files_pinned(tmp_path):
     """cutoffDate semantics pinned (ADVICE r14 low): with a cutoff
-    set, files recording NO trade_date partition are dropped —
-    matching the listing view mode, whose trade_date >= cutoff filter
-    drops null-trade_date rows — in BOTH the manifest walk and the
-    checkpoint-served prefix.  Without a cutoff they are kept."""
+    set, files recording NO trade_date partition are dropped — as a
+    trade_date >= cutoff filter drops null-trade_date rows — in BOTH
+    the manifest walk and the checkpoint-served prefix.  Without a cutoff they are kept."""
     root = str(tmp_path / "trades")
     _fabricate_log(root, 6, undated_at={2, 3})
 

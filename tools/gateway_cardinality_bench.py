@@ -115,7 +115,7 @@ def _trivial_gateway(requests, window_ms):
 def run_scenario(spark, name: str, *, users: int, window_ms: int,
                  limit: int, rows_per_batch: int, duration: int,
                  width: int, state_store: str, fold: str,
-                 buckets: int = 128, state_codec: str = "arrow") -> dict:
+                 buckets: int = 128) -> dict:
     """One solo-import-leg run; returns the scenario's summary dict."""
     from pyspark.sql import functions as F
 
@@ -162,8 +162,7 @@ def run_scenario(spark, name: str, *, users: int, window_ms: int,
             rate_limit_gateway_bucketed,
         )
         decisions = rate_limit_gateway_bucketed(
-            requests, window_ms, limit, buckets=buckets,
-            state_codec=state_codec)
+            requests, window_ms, limit, buckets=buckets)
     else:
         decisions = rate_limit_gateway(requests, window_ms, limit)
     sink = TxnParquetTradesSink(trades_path)
@@ -221,8 +220,7 @@ def run_scenario(spark, name: str, *, users: int, window_ms: int,
                    "limit": limit, "rows_per_batch": rows_per_batch,
                    "duration_sec": duration, "width": width,
                    "state_store": state_store, "fold": fold,
-                   **({"buckets": buckets,
-                       "state_codec": state_codec}
+                   **({"buckets": buckets}
                       if fold == "bucketed" else {})},
         "triggers": len(data),
         "trigger_wall_ms": {
@@ -304,12 +302,6 @@ def main() -> None:
                          "well below rows-per-batch to actually cap "
                          "groups-per-trigger (2,000 draws into 1,024 "
                          "slots still touch ~880 of them)")
-    ap.add_argument("--state-codec", choices=["arrow", "packed"],
-                    default="arrow",
-                    help="bucketed-fold state layout: nested arrays "
-                         "(default) or the binary-packed twin "
-                         "(ratelimiter.BUCKET_STATE_PACKED_SCHEMA) — "
-                         "the r15 serialization A/B")
     ap.add_argument("--out", default=os.path.join(
         _REPO, "STREAM_BENCH_cardinality.json"))
     args = ap.parse_args()
@@ -330,8 +322,7 @@ def main() -> None:
                                   window_ms=args.window_ms,
                                   width=args.width,
                                   state_store=args.state_store,
-                                  fold=args.fold,
-                                  state_codec=args.state_codec))])
+                                  fold=args.fold))])
     results = {}
     for name, cfg in scenarios:
         print(f"--- scenario {name}: {cfg}", flush=True)

@@ -5,15 +5,16 @@ streaming equivalent, STREAM_BENCH.json at the repo root.
     python tools/stream_bench.py                    # default: 120 s
     python tools/stream_bench.py --duration 300 --rows-per-batch 5000
 
-Method: drive all six queries of ``streaming/pipeline.py`` for
+Method: drive all three queries of ``streaming/pipeline.py`` for
 ``--duration`` seconds —
 
 - the TRADES leg from the ``trades_gen`` rate source (offset-tracked,
   deterministic; ``--rows-per-batch`` rows per 1 s trigger is the
   offered load), through the gateway -> normalize -> write-once txn
   sink -> live trends view chain;
-- the DOCUMENT legs (near-dup index, CMS heavy hitters, decontam
-  screen, reservoir) from the sf corpus (``--sf-dir`` documents,
+- the DOCUMENT query (one read + tokenize per trigger feeding the
+  near-dup index, CMS heavy hitters, decontam screen and reservoir)
+  from the sf corpus (``--sf-dir`` documents,
   replicated if short), pre-chunked into ``--docs-per-file``-row
   JSON-lines drops consumed at ``--doc-files-per-trigger`` files per
   trigger (default 1 on the 1 s tier; pair ``--doc-trigger
@@ -49,12 +50,9 @@ _TOOLS = os.path.dirname(os.path.abspath(__file__))
 _REPO = os.path.dirname(_TOOLS)
 sys.path.insert(0, _REPO)
 
-#: independent-leg mode query order; fused mode (the default) runs
-#: ["import", "trends_view", "docs"] with one doc-side query driving
-#: all four consumers (streaming/pipeline.py doc_fused, r15 dir. 1)
-QUERY_NAMES = ["import", "trends_view", "neardup", "cms", "decontam",
-               "reservoir"]
-QUERY_NAMES_FUSED = ["import", "trends_view", "docs"]
+#: ComposedPipeline.queries order: one doc-side query drives all four
+#: document consumers (streaming/pipeline.py, r15 dir. 1)
+QUERY_NAMES = ["import", "trends_view", "docs"]
 
 
 def _trigger_ms(s: str) -> int:
@@ -231,12 +229,6 @@ def main() -> None:
                          "auto_buckets (~16 rows/bucket/trigger, "
                          "min 4x the state width); default = the "
                          "per-user twin")
-    ap.add_argument("--neardup-store", choices=["rename", "marker"],
-                    default="rename",
-                    help="segment publication protocol for the "
-                         "near-dup index (marker = the no-rename "
-                         "object-store twin; measures its per-object "
-                         "copy publish inside the live pipeline)")
     ap.add_argument("--neardup-compact-every", type=int, default=32,
                     help="near-dup index minor-compaction cadence "
                          "(batches); lower = more compactions per "
@@ -271,12 +263,6 @@ def main() -> None:
                     help="soak gate: exit nonzero unless at least "
                          "this many MAJOR (tier) compactions fired "
                          "inside the run")
-    ap.add_argument("--doc-independent", action="store_true",
-                    help="run the four doc consumers as separate "
-                         "streaming queries (the pre-r16 layout, each "
-                         "re-reading + re-tokenizing the doc file) "
-                         "instead of the fused single-query default — "
-                         "the A/B arm for VERDICT r15 directive 1")
     ap.add_argument("--stream-shuffle-partitions", type=int, default=8,
                     help="shuffle/state width for the STREAMING session "
                          "(cloned off the main one): 1 s micro-batches "
@@ -416,9 +402,6 @@ def main() -> None:
         preseed_rows = nd_seed.read_bands(spark).count()
         print(f"preseeded standing index: {args.preseed_docs} docs, "
               f"{preseed_rows} band rows", flush=True)
-    query_names = (QUERY_NAMES if args.doc_independent
-                   else QUERY_NAMES_FUSED)
-    doc_q = "neardup" if args.doc_independent else "docs"
     t0 = time.time()
     pipe = run_composed_pipeline(
         stream_spark, None, docs_dir, out_dir, eval_df=eval_df,
@@ -431,9 +414,7 @@ def main() -> None:
         txn_publication=args.txn_publication,
         txn_retain_manifests=(args.txn_retain_manifests or None),
         gateway_buckets=args.gateway_buckets,
-        expected_rows_per_trigger=args.rows_per_batch,
-        neardup_store=args.neardup_store,
-        doc_fused=not args.doc_independent)
+        expected_rows_per_trigger=args.rows_per_batch)
     if args.gateway_buckets == "auto":
         # record the layout the promotion rule actually picked
         args.gateway_buckets = pipe.gateway_buckets
@@ -442,12 +423,12 @@ def main() -> None:
     # accumulate progress DURING the run (keyed by batchId): Spark
     # retains only the last 100 triggers per query, so a single drain
     # at the end would truncate a soak run's early history
-    acc: dict[str, dict] = {name: {} for name in query_names}
+    acc: dict[str, dict] = {name: {} for name in QUERY_NAMES}
 
     txn_series: list[dict] = []
 
     def _drain():
-        for name, q in zip(query_names, pipe.queries):
+        for name, q in zip(QUERY_NAMES, pipe.queries):
             for p in _progress(q):
                 acc[name][p["batchId"]] = p
         # soak evidence for manifest retention (VERDICT r16 dir. 3):
@@ -468,19 +449,17 @@ def main() -> None:
             _drain()
         _drain()
         progress = {name: [acc[name][b] for b in sorted(acc[name])]
-                    for name in query_names}
+                    for name in QUERY_NAMES}
     finally:
         pipe.stop()
     wall = time.time() - t0
 
     sink_rows = spark.read.parquet(pipe.trades_path).count()
     dead_rows = pipe.read_dead_letters(spark).count()
-    # per-query trigger budget: the doc legs may run on a slower tier
+    # per-query trigger budget: the doc query may run on a slower tier
     doc_ms = (_trigger_ms(args.doc_trigger) if args.doc_trigger
               else 1000)
-    budget = {n: (doc_ms if n in ("neardup", "cms", "decontam",
-                                  "reservoir", "docs") else 1000)
-              for n in query_names}
+    budget = {n: (doc_ms if n == "docs" else 1000) for n in QUERY_NAMES}
     queries = {n: _summarize(p, budget[n]) for n, p in progress.items()}
     state = {
         "reservoir_rows": pipe.reservoir.read_reservoir(spark).count(),
@@ -511,7 +490,7 @@ def main() -> None:
                 p["timestamp"].replace("Z", "+00:00")).timestamp()
 
         quota = args.docs_per_file * args.doc_files_per_trigger
-        bursty = [p for p in progress[doc_q]
+        bursty = [p for p in progress["docs"]
                   if int(p.get("numInputRows", 0)) > quota]
         if bursty:
             w0 = min(_ts(p) for p in bursty)
@@ -567,7 +546,7 @@ def main() -> None:
     # backlog; at saturation (p95 over budget) it IS the leg's
     # capacity; below saturation it just echoes the offered rate and
     # capacity is ">= offered" (recorded as such).
-    nd_q = queries[doc_q]
+    nd_q = queries["docs"]
     nd_sustained = round(nd_q["input_rows"] / wall, 1) if wall else None
     capacity = {
         "neardup_docs_per_sec_sustained": nd_sustained,
@@ -579,10 +558,8 @@ def main() -> None:
                  "unsaturated runs prove capacity >= offered"),
     }
 
-    # fused mode: per-consumer wall times inside the single doc
-    # query's foreachBatch (read_tokenize is the shared scan both the
-    # old legs each paid) — the per-leg view the separate queries used
-    # to give via their own addBatch
+    # per-consumer wall times inside the single doc query's
+    # foreachBatch (read_tokenize is the shared scan)
     doc_legs = None
     if pipe.doc_leg_s:
         rows_with_data = [r for r in pipe.doc_leg_s if r.get("n_docs")]
@@ -627,8 +604,6 @@ def main() -> None:
             "txn_publication": args.txn_publication,
             "txn_retain_manifests": args.txn_retain_manifests,
             "neardup_max_segments": args.neardup_max_segments,
-            "neardup_store": args.neardup_store,
-            "doc_fused": not args.doc_independent,
             "fair_weights_env": "retired-r13",
             "note": ("per-query percentiles cover the WHOLE run "
                      "(progress drained every 5 s, keyed by batchId)"),
