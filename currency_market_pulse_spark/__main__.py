@@ -96,25 +96,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                     help="shard the near-dup index across S band-hash "
                          "shard roots probed concurrently (dup-for-dup "
                          "equal to 1; streaming/neardup_stream.py)")
-    pl.add_argument("--gateway-buckets", default="auto",
-                    help="rate-limit gateway state layout: an int "
-                         "(hash-slot bucket count) or 'auto' (the "
-                         "default): the promotion criterion decides "
-                         "from --expected-rows-per-trigger (per-user "
-                         "below 1,000 rows/trigger — also when no "
-                         "rate is declared — auto-sized bucketed "
-                         "above; streaming/ratelimiter.py)")
     pl.add_argument("--txn-retain-manifests", type=int, default=256,
                     help="bound the _txn/ commit log: manifests more "
                          "than N below the durable checkpoint floor "
                          "are deleted after each checkpoint "
                          "(0 disables retention and keeps every "
                          "manifest forever — the pre-r16 behavior)")
-    pl.add_argument("--expected-rows-per-trigger", type=int,
-                    default=None,
-                    help="expected offered trade-request rows per "
-                         "trigger — the input to the 'auto' gateway "
-                         "promotion rule")
 
     bf = sub.add_parser(
         "backfill",
@@ -193,17 +180,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         elif args.cmd == "pipeline":
             from currency_market_pulse_spark.streaming.pipeline import (
                 run_composed_pipeline)
-            gb = args.gateway_buckets
-            if gb is not None and gb != "auto":
-                gb = int(gb)
             pipe = run_composed_pipeline(
                 spark, args.requests_dir, args.docs_dir, args.out_dir,
                 window_ms=args.window_ms, limit=args.limit,
                 txn_publication=args.txn_publication,
                 neardup_shards=args.neardup_shards,
-                gateway_buckets=gb,
-                txn_retain_manifests=(args.txn_retain_manifests or None),
-                expected_rows_per_trigger=args.expected_rows_per_trigger)
+                txn_retain_manifests=(args.txn_retain_manifests or None))
             if args.once:
                 try:
                     (n_trades, n_dead, n_dups,

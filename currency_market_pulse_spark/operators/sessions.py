@@ -6,8 +6,8 @@ reference's Redis sliding-window rate limiter
 a trailing window (including the current one), admit while
 count <= limit, and compute the same retry-after the reference returns
 (oldest-in-window + window - now; ratelimit.go:56-59).  The STREAMING
-formulation (per-event state, applyInPandasWithState) lives in
-streaming/ratelimiter.py; this one answers "replay the log and find
+formulation (the same window counts per micro-batch, over a state
+snapshot carried between batches) lives in streaming/ratelimiter.py; this one answers "replay the log and find
 every request that would have been throttled" at any scale with one
 shuffle on user_id.
 """

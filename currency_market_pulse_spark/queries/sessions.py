@@ -135,7 +135,7 @@ def user_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: shared by the batch replay and its streaming bucketed-gateway twin
+#: shared by the batch replay and its streaming gateway twin
 #: (the two engines must agree with the SAME oracle; no per-user
 #: timestamp ties exist in the events fixtures, so the RANGE-frame
 #: count equals the sequential fold's count).
@@ -166,83 +166,86 @@ def rate_limit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_ms=86_400_000, limit=3)
 
 
-@extra_query("rate_limit_replay_bucketed",
+@extra_query("rate_limit_replay_gateway",
              oracle=_RATE_LIMIT_REPLAY_ORACLE)
-def rate_limit_replay_bucketed(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """The STREAMING hash-slot-bucketed gateway
-    (streaming/ratelimiter.py:rate_limit_gateway_bucketed, the
-    cardinality-scale variant) replaying the events log under the
-    SAME DuckDB oracle as the batch ``rate_limit_replay`` — so
-    decision-for-decision equality of the bucketed state machine is
-    differentially proven every round, not only by pytest (VERDICT
-    r13 directive 6).  The events table is staged once as a
-    normalized parquet drop, streamed through the gateway in one
-    availableNow pass (state carries the whole log), and the
-    decisions are returned cast to the replay's column types.
+def rate_limit_replay_gateway(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """The STREAMING gateway (streaming/ratelimiter.py:RateLimitGate)
+    replaying the events log under the SAME DuckDB oracle as the batch
+    ``rate_limit_replay`` — so the gate's decisions are differentially
+    proven every round, not only by pytest.  The events are staged as
+    two normalized parquet files split at the median event time and
+    streamed through the gate's ``foreachBatch`` one file per
+    micro-batch (availableNow), so the second batch decides against
+    the snapshot the first one published.  The run terminates on its
+    own: the import-side query has no state timeout.
 
-    Everything the run stages is torn down before returning (ADVICE
-    r14 low — repeated selfcheck runs used to leave a full parquet
-    copy of events plus a checkpoint in /tmp and a uuid-named memory
-    table in the session catalog per invocation): the decisions are
-    materialized driver-side FIRST (they must outlive the memory sink
-    and the staged input the lazy plan reads), then the temp view is
-    dropped and the staging dir removed in ``finally``.  The
-    driver-side collect is bounded by construction — this is a replay
-    harness run at selfcheck scale (sf0.01: 10 k decisions), not a
-    registered bench query."""
+    Everything the run stages is torn down before returning: the
+    decisions are collected driver-side FIRST (they must outlive the
+    staging dir the lazy plan reads), then the staging dir is removed
+    in ``finally``.  The collect is bounded by construction — this is a
+    replay harness run at selfcheck scale (sf0.01: 10 k decisions),
+    not a registered bench query."""
+    import os
     import shutil
     import tempfile
-    import time
-    import uuid
 
     from currency_market_pulse_spark.streaming.ratelimiter import (
-        rate_limit_gateway_bucketed,
+        RateLimitGate,
     )
 
-    staged = tempfile.mkdtemp(prefix="rl_bucketed_replay_")
-    name = f"rlb_{uuid.uuid4().hex[:12]}"
+    staged = tempfile.mkdtemp(prefix="rl_gateway_replay_")
     try:
-        (load_table(spark, sf_dir, "events")
-         .select(F.col("event_id"),
-                 F.col("user_id").cast("string").alias("user_id"),
-                 F.unix_millis("ts").alias("ts_ms"),
-                 F.lit("").alias("payload"))
-         .write.mode("overwrite").parquet(staged))
-        n_events = spark.read.parquet(staged).count()
-        stream = (spark.readStream
-                  .schema("event_id long, user_id string, ts_ms long, "
-                          "payload string")
-                  .parquet(staged))
-        q = (rate_limit_gateway_bucketed(stream, window_ms=86_400_000,
-                                         limit=3, buckets=32)
-             .writeStream.format("memory").queryName(name)
-             .option("checkpointLocation", f"{staged}/_ckpt")
-             .outputMode("append")
+        events = (load_table(spark, sf_dir, "events")
+                  .select(F.col("event_id"),
+                          F.col("user_id").cast("string").alias("user_id"),
+                          F.unix_millis("ts").alias("ts_ms")))
+        cut = events.agg(F.percentile_approx("ts_ms", 0.5)).first()[0]
+        src = os.path.join(staged, "in")
+        os.makedirs(src)
+        # ts-ordered halves: the oracle's RANGE frame sees the whole log
+        # at once, the gate one half per batch
+        for i, half in enumerate((events.filter(F.col("ts_ms") < cut),
+                                  events.filter(F.col("ts_ms") >= cut))):
+            part = os.path.join(staged, f"half{i}")
+            half.coalesce(1).write.parquet(part)
+            (name,) = [n for n in os.listdir(part) if n.endswith(".parquet")]
+            os.rename(os.path.join(part, name),
+                      os.path.join(src, f"half{i}.parquet"))
+            os.utime(os.path.join(src, f"half{i}.parquet"),
+                     (1_000_000 + i * 100,) * 2)
+        gate = RateLimitGate(os.path.join(staged, "gateway_state"),
+                             window_ms=86_400_000, limit=3)
+        out = os.path.join(staged, "decisions")
+
+        def each(batch: DataFrame, batch_id: int) -> None:
+            with gate.decide(batch, batch_id) as gb:
+                (gb.decisions
+                 .withColumn("batch_id", F.lit(batch_id))
+                 .write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy("batch_id").parquet(out))
+                gate.publish(gb)
+
+        q = (spark.readStream
+             .schema("event_id long, user_id string, ts_ms long")
+             .option("maxFilesPerTrigger", "1").parquet(src)
+             .writeStream.foreachBatch(each)
+             .option("checkpointLocation", os.path.join(staged, "_ckpt"))
              .trigger(availableNow=True).start())
-        # poll-then-stop, NOT awaitTermination: the gateway's
-        # processing-time state timeout keeps the engine scheduling
-        # timeout-evaluation micro-batches, so even an availableNow
-        # run never reaches the idle point termination waits for (the
-        # same livelock streaming/pipeline.py documents for
-        # processAllAvailable; the repo's rate-limiter tests poll too).
         try:
-            deadline = time.time() + 300
-            while time.time() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                if spark.table(name).count() >= n_events:
-                    break
-                time.sleep(0.5)
-            else:
-                raise TimeoutError(
-                    f"bucketed replay stuck below {n_events} rows")
+            if not q.awaitTermination(300):
+                raise TimeoutError("gateway replay never terminated")
+            if q.exception() is not None:
+                raise q.exception()
         finally:
             q.stop()
+        if gate.snapshot_ids()[-1] < 1:
+            raise RuntimeError("gateway replay ran in one batch")
         out_schema = ("event_id long, user_id long, ts_ms long, "
                       "n_in_window long, admitted boolean, "
                       "retry_after_ms long")
-        rows = (spark.table(name)
+        rows = (spark.read.parquet(out)
                 .select(F.col("event_id"),
                         F.col("user_id").cast("bigint").alias("user_id"),
                         F.col("ts_ms"),
@@ -253,8 +256,4 @@ def rate_limit_replay_bucketed(spark: SparkSession,
                 .orderBy("event_id").collect())
         return spark.createDataFrame(rows, out_schema)
     finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
         shutil.rmtree(staged, ignore_errors=True)

@@ -48,8 +48,8 @@ _COUNTRIES = ["FR", "DE", "GB", "US", "JP"]
 #: default user-id cardinality; overridable per read with the
 #: ``users`` option — the reference limiter keys per userId at
 #: production cardinalities (consumer/ratelimit/ratelimit.go:38-47),
-#: so stateful-op benchmarks must be able to offer realistic key
-#: counts (VERDICT r12 directive 1; tools/gateway_cardinality_bench.py)
+#: so gateway benchmarks must be able to offer realistic key
+#: counts (VERDICT r12 directive 1; tools/stream_bench.py --users)
 DEFAULT_USERS = 50
 
 

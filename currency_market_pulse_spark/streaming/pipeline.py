@@ -4,8 +4,9 @@ production (consumer -> Kafka -> importer -> store -> trends API,
 compose.yml) —
 
     raw trade requests (file-source twin of the Kafka front door)
-      -> rate-limit GATEWAY (stateful sliding window per user,
-         payload carried through; rejects get retry_after)
+      -> rate-limit GATEWAY (sliding window per user, decided inside
+         the import batch over a batch-keyed state snapshot, payload
+         carried through; rejects get retry_after)
       -> parse + normalize admitted payloads (P1..P6 chain)
       -> TxnParquetTradesSink (date-partitioned, write-once)
       -> LIVE trends view (manifest-log stream OVER THE SINK's txn
@@ -38,7 +39,7 @@ running THROUGH an injected mid-publish crash-replay of the import
 query ends bit-for-bit equal to the batch result).
 
 At 100 TB nothing here changes shape: the gateway partitions by
-user_id (state ~ in-window requests per user), the sink's manifest
+user_id (snapshot ~ in-window requests per user), the sink's manifest
 commit keeps replay exactly-once, the live view's state
 is bounded by the watermark, and the near-dup probe runs at
 batch x index cost (queries/dedup.py dedup_incremental).
@@ -70,8 +71,7 @@ from currency_market_pulse_spark.streaming.neardup_stream import (
     StreamingNearDup,
 )
 from currency_market_pulse_spark.streaming.ratelimiter import (
-    DEFAULT_LIMIT, DEFAULT_WINDOW_MS, rate_limit_gateway,
-    rate_limit_gateway_bucketed,
+    DEFAULT_LIMIT, DEFAULT_WINDOW_MS, RateLimitGate,
 )
 from currency_market_pulse_spark.streaming.trends_stream import trends_live
 
@@ -114,13 +114,15 @@ _DEAD_LETTER_SCHEMA = (
 class ComposedPipeline:
     """Handles for the running composition.
 
-    NOTE on waiting: ``processAllAvailable`` is NOT usable here — the
-    gateway's processing-time state timeout keeps the engine
-    scheduling timeout-evaluation micro-batches, so the query never
-    reports the idle point PAA waits for (measured: 100+ empty epochs
-    and a blocked caller; the repo's rate-limiter tests poll for the
-    same reason).  Use ``wait_for`` (poll until output targets) or
-    ``wait_quiescent`` (poll until all outputs stop changing)."""
+    Waiting: no query here keeps a processing-time timeout, so with
+    no new input none of them runs micro-batches and
+    ``processAllAvailable`` returns on each (measured on the
+    two-file test plant, 4 cores: import 15.3 s including its cold
+    first triggers, trends 1.9 s, docs 0.7 s; the import batchId then
+    stayed put).  ``wait_for`` (poll until output targets) and
+    ``wait_quiescent`` (poll until all outputs stop changing) wait on
+    the outputs instead, which is what a caller that does not own
+    the input needs."""
 
     spark: SparkSession
     trades_path: str
@@ -131,8 +133,9 @@ class ComposedPipeline:
     heavy_hitters: "StreamingHeavyHitters | None" = None
     reservoir: "StreamingReservoir | None" = None
     queries: list = field(default_factory=list)
-    #: the RESOLVED gateway state layout: None = per-user fold,
-    #: int = hash-slot bucket count (after "auto" promotion applied)
+    #: always None: the gateway has one state layout (the snapshot
+    #: under out_dir/gateway_state).  Kept only because the stream
+    #: benchmark (perfbench/stream.py) reads it.
     gateway_buckets: "int | None" = None
     #: one dict per doc trigger with the shared-scan and per-consumer
     #: wall seconds ({batch_id, n_docs, read_tokenize, neardup, cms,
@@ -203,9 +206,6 @@ class ComposedPipeline:
             # every few empty triggers), so resetting on it would
             # never converge; pending input holds it True steadily
             # BETWEEN triggers, which the veto catches.
-            # (isTriggerActive is unusable either way: the gateway's
-            # timeout-evaluation batches flap it forever — the PAA
-            # livelock above.)
             busy = False
             for q in self.queries:
                 try:
@@ -244,7 +244,6 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           neardup_compact_every: int = 32,
                           neardup_max_segments: int = 8,
                           neardup_shards: int = 1,
-                          gateway_buckets: "int | str | None" = "auto",
                           expected_rows_per_trigger: int | None = None,
                           txn_retain_manifests: int | None = 256,
                           txn_publication: str = "rename",
@@ -274,26 +273,10 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     collisions with the import leg's tasks (FAIR shares slots but
     never preempts a running task — SCALE.md Round 12).  Defaults
     keep every query on ``TRIGGER`` at 1 file per trigger (the r11
-    behavior)."""
+    behavior).  ``expected_rows_per_trigger`` is accepted and ignored
+    (the gateway has one state layout); it stays only because the
+    stream benchmark (perfbench/stream.py) passes it."""
     import os
-
-    # "auto" gateway promotion is the DEFAULT (r15 directive 6,
-    # decided r16): it resolves up front against the declared offered
-    # rate — None (per-user state) below the unit-pinned
-    # PROMOTION_ROWS_PER_TRIGGER, the measured-better bucketed layout
-    # above it.  Callers that declare no expected_rows_per_trigger
-    # get the per-user gateway, byte-identical to the old default;
-    # decisions are oracle-EXACT in either layout
-    # (rate_limit_replay_bucketed).  Fail fast on a bad string.
-    if gateway_buckets == "auto":
-        from currency_market_pulse_spark.streaming.ratelimiter import (
-            select_gateway_buckets,
-        )
-        gateway_buckets = select_gateway_buckets(
-            expected_rows_per_trigger)
-    elif isinstance(gateway_buckets, str):
-        raise ValueError(f"gateway_buckets={gateway_buckets!r} "
-                         "(expected an int, None, or 'auto')")
 
     # doc-checkpoint migration guard: the doc side checkpoints under
     # ckpt_docs; older deployments ran one query per doc leg under
@@ -317,6 +300,22 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
             "the doc dir from batch 0 (CMS deltas double-count, near-dup "
             "re-probes indexed docs).  Clear the doc outputs and the "
             "per-leg checkpoints, or use a fresh out_dir.")
+
+    # gateway-state upgrade guard: the gateway used to be a stateful
+    # operator whose state lived in ckpt_import/state; it is now the
+    # batch-keyed snapshot under gateway_state/.  Restarting an old
+    # out_dir would silently forget every user's in-window entries.
+    # Fail fast before any query starts; the one-time upgrade (README)
+    # is to stop the old pipeline and delete ckpt_import/state.
+    old_state = os.path.join(out_dir, "ckpt_import", "state")
+    if (os.path.isdir(old_state) and os.listdir(old_state)
+            and not os.path.isdir(os.path.join(out_dir, "gateway_state"))):
+        raise RuntimeError(
+            f"{old_state!r} holds the stateful gateway's state but "
+            f"{out_dir!r} has no gateway_state/: the gateway now keeps "
+            "its state as snapshots under gateway_state/.  Stop the old "
+            "pipeline and delete ckpt_import/state (README, gateway "
+            "upgrade), or use a fresh out_dir.")
 
     def _in_pool(name, start_fn):
         # one FAIR pool per streaming query (session.py sets
@@ -356,20 +355,7 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         F.to_json(F.struct(*raw.columns)).alias("payload"),
     ).withColumn("event_id", F.xxhash64("payload")) \
      .filter(F.col("ts_ms").isNotNull())   # malformed -> 400 pre-gate
-    # gateway_buckets: the cardinality-scale switch — hash-slot
-    # bucketed state caps the stateful op's groups-per-trigger
-    # (identical admission decisions, test-pinned; measured at 100k
-    # users: trigger p50 1.9 s per-user vs 1.25 s bucketed, SCALE.md
-    # Round 13).  None keeps the per-user twin of the reference's
-    # Redis keys with engine-managed idle expiry.  "auto" (already
-    # resolved above) applies the promotion criterion
-    # (ratelimiter.select_gateway_buckets, r14 directive 4): per-user
-    # below PROMOTION_ROWS_PER_TRIGGER of expected_rows_per_trigger,
-    # auto_buckets-sized bucketed above.
-    decisions = (rate_limit_gateway_bucketed(
-        requests, window_ms, limit, buckets=gateway_buckets)
-        if gateway_buckets
-        else rate_limit_gateway(requests, window_ms, limit))
+    gate = RateLimitGate(f"{out_dir}/gateway_state", window_ms, limit)
     # write-once txn sink: the live view's file stream is
     # exactly-once under crash-replay (module docstring; txn_sink.py)
     # txn_publication="put" runs the object-store file-publication
@@ -392,33 +378,25 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                                 publication=txn_publication)
 
     def import_batch(batch: DataFrame, batch_id: int) -> None:
-        # TWO actions consume this micro-batch (sink + dead letter);
-        # persist so the stateful gateway upstream executes ONCE per
-        # epoch — re-running a state-store operator inside the same
-        # epoch is undefined (and measured to crash the worker).
-        batch = batch.persist()
-        try:
-            admitted = batch.filter(F.col("admitted"))
+        # the gate caches its windowed relation, so the sink and the
+        # dead letters read the decisions without re-reading the input
+        with gate.decide(batch, batch_id) as gb:
+            admitted = gb.decisions.filter(F.col("admitted"))
             trades = normalize_trades(
                 parse_ingest_json(admitted.select("payload"), "payload"))
             sink.write(trades.filter(F.col("time_placed").isNotNull()),
                        batch_id)
             # dead-letter the rejects WITH their retry hint (429 twin);
             # repartition(1): rejects are a trickle — one file per
-            # batch, not one per gateway state partition (and the
-            # shuffle boundary keeps the cached stateful lineage from
-            # collapsing into a single task if the cache was evicted).
-            # The isEmpty probe runs over the ALREADY-MATERIALIZED
-            # cache (the sink write above was the batch's first
-            # action), so the common all-admitted trigger pays one
-            # ~40 ms limit-1 cache scan instead of a full
-            # shuffle+write job (~150 ms measured solo, r12 import-leg
-            # decomposition) — and a replayed batch that HAD rejects
-            # re-derives them deterministically, so idempotency is
-            # unchanged.
-            rejects = batch.filter(~F.col("admitted"))
-            if not rejects.isEmpty():
-                (rejects
+            # batch, not one per window partition.  Write-once per
+            # batch: the dynamic overwrite publishes the partition dir
+            # with one rename, so an existing dir is this batch's
+            # complete earlier write, and a replay derives the same
+            # rejects.  Rewriting it would delete files a concurrent
+            # reader may be scanning.
+            if gb.n_rejected and not os.path.isdir(
+                    os.path.join(dead_path, f"batch_id={batch_id}")):
+                (gb.decisions.filter(~F.col("admitted"))
                  .select("user_id", "event_id", "ts_ms", "n_in_window",
                          "retry_after_ms")
                  .withColumn("batch_id", F.lit(batch_id).cast("long"))
@@ -426,17 +404,15 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                  .write.mode("overwrite")
                  .option("partitionOverwriteMode", "dynamic")
                  .partitionBy("batch_id").parquet(dead_path))
-        finally:
-            batch.unpersist()
+            # strictly after the sink commit: a crash before this line
+            # replays the batch against the same predecessor snapshot,
+            # so it recomputes the decisions the sink already holds
+            gate.publish(gb)
 
-    # The gateway is stateful with a PROCESSING-TIME timeout: under
-    # the default ASAP trigger the engine schedules back-to-back empty
-    # micro-batches to evaluate timeouts, which livelocks
-    # processAllAvailable (measured: 100+ empty epochs, state-store
-    # snapshot maintenance falling behind).  The importer's 1s flush
-    # trigger (T2, streaming/importer.py FLUSH_INTERVAL) paces the
-    # query AND restores an idle point between batches.
-    writer = (decisions.writeStream
+    # The import query is stateless: with no new input it runs no
+    # micro-batch at all.  The importer's 1 s flush trigger (T2,
+    # streaming/importer.py FLUSH_INTERVAL) sets its cadence.
+    writer = (requests.writeStream
               .option("checkpointLocation", f"{out_dir}/ckpt_import")
               .outputMode("append").foreachBatch(import_batch)
               .trigger(processingTime=TRIGGER))
@@ -521,8 +497,7 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
         spark=spark,
         trades_path=trades_path, dead_letter_path=dead_path,
         trends_view=trends_view, neardup=nd,
-        decontam=sd, heavy_hitters=hh, reservoir=rs,
-        gateway_buckets=gateway_buckets)
+        decontam=sd, heavy_hitters=hh, reservoir=rs)
 
     # ---- ONE doc stream, ONE foreachBatch that reads + tokenizes the
     # batch once and drives all four doc consumers off the shared

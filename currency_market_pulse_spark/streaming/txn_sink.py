@@ -205,8 +205,8 @@ class TxnParquetTradesSink(Sink):
         # for the live view's file stream to track, VERDICT r10
         # directive 3).  A 1 s flush is small by construction; rows
         # within the file stay time-sorted for row-group pruning.  The
-        # explicit shuffle (not coalesce) keeps the upstream stateful
-        # gateway's partitioning intact.
+        # explicit shuffle (not coalesce) keeps the upstream gateway's
+        # window partitioning intact.
         (batch
          .withColumn("trade_date", F.to_date("time_placed"))
          .repartition("trade_date")
@@ -448,8 +448,12 @@ class TxnParquetTradesSink(Sink):
             return []
         out = []
         for name in os.listdir(txn):
+            # skip stray names the way _apply_retention does
             if name.startswith("batch=") and name.endswith(".json"):
-                out.append(int(name[len("batch="):-len(".json")]))
+                try:
+                    out.append(int(name[len("batch="):-len(".json")]))
+                except ValueError:
+                    continue
         return sorted(out)
 
     def visible_files(self) -> list[str]:

@@ -85,17 +85,24 @@ def _wait_screens(spark, pipe, timeout=90.0):
         f"reservoir={res}")
 
 
+def _import_state(spark, pipe):
+    """The import side's durable outputs plus the live view,
+    batch-id-free so two runs with different micro-batch boundaries
+    compare equal."""
+    return {
+        "trades": sorted(
+            tuple(r) for r in spark.read.schema(_SINK_STREAM_SCHEMA)
+            .parquet(pipe.trades_path).drop("batch_id").collect()),
+        "dead": sorted(
+            tuple(r) for r in pipe.read_dead_letters(spark)
+            .drop("batch_id").collect()),
+        "trends": sorted(
+            tuple(r) for r in spark.table(pipe.trends_view).collect()),
+    }
+
+
 def _state(spark, pipe):
-    """Every durable output of the composition, batch-id-free so two
-    runs with different micro-batch boundaries compare equal."""
-    trades = sorted(
-        tuple(r) for r in spark.read.schema(_SINK_STREAM_SCHEMA)
-        .parquet(pipe.trades_path).drop("batch_id").collect())
-    dead = sorted(
-        tuple(r) for r in pipe.read_dead_letters(spark)
-        .drop("batch_id").collect())
-    trends = sorted(
-        tuple(r) for r in spark.table(pipe.trends_view).collect())
+    """Every durable output of the composition, batch-id-free."""
     dups = sorted((r.new_id, r.dup_of)
                   for r in pipe.neardup.read_dups(spark).collect())
     flags = sorted((r.doc_id, r.eval_doc_id)
@@ -104,7 +111,7 @@ def _state(spark, pipe):
                 pipe.heavy_hitters.heavy_hitters(spark).collect())
     reservoir = sorted(
         tuple(r) for r in pipe.reservoir.read_reservoir(spark).collect())
-    return {"trades": trades, "dead": dead, "trends": trends,
+    return {**_import_state(spark, pipe),
             "dups": dups, "flags": flags, "heavy_hitters": hh,
             "reservoir": reservoir}
 
@@ -236,14 +243,12 @@ def _crash_restart_body(spark, tmp_path, monkeypatch, vtag):
     # pre-crash manifest rather than regenerating
     sink = ts.TxnParquetTradesSink(sink_path)
     # batches 0 (the crashed/rolled-forward one) and 1 carry the data;
-    # the gateway's timeout-evaluation epochs add further EMPTY batches
-    # (pipeline.py docstring), each with its own tiny manifest
-    assert set(sink.committed_batches()) >= {0, 1}
+    # the import query runs no batch without input
+    assert sink.committed_batches() == [0, 1]
     visible = sink.visible_files()
     assert len(visible) == len(set(visible)) >= 2
     # staged leftovers are allowed ONLY in recoverable states (stop()
-    # can land mid-write of one of the gateway's empty
-    # timeout-evaluation batches, leaving exactly the residue the
+    # can land mid-write of a batch, leaving exactly the residue the
     # sink's crash windows describe): an uncommitted staged dir (no
     # manifest — the replay regenerates it wholesale), or a committed
     # batch whose publish was interrupted (manifest durable; every
@@ -265,3 +270,77 @@ def _crash_restart_body(spark, tmp_path, monkeypatch, vtag):
                     or os.path.exists(os.path.join(sink_path,
                                                    staged_rel))), \
                 f"batch {b}: {final_rel} neither published nor staged"
+
+
+#: batch 1 carries a request the gate can only reject by counting the
+#: three batch-0 entries it reads from batch 0's snapshot (hot's
+#: newest entry is batch 0's newest event, so eviction keeps it)
+REQ_GATE_F1 = REQ_F1[:3] + [_req("calm", "12-AUG-24 10:01:00", buy=200.0)]
+REQ_GATE_F2 = REQ_F2 + [_req("hot", "12-AUG-24 10:01:02", buy=140.0)]
+
+
+def test_crash_before_gate_snapshot_equals_uninterrupted(
+        spark, tmp_path, monkeypatch):
+    """Kill the composition after import batch 0's txn-sink commit and
+    before the gate publishes batch 0's state snapshot.  The restart
+    replays batch 0 against the same (empty) predecessor snapshot —
+    the sink's replay is a no-op, the dead letters are rewritten with
+    the same rows, the snapshot is published — and batch 1 then
+    decides against it: the sink, dead letters and live view equal an
+    uninterrupted run's."""
+    from currency_market_pulse_spark.streaming.ratelimiter import (
+        RateLimitGate,
+    )
+
+    def start(tag, view):
+        return run_composed_pipeline(
+            spark, str(tmp_path / tag / "req"),
+            str(tmp_path / tag / "docs"), str(tmp_path / tag / "out"),
+            window_ms=1000, limit=2, trends_view=view)
+
+    targets = dict(trades=4, dead=2, windows=1)
+    files = [("f1.json", REQ_GATE_F1), ("f2.json", REQ_GATE_F2)]
+    _plant(tmp_path, "a", files, [])
+    for i, (name, _rows) in enumerate(files):   # f1 is batch 0
+        os.utime(tmp_path / "a" / "req" / name, (1_000_000 + i * 100,) * 2)
+    pipe_a = start("a", "gate_crash_a")
+    try:
+        pipe_a.wait_for(**targets)
+        want = _import_state(spark, pipe_a)
+    finally:
+        pipe_a.stop()
+    # the batch-1 reject counted batch 0's entries: n = 3 + itself
+    assert sorted(r[3] for r in want["dead"]) == [3, 4]
+
+    _plant(tmp_path, "b", files[:1], [])
+    real_publish = RateLimitGate.publish
+
+    def crash_before_snapshot(self, gb):
+        raise RuntimeError("injected crash before the gate snapshot")
+
+    monkeypatch.setattr(RateLimitGate, "publish", crash_before_snapshot)
+    pipe_b = start("b", "gate_crash_b")
+    try:
+        deadline = time.time() + 90
+        while pipe_b.queries[0].exception() is None:
+            assert time.time() < deadline, "injected crash never fired"
+            time.sleep(0.5)
+    finally:
+        pipe_b.stop()
+    monkeypatch.setattr(RateLimitGate, "publish", real_publish)
+
+    out_b = tmp_path / "b" / "out"
+    sink = ts.TxnParquetTradesSink(str(out_b / "trades"))
+    assert sink.committed_batches() == [0]
+    assert sink.visible_files()
+    assert not os.path.exists(out_b / "gateway_state" / "batch_id=0")
+
+    _write(tmp_path / "b" / "req" / "f2.json", REQ_GATE_F2)
+    pipe_b2 = start("b", "gate_crash_b2")
+    try:
+        pipe_b2.wait_for(**targets)
+        got = _import_state(spark, pipe_b2)
+    finally:
+        pipe_b2.stop()
+    assert got == want
+    assert sink.committed_batches() == [0, 1]

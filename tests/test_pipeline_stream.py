@@ -231,27 +231,36 @@ def test_composed_pipeline_doc_trigger_tier(spark, tmp_path):
     assert [(d.new_id, d.dup_of) for d in dups] == [(2, 1)]
 
 
-def test_composed_pipeline_bucketed_gateway(spark, tmp_path):
-    """run_composed_pipeline(gateway_buckets=...) — the cardinality-
-    scale switch — produces the exact same end-to-end outputs as the
-    per-user default: same admissions, same 429 with its retry hint,
-    same normalized rates, same closed trend window."""
+def test_composed_pipeline_import_is_stateless(spark, tmp_path):
+    """The gateway runs inside the import batch: the end-to-end
+    outputs are the pinned ones (same admissions, same 429 with its
+    retry hint, same normalized rates, same closed trend window), the
+    import query reports no state operator and keeps no state store,
+    and with no new input its batchId stops advancing — no idle
+    timeout batches, so processAllAvailable returns."""
+    import os
+    import time
+
     from currency_market_pulse_spark.streaming.pipeline import (
         run_composed_pipeline,
     )
 
     req, docs = _plant(tmp_path)
-    pipe = run_composed_pipeline(spark, str(req), str(docs),
-                                 str(tmp_path / "out"),
+    out = tmp_path / "out"
+    pipe = run_composed_pipeline(spark, str(req), str(docs), str(out),
                                  window_ms=1000, limit=2,
-                                 trends_view="bkt_trends_live",
-                                 gateway_buckets=4)
+                                 trends_view="stateless_trends_live")
     try:
         pipe.wait_for(trades=4, dead=1, dups=1, windows=1)
         got = spark.read.parquet(pipe.trades_path).collect()
         dead = pipe.read_dead_letters(spark).collect()
         trends = {(r.time_window.isoformat(), r.currency_from): r
                   for r in spark.table(pipe.trends_view).collect()}
+        q_import = pipe.queries[0]
+        q_import.processAllAvailable()
+        idle_id = q_import.lastProgress["batchId"]
+        time.sleep(3.5)   # three and a half 1 s trigger intervals
+        progress = q_import.recentProgress
     finally:
         pipe.stop()
 
@@ -262,48 +271,13 @@ def test_composed_pipeline_bucketed_gateway(spark, tmp_path):
     w = trends[("2024-08-12T10:00:00", "EUR")]
     assert (w.n_trades, w.min, w.max) == (3, 1.1, 2.0)
 
-
-def test_gateway_auto_is_the_default(spark, tmp_path):
-    """r15 directive 6, decided r16: the composed pipeline defaults
-    to gateway_buckets='auto'.  With no declared offered rate the
-    promotion rule resolves to the per-user gateway — byte-identical
-    to the old default — and a declared rate above the unit-pinned
-    threshold resolves to an auto-sized bucketed layout.  Resolution
-    is checked on the live handle, not just the signature."""
-    import inspect
-
-    from currency_market_pulse_spark.streaming.pipeline import (
-        run_composed_pipeline,
-    )
-    from currency_market_pulse_spark.streaming.ratelimiter import (
-        PROMOTION_ROWS_PER_TRIGGER, select_gateway_buckets,
-    )
-
-    sig = inspect.signature(run_composed_pipeline)
-    assert sig.parameters["gateway_buckets"].default == "auto"
-    # the rule itself, at its boundary
-    assert select_gateway_buckets(None) is None
-    assert select_gateway_buckets(PROMOTION_ROWS_PER_TRIGGER - 1) is None
-    assert select_gateway_buckets(PROMOTION_ROWS_PER_TRIGGER) >= 32
-
-    # end-to-end: the default pipeline with a declared high rate
-    # resolves to a bucketed gateway and still produces the pinned
-    # outputs; with no declared rate it resolves per-user
-    req, docs = _plant(tmp_path)
-    pipe = run_composed_pipeline(
-        spark, str(req), str(docs), str(tmp_path / "out"),
-        window_ms=1000, limit=2, trends_view="auto_trends_live",
-        expected_rows_per_trigger=100_000)
-    try:
-        assert isinstance(pipe.gateway_buckets, int)
-        assert pipe.gateway_buckets >= 32
-        pipe.wait_for(trades=4, dead=1, dups=1, windows=1)
-        got = spark.read.parquet(pipe.trades_path).collect()
-        dead = pipe.read_dead_letters(spark).collect()
-    finally:
-        pipe.stop()
-    assert len(got) == 4 and len(dead) == 1
-    assert dead[0].user_id == "hot" and dead[0].retry_after_ms == 1000
+    assert progress and all(not p["stateOperators"] for p in progress)
+    assert progress[-1]["batchId"] == idle_id
+    assert not os.path.exists(out / "ckpt_import" / "state")
+    assert pipe.gateway_buckets is None
+    # one snapshot per data batch, retention keeps the last two
+    assert sorted(os.listdir(out / "gateway_state")) == [
+        "batch_id=0", "batch_id=1"]
 
 
 def test_fused_doc_legs_equal_independent(spark, tmp_path):
@@ -441,6 +415,31 @@ def test_doc_ckpt_mode_switch_fails_fast(tmp_path):
                               str(tmp_path / "docs"), str(out))
     assert os.path.exists(str(legacy / "0"))
     assert sorted(os.listdir(out)) == ["ckpt_neardup"]
+
+
+def test_gateway_state_upgrade_fails_fast(tmp_path):
+    """An out_dir written by the stateful gateway (its state store
+    under ckpt_import/state, no gateway_state/) must not restart
+    silently with an empty snapshot: the pipeline fails fast before
+    starting any query, and touches nothing."""
+    import os
+
+    import pytest
+
+    from currency_market_pulse_spark.streaming.pipeline import (
+        run_composed_pipeline,
+    )
+
+    out = tmp_path / "out"
+    old = out / "ckpt_import" / "state" / "0" / "0"
+    old.mkdir(parents=True)
+    (old / "1.delta").write_bytes(b"")
+    # spark=None proves the guard fires before ANY Spark work
+    with pytest.raises(RuntimeError, match="gateway_state"):
+        run_composed_pipeline(None, str(tmp_path / "req"),
+                              str(tmp_path / "docs"), str(out))
+    assert os.path.exists(str(old / "1.delta"))
+    assert sorted(os.listdir(out)) == ["ckpt_import"]
 
 
 def test_doc_leg_timings_ring_buffer():

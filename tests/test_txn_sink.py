@@ -219,6 +219,9 @@ def test_distinct_batches_append_and_introspect(spark, tmp_path):
     sink.write(_batch(spark, range(3), day=1), batch_id=0)
     sink.write(_batch(spark, range(3, 5), day=1), batch_id=1)
     sink.write(_batch(spark, range(3), day=1), batch_id=0)  # replay
+    # a stray manual copy in the log is not a batch (ADVICE r16)
+    with open(os.path.join(sink.path, "_txn", "batch=5 (1).json"), "w") as f:
+        f.write("{}")
 
     assert sink.committed_batches() == [0, 1]
     visible = sink.visible_files()

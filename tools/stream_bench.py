@@ -109,8 +109,8 @@ def _summarize(progress: list[dict], trigger_ms: int) -> dict:
     # (r11 directive 1): addBatch is the foreachBatch/sink work,
     # walCommit+commitOffsets are the checkpoint fsyncs, the rest is
     # planning + source polling.  State-op internals (task-time SUMS
-    # across partitions, not wall) expose the stateful gateway's
-    # update/commit/timeout-scan split.
+    # across partitions, not wall) expose the live view's aggregation
+    # update/commit/removal split.
     breakdown = {}
     for k in ("addBatch", "walCommit", "commitOffsets",
               "queryPlanning", "latestOffset", "getBatch"):
@@ -221,14 +221,6 @@ def main() -> None:
                          "(default: mid-run)")
     ap.add_argument("--burst-triggers", type=int, default=10,
                     help="how many consecutive files carry the burst")
-    ap.add_argument("--gateway-buckets", default=None,
-                    help="hash-slot bucketed gateway state (the "
-                         "cardinality-scale switch): an int, or "
-                         "'auto' to size from the offered "
-                         "rows-per-trigger via ratelimiter."
-                         "auto_buckets (~16 rows/bucket/trigger, "
-                         "min 4x the state width); default = the "
-                         "per-user twin")
     ap.add_argument("--neardup-compact-every", type=int, default=32,
                     help="near-dup index minor-compaction cadence "
                          "(batches); lower = more compactions per "
@@ -276,12 +268,6 @@ def main() -> None:
     args = ap.parse_args()
     if args.doc_trigger:
         _trigger_ms(args.doc_trigger)  # fail fast, not after the run
-    if args.gateway_buckets is not None and args.gateway_buckets != "auto":
-        # "auto" is passed through verbatim: the PIPELINE applies the
-        # promotion criterion (ratelimiter.select_gateway_buckets)
-        # from expected_rows_per_trigger — the resolved layout is
-        # read back off the handle below and recorded in the artifact
-        args.gateway_buckets = int(args.gateway_buckets)
 
     from currency_market_pulse_spark.session import get_spark
     from currency_market_pulse_spark.sources.trades_source import (
@@ -412,14 +398,7 @@ def main() -> None:
         neardup_max_segments=args.neardup_max_segments,
         neardup_shards=args.neardup_shards,
         txn_publication=args.txn_publication,
-        txn_retain_manifests=(args.txn_retain_manifests or None),
-        gateway_buckets=args.gateway_buckets,
-        expected_rows_per_trigger=args.rows_per_batch)
-    if args.gateway_buckets == "auto":
-        # record the layout the promotion rule actually picked
-        args.gateway_buckets = pipe.gateway_buckets
-        print(json.dumps({"gateway_buckets_resolved":
-                          pipe.gateway_buckets}), flush=True)
+        txn_retain_manifests=(args.txn_retain_manifests or None))
     # accumulate progress DURING the run (keyed by batchId): Spark
     # retains only the last 100 triggers per query, so a single drain
     # at the end would truncate a soak run's early history
@@ -590,7 +569,6 @@ def main() -> None:
             "trigger": "1 second",
             "trades_rows_per_trigger": args.rows_per_batch,
             "trades_users": args.users or 50,
-            "gateway_buckets": args.gateway_buckets,
             "docs_per_trigger": args.docs_per_file,
             "doc_trigger": args.doc_trigger or "1 second",
             "doc_files_per_trigger": args.doc_files_per_trigger,
