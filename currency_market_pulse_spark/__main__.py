@@ -92,10 +92,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                          "(POSIX/HDFS) or the object-store PUT twin "
                          "(copy+fsync, no cross-directory rename — "
                          "streaming/txn_sink.py)")
-    pl.add_argument("--neardup-shards", type=int, default=1,
-                    help="shard the near-dup index across S band-hash "
-                         "shard roots probed concurrently (dup-for-dup "
-                         "equal to 1; streaming/neardup_stream.py)")
     pl.add_argument("--txn-retain-manifests", type=int, default=256,
                     help="bound the _txn/ commit log: manifests more "
                          "than N below the durable checkpoint floor "
@@ -184,7 +180,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 spark, args.requests_dir, args.docs_dir, args.out_dir,
                 window_ms=args.window_ms, limit=args.limit,
                 txn_publication=args.txn_publication,
-                neardup_shards=args.neardup_shards,
                 txn_retain_manifests=(args.txn_retain_manifests or None))
             if args.once:
                 try:

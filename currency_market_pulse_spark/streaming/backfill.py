@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from currency_market_pulse_spark.functions.text import tokens
 from currency_market_pulse_spark.operators import dedup as D
 from currency_market_pulse_spark.streaming.neardup_stream import (
-    StreamingNearDup,
+    StreamingNearDup, refuse_sharded_roots,
 )
 
 #: the backfill's dup-log partition — below every streaming batch id
@@ -111,6 +111,8 @@ def _require_fresh_index(nd: StreamingNearDup) -> None:
     index instead of a marker-less partial."""
     import os
 
+    # before the dup-log write, so a sharded root stays untouched
+    refuse_sharded_roots(nd.bands_path, nd.shingles_path)
     for root in (nd.bands_path, nd.shingles_path, nd.hashes_path):
         nd._recover_root(root)
     dirty = [root for root in (nd.bands_path, nd.shingles_path,

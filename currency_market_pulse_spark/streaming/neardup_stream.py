@@ -58,10 +58,10 @@ one that is no bigger than the group's running sum (equals merge
 with equals; a big old segment is never dragged into a merge of
 small newcomers), repeating until within budget — each ingested byte
 is rewritten O(log(index / segment)) times instead of the
-O(index / tail) a merge-all policy pays (tools/compaction_bench.py
-measures the write-amplification delta on real index data;
-``compaction_policy="merge_all"`` keeps the r11 behavior for that
-A/B).  Tier-merge segments take ids from a reserved range
+O(index / tail) a merge-all policy pays (SCALE.md Round 12: 3.77 vs
+8.35 rows rewritten per ingested row, bit-identical indexes;
+tools/compaction_bench.py measures the tiered write amplification on
+real index data).  Tier-merge segments take ids from a reserved range
 (>= 10**12) so they can never collide with minor segments, whose id
 IS the compacting batch id (replay-idempotency relies on that).
 
@@ -260,6 +260,35 @@ RENAME_ROOT_UPGRADE = (
     "_compaction_manifest; create an empty _committed file in every "
     "base/segment=* dir; delete _store_protocol if present; restart.  "
     "Any other root: inspect it by hand.")
+#: how to open a root written with the removed ``shards`` option,
+#: whose data lives under ``shard=<k>/`` where nothing reads it
+SHARDED_ROOT_UPGRADE = (
+    "To upgrade an index written with shards > 1, once, with the "
+    "pipeline stopped: move idx_bands, idx_shingles, idx_hashes and "
+    "dups out of the out-dir; rebuild them with `python -m "
+    "currency_market_pulse_spark backfill --docs-path <the documents "
+    "of every doc batch ckpt_docs/commits records> --index-dir "
+    "<out-dir>`; restart.  Or start on a fresh out-dir (README).")
+
+
+def refuse_sharded_roots(*roots: str) -> None:
+    """Raise ``ValueError``, touching nothing, when a band or shingle
+    root holds ``shard=<k>`` dirs.  The index reads only
+    ``<root>/base`` and ``<root>/tail``, so probing such a root would
+    read every document as novel and drop its dups silently."""
+    for root in roots:
+        try:
+            names = os.listdir(root)
+        except OSError:
+            continue
+        sharded = sorted(n for n in names if n.startswith("shard="))
+        if sharded:
+            raise ValueError(
+                f"index root {root!r} holds shard dirs {sharded} from "
+                "the removed shards option; this version reads only "
+                "its base/ and tail/.  " + SHARDED_ROOT_UPGRADE)
+
+
 #: tier-merge segments take ids from here up — minor segments' id IS
 #: the compacting batch id (replay idempotency keys on it), so the
 #: ranges must never collide; 10**12 batch ids at a 1 s trigger is
@@ -306,7 +335,7 @@ def _dir_rows(path: str) -> int:
     a tiny segment at a few KB per bucket file, which at 1-batch
     compaction granularity makes every segment look byte-similar and
     degenerates carry selection toward merge-all (measured: write amp
-    7.1 with a byte guard vs 8.6 merge_all at 100 unit minors; the
+    7.1 with a byte guard vs 8.6 merge-all at 100 unit minors; the
     row guard restores the simulated O(log) behavior)."""
     total = 0
     import pyarrow.parquet as pq
@@ -376,10 +405,6 @@ class StreamingNearDup:
     #: standing (doc_id, md5(text)) relation for the exact fast path;
     #: defaults to a sibling of bands_path
     hashes_path: str | None = None
-    #: "tiered" (size-tiered major compaction, the default) or
-    #: "merge_all" (the r11 policy, kept for write-amplification A/Bs
-    #: — tools/compaction_bench.py).
-    compaction_policy: str = "tiered"
     #: sizing rule for a new segment's bucket count:
     #: n = next_pow2(input_bytes / target_bucket_bytes) clamped to
     #: [n_buckets, max_buckets].  At 8 MiB per bucket a 1 GiB segment
@@ -421,55 +446,18 @@ class StreamingNearDup:
     #: capacity work read it.  Populated in place (single foreachBatch
     #: thread).
     last_stage_s: dict = field(default_factory=dict)
-    #: shard the band/shingle index across S independent roots
-    #: (``<path>/shard=<k>``), probed CONCURRENTLY per batch — the
-    #: beyond-single-JVM capacity lever (VERDICT r14 directive 3).
-    #: Sharding is by BAND HASH (xxhash64 with a dedicated seed so it
-    #: decorrelates from the bucket hash), NOT by doc id: an LSH
-    #: collision pair always lands in its band's shard, so candidate
-    #: RECALL — and the dup log — is bit-equal to shards=1
-    #: (test-pinned).  Each document's shingles replicate to every
-    #: shard one of its bands touches (<= min(n_bands, shards) x
-    #: write amplification); band rows land in exactly one shard.
-    #: The exact-hash relation stays global (md5-equal copies must
-    #: co-locate for the first-owner convention).  In production each
-    #: shard root is independently placeable (own volume / own
-    #: compactor); single-JVM the win is concurrent per-shard probe
-    #: jobs.  shards>1 requires the dict (<= hash_collect_cap) path
-    #: and a streamed (not seed_index) load.
-    shards: int = 1
 
     def __post_init__(self):
         if self.segment_store is None:
             self.segment_store = MarkerSegmentStore()
         if self.hashes_path is None:
             self.hashes_path = self.bands_path + "_hashes"
-        if self.shards < 1:
-            raise ValueError(f"shards must be >= 1, got {self.shards}")
         if self.max_segments < 1:
             # a 0/negative budget would make _tier_compact_root loop
             # forever (a 1-segment carry pick rewrites that segment
             # under a fresh tier id without reducing the count)
             raise ValueError(
                 f"max_segments must be >= 1, got {self.max_segments}")
-
-    # ---- shard layout -----------------------------------------------
-
-    def _band_roots(self) -> list[str]:
-        if self.shards <= 1:
-            return [self.bands_path]
-        return [os.path.join(self.bands_path, f"shard={k}")
-                for k in range(self.shards)]
-
-    def _shingle_roots(self) -> list[str]:
-        if self.shards <= 1:
-            return [self.shingles_path]
-        return [os.path.join(self.shingles_path, f"shard={k}")
-                for k in range(self.shards)]
-
-    def _all_roots(self) -> list[str]:
-        return ([self.hashes_path] + self._band_roots()
-                + self._shingle_roots())
 
     # ---- recovery / discovery through the publication seam ---------
 
@@ -615,34 +603,18 @@ class StreamingNearDup:
         return parts[0] if len(parts) == 1 else parts[0].unionAll(parts[1])
 
     def read_bands(self, spark) -> DataFrame:
-        """The full standing band index (base + tail), data cols only.
-        Sharded: the union over shard roots — each band row lives in
-        exactly one shard, so this equals the shards=1 relation."""
-        parts = [d for d in (self._read_index(
-            spark, r, _BANDS_DATA, "sig_bucket", batch_id=-1)
-            for r in self._band_roots()) if d is not None]
-        if not parts:
-            return spark.createDataFrame([], _BANDS_DATA)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionAll(p)
-        return df
+        """The full standing band index (base + tail), data cols only."""
+        df = self._read_index(spark, self.bands_path, _BANDS_DATA,
+                              "sig_bucket", batch_id=-1)
+        return df if df is not None else \
+            spark.createDataFrame([], _BANDS_DATA)
 
     def read_shingles(self, spark) -> DataFrame:
-        """The full standing shingle relation (base + tail).
-        Sharded: a document's shingles replicate to every shard one
-        of its bands touches, so the union carries replicas —
-        ``.dropDuplicates(["doc_id", "sh"])`` recovers the shards=1
-        relation (callers comparing across shard counts do)."""
-        parts = [d for d in (self._read_index(
-            spark, r, _SHINGLES_DATA, "id_bucket", batch_id=-1)
-            for r in self._shingle_roots()) if d is not None]
-        if not parts:
-            return spark.createDataFrame([], _SHINGLES_DATA)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionAll(p)
-        return df
+        """The full standing shingle relation (base + tail)."""
+        df = self._read_index(spark, self.shingles_path, _SHINGLES_DATA,
+                              "id_bucket", batch_id=-1)
+        return df if df is not None else \
+            spark.createDataFrame([], _SHINGLES_DATA)
 
     def read_hashes(self, spark) -> DataFrame:
         """The full standing exact-hash relation (base + tail)."""
@@ -738,15 +710,15 @@ class StreamingNearDup:
     def _tier_compact_root(self, spark, root: str, data_schema: str,
                            bucket_expr_fn, bucket_col: str,
                            sort_cols: list[str]) -> None:
-        """Major compaction.  tiered = carry-propagation size-tiering:
-        while over budget, start from the two smallest segments and
-        absorb each next-larger one only while it is no bigger than
-        the group's running sum — equals merge with equals (a carry,
-        as in an LSM level fill-up), but a big old segment is never
-        dragged into a merge of small newcomers.  Simulated against
-        merge_all at 1000 unit minors / max_segments=8: bytes
-        rewritten per ingested byte 3.8 vs 62 (merge_all) vs 25 (a
-        naive merge-smallest-k, which snowballs); measured on real
+        """Major compaction by carry-propagation size-tiering: while
+        over budget, start from the two smallest segments and absorb
+        each next-larger one only while it is no bigger than the
+        group's running sum — equals merge with equals (a carry, as
+        in an LSM level fill-up), but a big old segment is never
+        dragged into a merge of small newcomers.  Simulated at 1000
+        unit minors / max_segments=8: bytes rewritten per ingested
+        byte 3.8, against 62 for merging every segment and 25 for a
+        naive merge-smallest-k (which snowballs); measured on real
         index data by tools/compaction_bench.py."""
         while True:
             segs = self._segments(root)
@@ -754,14 +726,11 @@ class StreamingNearDup:
             # count — it would rewrite forever under fresh tier ids
             if len(segs) <= max(1, self.max_segments):
                 return
-            if self.compaction_policy == "merge_all":
-                picked = segs
-            else:
-                # ROW-count-keyed carry (see _dir_rows for why not
-                # bytes); _carry_pick ties on list position = segment
-                # id order, so selection is deterministic
-                rows = [_dir_rows(p) for _i, p in segs]
-                picked = [segs[i] for i in _carry_pick(rows)]
+            # ROW-count-keyed carry (see _dir_rows for why not bytes);
+            # _carry_pick ties on list position = segment id order, so
+            # selection is deterministic
+            rows = [_dir_rows(p) for _i, p in segs]
+            picked = [segs[i] for i in _carry_pick(rows)]
             next_id = max(
                 [i for i, _ in segs if i >= _TIER_SEG_BASE],
                 default=_TIER_SEG_BASE - 1) + 1
@@ -777,14 +746,12 @@ class StreamingNearDup:
         corpus through ``process_batch``/``seed_index``, call this to
         fold everything into pruned, sorted base segments."""
         seg = upto_batch_id if segment_id is None else segment_id
-        for root in self._band_roots():
-            self._compact_root(spark, root, _BANDS_DATA,
-                               _sig_bucket, "sig_bucket",
-                               ["band", "band_sig"], upto_batch_id, seg)
-        for root in self._shingle_roots():
-            self._compact_root(spark, root, _SHINGLES_DATA,
-                               _id_bucket, "id_bucket",
-                               ["doc_id"], upto_batch_id, seg)
+        self._compact_root(spark, self.bands_path, _BANDS_DATA,
+                           _sig_bucket, "sig_bucket",
+                           ["band", "band_sig"], upto_batch_id, seg)
+        self._compact_root(spark, self.shingles_path, _SHINGLES_DATA,
+                           _id_bucket, "id_bucket",
+                           ["doc_id"], upto_batch_id, seg)
         self._compact_root(spark, self.hashes_path, _HASHES_DATA,
                            _h_bucket, "h_bucket",
                            ["h"], upto_batch_id, seg)
@@ -796,12 +763,7 @@ class StreamingNearDup:
         index-size axis).  Uses the exact same layout the compactor
         writes, so the streaming probe is oblivious to how the base
         was built."""
-        if self.shards > 1:
-            raise ValueError(
-                "seed_index writes the unsharded segment=0 layout; "
-                "bulk-seed a sharded index by streaming the corpus "
-                "through process_batch, or backfill at shards=1 and "
-                "re-shard by re-ingesting")
+        refuse_sharded_roots(self.bands_path, self.shingles_path)
         spark = docs.sparkSession
         toks = docs.select("doc_id", tokens(F.col("text")).alias("_t"))
         sh = D.shingles_from_tokens(toks).persist()
@@ -879,10 +841,12 @@ class StreamingNearDup:
         trigger and shares it across all doc consumers
         (streaming/pipeline.py, VERDICT r15 directive 1); output is
         bit-equal with or without it (tokens() is deterministic)."""
+        refuse_sharded_roots(self.bands_path, self.shingles_path)
         spark = batch.sparkSession
         self.last_stage_s.clear()
         t = time.time()
-        for root in self._all_roots():
+        for root in (self.hashes_path, self.bands_path,
+                     self.shingles_path):
             self._recover_root(root)
         t = self._mark("recover", t)
         if (self.compact_every and batch_id > 0
@@ -946,10 +910,7 @@ class StreamingNearDup:
                 > self.collect_volume_chars):
             # over the row cap OR the char-volume cap (the shingle
             # collect scales with characters): take the fully
-            # distributed twin — with shards>1 it probes and routes
-            # tails per shard root (serially), so a transient burst
-            # DEGRADES to a slower batch instead of wedging the
-            # stream on replay (ADVICE r15 low).
+            # distributed twin (same output, a few more jobs)
             self._probe_batch_distributed(spark, batch, batch_id)
             return
         owner: dict[str, int] = {}
@@ -1188,14 +1149,11 @@ class StreamingNearDup:
         """The near-dup stage with driver-side writes: same probe
         plans as ``_near_dup_stage`` (shingle -> minhash bands ->
         bucket-pruned standing probe -> candidate-bounded verify),
-        but the verifies collect in one fused job (shards=1) or one
-        concurrent probe per shard (shards>1), and every output lands
-        via pyarrow."""
+        but the batch-internal verify runs on the driver, the
+        cross-corpus verify collects in two light jobs
+        (``_cross_hits_local``), and every output lands via pyarrow."""
         import pyarrow as pa
 
-        S = self.shards
-        b_roots = self._band_roots()
-        s_roots = self._shingle_roots()
         if toks is None:
             toks = rem_docs.select("doc_id", tokens(F.col("text"))
                                    .alias("_t"))
@@ -1204,45 +1162,24 @@ class StreamingNearDup:
               .repartition(8, "doc_id").persist())
         bands = D.minhash_bands(D.minhash_signatures(
             None, shingles_df=sh)).persist()
-        # band-hash shard routing, seeded apart from the bucket hash:
-        # both are xxhash64 over (band, band_sig) — without the seed
-        # column, shard k's rows would only ever hit buckets == k
-        # (mod S), leaving (S-1)/S of every segment's buckets empty
-        shard_expr = (F.pmod(F.xxhash64(F.lit("ndshard"), F.col("band"),
-                                        F.col("band_sig")),
-                             F.lit(S)).cast("int"))
-        cands: list[DataFrame] = []
         try:
             t = time.time()
-            ns_by_root = [self._base_bucket_counts(r) or [self.n_buckets]
-                          for r in b_roots]
-            ns_union = sorted({n for ns in ns_by_root for n in ns})
-            # ONE collect: band rows + shard id + bucket ids (xxhash64
-            # is JVM-only, so these columns ride along in the job
-            # instead of a second explode+distinct+collect)
+            ns_b = (self._base_bucket_counts(self.bands_path)
+                    or [self.n_buckets])
+            # ONE collect: band rows + bucket ids (xxhash64 is
+            # JVM-only, so these columns ride along in the job instead
+            # of a second explode+distinct+collect)
             b_tbl = bands.select(
                 "doc_id", "band", "band_sig",
-                *([shard_expr.alias("_shard")] if S > 1 else []),
-                *[_sig_bucket(n).alias(f"_b{n}") for n in ns_union]
+                *[_sig_bucket(n).alias(f"_b{n}") for n in ns_b]
             ).toArrow()
-            n_rows = b_tbl.num_rows
-            doc_vals = b_tbl.column("doc_id").to_pylist()
-            shard_vals = (b_tbl.column("_shard").to_pylist()
-                          if S > 1 else [0] * n_rows)
-            bcols = {n: b_tbl.column(f"_b{n}").to_pylist()
-                     for n in ns_union}
-            touched: list[set] = [set() for _ in range(S)]
-            docs_in: list[set] = [set() for _ in range(S)]
-            for i in range(n_rows):
-                k = shard_vals[i]
-                docs_in[k].add(doc_vals[i])
-                for n in ns_by_root[k]:
-                    touched[k].add(bcols[n][i])
+            touched = sorted({b for n in ns_b
+                              for b in b_tbl.column(f"_b{n}").to_pylist()})
             t = self._mark("bands_collect", t)
             sh_tbl = sh.select("doc_id", "n_sh", "sh").toArrow()
             t = self._mark("shingles_collect", t)
 
-            if n_rows:
+            if b_tbl.num_rows:
                 # batch-internal verify entirely DRIVER-side (r18,
                 # VERDICT r17 item 6): band rows and shingle rows are
                 # both already collected (they ARE the index tails),
@@ -1256,134 +1193,25 @@ class StreamingNearDup:
                 # dup-log compare.
                 sh_map = _py_shingle_map(sh_tbl)
                 internal_pairs = _py_band_pairs(
-                    doc_vals, b_tbl.column("band").to_pylist(),
+                    b_tbl.column("doc_id").to_pylist(),
+                    b_tbl.column("band").to_pylist(),
                     b_tbl.column("band_sig").to_pylist())
                 hits_py.extend(
                     (b, a, j) for a, b, j in _py_jaccard_hits(
                         internal_pairs, sh_map, sh_map,
                         self.threshold))
                 t = self._mark("py_internal_verify", t)
-
-                def probe_shard(k: int):
-                    """Cross-corpus hits for shard k: ONE job probes
-                    the touched band buckets against the broadcast
-                    batch bands and collects candidate PAIRS; one more
-                    fetches the candidates' standing shingle rows for
-                    the driver-side jaccard.  Above _STD_FETCH_CAP
-                    distinct corpus docs, the all-Spark verify plan
-                    runs instead (unchanged semantics)."""
-                    if not touched[k]:
-                        return []
-                    tk = time.time()
-                    idx_bands = self._read_index(
-                        spark, b_roots[k], _BANDS_DATA, "sig_bucket",
-                        batch_id, buckets=sorted(touched[k]))
-                    if idx_bands is None:
-                        return []
-                    bands_k = (bands.filter(shard_expr == F.lit(k))
-                               if S > 1 else bands)
-                    probe = bands_k.select(
-                        F.col("doc_id").alias("new_id"),
-                        "band", "band_sig")
-                    p_tbl = (idx_bands
-                             .join(F.broadcast(probe),
-                                   ["band", "band_sig"])
-                             .select("new_id",
-                                     F.col("doc_id").alias("corpus_id"))
-                             .toArrow())
-                    cand_pairs = set(zip(
-                        p_tbl.column("new_id").to_pylist(),
-                        p_tbl.column("corpus_id").to_pylist()))
-                    if S == 1:
-                        tk = self._mark("cand_pairs_collect", tk)
-                    if not cand_pairs:
-                        return []
-                    cand_ids = sorted({c for _, c in cand_pairs})
-                    if len(cand_ids) > _STD_FETCH_CAP:
-                        # volume hatch: the candidates' shingles are
-                        # too much data for the driver — run the
-                        # original Spark-side verify (cand relation
-                        # rebuilt exactly as before)
-                        cand = D.cross_corpus_candidates(
-                            F.broadcast(bands_k), idx_bands).persist()
-                        cands.append(cand)
-                        vdf = self._verify_cross(
-                            spark, sh, cand,
-                            cand_ids[:_CAND_COLLECT_CAP + 1],
-                            batch_id, shingles_root=s_roots[k])
-                        return [(r.new_id, r.dup_of, r.jaccard)
-                                for r in vdf.collect()]
-                    # bucket-pruned standing shingle fetch; the id
-                    # restriction rides a broadcast semi-join against
-                    # the (re-derived, JVM-side) probe output rather
-                    # than an isin literal list — thousands of codegen
-                    # literals were measured at seconds of plan
-                    # compile (r15 note above)
-                    ns_s = (self._base_bucket_counts(s_roots[k])
-                            or [self.n_buckets])
-                    idx_sh = self._read_index(
-                        spark, s_roots[k], _SHINGLES_DATA, "id_bucket",
-                        batch_id,
-                        buckets=sorted({i % n for i in cand_ids
-                                        for n in ns_s}))
-                    if idx_sh is None:
-                        return []
-                    cand_rel = (idx_bands
-                                .join(F.broadcast(probe),
-                                      ["band", "band_sig"])
-                                .select(F.col("doc_id")
-                                        .alias("corpus_id")))
-                    std_tbl = (idx_sh
-                               .join(F.broadcast(cand_rel),
-                                     idx_sh["doc_id"]
-                                     == cand_rel["corpus_id"],
-                                     "left_semi")
-                               .select("doc_id", "n_sh", "sh")
-                               .toArrow())
-                    if S == 1:
-                        tk = self._mark("std_shingle_fetch", tk)
-                    hits = _py_jaccard_hits(
-                        cand_pairs, sh_map, _py_shingle_map(std_tbl),
-                        self.threshold)
-                    if S == 1:
-                        self._mark("py_cross_verify", tk)
-                    return hits
-
-                if S == 1:
-                    hits_py.extend(probe_shard(0))
-                    t = time.time()  # probe stages self-mark via tk
-                else:
-                    # concurrent per-shard probes (each thread runs
-                    # its own small jobs; they interleave on the
-                    # cluster)
-                    from concurrent.futures import ThreadPoolExecutor
-                    with ThreadPoolExecutor(max_workers=S) as ex:
-                        futs = [ex.submit(probe_shard, k)
-                                for k in range(S)]
-                        for f in futs:
-                            hits_py.extend(f.result())
-                    t = self._mark("shard_probes", t)
+                hits_py.extend(self._cross_hits_local(
+                    spark, batch_id, bands, sh, sh_map, touched))
+                t = time.time()  # the probe stages self-mark
 
             self._write_dups_local(hits_py, batch_id)
-            data_tbl = b_tbl.select(["doc_id", "band", "band_sig"])
-            if S == 1:
-                self._write_partition_local(
-                    os.path.join(b_roots[0], "tail"), batch_id,
-                    data_tbl)
-                self._write_partition_local(
-                    os.path.join(s_roots[0], "tail"), batch_id, sh_tbl)
-            else:
-                sh_docs = sh_tbl.column("doc_id").to_pylist()
-                for k in range(S):
-                    b_mask = pa.array([v == k for v in shard_vals])
-                    self._write_partition_local(
-                        os.path.join(b_roots[k], "tail"), batch_id,
-                        data_tbl.filter(b_mask))
-                    s_mask = pa.array([d in docs_in[k]
-                                       for d in sh_docs])
-                    self._write_partition_local(
-                        os.path.join(s_roots[k], "tail"), batch_id,
-                        sh_tbl.filter(s_mask))
+            self._write_partition_local(
+                os.path.join(self.bands_path, "tail"), batch_id,
+                b_tbl.select(["doc_id", "band", "band_sig"]))
+            self._write_partition_local(
+                os.path.join(self.shingles_path, "tail"), batch_id,
+                sh_tbl)
             self._write_partition_local(
                 os.path.join(self.hashes_path, "tail"), batch_id,
                 pa.table({
@@ -1396,8 +1224,75 @@ class StreamingNearDup:
         finally:
             sh.unpersist()
             bands.unpersist()
-            for c in cands:
-                c.unpersist()
+
+    def _cross_hits_local(self, spark, batch_id: int, bands: DataFrame,
+                          sh: DataFrame, sh_map: dict,
+                          touched: list[int]) -> list:
+        """Cross-corpus hits for the dict path: ONE job probes the
+        touched band buckets against the broadcast batch bands and
+        collects candidate PAIRS; one more fetches the candidates'
+        standing shingle rows for the driver-side jaccard.  Above
+        _STD_FETCH_CAP distinct corpus docs, the all-Spark verify plan
+        runs instead (unchanged semantics)."""
+        t = time.time()
+        idx_bands = self._read_index(
+            spark, self.bands_path, _BANDS_DATA, "sig_bucket",
+            batch_id, buckets=touched)
+        if idx_bands is None:
+            return []
+        probe = bands.select(F.col("doc_id").alias("new_id"),
+                             "band", "band_sig")
+        p_tbl = (idx_bands
+                 .join(F.broadcast(probe), ["band", "band_sig"])
+                 .select("new_id", F.col("doc_id").alias("corpus_id"))
+                 .toArrow())
+        cand_pairs = set(zip(p_tbl.column("new_id").to_pylist(),
+                             p_tbl.column("corpus_id").to_pylist()))
+        t = self._mark("cand_pairs_collect", t)
+        if not cand_pairs:
+            return []
+        cand_ids = sorted({c for _, c in cand_pairs})
+        if len(cand_ids) > _STD_FETCH_CAP:
+            # volume hatch: the candidates' shingles are too much data
+            # for the driver — run the original Spark-side verify
+            # (cand relation rebuilt exactly as before)
+            cand = D.cross_corpus_candidates(
+                F.broadcast(bands), idx_bands).persist()
+            try:
+                vdf = self._verify_cross(
+                    spark, sh, cand, cand_ids[:_CAND_COLLECT_CAP + 1],
+                    batch_id)
+                return [(r.new_id, r.dup_of, r.jaccard)
+                        for r in vdf.collect()]
+            finally:
+                cand.unpersist()
+        # bucket-pruned standing shingle fetch; the id restriction
+        # rides a broadcast semi-join against the (re-derived,
+        # JVM-side) probe output rather than an isin literal list —
+        # thousands of codegen literals were measured at seconds of
+        # plan compile (r15 note above)
+        ns_s = (self._base_bucket_counts(self.shingles_path)
+                or [self.n_buckets])
+        idx_sh = self._read_index(
+            spark, self.shingles_path, _SHINGLES_DATA, "id_bucket",
+            batch_id,
+            buckets=sorted({i % n for i in cand_ids for n in ns_s}))
+        if idx_sh is None:
+            return []
+        cand_rel = (idx_bands
+                    .join(F.broadcast(probe), ["band", "band_sig"])
+                    .select(F.col("doc_id").alias("corpus_id")))
+        std_tbl = (idx_sh
+                   .join(F.broadcast(cand_rel),
+                         idx_sh["doc_id"] == cand_rel["corpus_id"],
+                         "left_semi")
+                   .select("doc_id", "n_sh", "sh")
+                   .toArrow())
+        t = self._mark("std_shingle_fetch", t)
+        hits = _py_jaccard_hits(cand_pairs, sh_map,
+                                _py_shingle_map(std_tbl), self.threshold)
+        self._mark("py_cross_verify", t)
+        return hits
 
     def _near_dup_stage(self, spark, rem_docs: DataFrame,
                         batch_id: int, hits: list,
@@ -1405,17 +1300,9 @@ class StreamingNearDup:
         """The pre-fast-path probe, over the exact-novel remainder:
         shingle -> minhash bands -> bucket-pruned standing probe ->
         candidate-bounded exact-jaccard verify; then the remainder's
-        index contribution is appended (tail tier).
-
-        With ``shards>1`` the standing probe runs serially per shard
-        root and the tail writes route by band hash (shingles
-        replicated to each shard a doc's bands touch) — identical
-        layout to the dict path, so an over-cap burst degrades to a
-        slower batch instead of an unrecoverable foreachBatch error
-        (ADVICE r15 low)."""
-        S = self.shards
-        b_roots = self._band_roots()
-        s_roots = self._shingle_roots()
+        index contribution is appended (tail tier).  The distributed
+        twin of ``_near_dup_local``: same index layout, so an
+        over-cap burst degrades to a slower batch (ADVICE r15 low)."""
         toks = rem_docs.select("doc_id", tokens(F.col("text"))
                                .alias("_t"))
         # explicit 8-way hash repartition on the aggregation key: a
@@ -1428,13 +1315,7 @@ class StreamingNearDup:
               .repartition(8, "doc_id").persist())
         bands = D.minhash_bands(D.minhash_signatures(
             None, shingles_df=sh)).persist()
-        # same band-hash routing (and seed) as _near_dup_local, so the
-        # two paths build bit-identical shard layouts
-        shard_expr = (F.pmod(F.xxhash64(F.lit("ndshard"),
-                                        F.col("band"),
-                                        F.col("band_sig")),
-                             F.lit(S)).cast("int"))
-        cands: list[DataFrame] = []
+        cand = None
         try:
             # batch-internal near-dups: lower doc_id wins, the higher
             # id is flagged as its dup (same first-owner convention as
@@ -1450,52 +1331,43 @@ class StreamingNearDup:
             # bucket-count rescale) — bounded collect, at most the sum
             # of the distinct counts' values.
             t = time.time()
-            for k in range(S):
-                bands_k = (bands.filter(shard_expr == F.lit(k))
-                           if S > 1 else bands)
-                ns_b = (self._base_bucket_counts(b_roots[k])
-                        or [self.n_buckets])
-                touched = [r[0] for r in bands_k
-                           .select(F.explode(F.array(
-                               *[_sig_bucket(n) for n in ns_b]))
-                               .alias("b"))
-                           .distinct().collect()]
-                t = self._mark("bands_touched_collect", t)
-                idx_bands = self._read_index(
-                    spark, b_roots[k], _BANDS_DATA, "sig_bucket",
-                    batch_id, buckets=touched) if touched else None
-                if idx_bands is None:
-                    continue
+            ns_b = (self._base_bucket_counts(self.bands_path)
+                    or [self.n_buckets])
+            touched = [r[0] for r in bands
+                       .select(F.explode(F.array(
+                           *[_sig_bucket(n) for n in ns_b])).alias("b"))
+                       .distinct().collect()]
+            t = self._mark("bands_touched_collect", t)
+            idx_bands = self._read_index(
+                spark, self.bands_path, _BANDS_DATA, "sig_bucket",
+                batch_id, buckets=touched) if touched else None
+            if idx_bands is not None:
                 # broadcast the batch side: the standing relation
                 # streams through the join without shuffling
                 cand = D.cross_corpus_candidates(
-                    F.broadcast(bands_k), idx_bands).persist()
-                cands.append(cand)
+                    F.broadcast(bands), idx_bands).persist()
                 cand_ids = [r[0] for r in cand.select("corpus_id")
                             .distinct().limit(_CAND_COLLECT_CAP + 1)
                             .collect()]
-                t = self._mark("cand_collect", t)
+                self._mark("cand_collect", t)
                 if cand_ids:
                     hits.append(self._verify_cross(
-                        spark, sh, cand, cand_ids, batch_id,
-                        shingles_root=s_roots[k]))
+                        spark, sh, cand, cand_ids, batch_id))
             t = time.time()
             self._rank_and_write(
                 dups_only=False, hits=hits, batch_id=batch_id,
-                bands=bands, sh=sh, hashes=hashes,
-                shard_expr=shard_expr if S > 1 else None)
+                bands=bands, sh=sh, hashes=hashes)
             self._mark("write_wave", t)
         finally:
             sh.unpersist()
             bands.unpersist()
-            for c in cands:
-                c.unpersist()
+            if cand is not None:
+                cand.unpersist()
 
     def _rank_and_write(self, dups_only: bool, hits: list,
                         batch_id: int, bands: DataFrame | None = None,
                         sh: DataFrame | None = None,
-                        hashes: DataFrame | None = None,
-                        shard_expr=None) -> None:
+                        hashes: DataFrame | None = None) -> None:
         union = hits[0]
         for h in hits[1:]:
             union = union.unionAll(h)
@@ -1538,9 +1410,6 @@ class StreamingNearDup:
             shutil.rmtree(dst, ignore_errors=True)
             os.rename(staging, dst)
 
-        if dups_only:
-            _write(dups, self.dups_path)
-            return
         # dups FIRST, alone: its plan is the one that reads the
         # STANDING index roots (the verify hits' idx_bands/idx_sh/
         # idx_h lineage) — running it to completion before any tail
@@ -1548,67 +1417,34 @@ class StreamingNearDup:
         # every shingle partition), so the tail wave below reads
         # memory only.
         _write(dups, self.dups_path)
+        if dups_only:
+            return
         from concurrent.futures import ThreadPoolExecutor
-        if shard_expr is None:
-            tail_writes = [
-                (bands, os.path.join(self.bands_path, "tail")),
-                (sh, os.path.join(self.shingles_path, "tail")),
-                (hashes, os.path.join(self.hashes_path, "tail")),
-            ]
-        else:
-            # shard routing, mirroring the dict path's layout: band
-            # rows land in exactly one shard (by band hash); a doc's
-            # shingles replicate to every shard one of its bands
-            # touches (the verify's bucket-pruned read needs them
-            # co-resident).  S small writes per relation — the
-            # degraded over-cap path, not the hot path.
-            b_roots = self._band_roots()
-            s_roots = self._shingle_roots()
-            sharded = bands.withColumn("_shard", shard_expr).persist()
-            doc_shards = (sharded.select("doc_id", "_shard")
-                          .distinct().persist())
-            doc_shards.count()   # complete both caches up front
-            tail_writes = [(hashes,
-                            os.path.join(self.hashes_path, "tail"))]
-            for k in range(self.shards):
-                tail_writes.append((
-                    sharded.filter(F.col("_shard") == k)
-                    .drop("_shard"),
-                    os.path.join(b_roots[k], "tail")))
-                tail_writes.append((
-                    sh.join(doc_shards
-                            .filter(F.col("_shard") == k)
-                            .select("doc_id"), "doc_id"),
-                    os.path.join(s_roots[k], "tail")))
-        try:
-            # the tail writes dump completed caches (bands/sh/
-            # rem_docs), each staged then renamed into its own root —
-            # safe to overlap
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                for f in [pool.submit(_write_tail, df, path)
-                          for df, path in tail_writes]:
-                    f.result()
-        finally:
-            if shard_expr is not None:
-                sharded.unpersist()
-                doc_shards.unpersist()
+        tail_writes = [
+            (bands, os.path.join(self.bands_path, "tail")),
+            (sh, os.path.join(self.shingles_path, "tail")),
+            (hashes, os.path.join(self.hashes_path, "tail")),
+        ]
+        # the tail writes dump completed caches (bands/sh/rem_docs),
+        # each staged then renamed into its own root — safe to overlap
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            for f in [pool.submit(_write_tail, df, path)
+                      for df, path in tail_writes]:
+                f.result()
 
     def _verify_cross(self, spark, sh: DataFrame, cand: DataFrame,
-                      cand_ids: list[int], batch_id: int,
-                      shingles_root: str | None = None) -> DataFrame:
+                      cand_ids: list[int], batch_id: int) -> DataFrame:
         """Exact-jaccard verify of batch-vs-corpus candidates, reading
         only the shingle buckets the candidates live in (plus a pushed
         doc_id IN filter when the candidate set was small enough to
-        collect in full).  ``shingles_root`` selects the shard's
-        standing shingle relation (default: the unsharded root)."""
-        root = shingles_root or self.shingles_path
+        collect in full)."""
         capped = len(cand_ids) <= _CAND_COLLECT_CAP
-        ns_s = (self._base_bucket_counts(root)
+        ns_s = (self._base_bucket_counts(self.shingles_path)
                 or [self.n_buckets])
         buckets = (sorted({i % n for i in cand_ids for n in ns_s})
                    if capped else None)
         idx_sh = self._read_index(
-            spark, root, _SHINGLES_DATA, "id_bucket",
+            spark, self.shingles_path, _SHINGLES_DATA, "id_bucket",
             batch_id, buckets=buckets)
         if capped:
             idx_sh = idx_sh.filter(F.col("doc_id").isin(cand_ids))

@@ -68,7 +68,7 @@ from currency_market_pulse_spark.streaming.reservoir_stream import (
     StreamingReservoir,
 )
 from currency_market_pulse_spark.streaming.neardup_stream import (
-    StreamingNearDup,
+    StreamingNearDup, refuse_sharded_roots,
 )
 from currency_market_pulse_spark.streaming.ratelimiter import (
     DEFAULT_LIMIT, DEFAULT_WINDOW_MS, RateLimitGate,
@@ -243,7 +243,6 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           doc_files_per_trigger: int = 1,
                           neardup_compact_every: int = 32,
                           neardup_max_segments: int = 8,
-                          neardup_shards: int = 1,
                           expected_rows_per_trigger: int | None = None,
                           txn_retain_manifests: int | None = 256,
                           txn_publication: str = "rename",
@@ -316,6 +315,11 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
             "its state as snapshots under gateway_state/.  Stop the old "
             "pipeline and delete ckpt_import/state (README, gateway "
             "upgrade), or use a fresh out_dir.")
+
+    # sharded-index upgrade guard: an index written with the removed
+    # shards option keeps its rows under idx_{bands,shingles}/shard=k,
+    # which the probe no longer reads — every doc would look novel.
+    refuse_sharded_roots(f"{out_dir}/idx_bands", f"{out_dir}/idx_shingles")
 
     def _in_pool(name, start_fn):
         # one FAIR pool per streaming query (session.py sets
@@ -478,11 +482,7 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           # ops timeline: one JSON line per segment
                           # write (minor fold / tier major) — cheap,
                           # and the soak bench reads it back
-                          events_path=f"{out_dir}/compaction_events.jsonl",
-                          # band-hash sharding: S independent index
-                          # roots probed concurrently, dup-for-dup
-                          # equal to shards=1 (neardup_stream.py)
-                          shards=neardup_shards)
+                          events_path=f"{out_dir}/compaction_events.jsonl")
     hh = StreamingHeavyHitters(sketch_path=f"{out_dir}/cms_sketch",
                                cand_path=f"{out_dir}/cms_cand")
     sd = None

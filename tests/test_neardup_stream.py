@@ -403,7 +403,7 @@ def test_tiered_compaction_spares_largest_segment(spark, tmp_path):
     """Size-tiered major compaction (r12): when the segment count
     exceeds max_segments, only the SMALLEST max_segments//2+1 are
     merged — the big old segment survives untouched, so its bytes are
-    not rewritten (the write-amplification win merge_all cannot have;
+    not rewritten (the write-amplification win a merge-all policy cannot have;
     tools/compaction_bench.py measures the delta)."""
     nd = StreamingNearDup(
         bands_path=str(tmp_path / "bands"),
@@ -470,48 +470,68 @@ def test_rebucketed_index_serves_identical_dups(spark, tmp_path):
     assert (4, 1, 1.0) in scaled                # exact dup found
 
 
-@pytest.mark.slow
-def test_collect_cap_path_matches(spark, tmp_path):
+def _cap_scenario(name):
+    """(batches, handler kwargs) for test_collect_cap_path_matches."""
+    if name == "exact_mix":
+        return {0: [(1, BASE), (2, DISTINCT)],
+                1: [(3, BASE), (4, BASE), (5, NEAR), (6, "too short"),
+                    (7, DISTINCT + " tail marker")],
+                # an all-exact-dup batch exercises the empty-remainder
+                # branch
+                2: [(8, BASE), (9, DISTINCT)]}, {}
+    # interleaved: at cap=1, 1-row batches stay on the dict path and
+    # multi-row batches go distributed, so both paths write the same
+    # roots, across minor compactions (every 3 batches) and a tier
+    # merge (max_segments=2)
+    batches = {i: [(i * 10, t)] for i, (_, t) in enumerate(_corpus(6))}
+    batches[2] = [(25, BASE)]
+    batches[6] = [(61, NEAR), (62, DISTINCT)]
+    batches[7] = [(71, batches[3][0][1]),              # exact copy
+                  (72, NEAR.replace("dawn", "noon")),
+                  (73, NEAR.replace("dawn", "noon"))]  # in-batch
+    return batches, {"compact_every": 3, "max_segments": 2,
+                     "n_buckets": 4}
+
+
+@pytest.mark.parametrize("scenario", ["exact_mix", "interleaved"])
+def test_collect_cap_path_matches(spark, tmp_path, scenario):
     """Batches over hash_collect_cap take the fully distributed exact
     stage (window-owner + anti-join, no driver-side per-row dicts) —
     its output and its index growth must equal the driver-dict
     path's, including exact-copies-not-indexed."""
+    batches, kw = _cap_scenario(scenario)
+
     def run(sub, cap):
         nd = StreamingNearDup(
             bands_path=str(tmp_path / sub / "bands"),
             shingles_path=str(tmp_path / sub / "shingles"),
             dups_path=str(tmp_path / sub / "dups"),
-            hash_collect_cap=cap)
-        nd.process_batch(spark.createDataFrame(
-            [(1, BASE), (2, DISTINCT)], "doc_id long, text string"), 0)
-        nd.process_batch(spark.createDataFrame(
-            [(3, BASE), (4, BASE), (5, NEAR), (6, "too short"),
-             (7, DISTINCT + " tail marker")],
-            "doc_id long, text string"), 1)
-        # an all-exact-dup batch exercises the empty-remainder branch
-        nd.process_batch(spark.createDataFrame(
-            [(8, BASE), (9, DISTINCT)], "doc_id long, text string"), 2)
+            hash_collect_cap=cap, **kw)
+        _run_batches(nd, spark, batches)
         dups = sorted((r.new_id, r.dup_of, round(r.jaccard, 9))
                       for r in nd.read_dups(spark).collect())
-        hashes = sorted(r.doc_id
-                        for r in nd.read_hashes(spark).collect())
-        bands = sorted(r.doc_id for r in nd.read_bands(spark)
-                       .select("doc_id").distinct().collect())
-        return dups, hashes, bands
+        hashes = sorted(map(tuple, nd.read_hashes(spark).collect()))
+        bands = sorted(map(tuple, nd.read_bands(spark).collect()))
+        shingles = sorted(map(tuple, nd.read_shingles(spark).collect()))
+        return dups, hashes, bands, shingles
 
-    distributed = run("dist", cap=1)      # every batch over the cap
-    driver = run("drv", cap=50_000)       # the dict path
-    assert distributed == driver
-    dups, hashes, _ = driver
+    capped = run("cap", cap=1)          # multi-row batches distributed
+    driver = run("drv", cap=50_000)     # the dict path throughout
+    assert capped == driver
+    dups, hashes, _, _ = driver
+    got = {n for n, _, _ in dups}
+    if scenario == "interleaved":
+        # exact copy 71, cross-batch near-dup 72, in-batch copy 73
+        assert {71, 72, 73} <= got
+        return
     assert (3, 1, 1.0) in dups and (4, 1, 1.0) in dups
     assert (8, 1, 1.0) in dups and (9, 2, 1.0) in dups
-    got = {n for n, _, _ in dups}
     # 5 near-dups 1 (one token changed); 7 near-dups 2 (two appended
     # tokens, jaccard ~0.87); 3/4/8/9 are exact copies
     assert got == {3, 4, 5, 7, 8, 9}
     # exact copies are never indexed: hashes hold novel content only
     # (6 is short but exact-novel, so its hash IS recorded)
-    assert hashes == [1, 2, 5, 6, 7]
+    assert [d for d, _ in hashes] == [1, 2, 5, 6, 7]
 
 
 def test_carry_pick_properties():
@@ -646,131 +666,6 @@ def test_recovery_and_probe_independent_of_listing_order(
 
 
 @pytest.mark.slow
-def test_sharded_index_equals_unsharded(spark, tmp_path):
-    """shards=S is dup-for-dup and index-content equal to shards=1
-    (VERDICT r14 directive 3): sharding is by BAND HASH, so an LSH
-    collision pair always co-locates in its band's shard — candidate
-    recall, the verify jaccards, and the rank are all identical.
-    Scenario exercises cross-batch near-dups, exact copies (global
-    hash relation), within-batch dups, and compaction + a tier merge
-    inside the run — under S=1, 2 and 3."""
-    base_batches = {i: [(i * 10, t)] for i, (_, t) in
-                    enumerate(_corpus(6))}
-    base_batches[2] = [(25, BASE)]
-    base_batches[6] = [(61, NEAR), (62, DISTINCT)]
-    base_batches[7] = [(71, base_batches[3][0][1]),     # exact copy
-                       (72, NEAR.replace("dawn", "noon")),
-                       (73, NEAR.replace("dawn", "noon"))]  # in-batch
-
-    def run(tag, shards):
-        nd = StreamingNearDup(
-            bands_path=str(tmp_path / f"{tag}_bands"),
-            shingles_path=str(tmp_path / f"{tag}_shingles"),
-            dups_path=str(tmp_path / f"{tag}_dups"),
-            compact_every=3, max_segments=2, n_buckets=4,
-            shards=shards)
-        _run_batches(nd, spark, base_batches)
-        return nd
-
-    nd1 = run("s1", 1)
-    ref_dups = _dup_set(nd1, spark)
-    ref_bands = sorted(map(tuple, nd1.read_bands(spark).collect()))
-    ref_hashes = sorted(map(tuple, nd1.read_hashes(spark).collect()))
-    ref_sh_docs = sorted(
-        r.doc_id for r in
-        nd1.read_shingles(spark).select("doc_id").distinct().collect())
-    assert ref_dups, "scenario must flag dups"
-
-    for s in (2, 3):
-        nd = run(f"s{s}", s)
-        assert _dup_set(nd, spark) == ref_dups, f"shards={s}"
-        # band rows land in exactly one shard -> union == unsharded
-        assert sorted(map(tuple,
-                          nd.read_bands(spark).collect())) == ref_bands
-        assert sorted(map(tuple,
-                          nd.read_hashes(spark).collect())) == ref_hashes
-        # shingles REPLICATE to every shard a doc's bands touch; the
-        # distinct doc set (and per-doc content) matches
-        assert sorted(
-            r.doc_id for r in nd.read_shingles(spark)
-            .select("doc_id").distinct().collect()) == ref_sh_docs
-        # dedup recovers the unsharded relation exactly
-        assert (nd.read_shingles(spark)
-                .dropDuplicates(["doc_id", "sh"]).count()
-                == nd1.read_shingles(spark).count())
-
-
-@pytest.mark.slow
-def test_sharded_restart_continues(spark, tmp_path):
-    """A sharded index survives a handler restart (per-root recovery
-    covers every shard root) and keeps flagging against pre-restart
-    standing content."""
-    nd = StreamingNearDup(
-        bands_path=str(tmp_path / "r_bands"),
-        shingles_path=str(tmp_path / "r_shingles"),
-        dups_path=str(tmp_path / "r_dups"),
-        compact_every=2, n_buckets=4, shards=2)
-    _run_batches(nd, spark, {0: [(1, BASE)],
-                             1: [(2, DISTINCT)],
-                             2: _corpus(2, salt="z")})
-    # fresh handler on the same roots = restart
-    nd2 = StreamingNearDup(
-        bands_path=str(tmp_path / "r_bands"),
-        shingles_path=str(tmp_path / "r_shingles"),
-        dups_path=str(tmp_path / "r_dups"),
-        compact_every=2, n_buckets=4, shards=2)
-    _run_batches(nd2, spark, {3: [(9, NEAR)]})
-    dups = {r.new_id: r.dup_of
-            for r in nd2.read_dups(spark).collect()}
-    assert dups.get(9) == 1
-
-
-@pytest.mark.slow
-def test_sharded_overcap_degrades_to_distributed(spark, tmp_path):
-    """ADVICE r15 low: shards>1 with a micro-batch over
-    hash_collect_cap used to raise inside foreachBatch — the engine
-    replays the batch on restart and re-raises forever, so one
-    transient burst permanently wedged the stream.  The distributed
-    exact stage now probes serially per shard root and routes its
-    tail writes by band hash (same layout and seed as the dict
-    path), so the burst degrades to a slower batch whose dup log and
-    index content are EQUAL to the unsharded dict-path reference.
-    cap=1 also interleaves the two paths on the same roots (1-row
-    batches stay on the dict path; multi-row batches go distributed)."""
-    base_batches = {i: [(i * 10, t)] for i, (_, t) in
-                    enumerate(_corpus(6))}
-    base_batches[2] = [(25, BASE)]
-    base_batches[6] = [(61, NEAR), (62, DISTINCT)]
-    base_batches[7] = [(71, base_batches[3][0][1]),     # exact copy
-                       (72, NEAR.replace("dawn", "noon")),
-                       (73, NEAR.replace("dawn", "noon"))]  # in-batch
-
-    def run(tag, shards, cap):
-        nd = StreamingNearDup(
-            bands_path=str(tmp_path / f"{tag}_bands"),
-            shingles_path=str(tmp_path / f"{tag}_shingles"),
-            dups_path=str(tmp_path / f"{tag}_dups"),
-            compact_every=3, max_segments=2, n_buckets=4,
-            shards=shards, hash_collect_cap=cap)
-        _run_batches(nd, spark, base_batches)
-        return nd
-
-    ref = run("ocref", 1, 50_000)     # unsharded dict path
-    over = run("ocov", 2, 1)          # sharded, bursts over the cap
-    assert _dup_set(over, spark) == _dup_set(ref, spark)
-    assert (sorted(map(tuple, over.read_bands(spark).collect()))
-            == sorted(map(tuple, ref.read_bands(spark).collect())))
-    assert (sorted(map(tuple, over.read_hashes(spark).collect()))
-            == sorted(map(tuple, ref.read_hashes(spark).collect())))
-    # shingles replicate per touched shard; dedup recovers shards=1
-    assert (over.read_shingles(spark)
-            .dropDuplicates(["doc_id", "sh"]).count()
-            == ref.read_shingles(spark).count())
-    # sanity: the scenario found dups at all
-    assert {71, 72, 73} <= {n for n, _, _ in _dup_set(ref, spark)}
-
-
-@pytest.mark.slow
 def test_volume_guard_routes_long_docs_to_distributed(spark, tmp_path):
     """VERDICT r15 "what's wrong 2": the dict path collects the
     batch's SHINGLE relation driver-side, which scales with
@@ -805,3 +700,33 @@ def test_volume_guard_routes_long_docs_to_distributed(spark, tmp_path):
     assert _dup_set(guarded, spark) == _dup_set(free, spark)
     dups = {n: d for n, d, _ in _dup_set(free, spark)}
     assert dups == {3: 1, 4: 1}      # near-dup + exact copy found
+
+
+def _tree(root):
+    """{relative path: bytes} of every file under root."""
+    return {str(p.relative_to(root)): p.read_bytes()
+            for p in root.rglob("*") if p.is_file()}
+
+
+def test_sharded_root_is_refused_untouched(spark, tmp_path):
+    """An index written with the removed ``shards`` option keeps its
+    rows under ``shard=<k>/``, which the probe does not read: every
+    doc would look novel.  process_batch, seed_index and the backfill
+    refuse such a root before touching it."""
+    from currency_market_pulse_spark.streaming.backfill import (
+        backfill_bootstrap,
+    )
+
+    part = tmp_path / "idx_shingles" / "shard=1" / "tail" / "batch_id=0"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"PAR1 shard rows")
+    before = _tree(tmp_path)
+    nd = _handler(tmp_path)
+    docs = spark.createDataFrame([(1, BASE)], "doc_id long, text string")
+    for call in (lambda: nd.process_batch(docs, 1),
+                 lambda: nd.seed_index(docs),
+                 lambda: backfill_bootstrap(nd, docs)):
+        with pytest.raises(ValueError, match="shard=1"):
+            call()
+        assert _tree(tmp_path) == before
+

@@ -442,6 +442,37 @@ def test_gateway_state_upgrade_fails_fast(tmp_path):
     assert sorted(os.listdir(out)) == ["ckpt_import"]
 
 
+def test_sharded_index_upgrade_fails_fast(tmp_path):
+    """An out_dir whose near-dup index was written with the removed
+    shards option (rows under idx_bands/shard=<k>/) must not restart
+    into an index that reads as empty: the pipeline fails fast before
+    starting any query, and leaves the root byte-for-byte unchanged."""
+    import os
+
+    import pytest
+
+    from currency_market_pulse_spark.streaming.pipeline import (
+        run_composed_pipeline,
+    )
+
+    out = tmp_path / "out"
+    part = out / "idx_bands" / "shard=0" / "tail" / "batch_id=3"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"PAR1 band rows")
+
+    def tree():
+        return {str(p.relative_to(out)): p.read_bytes()
+                for p in out.rglob("*") if p.is_file()}
+
+    before = tree()
+    # spark=None proves the guard fires before ANY Spark work
+    with pytest.raises(ValueError, match="shard=0"):
+        run_composed_pipeline(None, str(tmp_path / "req"),
+                              str(tmp_path / "docs"), str(out))
+    assert tree() == before
+    assert sorted(os.listdir(out)) == ["idx_bands"]
+
+
 def test_doc_leg_timings_ring_buffer():
     """VERDICT r16 directive 4: doc_leg_s must not grow without bound
     on a long-lived pipeline (one dict per trigger forever) — it is a

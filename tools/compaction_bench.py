@@ -1,23 +1,20 @@
-"""Write-amplification A/B for the streaming near-dup index's major
-compaction policies (VERDICT r11 directive 2):
+"""Write amplification of the streaming near-dup index's size-tiered
+major compaction (VERDICT r11 directive 2):
 
     python tools/compaction_bench.py [--batches 48] [--docs 30]
 
-Feeds the same deterministic all-novel document stream through two
-StreamingNearDup instances — ``compaction_policy="tiered"`` (the r12
-default: carry-propagation — merge the two smallest segments plus
-each next-larger one no bigger than the group's running ROW sum) and
-``"merge_all"`` (the r11 policy: fold every segment) —
-with compaction every ``--compact-every`` batches and
-``--max-segments`` as the trigger, so the run crosses several major
-compactions.  For each policy it measures, per index relation and in
-total:
+Feeds a deterministic all-novel document stream through a
+StreamingNearDup whose compaction is carry-propagation tiering (merge
+the two smallest segments plus each next-larger one no bigger than
+the group's running ROW sum), with compaction every
+``--compact-every`` batches and ``--max-segments`` as the trigger, so
+the run crosses several major compactions.  It measures, per index
+relation and in total:
 
     bytes_ingested   parquet bytes written into tail dirs (the
-                     batches' own index contribution — identical
-                     across policies by construction)
+                     batches' own index contribution)
     bytes_compacted  parquet bytes written into base segments (the
-                     rewrites; the policy's cost)
+                     rewrites; the compaction's cost)
     write_amp        (ingested + compacted) / ingested — 1.0 would be
                      an ideal no-rewrite store
     rows_* / row_write_amp   the same accounting in ROWS — the
@@ -27,10 +24,8 @@ total:
                      rewrite side; rows compare 1:1 with the policy
                      simulation in neardup_stream._tier_compact_root
 
-and asserts the two policies end with IDENTICAL standing index
-contents (same band/shingle/hash row multisets), because compaction
-must never change what the probe sees.  The artifact is written to
-tools/compaction_amplification.json and cited by SCALE.md Round 12.
+The artifact is written to ``--out`` (default
+tools/compaction_amplification.json, cited by SCALE.md Round 12).
 """
 
 from __future__ import annotations
@@ -78,7 +73,7 @@ def main() -> None:
 
     from currency_market_pulse_spark.session import get_spark
     from currency_market_pulse_spark.streaming.neardup_stream import (
-        StreamingNearDup,
+        StreamingNearDup, _dir_rows,
     )
 
     spark = get_spark(app_name="compaction-bench",
@@ -86,151 +81,110 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     work = tempfile.mkdtemp(prefix="compaction_bench_")
-    results = {}
-    fingerprints = {}
     try:
-        for policy in ("tiered", "merge_all"):
-            base = os.path.join(work, policy)
-            compacted: dict[str, int] = {}
-            compacted_rows: dict[str, int] = {}
-            majors = [0]
-            import currency_market_pulse_spark.streaming.\
-neardup_stream as _ns
+        compacted: dict[str, int] = {}
+        compacted_rows: dict[str, int] = {}
+        majors = [0]
 
-            class _Instrumented(StreamingNearDup):
-                """Record every segment write's bytes at the moment it
-                happens — exact even when a tier loop creates and
-                re-consumes a segment inside one process_batch call."""
+        class _Instrumented(StreamingNearDup):
+            """Record every segment write's bytes at the moment it
+            happens — exact even when a tier loop creates and
+            re-consumes a segment inside one process_batch call."""
 
-                def _write_segment(self, spark, root, data_schema,
-                                   bucket_expr_fn, bucket_col,
-                                   sort_cols, tails, segs, segment_id):
-                    super()._write_segment(
-                        spark, root, data_schema, bucket_expr_fn,
-                        bucket_col, sort_cols, tails, segs, segment_id)
-                    seg = os.path.join(root, "base",
-                                       f"segment={segment_id}")
-                    compacted[root] = (compacted.get(root, 0)
-                                       + _dir_bytes(seg))
-                    compacted_rows[root] = (compacted_rows.get(root, 0)
-                                            + _ns._dir_rows(seg))
-                    if segs:          # consumed existing segments
-                        majors[0] += 1
+            def _write_segment(self, spark, root, data_schema,
+                               bucket_expr_fn, bucket_col,
+                               sort_cols, tails, segs, segment_id):
+                super()._write_segment(
+                    spark, root, data_schema, bucket_expr_fn,
+                    bucket_col, sort_cols, tails, segs, segment_id)
+                seg = os.path.join(root, "base",
+                                   f"segment={segment_id}")
+                compacted[root] = (compacted.get(root, 0)
+                                   + _dir_bytes(seg))
+                compacted_rows[root] = (compacted_rows.get(root, 0)
+                                        + _dir_rows(seg))
+                if segs:          # consumed existing segments
+                    majors[0] += 1
 
-            nd = _Instrumented(
-                bands_path=os.path.join(base, "bands"),
-                shingles_path=os.path.join(base, "shingles"),
-                dups_path=os.path.join(base, "dups"),
-                compact_every=args.compact_every,
-                max_segments=args.max_segments,
-                compaction_policy=policy)
+        nd = _Instrumented(
+            bands_path=os.path.join(work, "bands"),
+            shingles_path=os.path.join(work, "shingles"),
+            dups_path=os.path.join(work, "dups"),
+            compact_every=args.compact_every,
+            max_segments=args.max_segments)
 
-            roots = {"bands": nd.bands_path,
-                     "shingles": nd.shingles_path,
-                     "hashes": nd.hashes_path}
-            ingested = {k: 0 for k in roots}
-            ingested_rows = {k: 0 for k in roots}
-            seen_tails: dict[str, set[str]] = {k: set() for k in roots}
+        roots = {"bands": nd.bands_path,
+                 "shingles": nd.shingles_path,
+                 "hashes": nd.hashes_path}
+        ingested = {k: 0 for k in roots}
+        ingested_rows = {k: 0 for k in roots}
+        seen_tails: dict[str, set[str]] = {k: set() for k in roots}
 
-            for b in range(args.batches):
-                rows = [(b * args.docs + d,
-                         _doc(b * args.docs + d, args.doc_width))
-                        for d in range(args.docs)]
-                batch = spark.createDataFrame(
-                    rows, "doc_id long, text string")
-                nd.process_batch(batch, b)
-                # every tail dir is written exactly once and survives
-                # at least until the next compaction — record each at
-                # first sight
-                for k, r in roots.items():
-                    tail = os.path.join(r, "tail")
-                    if not os.path.isdir(tail):
-                        continue
-                    for d in os.listdir(tail):
-                        if (d.startswith("batch_id=")
-                                and d not in seen_tails[k]):
-                            seen_tails[k].add(d)
-                            ingested[k] += _dir_bytes(
-                                os.path.join(tail, d))
-                            ingested_rows[k] += _ns._dir_rows(
-                                os.path.join(tail, d))
-            compacted = {k: compacted.get(r, 0)
-                         for k, r in roots.items()}
-            compacted_rows = {k: compacted_rows.get(r, 0)
-                              for k, r in roots.items()}
-            majors = majors[0]
+        for b in range(args.batches):
+            rows = [(b * args.docs + d,
+                     _doc(b * args.docs + d, args.doc_width))
+                    for d in range(args.docs)]
+            batch = spark.createDataFrame(
+                rows, "doc_id long, text string")
+            nd.process_batch(batch, b)
+            # every tail dir is written exactly once and survives at
+            # least until the next compaction — record each at first
+            # sight
+            for k, r in roots.items():
+                tail = os.path.join(r, "tail")
+                if not os.path.isdir(tail):
+                    continue
+                for d in os.listdir(tail):
+                    if (d.startswith("batch_id=")
+                            and d not in seen_tails[k]):
+                        seen_tails[k].add(d)
+                        ingested[k] += _dir_bytes(
+                            os.path.join(tail, d))
+                        ingested_rows[k] += _dir_rows(
+                            os.path.join(tail, d))
+        compacted = {k: compacted.get(r, 0) for k, r in roots.items()}
+        compacted_rows = {k: compacted_rows.get(r, 0)
+                          for k, r in roots.items()}
+        majors = majors[0]
 
-            # identical standing contents across policies
-            fp = {
-                "bands": sorted(
-                    (r.doc_id, r.band, r.band_sig)
-                    for r in nd.read_bands(spark).collect()),
-                "hashes": sorted(
-                    (r.doc_id, r.h)
-                    for r in nd.read_hashes(spark).collect()),
-                "shingle_rows": nd.read_shingles(spark).count(),
-            }
-            fingerprints[policy] = fp
-
-            total_in = sum(ingested.values())
-            total_comp = sum(compacted.values())
-            rows_in = sum(ingested_rows.values())
-            rows_comp = sum(compacted_rows.values())
-            results[policy] = {
-                "bytes_ingested": total_in,
-                "bytes_compacted": total_comp,
-                "write_amp": round((total_in + total_comp)
-                                   / max(1, total_in), 3),
-                "rows_ingested": rows_in,
-                "rows_compacted": rows_comp,
-                "row_write_amp": round((rows_in + rows_comp)
-                                       / max(1, rows_in), 3),
-                "major_compactions_observed": majors,
-                "per_relation": {
-                    k: {"ingested": ingested[k],
-                        "compacted": compacted[k],
-                        "write_amp": round(
-                            (ingested[k] + compacted[k])
-                            / max(1, ingested[k]), 3)}
-                    for k in roots},
-            }
-            print(f"{policy}: write_amp="
-                  f"{results[policy]['write_amp']} row_write_amp="
-                  f"{results[policy]['row_write_amp']} "
-                  f"(ingested {total_in}B/{rows_in}r, rewritten "
-                  f"{total_comp}B/{rows_comp}r, majors {majors})",
-                  flush=True)
-
-        same = (fingerprints["tiered"] == fingerprints["merge_all"])
-        print(f"standing index identical across policies: {same}")
+        total_in = sum(ingested.values())
+        total_comp = sum(compacted.values())
+        rows_in = sum(ingested_rows.values())
+        rows_comp = sum(compacted_rows.values())
+        result = {
+            "bytes_ingested": total_in,
+            "bytes_compacted": total_comp,
+            "write_amp": round((total_in + total_comp)
+                               / max(1, total_in), 3),
+            "rows_ingested": rows_in,
+            "rows_compacted": rows_comp,
+            "row_write_amp": round((rows_in + rows_comp)
+                                   / max(1, rows_in), 3),
+            "major_compactions_observed": majors,
+            "per_relation": {
+                k: {"ingested": ingested[k],
+                    "compacted": compacted[k],
+                    "write_amp": round(
+                        (ingested[k] + compacted[k])
+                        / max(1, ingested[k]), 3)}
+                for k in roots},
+        }
+        print(f"tiered: write_amp={result['write_amp']} "
+              f"row_write_amp={result['row_write_amp']} "
+              f"(ingested {total_in}B/{rows_in}r, rewritten "
+              f"{total_comp}B/{rows_comp}r, majors {majors})",
+              flush=True)
         artifact = {
             "config": {"batches": args.batches,
                        "docs_per_batch": args.docs,
                        "doc_width_tokens": args.doc_width,
                        "compact_every": args.compact_every,
                        "max_segments": args.max_segments},
-            "policies": results,
-            "index_contents_identical": same,
-            # ADVICE r12: in this harness BOTH arms run the r12 code
-            # path where a major follows the minor tail-fold, so the
-            # merge_all arm rewrites tail bytes twice per major (minor
-            # segment, then merge-all) — the true r11 policy folded
-            # tails directly into its single combined major.  The
-            # merge_all numbers therefore OVERSTATE r11's write amp by
-            # up to one extra tail rewrite per major; the tiered-vs-
-            # merge_all gap (3.77 vs 8.35 rows at 100 unit minors) is
-            # far larger than that bias and widens with index
-            # lifetime (simulated 3.8x vs 62x at 1,000 minors).
-            "note_merge_all_arm": (
-                "merge_all arm includes the r12 minor tail-fold "
-                "before each major; r11's single combined major "
-                "rewrote each tail byte once less per major"),
+            "tiered": result,
         }
         with open(args.out, "w") as f:
             json.dump(artifact, f, indent=2)
         print(f"wrote {args.out}")
-        if not same:
-            raise SystemExit("FAIL: policies diverged in index contents")
     finally:
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()

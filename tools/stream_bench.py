@@ -232,11 +232,6 @@ def main() -> None:
                     help="trade-sink file publication: atomic rename "
                          "or the object-store PUT twin (copy+fsync, "
                          "no cross-directory rename — txn_sink.py)")
-    ap.add_argument("--neardup-shards", type=int, default=1,
-                    help="shard the near-dup index across S band-hash "
-                         "shard roots probed concurrently (dup-for-dup "
-                         "equal to 1; the beyond-single-JVM capacity "
-                         "lever, neardup_stream.py)")
     ap.add_argument("--txn-retain-manifests", type=int, default=256,
                     help="txn commit-log retention: manifests below "
                          "the checkpoint floor minus N are deleted "
@@ -396,7 +391,6 @@ def main() -> None:
         doc_files_per_trigger=args.doc_files_per_trigger,
         neardup_compact_every=args.neardup_compact_every,
         neardup_max_segments=args.neardup_max_segments,
-        neardup_shards=args.neardup_shards,
         txn_publication=args.txn_publication,
         txn_retain_manifests=(args.txn_retain_manifests or None))
     # accumulate progress DURING the run (keyed by batchId): Spark
@@ -578,7 +572,6 @@ def main() -> None:
             "stream_shuffle_partitions": args.stream_shuffle_partitions,
             "burst_factor": args.burst_factor,
             "neardup_compact_every": args.neardup_compact_every,
-            "neardup_shards": args.neardup_shards,
             "txn_publication": args.txn_publication,
             "txn_retain_manifests": args.txn_retain_manifests,
             "neardup_max_segments": args.neardup_max_segments,
