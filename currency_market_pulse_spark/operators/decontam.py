@@ -8,15 +8,17 @@ two share at least ``min_overlap`` DISTINCT word n-grams.  Higher ``n``
 (5-13 in published pipelines) makes shingles specific enough that any
 hit is near-certain leakage; ``min_overlap`` trades recall for noise.
 
-Scale design: the eval side is SMALL by nature (benchmarks are
-thousands of docs, the training corpus is billions), so its exploded
-shingle relation is broadcast — the contamination join is a map-side
-hash join against the full training shingle scan, no shuffle of the
-big side.  The per-shingle join blowup is bounded by the eval-side
-document frequency, which at n >= 5 is tiny by construction.  The
-output pair relation is again small (leaks are rare), so the follow-up
-(drop or down-weight flagged train docs via a left-anti join) is
-cheap.
+Scale design: the screen is a thresholded set-overlap join on shared
+shingles, planned as one hash join on ``sh`` with no forced strategy.
+The eval side is usually small (benchmarks are thousands of docs, the
+training corpus is billions), and the planner then broadcasts it under
+``spark.sql.autoBroadcastJoinThreshold`` / AQE, so the big side never
+shuffles; when the held-out side is itself corpus-scale the same plan
+falls back to a shuffle join instead of pushing an unchecked relation
+through the driver.  The per-shingle join blowup is bounded by the
+eval-side document frequency, which at n >= 5 is tiny by construction.
+The follow-up drop (left-anti join against the flagged ids) leaves its
+strategy to the planner for the same reason.
 
 Reference has no decontamination surface; §2.6 LLM-pipeline extension
 tier.  Differential oracle: queries/decontam.py replays the identical
@@ -26,8 +28,6 @@ tokenize/shingle/join in DuckDB.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-from currency_market_pulse_spark.materialize import shared
 
 from currency_market_pulse_spark.operators.dedup import _doc_shingles
 
@@ -49,7 +49,7 @@ def contamination_pairs(train: DataFrame, eval_: DataFrame,
     ev = (_doc_shingles(eval_, n, id_col, text_col)
           .select(F.col(id_col).alias("eval_doc_id"), "sh"))
     return (
-        tr.join(F.broadcast(ev), "sh")
+        tr.join(ev, "sh")
         .groupBy("train_doc_id", "eval_doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
         .filter(F.col("n_overlap") >= min_overlap)
@@ -75,206 +75,9 @@ def decontaminate(train: DataFrame, eval_: DataFrame,
                   id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """The training corpus minus contaminated docs (left-anti join on
-    the flagged id relation — the flagged side is small, so the anti
-    join broadcasts)."""
+    the flagged id relation; the planner broadcasts it when small)."""
     flagged = contaminated_ids(train, eval_, n, min_overlap,
                                id_col, text_col)
     return train.join(
-        F.broadcast(flagged.select(F.col("train_doc_id").alias(id_col))),
+        flagged.select(F.col("train_doc_id").alias(id_col)),
         id_col, "left_anti")
-
-
-#: Bloom pre-filter sizing: m bits / 64 = word relation rows (1024 at
-#: 2^16), k probe hashes.  False-positive rate for S eval shingles is
-#: (1 - e^(-kS/m))^k — at S=5k, m=65536, k=3: ~1.2% of probes, each
-#: caught by the exact verify join.  False NEGATIVES are structurally
-#: impossible (bit_or only sets bits), so results are identical to the
-#: exact path.
-BLOOM_BITS = 1 << 16
-BLOOM_HASHES = 3
-
-
-def _bloom_positions(sh, m: int, k: int) -> list:
-    """k bit positions via Kirsch-Mitzenmacher double hashing
-    (h1 + i*h2 mod m, "Less Hashing, Same Performance", 2006): the
-    first cut seeded k independent digests, which tripled the hash
-    work in the hot probe path for no filter-quality gain — measured
-    4.4x slower than the exact join at sf1 before this fix.  h1/h2
-    are seeded 60-bit xxhash64 values (see _bloom_h1h2);
-    h1 + (k-1)*h2 < 2^62 stays in int64."""
-    h1, h2 = _bloom_h1h2(sh)
-    return [F.pmod(h1 + F.lit(i) * h2, F.lit(m)) for i in range(k)]
-
-
-def _bloom_h1h2(sh) -> tuple:
-    """The double-hash pair as 60-bit non-negative longs.  xxhash64
-    (r18, guide §1.2 per-task work): the bloom's hash family is pure
-    implementation — the oracle replays the EXACT join and the verify
-    join kills false positives, so results are hash-independent — and
-    the md5-hex-substring-conv chain cost one full digest plus two
-    60-bit hex parses per shingle on the hot probe path.  Two seeded
-    xxhash64 evaluations are single JVM intrinsics each.  The unsigned
-    shift keeps h1 + (k-1)*h2 < 2^62 (no int64 overflow, and the
-    numpy probe twin stays wrap-free in uint64 — bloom_prefilter)."""
-    return (F.shiftrightunsigned(F.xxhash64(sh), 4),
-            F.shiftrightunsigned(F.xxhash64(F.lit("bloom2"), sh), 4))
-
-
-def eval_shingle_bloom(eval_: DataFrame, n: int = 5,
-                       m: int = BLOOM_BITS, k: int = BLOOM_HASHES,
-                       id_col: str = "doc_id",
-                       text_col: str = "text",
-                       shingles_df: DataFrame | None = None) -> DataFrame:
-    """Bloom bitmap of the eval-side shingle set as a (word, bits)
-    relation — at most m/64 rows (8 KiB of filter state at the default
-    2^16 bits) however many shingles the eval corpus holds.  Built with
-    one explode (k positions per distinct shingle) and one ``bit_or``
-    hash aggregate; hashes are the seeded-xxhash64 pair of
-    _bloom_h1h2 (implementation detail — the oracle replays the exact
-    join, so filter hashes need no cross-engine twin).
-
-    This is the scale hatch for the broadcast decontamination join:
-    the exact path broadcasts the full eval shingle relation (16-byte
-    hashes x shingles — gigabytes when the held-out side is itself
-    web-scale, e.g. decontaminating against an earlier training
-    corpus), while the bitmap stays m/64 words at ANY eval size; tune
-    m to the eval cardinality (10 bits/element keeps fp ~1%)."""
-    base = (shingles_df if shingles_df is not None
-            else _doc_shingles(eval_, n, id_col, text_col))
-    sh = base.select("sh").distinct()
-    pos = sh.select(F.explode(F.array(
-        *_bloom_positions(F.col("sh"), m, k))).alias("pos"))
-    # SQL-form shiftleft: the Python F.shiftleft only takes a literal
-    # bit count, the SQL function accepts a column
-    return (pos.select(
-        F.expr("pos DIV 64").alias("word"),
-        F.expr("shiftleft(CAST(1 AS BIGINT), "
-               "CAST(pmod(pos, 64) AS INT))").alias("bit"))
-        .groupBy("word").agg(F.bit_or("bit").alias("bits")))
-
-
-def bloom_words(bloom: DataFrame, m: int = BLOOM_BITS) -> list[int]:
-    """The bitmap as a dense m/64-long word list (driver-side; 8 KiB
-    at the default size, ~1.25 MB per 10M eval shingles at 10
-    bits/element) — the form the prefilter broadcasts."""
-    words = [0] * (m // 64)
-    for r in bloom.collect():
-        words[r.word] = r.bits
-    return words
-
-
-def bloom_sized_bits(n_distinct: int) -> int:
-    """Adaptive bitmap sizing: the next power of two >= 10 bits per
-    distinct eval shingle (fp ~1.2% at k=3), floored at BLOOM_BITS.
-    Sizing is a one-scalar-count decision made at FILTER BUILD time —
-    the offline-index posture; a fixed m is a saturation bug waiting
-    for a bigger eval side (measured: the 2^16 default against sf10's
-    2.2M distinct eval shingles set EVERY bit, the prefilter passed
-    all 22.5M train shingles, and the 'small survivors' broadcast was
-    suddenly the whole relation — 119s vs the exact path's 7.5s)."""
-    import math
-
-    return max(BLOOM_BITS, 1 << math.ceil(math.log2(10 * n_distinct + 1)))
-
-
-def bloom_prefilter(shingle_df: DataFrame, bloom: DataFrame | list,
-                    m: int = BLOOM_BITS,
-                    k: int = BLOOM_HASHES) -> DataFrame:
-    """Rows of ``shingle_df`` whose ``sh`` MAY be in the bloom set.
-
-    Probe shape: the two xxhash64 evaluations happen ONCE per row JVM-side
-    (codegen), then an Arrow-vectorized pandas UDF tests the k
-    Kirsch-Mitzenmacher positions against an ``sc.broadcast`` numpy
-    bitmap — numpy shift/mask over the whole batch, no per-row Python.
-    The bitmap rides the broadcast machinery (MBs at web-scale eval
-    sides), NOT a codegen literal array (fine at 8 KiB, absurd at 1M
-    words) and NOT per-position broadcast joins (the first cut's three
-    word-joins rebuilt the eval-side bit_or aggregation once per join
-    — three full eval passes, visible as three HashAggregate subtrees
-    in the plan).  Definite-absent rows never reach the exact verify
-    join."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    words = bloom if isinstance(bloom, list) else bloom_words(bloom, m)
-    assert len(words) * 64 == m, "bitmap/word-count mismatch"
-    warr = np.asarray(words, dtype=np.int64).astype(np.uint64)
-    bc = shingle_df.sparkSession.sparkContext.broadcast(warr)
-    mm, kk = m, k
-
-    # no inner type hints: `from __future__ import annotations`
-    # stringifies them and pandas_udf cannot resolve 'pd.Series'
-    @F.pandas_udf(T.BooleanType())
-    def probe(h1, h2):
-        w = bc.value
-        a = h1.to_numpy(dtype=np.int64).astype(np.uint64)
-        b = h2.to_numpy(dtype=np.int64).astype(np.uint64)
-        keep = np.ones(len(a), dtype=bool)
-        for i in range(kk):
-            # h1 + i*h2 < 2^62: no uint64 wrap, identical to the JVM
-            # pmod in _bloom_positions
-            pos = (a + np.uint64(i) * b) % np.uint64(mm)
-            word = (pos >> np.uint64(6)).astype(np.int64)
-            bit = np.uint64(1) << (pos & np.uint64(63))
-            keep &= (w[word] & bit) != 0
-        return pd.Series(keep)
-
-    h1, h2 = _bloom_h1h2(F.col("sh"))
-    return (shingle_df
-            .withColumn("_h1", h1).withColumn("_h2", h2)
-            .filter(probe(F.col("_h1"), F.col("_h2")))
-            .drop("_h1", "_h2"))
-
-
-def contamination_pairs_bloom(train: DataFrame, eval_: DataFrame,
-                              n: int = 5, min_overlap: int = 1,
-                              m: int | None = None,
-                              k: int = BLOOM_HASHES,
-                              id_col: str = "doc_id",
-                              text_col: str = "text") -> DataFrame:
-    """``contamination_pairs`` with a Bloom pre-filter: train shingles
-    probe an ``sc.broadcast`` numpy bitmap inside one Arrow-vectorized
-    pandas_udf (no shuffle, no join — each executor tests its rows
-    against the shared bitmap words), and only maybe-present survivors
-    enter the exact verify join against the eval shingle relation.
-    The bitmap is adaptively sized from the eval shingle cardinality
-    (``bloom_sized_bits``) — a fixed 2^16-bit bitmap saturated at sf10
-    (every probe returned maybe-present) and was caught by the scale
-    gate.  Bit-identical results to the exact path (the bloom admits
-    false positives only, and the verify join kills those) — asserted
-    by the shared oracle."""
-    par = train.sparkSession.sparkContext.defaultParallelism
-    tr = (_doc_shingles(train.repartition(par), n, id_col, text_col)
-          .select(F.col(id_col).alias("train_doc_id"), "sh"))
-    # r17 (guide §1.2/§2.4): the eval shingle relation feeds THREE
-    # consumers — the adaptive-m distinct count, the bloom bitmap
-    # aggregate, and the exact verify join — and was re-tokenized and
-    # re-shingled for each (3 full eval passes per invocation).  One
-    # lazy localCheckpoint materializes it once; the sizing count below
-    # is the materializing action (no extra job — the components.py
-    # lazy-checkpoint pattern).  Scale posture: the eval side is small
-    # by construction (benchmarks vs a web-scale train corpus), so the
-    # checkpointed relation is the small side of the design; when the
-    # eval side is itself huge, one materialized pass still beats
-    # three recomputed ones.  Plan diff: 3 identical shingle subtrees
-    # -> 1 checkpoint scan; per-invocation, nothing survives the query.
-    ev_sh = shared(_doc_shingles(eval_, n, id_col, text_col))
-    ev = ev_sh.select(F.col(id_col).alias("eval_doc_id"), "sh")
-    if m is None:   # adaptive: one scalar count at filter-build time
-        m = bloom_sized_bits(ev_sh.select("sh").distinct().count())
-    bloom = eval_shingle_bloom(eval_, n, m, k, id_col, text_col,
-                               shingles_df=ev_sh)
-    cand = bloom_prefilter(tr, bloom, m, k)
-    # verify join: do NOT force a broadcast of the survivors.  True
-    # contamination is rare, but false-positive mass scales with the
-    # TRAIN side (~fp_rate x train shingles), which the eval-sized
-    # bitmap does not bound — at web-scale train corpora a forced
-    # F.broadcast(cand) can exceed driver/broadcast limits with zero
-    # real contamination.  Let AQE pick the strategy at runtime (it
-    # broadcasts when the survivor relation is actually small), the
-    # same rule dedup_survivors applies to unbounded drop lists.
-    return (ev.join(cand, "sh")
-            .groupBy("train_doc_id", "eval_doc_id")
-            .agg(F.count(F.lit(1)).alias("n_overlap"))
-            .filter(F.col("n_overlap") >= min_overlap))

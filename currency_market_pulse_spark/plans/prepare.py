@@ -28,6 +28,9 @@ explicit and separately timable; bench.py reports it as
 ``index_build_sec`` in BENCH_QUERIES.json instead of silently charging
 it to the first unlucky query.  Query timings then measure what a
 deployed engine's queries cost: search over already-built indexes.
+
+Decontamination needs no build step: its query is one hash join over
+the split documents.
 """
 
 from __future__ import annotations
@@ -66,11 +69,5 @@ def prepare_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     # search path action-free.
     _timed("simhash_sigs",
            lambda: qd._shared_simhash60(spark, sf_dir))
-    # decontam bloom sizing (r17): the adaptive bitmap-bits decision is
-    # an input statistic — one distinct-count here instead of one per
-    # query invocation (queries/decontam.py _bloom_m).
-    from currency_market_pulse_spark.queries import decontam as qdec
-    _timed("decontam_bloom_m",
-           lambda: qdec._bloom_m(spark, sf_dir))
     times["total"] = round(sum(times.values()), 3)
     return times

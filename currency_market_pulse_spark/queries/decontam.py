@@ -1,11 +1,10 @@
-"""Decontamination queries over the ``documents`` fixture: the 90/5/5
+"""Decontamination query over the ``documents`` fixture: the 90/5/5
 hash split defines the held-out side; any train doc sharing a distinct
 5-gram with a val/test doc is flagged with its overlap count.  The
 oracle replays the identical split thresholds (bitwise float
-literals), tokenization, shingling and join in DuckDB.  The bloom
-variant is the REGISTERED slot (r8, VERDICT r7 directive 6 — it is
-the scale path); the exact twin shares its oracle in the library
-tier, which is the proof the prefilter changes nothing.
+literals), tokenization, shingling and join in DuckDB.  The query runs
+the exact shingle join (operators/decontam.py ``contamination_pairs``),
+the engine's one decontamination path.
 """
 
 from __future__ import annotations
@@ -14,51 +13,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from currency_market_pulse_spark.operators import decontam as C
 from currency_market_pulse_spark.operators import sampling as S
-from currency_market_pulse_spark.queries.registry import extra_query, query
+from currency_market_pulse_spark.queries.registry import query
 from currency_market_pulse_spark.queries.sampling import (
     SPLIT_WEIGHTS, _frac_sql, _split_case_sql,
 )
 from currency_market_pulse_spark.sources.catalog import load_table
 
 DECONTAM_NGRAM = 5
-
-#: r17 (guide §1.2 — don't pay per-invocation for a build-time
-#: decision): the bloom bitmap's adaptive size is a STATISTIC OF THE
-#: INPUT (distinct eval-shingle count), not of any query result, so it
-#: is computed once per (session, sf_dir) — at plans/prepare
-#: index-build time in the bench, or on first use in an ad-hoc
-#: session — exactly like the corpus-adaptive simhash band geometry
-#: (queries/dedup.py _shared_simhash60).  Every invocation of the
-#: registered query then runs ONE driver action (the bitmap-word
-#: collect) instead of two (sizing count + collect); the sizing
-#: count's distinct shuffle of the eval shingle relation disappears
-#: from the per-query path.  Results are independent of m by
-#: construction (the bloom admits false positives only; the exact
-#: verify join removes them — shared oracle is the proof).
-_BLOOM_M_CACHE: dict[tuple[str, str], int] = {}
-_BLOOM_M_CAP = 64
-
-
-def _bloom_m(spark: SparkSession, sf_dir: str) -> int:
-    """Adaptive bitmap bits for the registered decontam query, cached
-    per (application, sf_dir).  Same sizing rule as the operator's
-    m=None path (bloom_sized_bits over the distinct eval shingles)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    m = _BLOOM_M_CACHE.get(key)
-    if m is None:
-        from currency_market_pulse_spark.operators.dedup import (
-            _doc_shingles,
-        )
-        docs = S.hash_split(load_table(spark, sf_dir, "documents"),
-                            "doc_id", SPLIT_WEIGHTS)
-        ev = docs.filter(F.col("split") != "train")
-        n = (_doc_shingles(ev, DECONTAM_NGRAM, "doc_id", "text")
-             .select("sh").distinct().count())
-        m = C.bloom_sized_bits(n)
-        while len(_BLOOM_M_CACHE) >= _BLOOM_M_CAP:
-            _BLOOM_M_CACHE.pop(next(iter(_BLOOM_M_CACHE)))
-        _BLOOM_M_CACHE[key] = m
-    return m
 
 
 def _shingle_expr(n: int) -> str:
@@ -84,53 +45,21 @@ ORDER BY train_doc_id, eval_doc_id
 """
 
 
-@extra_query("documents_decontaminate", oracle=_DECONTAM_ORACLE)
-def documents_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-vs-heldout contamination pairs: train docs sharing any
-    distinct 5-gram with a val/test doc under the standard 90/5/5 hash
-    split.  Eval shingles broadcast — no shuffle of the training
-    side."""
-    docs = S.hash_split(load_table(spark, sf_dir, "documents"),
-                        "doc_id", SPLIT_WEIGHTS)
-    train = docs.filter(F.col("split") == "train")
-    ev = docs.filter(F.col("split") != "train")
-    return (C.contamination_pairs(train, ev, n=DECONTAM_NGRAM,
-                                  min_overlap=1)
-            .orderBy("train_doc_id", "eval_doc_id"))
-
-
 @query("documents_decontaminate_bloom", oracle=_DECONTAM_ORACLE)
 def documents_decontaminate_bloom(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    """Bloom-prefiltered twin of documents_decontaminate
-    (operators/decontam.py contamination_pairs_bloom): the eval
-    shingle set compressed to an ADAPTIVELY-SIZED bitmap (10 bits per
-    distinct eval shingle, one scalar count at filter-build time —
-    a fixed size saturates and passes everything, the measured sf10
-    failure in bloom_sized_bits' docstring), shipped via sc.broadcast
-    and probed by ONE Arrow-vectorized numpy filter over the training
-    shingle scan; only maybe-present shingles reach the exact verify
-    join, whose strategy is left to AQE (false-positive survivor mass
-    scales with the TRAIN side, so it is not assumed broadcastable).
-    The bloom admits false POSITIVES only, so results
-    are bit-identical to the exact path — both queries share one
-    oracle, which is the proof.  Regime note (measured): sf1 7.0s /
-    sf10 25.8s vs the exact path's 2.5s / 7.5s — at fixture scale the
-    eval broadcast is cheap and the prefilter is pure overhead; the
-    bloom wins exactly when the eval shingle relation outgrows
-    broadcast (its bitmap is ~1.5% the size of the raw md5 keys),
-    which is the regime it exists for."""
-    # r18: spread_small_scan A/B'd here and REJECTED - mixed across
-    # scales (sf1 1.05x, sf0.1 0.79x): the cost is the checkpointed
-    # eval relation + probe + verify-join shuffles, which already
-    # re-spread the data; the extra scan exchange only taxes sf0.1.
+    """Train-vs-heldout contamination pairs: train docs sharing any
+    distinct 5-gram with a val/test doc under the standard 90/5/5 hash
+    split, from one hash join whose strategy the planner picks (it
+    broadcasts the small eval side).
+
+    The key keeps its ``_bloom`` suffix only because the benchmark's
+    batch query mix names it; the Bloom prefilter it once ran is gone
+    (it lost to this exact join at every measured scale), and the
+    rename waits for a change to the benchmark."""
     docs = S.hash_split(load_table(spark, sf_dir, "documents"),
                         "doc_id", SPLIT_WEIGHTS)
     train = docs.filter(F.col("split") == "train")
     ev = docs.filter(F.col("split") != "train")
-    # r17: terminal ORDER BY removed (presentation only); bitmap size
-    # from the session-cached input statistic (_bloom_m) — the sizing
-    # count no longer runs per invocation.
-    return C.contamination_pairs_bloom(train, ev, n=DECONTAM_NGRAM,
-                                       min_overlap=1,
-                                       m=_bloom_m(spark, sf_dir))
+    return C.contamination_pairs(train, ev, n=DECONTAM_NGRAM,
+                                 min_overlap=1)

@@ -4,23 +4,18 @@ training store — the decontaminate-at-ingest posture (the batch
 operator's run-loop, the way neardup_stream.py executes
 dedup_incremental continuously).
 
-The eval side is static (benchmarks change rarely), so its screening
-state is built ONCE at handler construction, not per batch:
+The eval side is static (benchmarks change rarely), so its exact
+shingle relation is built ONCE at handler construction and parquet'd
+to ``eval_index_path``; each batch reads it back instead of
+re-shingling the eval corpus.
 
-- the adaptively-sized bloom bitmap (operators/decontam.py
-  bloom_sized_bits / eval_shingle_bloom) as a driver-held word list —
-  the batch probe broadcasts it and filters maybe-present shingles in
-  one Arrow pass;
-- the exact eval shingle relation parquet'd to ``eval_index_path`` —
-  the verify join reads it back instead of re-shingling the eval
-  corpus every batch.
-
-Per batch: shingle the batch -> bloom prefilter -> exact verify join
-against the stored eval shingles -> flagged (doc_id, eval_doc_id,
-n_overlap) rows land under batch_id=<id> with dynamic partition
-overwrite (idempotent replay, the importer discipline).  Clean docs
-pass through untouched; the flag log is the quarantine list a
-downstream sink anti-joins.
+Per batch: shingle the batch -> hash join with the stored eval
+shingles (strategy left to the planner, which broadcasts whichever
+side is small) -> flagged (doc_id, eval_doc_id, n_overlap) rows land
+under batch_id=<id> with dynamic partition overwrite (idempotent
+replay, the importer discipline).  Clean docs pass through
+untouched; the flag log is the quarantine list a downstream sink
+anti-joins.
 """
 
 from __future__ import annotations
@@ -28,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.utils import AnalysisException
 
-from currency_market_pulse_spark.operators import decontam as C
 from currency_market_pulse_spark.operators.dedup import (
     _doc_shingles, shingles_from_tokens,
 )
@@ -47,14 +41,9 @@ class StreamingDecontam:
         self.min_overlap = min_overlap
         self.eval_index_path = eval_index_path
         self.flags_path = flags_path
-        ev_sh = _doc_shingles(eval_df, n, "doc_id", "text")
-        (ev_sh.select(F.col("doc_id").alias("eval_doc_id"), "sh")
+        (_doc_shingles(eval_df, n, "doc_id", "text")
+         .select(F.col("doc_id").alias("eval_doc_id"), "sh")
          .write.mode("overwrite").parquet(eval_index_path))
-        n_distinct = ev_sh.select("sh").distinct().count()
-        self.m = C.bloom_sized_bits(n_distinct)
-        self.words = C.bloom_words(
-            C.eval_shingle_bloom(eval_df, n, self.m,
-                                 shingles_df=ev_sh), self.m)
 
     def process_batch(self, batch: DataFrame, batch_id: int,
                       toks: DataFrame | None = None) -> None:
@@ -68,9 +57,8 @@ class StreamingDecontam:
                if toks is not None
                else _doc_shingles(batch, self.n, "doc_id", "text"))
               .select("doc_id", "sh"))
-        cand = C.bloom_prefilter(sh, self.words, self.m)
         ev = spark.read.schema(_EVAL_SCHEMA).parquet(self.eval_index_path)
-        flags = (ev.join(F.broadcast(cand), "sh")
+        flags = (sh.join(ev, "sh")
                  .groupBy("doc_id", "eval_doc_id")
                  .agg(F.count(F.lit(1)).alias("n_overlap"))
                  .filter(F.col("n_overlap") >= self.min_overlap))

@@ -129,7 +129,6 @@ from dataclasses import dataclass, field
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.utils import AnalysisException
 
 from currency_market_pulse_spark.functions.text import tokens
 from currency_market_pulse_spark.operators import dedup as D
@@ -548,11 +547,13 @@ class StreamingNearDup:
 
     def _read_tail(self, spark, root: str, data_schema: str,
                    exclude_batch: int | None = None) -> DataFrame | None:
-        try:
-            df = spark.read.schema(data_schema + ", batch_id bigint") \
-                .parquet(os.path.join(root, "tail"))
-        except AnalysisException:
+        # a fresh root has no tail yet: reading the missing dir would
+        # fail analysis after Spark logs a stack trace for it
+        tail = os.path.join(root, "tail")
+        if not os.path.isdir(tail):
             return None
+        df = spark.read.schema(data_schema + ", batch_id bigint") \
+            .parquet(tail)
         if exclude_batch is not None:
             # replay safety: never probe rows this batch wrote before
             # a crash (partition filter — pruned, not scanned+dropped)

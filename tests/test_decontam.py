@@ -4,7 +4,7 @@ train docs."""
 
 from __future__ import annotations
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from currency_market_pulse_spark.operators import decontam as C
 
@@ -59,37 +59,33 @@ def test_decontaminate_drops_only_flagged(spark):
     assert set(ids) == {2}
 
 
-def test_bloom_prefilter_equals_exact_and_prunes(spark):
-    """The bloom-prefiltered pair relation is bit-identical to the
-    exact one (no false negatives by construction), the bitmap stays
-    within its m/64-word budget, and on a disjoint train side the
-    prefilter actually prunes (candidate shingles strictly fewer than
-    total train shingles)."""
-    from currency_market_pulse_spark.operators.dedup import _doc_shingles
+def test_join_strategy_is_left_to_the_planner(spark):
+    """Neither join carries a forced broadcast: with auto-broadcast
+    disabled, contamination_pairs and decontaminate plan no
+    BroadcastHashJoin and still return the default conf's rows."""
+    train = _docs(spark, [
+        (1, "clean document with no overlap at all in any window"),
+        (2, f"{_EVAL_PHRASE} plus some extra context"),
+    ])
+    ev = _docs(spark, [(100, _EVAL_PHRASE)])
 
-    leak = "the quick brown fox jumps over the lazy dog today"
-    train = spark.createDataFrame(
-        [(0, leak),
-         (1, "completely unrelated training text with many words here"),
-         (2, "another clean document nothing shared at all with eval")],
-        "doc_id long, text string")
-    ev = spark.createDataFrame(
-        [(100, leak), (101, "held out evaluation prompt squad entry")],
-        "doc_id long, text string")
+    def run():
+        dfs = (C.contamination_pairs(train, ev, n=5),
+               C.decontaminate(train, ev, n=5))
+        rows = [sorted(tuple(r) for r in df.collect()) for df in dfs]
+        # read after the collect: the final adaptive plan
+        plans = [df._jdf.queryExecution().executedPlan().toString()
+                 for df in dfs]
+        return rows[0], rows[1], plans
 
-    exact = sorted(tuple(r) for r in
-                   C.contamination_pairs(train, ev, n=5).collect())
-    bloom = sorted(tuple(r) for r in
-                   C.contamination_pairs_bloom(train, ev, n=5).collect())
-    assert exact == bloom and len(exact) >= 1
-
-    bm = C.eval_shingle_bloom(ev, n=5)
-    assert bm.count() <= C.BLOOM_BITS // 64
-
-    tr_sh = _doc_shingles(train, 5, "doc_id", "text")
-    n_all = tr_sh.count()
-    n_cand = C.bloom_prefilter(
-        tr_sh.select(F.col("doc_id").alias("train_doc_id"), "sh"),
-        bm).count()
-    assert n_cand < n_all          # clean docs' shingles dropped
-    assert n_cand >= 6             # the leaked doc's 5-gram overlap
+    default_pairs, default_kept, _ = run()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        pairs, kept, plans = run()
+    finally:
+        spark.conf.set(key, old)
+    assert all("BroadcastHashJoin" not in p for p in plans)
+    assert (pairs, kept) == (default_pairs, default_kept)
+    assert [p[:2] for p in pairs] == [(2, 100)]

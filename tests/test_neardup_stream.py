@@ -11,7 +11,7 @@ import os
 import pytest
 
 from currency_market_pulse_spark.streaming.neardup_stream import (
-    StreamingNearDup,
+    _BANDS_DATA, StreamingNearDup,
 )
 
 BASE = ("the quick brown fox jumps over the lazy dog while the calm "
@@ -60,6 +60,14 @@ def test_stream_flags_cross_batch_near_dup(spark, tmp_path):
     idx = nd.read_bands(spark)
     assert {r.doc_id for r in idx.select("doc_id").distinct().collect()} \
         == {1, 2, 3}
+
+
+def test_read_tail_of_fresh_root_is_none(tmp_path):
+    """A root with no tail/ yet is answered without asking Spark (no
+    session is needed), so a fresh index logs no missing-path trace."""
+    nd = _handler(tmp_path)
+    assert nd._read_tail(None, str(tmp_path / "missing"),
+                         _BANDS_DATA) is None
 
 
 @pytest.mark.slow
