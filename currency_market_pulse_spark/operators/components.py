@@ -11,9 +11,13 @@ graphs that is tiny (dup clusters are cliques or short chains).
 
 At 100 TB: each iteration's labels are localCheckpoint-ed so the
 logical plan stays O(1)-deep (labels feeds the next round's plan twice,
-so un-truncated lineage doubles per round); for adversarial graphs with
-large diameter, use ``connected_components_star`` — alternating
-large-star/small-star contraction, O(log n) rounds.
+so un-truncated lineage doubles per round).  A graph whose diameter
+outruns the round budget (a long chain) is not returned half-labelled:
+``connected_components`` then hands the pairs to
+``connected_components_star`` — alternating large-star/small-star
+contraction, O(log n) rounds.  Propagation stays the first choice
+because near-dup graphs converge in a few cheap rounds, where star
+contraction pays a checksum job and two joins per round.
 """
 
 from __future__ import annotations
@@ -48,6 +52,9 @@ def connected_components_star(pairs: DataFrame,
     eventually overflows the JVM stack — checkpointing truncates the
     plan to a leaf.  On a cluster, swap for ``checkpoint()`` with a
     reliable checkpoint dir if executor loss must not force a restart.
+
+    Raises ``RuntimeError`` if ``max_iter`` rounds end without a fixed
+    point: the labels would not be components.
     """
     # nodes come from the UNFILTERED pairs: a node appearing only in
     # self-pairs (id_a == id_b) must still emerge as its own singleton
@@ -101,9 +108,11 @@ def connected_components_star(pairs: DataFrame,
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixed point after "
+            f"{max_iter} rounds")
     # fixed point: every non-root points directly at its component min
-    # (min-agg guards against a not-yet-unique parent if max_iter
-    # truncated the loop; at the true fixed point it is a no-op)
     parent = (edges.groupBy(F.col("u").alias("node"))
               .agg(F.min("v").alias("comp")))
     return (nodes.join(parent, "node", "left")
@@ -125,7 +134,12 @@ def connected_components(pairs: DataFrame,
     data that is already unique").  The flag is a pure plan-shape hint:
     min-label propagation is insensitive to duplicate edges (min over
     duplicates == min), so even a wrong hint cannot change the result,
-    only the size of the persisted edge relation."""
+    only the size of the persisted edge relation.
+
+    If labels still change after ``max_iter`` rounds (graph diameter
+    beyond the budget), the result comes from
+    ``connected_components_star`` instead: propagation's labels at
+    that point are not components."""
     # hash-partition the cached edges by the per-round join key: the
     # cached partitioning satisfies the join's distribution requirement,
     # so every iteration shuffles only the (much smaller) labels side —
@@ -166,6 +180,7 @@ def connected_components(pairs: DataFrame,
                       F.least(F.col("node"), F.col("_nmin")).alias("comp")))
     from pyspark.sql import Observation
 
+    n_changed = 1   # the fused round 0 is not checked for convergence
     for it in range(max_iter):
         # candidate label per node: min over neighbors' current labels
         neighbor_min = (
@@ -198,6 +213,8 @@ def connected_components(pairs: DataFrame,
         if n_changed == 0:
             break
     edges.unpersist()
+    if n_changed:
+        return connected_components_star(pairs, src, dst)
     return labels
 
 

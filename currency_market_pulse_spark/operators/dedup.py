@@ -19,8 +19,9 @@ Scale design (the point of each variant):
 - embedding cosine: semantic near-dup; brute pairwise here, LSH-bucketed
   in similarity.py for the scale path.
 
-Every hash is from the portable md5 family (functions/text.py) so the
-DuckDB oracles reproduce results exactly.
+Every hash is from the portable md5 family (functions/text.py) or, for
+ExactSubstr windows, an integer polynomial hash, so the DuckDB oracles
+reproduce results exactly.
 """
 
 from __future__ import annotations
@@ -762,6 +763,40 @@ def chunk_dedup_docs(docs: DataFrame, chunk_tokens: int = 16,
 SPAN_CHARS = 40
 SPAN_MODP = 8
 
+#: Window fingerprint: double 31-bit polynomial hash (both moduli
+#: prime), base 257, packed H1*2^31 + H2 — 62 bits, collision-safe at
+#: corpus scale and oracle-replayable as an exact HUGEINT power sum per
+#: window.
+ROLL_B = 257
+ROLL_M1 = 2_147_483_647   # 2^31 - 1 (prime)
+ROLL_M2 = 2_147_483_629   # prime
+_ROLL_TABLES: dict = {}
+
+
+def _roll_tables(n: int):
+    """(powinv1, powinv2, pow1, pow2) numpy uint64 tables of length
+    >= n — per-executor cached, grown geometrically."""
+    import numpy as np
+
+    t = _ROLL_TABLES.get("t")
+    if t is None or len(t[0]) < n:
+        m = max(n, 4096, 2 * (len(t[0]) if t else 0))
+        binv1 = pow(ROLL_B, -1, ROLL_M1)
+        binv2 = pow(ROLL_B, -1, ROLL_M2)
+        pi1 = np.empty(m, np.uint64)
+        pi2 = np.empty(m, np.uint64)
+        p1 = np.empty(m, np.uint64)
+        p2 = np.empty(m, np.uint64)
+        a1 = a2 = b1 = b2 = 1
+        for j in range(m):
+            pi1[j], pi2[j], p1[j], p2[j] = a1, a2, b1, b2
+            a1 = a1 * binv1 % ROLL_M1
+            a2 = a2 * binv2 % ROLL_M2
+            b1 = b1 * ROLL_B % ROLL_M1
+            b2 = b2 * ROLL_B % ROLL_M2
+        _ROLL_TABLES["t"] = t = (pi1, pi2, p1, p2)
+    return t
+
 
 def _substring_window_owners(docs: DataFrame,
                              span_chars: int = SPAN_CHARS,
@@ -769,54 +804,88 @@ def _substring_window_owners(docs: DataFrame,
                              id_col: str = "doc_id",
                              text_col: str = "text") -> DataFrame:
     """Shared stage of the ExactSubstr family: the content-selected
-    window relation joined to its corpus-wide owner statistics —
-    one row per selected window with (id, pos, _h, _k, _c, _owner).
+    window relation with its corpus-wide owner statistics — one row
+    per selected window with (id, pos, fp, _k, _c, _owner).
 
-    Repartitions the narrow PRE-EXPLODE corpus to full parallelism: a
-    text corpus is small on disk (compressed parquet — sf0.1's 5k docs
-    are ONE input split) but the per-row work (~len md5 evaluations per
-    doc) is heavy, so scan-aligned partitioning strands 31 of 32 cores
-    — the same input-split starvation the dedup family measured and
-    fixed (queries/dedup.py _corpus; here: sf0.1 wall 34.5s -> 7.3s
-    cold / 1.7s warm, sf1 96s -> ~6s, and AQE then reuses the window
-    exchange across the aggregate and the join-back, so windows
-    compute ONCE).  The shuffle moves corpus rows, not windows."""
-    ln = F.length(F.col(text_col))
+    Window fingerprints are double 31-bit polynomial hashes computed
+    VECTORIZED per document (numpy): t_j = c_j * B^-j mod M cumsums to
+    prefix sums, a window hash is (S[i+w] - S[i]) * B^(i+w-1) mod M —
+    ~5 vector ops per document, O(1) work per position.  The 0-mod-p
+    selection runs inside the kernel, so only len/modp rows per doc
+    leave the Python worker.  Per-doc length bound n < 2^32 (prefix
+    cumsum in uint64).
+
+    The narrow PRE-KERNEL corpus is repartitioned to full parallelism:
+    a text corpus is small on disk (sf0.1's 5k docs are ONE input
+    split) but the per-row work is heavy, so scan-aligned partitioning
+    strands all but one core.  The shuffle moves corpus rows, not
+    windows.
+
+    Owner stats are a WINDOW over fp, not groupBy + join-back: the
+    join form referenced the window relation twice and ran the whole
+    MapInPandas kernel once per join side (plan-verified: two
+    MapInPandas nodes in
+    plans/r17/text_substring_removal_rolling_after.txt).  One window
+    pass computes the identical per-fp (count, min); the kernel and
+    the Arrow transfer run exactly once.  The owner key packs
+    (id, pos) into one BIGINT (id * 1e9 + pos; bound pos < 1e9
+    chars/doc)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    span, p = span_chars, modp
+    out_schema = T.StructType([
+        T.StructField(id_col, T.LongType()),
+        T.StructField("pos", T.LongType()),
+        T.StructField("fp", T.LongType()),
+    ])
+
+    def kernel(batches):
+        for pdf in batches:
+            ids, poss, fps = [], [], []
+            for i, text in zip(pdf["_id"], pdf["_txt"]):
+                if text is None or len(text) < span:
+                    continue
+                # r17 (guide §4.2 vectorize inside the kernel): the
+                # codepoint array comes from one UTF-32-LE encode +
+                # zero-copy frombuffer instead of a per-character
+                # Python loop (np.fromiter(map(ord, ...))) — identical
+                # values by definition (UTF-32 code units ARE the
+                # codepoints; surrogatepass keeps even lone surrogates
+                # at their ord() value), measured ~20x faster per doc
+                # on the conversion step.
+                c = np.frombuffer(
+                    text.encode("utf-32-le", "surrogatepass"),
+                    dtype="<u4").astype(np.uint64)
+                n = len(c)
+                w = n - span + 1
+                pi1, pi2, p1, p2 = _roll_tables(n)
+                t1 = (c * pi1[:n]) % ROLL_M1
+                t2 = (c * pi2[:n]) % ROLL_M2
+                s1 = np.concatenate(([np.uint64(0)], np.cumsum(t1)))
+                s2 = np.concatenate(([np.uint64(0)], np.cumsum(t2)))
+                h1 = ((s1[span:] - s1[:-span]) % ROLL_M1
+                      * p1[span - 1:span - 1 + w]) % ROLL_M1
+                h2 = ((s2[span:] - s2[:-span]) % ROLL_M2
+                      * p2[span - 1:span - 1 + w]) % ROLL_M2
+                fp = h1 * np.uint64(1 << 31) + h2
+                sel = np.nonzero(fp % np.uint64(p) == 0)[0]
+                ids.extend([i] * len(sel))
+                poss.extend((sel + 1).tolist())
+                fps.extend(fp[sel].astype(np.int64).tolist())
+            yield pd.DataFrame({id_col: ids, "pos": poss, "fp": fps})
+
     par = docs.sparkSession.sparkContext.defaultParallelism
-    wins = (docs
-            .filter(F.col(text_col).isNotNull() & (ln >= span_chars))
-            .repartition(par, F.col(id_col))
-            .select(
-                F.col(id_col),
-                F.explode(F.sequence(
-                    F.lit(1), (ln - span_chars + 1).cast("long")))
-                 .alias("pos"),
-                F.col(text_col))
-            .select(
-                F.col(id_col), "pos",
-                F.md5(F.substring(F.col(text_col), F.col("pos"),
-                                  span_chars)).alias("_h"))
-            .withColumn("_hv", F.conv(F.substring("_h", 1, 15), 16, 10)
-                        .cast("long"))
-            .filter(F.pmod(F.col("_hv"), F.lit(modp)) == 0)
-            .drop("_hv"))
-    key = (F.col(id_col).cast("long") * F.lit(1_000_000_000)
-           + F.col("pos")).alias("_k")
-    wins = wins.select(id_col, "pos", "_h", key)
-    # owner stats via a WINDOW over _h, not groupBy + join-back (r18,
-    # guide §2.4): the join form referenced ``wins`` twice, and the
-    # expensive subtree ABOVE the reused repartition exchange — the
-    # position explode and the ~len md5 evaluations per doc — executed
-    # once per side (plan-verified: two Generate+md5 chains in
-    # plans/r17/text_substring_dedup_after.txt).  The window computes
-    # the identical per-_h (count, min) on ONE pass: one exchange on
-    # _h, no join, windows hashed exactly once.  Rows are len/modp of
-    # the corpus (mod-p filtered), so the window sort is over the
-    # sketch, not the text.
-    wh = Window.partitionBy("_h")
-    return (wins
-            .withColumn("_c", F.count(F.lit(1)).over(wh))
-            .withColumn("_owner", F.min("_k").over(wh)))
+    wins = (docs.select(F.col(id_col).alias("_id"),
+                        F.col(text_col).alias("_txt"))
+            .repartition(par, F.col("_id"))
+            .mapInPandas(kernel, out_schema))
+    key = (F.col(id_col) * F.lit(1_000_000_000) + F.col("pos")).alias("_k")
+    wfp = Window.partitionBy("fp")
+    return (wins.select(id_col, "pos", "fp", key)
+            .withColumn("_c", F.count(F.lit(1)).over(wfp))
+            .withColumn("_owner", F.min("_k").over(wfp)))
 
 
 def substring_span_stats(docs: DataFrame, span_chars: int = SPAN_CHARS,
@@ -827,19 +896,19 @@ def substring_span_stats(docs: DataFrame, span_chars: int = SPAN_CHARS,
     "Deduplicating Training Data Makes Language Models Better" —
     ExactSubstr), re-expressed for a distributed engine: the paper's
     single-node suffix array over the concatenated corpus cannot shard,
-    so the Spark-first form hashes EVERY span_chars-wide character
-    window and keeps the content-selected 1/modp of them
-    (hex_hash64(window) % modp == 0 — "0 mod p" sketching, the same
-    family as winnowing, Schleimer et al. 2003 MOSS).  Content-defined
-    selection is SHIFT-INVARIANT — both copies of a duplicated run
-    select identical run-relative windows regardless of where the run
-    sits in each document — which fixed-stride sampling is not (two
-    copies aligned differently mod stride sample disjoint offsets and
-    NEVER collide; the first cut of this operator had exactly that bug
-    and a planted-run test caught it).  A shared verbatim run of R
-    chars is missed only if none of its R - span_chars + 1 windows
-    self-selects: P(miss) = (1 - 1/modp)^(R-39), ~3e-4 for R = 100 —
-    and deterministically reproduced by the oracle either way.
+    so the Spark-first form fingerprints EVERY span_chars-wide
+    character window and keeps the content-selected 1/modp of them
+    (fp % modp == 0 — "0 mod p" sketching, the same family as
+    winnowing, Schleimer et al. 2003 MOSS).  Content-defined selection
+    is SHIFT-INVARIANT — both copies of a duplicated run select
+    identical run-relative windows regardless of where the run sits in
+    each document — which fixed-stride sampling is not (two copies
+    aligned differently mod stride sample disjoint offsets and NEVER
+    collide; the first cut of this operator had exactly that bug and a
+    planted-run test caught it).  A shared verbatim run of R chars is
+    missed only if none of its R - span_chars + 1 windows self-selects:
+    P(miss) = (1 - 1/modp)^(R-39), ~3e-4 for R = 100 — and
+    deterministically reproduced by the oracle either way.
 
     Output, per doc with >= 1 selected window: fingerprint count,
     fingerprints whose exact 40-char text occurs >= 2 times corpus-wide
@@ -847,19 +916,10 @@ def substring_span_stats(docs: DataFrame, span_chars: int = SPAN_CHARS,
     occurrences among those (first occurrence ordered by (doc_id, pos)
     owns, the chunk_occurrences rule), and the duplicated fraction.
 
-    Scale shape: the explode enumerates ~len positions per doc but the
-    mod-p filter runs BEFORE the shuffle, so shuffle volume is len/modp
-    rows of (md5, packed-key); then one hash aggregate on the window
-    hash (partial agg absorbs hot boilerplate windows map-side), one
-    join back on the same key, one per-doc aggregate.  No pairwise join
-    anywhere — linear in corpus size, unlike the O(sum df^2) shingle
-    self-join.  CPU is O(span_chars) md5 work per position; a Rabin
-    rolling hash would make it O(1) but Catalyst has no rolling-hash
-    builtin — if scan CPU ever dominates, a mapInPandas rolling-hash
-    twin can swap in behind the same output contract.  The owner key
-    packs (doc_id, pos) into one BIGINT (doc_id * 1e9 + pos; documented
-    bound pos < 1e9 chars/doc).
-    """
+    Scale shape (_substring_window_owners): one pass of the rolling-
+    hash kernel, one window exchange on fp, one per-doc aggregate.  No
+    pairwise join anywhere — linear in corpus size, unlike the
+    O(sum df^2) shingle self-join."""
     joined = _substring_window_owners(docs, span_chars, modp,
                                       id_col, text_col)
     dup = F.col("_c") >= 2
@@ -901,21 +961,8 @@ def substring_removal_plan(docs: DataFrame,
     Output (docs with >= 1 removable window only): n_removable_windows,
     n_spans, removed_chars, kept_chars, removed_frac.
     """
-    joined = _substring_window_owners(docs, span_chars, modp,
-                                      id_col, text_col)
-    return _removal_plan_from_windows(joined, docs, span_chars,
-                                      id_col, text_col)
-
-
-def _removal_plan_from_windows(joined: DataFrame, docs: DataFrame,
-                               span_chars: int,
-                               id_col: str = "doc_id",
-                               text_col: str = "text") -> DataFrame:
-    """The shared island-merge stage of the removal planners: takes
-    any (id, pos, _k, _c, _owner) window-owner relation (md5 or
-    rolling fingerprints — the merge is hash-agnostic) and emits the
-    per-doc removal plan."""
-    rem = (joined
+    rem = (_substring_window_owners(docs, span_chars, modp,
+                                    id_col, text_col)
            .filter((F.col("_c") >= 2) & (F.col("_k") != F.col("_owner")))
            .select(id_col, "pos",
                    (F.col("pos") + F.lit(span_chars)).alias("_end")))
@@ -952,165 +999,3 @@ def _removal_plan_from_windows(joined: DataFrame, docs: DataFrame,
                     # identical in every engine
                     (F.expr("removed_chars * 1000000L DIV _len")
                      / F.lit(1000000.0)).alias("removed_frac")))
-
-
-#: Rolling-hash twin of the substring sketch: double 31-bit polynomial
-#: moduli (both prime), base 257, fingerprint packed H1*2^31 + H2 —
-#: 62 bits, collision-safe at corpus scale and oracle-replayable as an
-#: exact HUGEINT power sum per window.
-ROLL_B = 257
-ROLL_M1 = 2_147_483_647   # 2^31 - 1 (prime)
-ROLL_M2 = 2_147_483_629   # prime
-_ROLL_TABLES: dict = {}
-
-
-def _roll_tables(n: int):
-    """(powinv1, powinv2, pow1, pow2) numpy uint64 tables of length
-    >= n — per-executor cached, grown geometrically."""
-    import numpy as np
-
-    t = _ROLL_TABLES.get("t")
-    if t is None or len(t[0]) < n:
-        m = max(n, 4096, 2 * (len(t[0]) if t else 0))
-        binv1 = pow(ROLL_B, -1, ROLL_M1)
-        binv2 = pow(ROLL_B, -1, ROLL_M2)
-        pi1 = np.empty(m, np.uint64)
-        pi2 = np.empty(m, np.uint64)
-        p1 = np.empty(m, np.uint64)
-        p2 = np.empty(m, np.uint64)
-        a1 = a2 = b1 = b2 = 1
-        for j in range(m):
-            pi1[j], pi2[j], p1[j], p2[j] = a1, a2, b1, b2
-            a1 = a1 * binv1 % ROLL_M1
-            a2 = a2 * binv2 % ROLL_M2
-            b1 = b1 * ROLL_B % ROLL_M1
-            b2 = b2 * ROLL_B % ROLL_M2
-        _ROLL_TABLES["t"] = t = (pi1, pi2, p1, p2)
-    return t
-
-
-def substring_span_stats_rolling(docs: DataFrame,
-                                 span_chars: int = SPAN_CHARS,
-                                 modp: int = SPAN_MODP,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text",
-                                 _return_owners: bool = False) -> DataFrame:
-    """Rolling-hash twin of ``substring_span_stats`` — the O(1)-per-
-    position upgrade that operator's docstring names for when the
-    O(span_chars) md5 per window dominates the scan (it does: the md5
-    variant is CPU-bound and the sf10 table's worst row at 113x).
-
-    Window fingerprints are double 31-bit polynomial hashes computed
-    VECTORIZED per document (numpy): t_j = c_j * B^-j mod M cumsums to
-    prefix sums, a window hash is (S[i+w] - S[i]) * B^(i+w-1) mod M —
-    ~5 vector ops per document instead of span_chars md5 rounds per
-    position.  Content-defined 0-mod-p selection, owner rule and the
-    per-doc stats are IDENTICAL to the md5 variant (the two differ
-    only in which 1/modp of windows each sketch selects — both are
-    shift-invariant, and the planted-run tests hold for both).
-
-    Same scale shape: mod-p filter inside the kernel (shuffle volume
-    len/modp), one fingerprint aggregate, one join back, one per-doc
-    aggregate.  Per-doc length bound n < 2^32 (prefix cumsum in
-    uint64)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    span, p = span_chars, modp
-    out_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("pos", T.LongType()),
-        T.StructField("fp", T.LongType()),
-    ])
-
-    def kernel(batches):
-        for pdf in batches:
-            ids, poss, fps = [], [], []
-            for i, text in zip(pdf["_id"], pdf["_txt"]):
-                if text is None or len(text) < span:
-                    continue
-                # r17 (guide §4.2 vectorize inside the kernel): the
-                # codepoint array comes from one UTF-32-LE encode +
-                # zero-copy frombuffer instead of a per-character
-                # Python loop (np.fromiter(map(ord, ...))) — identical
-                # values by definition (UTF-32 code units ARE the
-                # codepoints; surrogatepass keeps even lone surrogates
-                # at their ord() value), measured ~20x faster per doc
-                # on the conversion step.
-                c = np.frombuffer(
-                    text.encode("utf-32-le", "surrogatepass"),
-                    dtype="<u4").astype(np.uint64)
-                n = len(c)
-                w = n - span + 1
-                pi1, pi2, p1, p2 = _roll_tables(n)
-                t1 = (c * pi1[:n]) % ROLL_M1
-                t2 = (c * pi2[:n]) % ROLL_M2
-                s1 = np.concatenate(([np.uint64(0)], np.cumsum(t1)))
-                s2 = np.concatenate(([np.uint64(0)], np.cumsum(t2)))
-                h1 = ((s1[span:] - s1[:-span]) % ROLL_M1
-                      * p1[span - 1:span - 1 + w]) % ROLL_M1
-                h2 = ((s2[span:] - s2[:-span]) % ROLL_M2
-                      * p2[span - 1:span - 1 + w]) % ROLL_M2
-                fp = h1 * np.uint64(1 << 31) + h2
-                sel = np.nonzero(fp % np.uint64(p) == 0)[0]
-                ids.extend([i] * len(sel))
-                poss.extend((sel + 1).tolist())
-                fps.extend(fp[sel].astype(np.int64).tolist())
-            yield pd.DataFrame({"doc_id": ids, "pos": poss, "fp": fps})
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    wins = (docs.select(F.col(id_col).alias("_id"),
-                        F.col(text_col).alias("_txt"))
-            .repartition(par, F.col("_id"))
-            .mapInPandas(kernel, out_schema))
-    key = (F.col("doc_id") * F.lit(1_000_000_000) + F.col("pos")).alias("_k")
-    wins = wins.select("doc_id", "pos", "fp", key)
-    # window-over-fp owner stats, same rationale as the md5 twin (r18):
-    # the groupBy+join form ran the WHOLE MapInPandas kernel once per
-    # join side (plan-verified: two MapInPandas nodes in
-    # plans/r17/text_substring_removal_rolling_after.txt) — every doc
-    # crossed the Python boundary and was rolling-hashed twice.  One
-    # window pass computes the identical (_c, _owner); the kernel and
-    # the Arrow transfer run exactly once.
-    wfp = Window.partitionBy("fp")
-    joined = (wins
-              .withColumn("_c", F.count(F.lit(1)).over(wfp))
-              .withColumn("_owner", F.min("_k").over(wfp)))
-    if _return_owners:
-        return joined
-    dup = F.col("_c") >= 2
-    return (joined.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_fingerprints"),
-                 F.sum(dup.cast("long")).alias("dup_fingerprints"),
-                 F.sum((dup & (F.col("_k") != F.col("_owner")))
-                       .cast("long")).alias("removable_fingerprints"))
-            .withColumn("dup_frac", F.round(
-                F.col("dup_fingerprints") / F.col("n_fingerprints"), 6))
-            .select(F.col("doc_id").alias(id_col), "n_fingerprints",
-                    "dup_fingerprints", "removable_fingerprints",
-                    "dup_frac"))
-
-
-def substring_removal_plan_rolling(docs: DataFrame,
-                                   span_chars: int = SPAN_CHARS,
-                                   modp: int = SPAN_MODP,
-                                   id_col: str = "doc_id",
-                                   text_col: str = "text") -> DataFrame:
-    """Rolling-hash twin of ``substring_removal_plan``: the same
-    island-merge removal plan over the O(1)-per-position polynomial
-    fingerprints — the scale path when the md5 detect stage dominates
-    (measured: md5 removal 94.6s at sf10, detect-stage-bound; the
-    rolling detect runs 21.7s there).  The two twins select different
-    (but equally shift-invariant) 1/modp window subsets, so per-doc
-    span counts may differ slightly; the removal SEMANTICS and the
-    oracle discipline are identical."""
-    joined = substring_span_stats_rolling(docs, span_chars, modp,
-                                          id_col, text_col,
-                                          _return_owners=True)
-    # the rolling kernel emits its id column as literal "doc_id";
-    # restore the caller's id_col so both twins honor it identically
-    if id_col != "doc_id":
-        joined = joined.withColumnRenamed("doc_id", id_col)
-    return _removal_plan_from_windows(joined, docs, span_chars,
-                                      id_col, text_col)

@@ -491,7 +491,8 @@ FROM reach GROUP BY node ORDER BY doc_id
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the 3-gram-jaccard
     pair graph via iterative min-label propagation
-    (operators/components.py).  The oracle computes the same transitive
+    (operators/components.py; star contraction takes over if
+    propagation has not converged).  The oracle computes the same transitive
     closure with a recursive CTE — differential proof that the
     distributed iteration converges to the exact components."""
     pairs = _shared_jaccard_pairs(spark, sf_dir)
@@ -506,23 +507,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (connected_components(pairs, pairs_canonical=True)
             .select(F.col("node").alias("doc_id"),
                     F.col("comp").alias("component_id")))
-
-
-@extra_query("dedup_components_star", oracle=_COMPONENTS_ORACLE)
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Library-tier twin of dedup_components through the alternating
-    large-star/small-star contraction (O(log n) rounds — the variant
-    for adversarial-diameter graphs at corpus scale).  Shares the
-    recursive-CTE oracle, so BOTH component algorithms stay
-    differentially proven equal every round (VERDICT r2 item 3)."""
-    pairs = _shared_jaccard_pairs(spark, sf_dir)
-    from currency_market_pulse_spark.operators.components import (
-        connected_components_star,
-    )
-    return (connected_components_star(pairs)
-            .select(F.col("node").alias("doc_id"),
-                    F.col("comp").alias("component_id"))
-            .orderBy("doc_id"))
 
 
 _LSH_COMPONENTS_ORACLE = f"""
@@ -1047,164 +1031,6 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("recall")))
 
 
-_SUBSTR_DEDUP_ORACLE = f"""
-WITH wins AS MATERIALIZED (
-  SELECT doc_id, pos, h,
-         doc_id * 1000000000 + pos AS k
-  FROM (SELECT doc_id, pos,
-               md5(substr(text, CAST(pos AS INT), {D.SPAN_CHARS})) AS h
-        FROM (SELECT doc_id, text,
-                     unnest(range(1, length(text) - {D.SPAN_CHARS} + 2))
-                       AS pos
-              FROM documents
-              WHERE text IS NOT NULL
-                AND length(text) >= {D.SPAN_CHARS}) p) s
-  WHERE CAST(('0x' || substr(h, 1, 15)) AS BIGINT) % {D.SPAN_MODP} = 0),
-grp AS MATERIALIZED (
-  SELECT h, count(*) AS c, min(k) AS owner FROM wins GROUP BY h)
-SELECT w.doc_id,
-       CAST(count(*) AS BIGINT) AS n_fingerprints,
-       CAST(sum(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS dup_fingerprints,
-       CAST(sum(CASE WHEN c >= 2 AND k <> owner THEN 1 ELSE 0 END)
-            AS BIGINT) AS removable_fingerprints,
-       round(sum(CASE WHEN c >= 2 THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS dup_frac
-FROM wins w JOIN grp USING (h)
-GROUP BY w.doc_id
-"""
-
-
-@query("text_substring_dedup", oracle=_SUBSTR_DEDUP_ORACLE)
-def text_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicated-substring spans (operators/dedup.py
-    substring_span_stats — Lee et al. 2021 ExactSubstr, distributed):
-    every SPAN_CHARS-wide character window hashed, the content-selected
-    1/SPAN_MODP kept (shift-invariant, unlike stride sampling — see the
-    operator docstring for the alignment bug that rules out strides),
-    grouped corpus-wide.  Finer-grained than token-chunk dedup
-    (text_chunk_dedup): windows cross chunk boundaries, so a duplicated
-    run straddling two chunks — invisible to the chunk operator — still
-    collides here.  Per doc: selected fingerprints, duplicated ones,
-    removable (non-first) occurrences, duplicated fraction.  Linear in
-    corpus size; no pairwise join."""
-    return D.substring_span_stats(load_table(spark, sf_dir, "documents"))
-
-
-_SUBSTR_REMOVAL_ORACLE = f"""
-WITH wins AS MATERIALIZED (
-  SELECT doc_id, pos, h,
-         doc_id * 1000000000 + pos AS k
-  FROM (SELECT doc_id, pos,
-               md5(substr(text, CAST(pos AS INT), {D.SPAN_CHARS})) AS h
-        FROM (SELECT doc_id, text,
-                     unnest(range(1, length(text) - {D.SPAN_CHARS} + 2))
-                       AS pos
-              FROM documents
-              WHERE text IS NOT NULL
-                AND length(text) >= {D.SPAN_CHARS}) p) s
-  WHERE CAST(('0x' || substr(h, 1, 15)) AS BIGINT) % {D.SPAN_MODP} = 0),
-grp AS MATERIALIZED (
-  SELECT h, count(*) AS c, min(k) AS owner FROM wins GROUP BY h),
-rem AS (
-  SELECT w.doc_id, w.pos, w.pos + {D.SPAN_CHARS} AS e
-  FROM wins w JOIN grp USING (h)
-  WHERE c >= 2 AND k <> owner),
-isl AS (
-  SELECT doc_id, pos, e,
-         CASE WHEN max(e) OVER (PARTITION BY doc_id ORDER BY pos
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                  IS NULL
-              OR pos > max(e) OVER (PARTITION BY doc_id ORDER BY pos
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              THEN 1 ELSE 0 END AS ni
-  FROM rem),
-isl2 AS (
-  SELECT doc_id, pos, e,
-         sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isle
-  FROM isl),
-spans AS (
-  SELECT doc_id, isle, count(*) AS nw, min(pos) AS s, max(e) AS e2
-  FROM isl2 GROUP BY doc_id, isle)
-SELECT sp.doc_id,
-       CAST(sum(nw) AS BIGINT) AS n_removable_windows,
-       CAST(count(*) AS BIGINT) AS n_spans,
-       CAST(sum(e2 - s) AS BIGINT) AS removed_chars,
-       CAST(any_value(length(d.text)) - sum(e2 - s) AS BIGINT)
-         AS kept_chars,
-       -- 6-decimal FLOOR via integer division: replays the kernel's
-       -- tie-free DIV (round() halves split Spark/DuckDB, r10)
-       (CAST(sum(e2 - s) AS BIGINT) * 1000000
-          // CAST(any_value(length(d.text)) AS BIGINT)) / 1000000.0
-         AS removed_frac
-FROM spans sp JOIN documents d ON sp.doc_id = d.doc_id
-GROUP BY sp.doc_id
-"""
-
-
-@extra_query("text_substring_removal", oracle=_SUBSTR_REMOVAL_ORACLE)
-def text_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The APPLY stage of ExactSubstr (operators/dedup.py
-    substring_removal_plan — Lee et al. 2021 §3.1: drop the repeated
-    SPAN, not the document): removable windows merged gaps-and-islands
-    style into maximal per-doc [start, end) cut intervals; per doc the
-    span count, removed/kept chars and removed fraction.  Completes the
-    detect (text_substring_dedup) -> plan (this) -> splice chain; the
-    island sort runs only over the removable-window relation, so the
-    added cost on top of the detect stage is negligible at any SF."""
-    return D.substring_removal_plan(load_table(spark, sf_dir, "documents"))
-
-
-_XSOURCE_ORACLE = rf"""
-WITH toksnn AS MATERIALIZED (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents WHERE text IS NOT NULL),
-chunks AS MATERIALIZED (
-  SELECT source,
-         md5(array_to_string(t[idx * {CHUNK_TOKENS} + 1 :
-                               idx * {CHUNK_TOKENS} + {CHUNK_TOKENS}],
-                             ' ')) AS h
-  FROM (SELECT source, t,
-               unnest(range(0, CAST(ceil(len(t) / {CHUNK_TOKENS}.0)
-                                    AS BIGINT))) AS idx
-        FROM toksnn WHERE len(t) > 0) s),
-ds AS MATERIALIZED (SELECT DISTINCT h, source FROM chunks),
-pairs AS (
-  SELECT a.source AS src_a, b.source AS src_b
-  FROM ds a JOIN ds b ON a.h = b.h AND a.source < b.source)
-SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS n_shared_chunks
-FROM pairs GROUP BY src_a, src_b
-"""
-
-
-@extra_query("dedup_cross_source", oracle=_XSOURCE_ORACLE)
-def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source passage-contamination matrix: for every source
-    pair, how many distinct CHUNK_TOKENS-token passages appear verbatim
-    in both — the provenance card (mirror sites, syndication, shared
-    boilerplate) that decides which SOURCE to drop or down-weight,
-    rather than which documents.  Whole-document cross-source overlap
-    is empty on this corpus (exact dup groups stay within one source),
-    which is exactly why real pipelines run this at passage granularity.
-
-    Shape: the chunk relation (one explode), distinct (chunk-hash,
-    source) projection, self-join on the hash.  Per-hash fanout is
-    bounded by the SOURCE count (handfuls, not data-sized), so unlike
-    a document self-join this stays linear — the df-bound argument of
-    the capped shingle join with the cap structural, not configured."""
-    docs = load_table(spark, sf_dir, "documents")
-    occ = D.chunk_occurrences(docs, chunk_tokens=CHUNK_TOKENS)
-    ds = (occ.join(docs.select("doc_id", "source"), "doc_id")
-          .select(F.md5("chunk").alias("_h"), "source").distinct())
-    a = ds.select(F.col("_h"), F.col("source").alias("src_a"))
-    b = ds.select(F.col("_h"), F.col("source").alias("src_b"))
-    return (a.join(b, "_h")
-            .filter(F.col("src_a") < F.col("src_b"))
-            .groupBy("src_a", "src_b")
-            .agg(F.count(F.lit(1)).alias("n_shared_chunks")))
-
-
 def _modpow_expr(base: int, mod: int, var: str = "t",
                  bits: int = 24) -> str:
     """SQL for base^var mod ``mod`` by binary expansion of ``var``
@@ -1227,7 +1053,7 @@ def _modpow_expr(base: int, mod: int, var: str = "t",
 
 def _rolling_wins_cte(span: int = D.SPAN_CHARS,
                       modp: int = D.SPAN_MODP) -> str:
-    """The shared ``wins`` relation of both rolling oracles — every
+    """The shared ``wins`` relation of both ExactSubstr oracles — every
     selected window's packed double polynomial fingerprint — in O(1)
     work per character, mirroring the KERNEL's prefix-sum algebra
     instead of re-summing all ``span`` terms per position.
@@ -1302,11 +1128,11 @@ wins AS MATERIALIZED (
 
 def _substr_rolling_oracle(span: int = D.SPAN_CHARS,
                            modp: int = D.SPAN_MODP) -> str:
-    """Replay of substring_span_stats_rolling: every window's double
+    """Replay of substring_span_stats: every window's double
     polynomial fingerprint via the modular prefix-sum identity
     (_rolling_wins_cte — the kernel's own algebra), packed
-    fingerprint, 0-mod-p selection, same owner/stats stages as the
-    md5 oracle."""
+    fingerprint, 0-mod-p selection, then the per-fingerprint owner
+    stats and the per-doc aggregate."""
     return f"""
 WITH {_rolling_wins_cte(span, modp)},
 grp AS MATERIALIZED (
@@ -1324,24 +1150,29 @@ GROUP BY w.doc_id
 """
 
 
-@extra_query("text_substring_dedup_rolling", oracle=_substr_rolling_oracle())
-def text_substring_dedup_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash twin of the registered text_substring_dedup
-    (operators/dedup.py substring_span_stats_rolling): O(1) hash work
-    per window position instead of an md5 over every 40-char window —
-    the upgrade the md5 operator's docstring names for when scan CPU
-    dominates (it is the sf10 table's worst row).  Same selection
-    density, owner rule and stats; the oracle recomputes every window's
-    double polynomial hash as an exact HUGEINT power sum."""
-    return D.substring_span_stats_rolling(
-        load_table(spark, sf_dir, "documents"))
+@query("text_substring_dedup", oracle=_substr_rolling_oracle())
+def text_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact duplicated-substring spans (operators/dedup.py
+    substring_span_stats — Lee et al. 2021 ExactSubstr, distributed):
+    every SPAN_CHARS-wide character window fingerprinted by the
+    rolling polynomial hash, the content-selected 1/SPAN_MODP kept
+    (shift-invariant, unlike stride sampling — see the operator
+    docstring for the alignment bug that rules out strides), grouped
+    corpus-wide.  Finer-grained than token-chunk dedup
+    (text_chunk_dedup): windows cross chunk boundaries, so a duplicated
+    run straddling two chunks — invisible to the chunk operator — still
+    collides here.  Per doc: selected fingerprints, duplicated ones,
+    removable (non-first) occurrences, duplicated fraction.  Linear in
+    corpus size; no pairwise join.  The oracle recomputes every
+    window's fingerprint as an exact HUGEINT power sum."""
+    return D.substring_span_stats(load_table(spark, sf_dir, "documents"))
 
 
 def _substr_removal_rolling_oracle(span: int = D.SPAN_CHARS,
                                    modp: int = D.SPAN_MODP) -> str:
-    """Rolling-fingerprint wins/grp replay (the shared
-    _rolling_wins_cte modular prefix sums) feeding the same
-    island-merge SQL as the md5 removal oracle."""
+    """Replay of substring_removal_plan: the shared _rolling_wins_cte
+    fingerprints and owner stats, then the gaps-and-islands merge of
+    the removable windows in SQL window functions."""
     return f"""
 WITH {_rolling_wins_cte(span, modp)},
 grp AS MATERIALIZED (
@@ -1387,16 +1218,67 @@ GROUP BY sp.doc_id
        oracle=_substr_removal_rolling_oracle())
 def text_substring_removal_rolling(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    """Rolling-hash twin of text_substring_removal (operators/dedup.py
-    substring_removal_plan_rolling): the same gaps-and-islands removal
-    plan over O(1)-per-position polynomial fingerprints — the scale
-    path when the md5 detect stage dominates (md5 removal measured
-    94.6s at sf10, detect-bound; rolling detect runs 21.7s there).
-    Oracle replays every window as an exact HUGEINT power sum, then
-    the identical island-merge SQL as the md5 removal oracle.
-    REGISTERED since r8 (VERDICT r7 directive 8): the ExactSubstr
-    APPLY stage — drop the repeated span, not the document — is a
-    flagship LLM-pipeline capability, and this twin is its scale
-    path."""
-    return D.substring_removal_plan_rolling(
-        load_table(spark, sf_dir, "documents"))
+    """The APPLY stage of ExactSubstr (operators/dedup.py
+    substring_removal_plan — Lee et al. 2021 §3.1: drop the repeated
+    SPAN, not the document): removable windows merged gaps-and-islands
+    style into maximal per-doc [start, end) cut intervals; per doc the
+    span count, removed/kept chars and removed fraction.  Completes the
+    detect (text_substring_dedup) -> plan (this) -> splice chain.  The
+    oracle replays every window as an exact HUGEINT power sum, then
+    the island merge in SQL.
+
+    The key keeps its ``_rolling`` suffix only because the correctness
+    gate and the committed CORRECTNESS_r*.json records key on
+    registered names; the md5 kernel it once stood beside is gone (it
+    lost to the rolling hash at every scale above 500 docs), so there
+    is one ExactSubstr kernel."""
+    return D.substring_removal_plan(load_table(spark, sf_dir, "documents"))
+
+
+_XSOURCE_ORACLE = rf"""
+WITH toksnn AS MATERIALIZED (
+  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
+  FROM documents WHERE text IS NOT NULL),
+chunks AS MATERIALIZED (
+  SELECT source,
+         md5(array_to_string(t[idx * {CHUNK_TOKENS} + 1 :
+                               idx * {CHUNK_TOKENS} + {CHUNK_TOKENS}],
+                             ' ')) AS h
+  FROM (SELECT source, t,
+               unnest(range(0, CAST(ceil(len(t) / {CHUNK_TOKENS}.0)
+                                    AS BIGINT))) AS idx
+        FROM toksnn WHERE len(t) > 0) s),
+ds AS MATERIALIZED (SELECT DISTINCT h, source FROM chunks),
+pairs AS (
+  SELECT a.source AS src_a, b.source AS src_b
+  FROM ds a JOIN ds b ON a.h = b.h AND a.source < b.source)
+SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS n_shared_chunks
+FROM pairs GROUP BY src_a, src_b
+"""
+
+
+@extra_query("dedup_cross_source", oracle=_XSOURCE_ORACLE)
+def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-source passage-contamination matrix: for every source
+    pair, how many distinct CHUNK_TOKENS-token passages appear verbatim
+    in both — the provenance card (mirror sites, syndication, shared
+    boilerplate) that decides which SOURCE to drop or down-weight,
+    rather than which documents.  Whole-document cross-source overlap
+    is empty on this corpus (exact dup groups stay within one source),
+    which is exactly why real pipelines run this at passage granularity.
+
+    Shape: the chunk relation (one explode), distinct (chunk-hash,
+    source) projection, self-join on the hash.  Per-hash fanout is
+    bounded by the SOURCE count (handfuls, not data-sized), so unlike
+    a document self-join this stays linear — the df-bound argument of
+    the capped shingle join with the cap structural, not configured."""
+    docs = load_table(spark, sf_dir, "documents")
+    occ = D.chunk_occurrences(docs, chunk_tokens=CHUNK_TOKENS)
+    ds = (occ.join(docs.select("doc_id", "source"), "doc_id")
+          .select(F.md5("chunk").alias("_h"), "source").distinct())
+    a = ds.select(F.col("_h"), F.col("source").alias("src_a"))
+    b = ds.select(F.col("_h"), F.col("source").alias("src_b"))
+    return (a.join(b, "_h")
+            .filter(F.col("src_a") < F.col("src_b"))
+            .groupBy("src_a", "src_b")
+            .agg(F.count(F.lit(1)).alias("n_shared_chunks")))

@@ -213,33 +213,3 @@ def multimodal_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return M.video_neardup_pairs(M.with_binary_payload(docs), k=3,
                                  min_frac=0.5)
-
-
-@extra_query(
-    "events_props_variant",
-    oracle="""
-SELECT event_type,
-       CAST(CAST(props->>'$.k' AS BIGINT) // 10 AS BIGINT) AS k_decile,
-       count(*) AS n_events,
-       round(avg(value), 6) AS mean_value
-FROM events
-GROUP BY 1, 2 ORDER BY 1, 2
-""",
-)
-def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured twin of events_props_json through Spark 4's
-    VARIANT type: ``parse_json`` once into an open-schema variant,
-    ``try_variant_get`` to extract — the modern path for JSON columns
-    whose schema evolves (parse once, probe many fields without
-    re-parsing strings per extraction, with binary-encoded storage at
-    rest).  Shares the JSON-path query's oracle verbatim: both
-    encodings must agree on the same relational truth."""
-    ev = load_table(spark, sf_dir, "events")
-    v = F.parse_json("props")
-    k = F.try_variant_get(v, "$.k", "long")
-    return (
-        ev.groupBy("event_type", F.floor(k / 10).alias("k_decile"))
-        .agg(F.count("*").alias("n_events"),
-             F.round(F.avg("value"), 6).alias("mean_value"))
-        .orderBy("event_type", "k_decile")
-    )

@@ -49,6 +49,18 @@ def test_star_handles_long_chain_in_log_rounds(spark):
     assert out == {i: 0 for i in range(41)}
 
 
+def test_long_chain_beyond_round_budget_still_exact(spark):
+    """A 41-node path needs 40 propagation rounds, twice the default
+    budget of 20.  connected_components must not return the
+    half-propagated labels (nodes 22-40 still carry labels 1-19 after
+    the budget); it falls back to star contraction and returns the
+    exact components."""
+    chain = [(i, i + 1) for i in range(40)]
+    out = {r.node: r.comp
+           for r in connected_components(_pairs(spark, chain)).collect()}
+    assert out == {i: 0 for i in range(41)}
+
+
 @pytest.mark.slow
 def test_star_matches_propagation_on_random_graphs(spark):
     rng = random.Random(42)

@@ -448,32 +448,6 @@ def test_chunk_dedup_partial_tail_chunk(spark):
     assert occ == [(0, "a b"), (1, "c")]
 
 
-def test_substring_span_stats_shift_invariant_collision(spark):
-    """The SAME long run planted at different, non-stride-aligned
-    offsets in two docs must still collide: content-defined (mod-p)
-    window selection picks identical run-relative positions in both
-    copies — the property that killed the fixed-stride first cut of
-    this operator.  Doc 2 is shorter than one window and drops out."""
-    # non-periodic 120-char run (periodic text collapses to ~10
-    # distinct windows and can dodge selection entirely)
-    run = "".join(chr(97 + (i * 7) % 26) + str((i * i) % 10)
-                  for i in range(60))
-    docs = spark.createDataFrame(
-        [(0, "x" * 37 + run + "z" * 13),   # run at 1-based offset 38
-         (1, run + "y" * 41),              # run at offset 1
-         (2, "tiny")],
-        "doc_id long, text string")
-    rows = {r.doc_id: r for r in D.substring_span_stats(docs).collect()}
-    assert 2 not in rows
-    # both docs carry >= 1 selected window inside the shared run, and
-    # those windows collide across docs; doc 0 (lower doc_id => lower
-    # packed key) owns, so the removable occurrences land on doc 1.
-    assert rows[0].dup_fingerprints >= 1
-    assert rows[1].dup_fingerprints >= 1
-    assert rows[1].removable_fingerprints >= 1
-    assert rows[0].removable_fingerprints == 0
-
-
 def test_substring_removal_plan_merges_overlapping_windows(spark):
     """The removal plan merges the run's overlapping removable windows
     into ONE contiguous span on the non-owner doc: span count is 1,
@@ -527,23 +501,6 @@ def test_substring_removal_plan_disjoint_runs_never_merge(spark):
     assert rows[2].removed_chars <= len(run_a) + len(run_b)
 
 
-def test_substring_span_stats_no_dups_without_shared_runs(spark):
-    """Distinct non-self-repeating docs have zero duplicated windows
-    (an all-same-char doc would self-collide: within-doc repeats count,
-    as in ExactSubstr)."""
-    import hashlib
-    t0 = "".join(hashlib.sha256(f"t0{j}".encode()).hexdigest()
-                 for j in range(2))
-    t1 = "".join(hashlib.sha256(f"t1{j}".encode()).hexdigest()
-                 for j in range(2))
-    docs = spark.createDataFrame(
-        [(0, t0), (1, t1)], "doc_id long, text string")
-    rows = {r.doc_id: r for r in D.substring_span_stats(docs).collect()}
-    for r in rows.values():
-        assert r.dup_fingerprints == 0
-        assert r.dup_frac == 0.0
-
-
 def test_survivors_and_split_leakage_consistency(spark):
     """Survivor counts partition the corpus; the leakage matrix's pair
     total equals the family pair-relation count and contains at least
@@ -568,11 +525,13 @@ def test_survivors_and_split_leakage_consistency(spark):
 
 
 def test_substring_rolling_twin_shift_invariant_and_fast_path(spark):
-    """The rolling-hash twin keeps both planted-corpus properties the
-    md5 sketch proved: shift-invariant collision of a shared run, and
-    zero duplicated windows on distinct docs.  (Same selection density
-    family, different 1/modp sketch — totals need not match the md5
-    variant, the properties must.)"""
+    """The SAME long run planted at different, non-stride-aligned
+    offsets in two docs must still collide: content-defined (mod-p)
+    window selection picks identical run-relative positions in both
+    copies — the property that killed the fixed-stride first cut of
+    this operator.  Doc 2 is shorter than one window and drops out;
+    doc 0 (lower doc_id => lower packed key) owns.  Distinct
+    non-self-repeating docs have zero duplicated windows."""
     import hashlib
 
     run = "".join(chr(97 + (i * 7) % 26) + str((i * i) % 10)
@@ -583,7 +542,7 @@ def test_substring_rolling_twin_shift_invariant_and_fast_path(spark):
          (2, "tiny")],
         "doc_id long, text string")
     rows = {r.doc_id: r
-            for r in D.substring_span_stats_rolling(docs).collect()}
+            for r in D.substring_span_stats(docs).collect()}
     assert 2 not in rows
     assert rows[0].dup_fingerprints >= 1
     assert rows[1].dup_fingerprints >= 1
@@ -596,14 +555,15 @@ def test_substring_rolling_twin_shift_invariant_and_fast_path(spark):
                  for j in range(2))
     distinct = spark.createDataFrame(
         [(0, t0), (1, t1)], "doc_id long, text string")
-    for r in D.substring_span_stats_rolling(distinct).collect():
+    for r in D.substring_span_stats(distinct).collect():
         assert r.dup_fingerprints == 0
+        assert r.dup_frac == 0.0
 
 
 def test_substring_removal_plan_rolling_matches_merge_semantics(spark):
-    """The rolling twin inherits the island-merge semantics: the
-    non-owner copy of a planted run is cut in merged spans bounded by
-    the run, the owner and the distinct doc emit no plan rows."""
+    """Island-merge semantics: the non-owner copy of a planted run is
+    cut in merged spans bounded by the run, the owner and the distinct
+    doc emit no plan rows."""
     run = "".join(chr(97 + (i * 7) % 26) + str((i * i) % 10)
                   for i in range(60))
     docs = spark.createDataFrame(
@@ -612,15 +572,15 @@ def test_substring_removal_plan_rolling_matches_merge_semantics(spark):
          (2, "unique text with no forty-char twin anywhere")],
         "doc_id long, text string")
     rows = {r.doc_id: r for r in
-            D.substring_removal_plan_rolling(docs).collect()}
+            D.substring_removal_plan(docs).collect()}
     assert set(rows) == {1}
     assert D.SPAN_CHARS <= rows[1].removed_chars <= len(run)
     assert rows[1].kept_chars == len(run) + 41 - rows[1].removed_chars
 
 
 def test_substring_removal_plan_rolling_honors_id_col(spark):
-    """ADVICE r7: the rolling twin previously hardcoded doc_id and
-    threw on a custom id_col; both twins must honor it identically."""
+    """ADVICE r7: the rolling kernel once hardcoded doc_id and threw
+    on a custom id_col; a renamed id column must give the same plan."""
     run = "".join(chr(97 + (i * 7) % 26) + str((i * i) % 10)
                   for i in range(60))
     docs = spark.createDataFrame(
@@ -630,9 +590,8 @@ def test_substring_removal_plan_rolling_honors_id_col(spark):
         "doc_id long, text string")
     renamed = docs.withColumnRenamed("doc_id", "page_id")
     base = {r.doc_id: (r.n_spans, r.removed_chars, r.kept_chars)
-            for r in D.substring_removal_plan_rolling(docs).collect()}
-    custom_df = D.substring_removal_plan_rolling(renamed,
-                                                 id_col="page_id")
+            for r in D.substring_removal_plan(docs).collect()}
+    custom_df = D.substring_removal_plan(renamed, id_col="page_id")
     assert "page_id" in custom_df.columns
     custom = {r.page_id: (r.n_spans, r.removed_chars, r.kept_chars)
               for r in custom_df.collect()}

@@ -61,7 +61,7 @@ def test_rolling_fingerprints_match_python_reference(spark, text):
 
     span, modp = 20, 4   # smaller span so short fuzz inputs have windows
     docs = spark.createDataFrame([Row(doc_id=1, text=text)])
-    out = D.substring_span_stats_rolling(docs, span_chars=span, modp=modp)
+    out = D.substring_span_stats(docs, span_chars=span, modp=modp)
     got = {r.doc_id: r.n_fingerprints for r in out.collect()}
 
     # reference: fp per window by direct power sum, count 0-mod-p picks

@@ -63,9 +63,11 @@ def test_operators_md_counts_match_registry():
     """OPERATORS.md's tier counts are registry-derived facts; this pins
     them so they can never drift again (VERDICT r5 item 3 — the same
     artifact-of-record discipline bench claims got in r5)."""
+    import os
     import re
 
-    md = open("/root/repo/OPERATORS.md").read()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    md = open(os.path.join(repo, "OPERATORS.md")).read()
     n_extra, n_exact = len(EXTRA_QUERIES), len(EXTRA_QUERIES) - len(EXTRA_RTOL)
     assert f"**library tier** ({n_extra} entries" in md
     m = re.search(r"plus (\d+) library-tier entries \(†\) — (\d+) EXACT,"

@@ -12,7 +12,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 import __spark_entry__ as entrymod
 from currency_market_pulse_spark.session import get_spark

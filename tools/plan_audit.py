@@ -13,10 +13,12 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 import __spark_entry__ as entrymod
 from currency_market_pulse_spark.session import get_spark
@@ -224,13 +226,22 @@ MAX_EXCHANGES = {
     "documents_budget_per_lang": ("one group shuffle only", 2),
 }
 
+#: query -> (description, plan node, exact number of plan lines naming
+#: it).  Counted on the physical plan tree string, like MAX_EXCHANGES.
+EXACT_NODES = {
+    # the rolling-hash kernel runs once per document
+    "text_substring_dedup": ("kernel crosses the Python boundary once",
+                             "MapInPandas", 1),
+}
+
 # round-5 wave: the new operators' declared scale shapes
 EXPECTATIONS.update({
     "text_substring_dedup": [
-        # the 1/modp selection must run in the scan/explode stage,
-        # BEFORE any exchange — shuffle volume is len/modp by contract
-        ("mod-p selection pre-shuffle", r"Filter.*pmod"),
-        ("partial agg on window hash", r"partial_min"),
+        # owner stats are ONE window pass over the rolling fingerprint,
+        # not a groupBy + join-back that re-runs the kernel per side
+        ("owner stats are a window on the fingerprint",
+         r"Window \[.*\], \[fp#"),
+        ("no md5 window hash", r"^(?!(.|\n)*md5)(.|\n)*$"),
     ],
     "documents_alpha_sampling": [
         # per-stratum rates join back to the corpus as a broadcast —
@@ -283,12 +294,6 @@ EXPECTATIONS.update({
         # the exploded query-probe side broadcasts into the bucketed
         # candidate scan — the corpus never shuffles per query
         ("probe side broadcast", r"BroadcastHashJoin"),
-    ],
-    "text_substring_removal": [
-        # shares the detect stage's contract: 1/modp selection BEFORE
-        # any exchange, owner stats from a partial-combining aggregate
-        ("mod-p selection pre-shuffle", r"Filter.*pmod"),
-        ("partial agg on window hash", r"partial_min"),
     ],
     "text_cms_heavy_hitters": [
         # the ~2k-row sketch broadcasts into the distinct-token probe;
@@ -347,12 +352,6 @@ RUNTIME_EXPECTATIONS = {
     ],
     "dedup_containment": [
         ("shingle exchange reused across self-join", r"ReusedExchange"),
-    ],
-    # windows must compute ONCE: the aggregate and the join-back both
-    # shuffle on the window hash, and AQE reuses that exchange (without
-    # it the len-sized explode+md5 chain runs twice)
-    "text_substring_dedup": [
-        ("window exchange reused across agg/join-back", r"ReusedExchange"),
     ],
 }
 
@@ -424,6 +423,15 @@ def main() -> int:
             print(f"ok    {name}: {desc} ({n} <= {max_n})")
         else:
             print(f"FAIL  {name}: {desc}  ({n} exchanges > {max_n})")
+            failures += 1
+    for name, (desc, node, want) in EXACT_NODES.items():
+        tree = queries[name](spark, sf_dir)._jdf.queryExecution() \
+            .executedPlan().toString()
+        n = sum(node in line for line in tree.splitlines())
+        if n == want:
+            print(f"ok    {name}: {desc} ({n} {node})")
+        else:
+            print(f"FAIL  {name}: {desc}  ({n} {node} != {want})")
             failures += 1
     # VERDICT r9 item 5: after the offline index phase has built the
     # simhash signatures, the registered query's SEARCH PATH must

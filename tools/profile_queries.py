@@ -1,7 +1,7 @@
-"""Per-query structural profiler (promoted from tools/profile_r17.py —
-VERDICT r17 "Next round" item 1): for each registered query it records
-wall time, Spark JOB count via job-group tracking, stage count, and the
-``.explain("formatted")`` physical plan.
+"""Per-query structural profiler (VERDICT r17 "Next round" item 1):
+for each registered query it records wall time, Spark JOB count via
+job-group tracking, stage count, and the ``.explain("formatted")``
+physical plan.
 
 Job/stage counts are LOAD-INDEPENDENT: on a host whose wall-clock
 throughput is bimodal (2x drift on identical code, BENCH_ANCHOR
