@@ -86,12 +86,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     pl.add_argument("--window-ms", type=int, default=1000)
     pl.add_argument("--once", action="store_true",
                     help="process available files then exit")
-    pl.add_argument("--txn-publication", choices=["rename", "put"],
-                    default="rename",
-                    help="trade-sink file publication: atomic rename "
-                         "(POSIX/HDFS) or the object-store PUT twin "
-                         "(copy+fsync, no cross-directory rename — "
-                         "streaming/txn_sink.py)")
     pl.add_argument("--txn-retain-manifests", type=int, default=256,
                     help="bound the _txn/ commit log: manifests more "
                          "than N below the durable checkpoint floor "
@@ -179,7 +173,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             pipe = run_composed_pipeline(
                 spark, args.requests_dir, args.docs_dir, args.out_dir,
                 window_ms=args.window_ms, limit=args.limit,
-                txn_publication=args.txn_publication,
                 txn_retain_manifests=(args.txn_retain_manifests or None))
             if args.once:
                 try:

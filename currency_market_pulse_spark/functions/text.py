@@ -65,21 +65,3 @@ def hex_hash64(s: Column) -> Column:
 def seeded_md5(seed: int | str, s: Column) -> Column:
     """One member of the portable hash family: md5('<seed>|' || s)."""
     return F.md5(F.concat(F.lit(f"{seed}|"), s))
-
-
-def oracle_tokens_sql(text_expr: str) -> str:
-    """DuckDB twin of tokens()."""
-    return f"string_split_regex(lower({text_expr}), '\\s+')"
-
-
-def oracle_shingles_sql(toks_expr: str, n: int = 3) -> str:
-    """DuckDB twin of shingles().  Pass a simple column name as
-    ``toks_expr`` (it is referenced n+1 times)."""
-    parts = " || ' ' || ".join(f"{toks_expr}[i+{j}]" for j in range(n))
-    return (f"list_transform(range(1, greatest(len({toks_expr}) - {n - 1}, 0) + 1), "
-            f"i -> {parts})")
-
-
-def oracle_hex_hash64_sql(s_expr: str) -> str:
-    """DuckDB twin of hex_hash64()."""
-    return f"CAST(('0x' || substr(md5({s_expr}), 1, 15)) AS BIGINT)"

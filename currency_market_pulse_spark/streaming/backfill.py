@@ -99,10 +99,13 @@ def cold_corpus_dups(docs: DataFrame,
 def _require_fresh_index(nd: StreamingNearDup) -> None:
     """Backfill is a FRESH-INDEX-ONLY bootstrap (ADVICE r13):
     ``cold_corpus_dups`` is blind to standing index content and
-    ``seed_index`` renames into the fixed ``base/segment=0`` — run
-    against a populated index it would either fail with an opaque
-    ENOTEMPTY or silently miss standing near-dups.  Refuse up front
-    with an actionable message instead.
+    ``seed_index`` publishes the fixed ``base/segment=0`` through
+    ``MarkerSegmentStore`` (per-file copies plus a ``_committed``
+    marker, no rename) — run against a populated index whose segment 0
+    is already committed, that publish keeps the committed bytes and
+    silently drops the new seed, and the dup log silently misses
+    standing near-dups.  Refuse up front with an actionable message
+    instead.
 
     Recovery runs first: it claims each root for the configured
     store's protocol (fail-fast on a protocol mismatch — ADVICE r14

@@ -1,26 +1,32 @@
-"""Streaming IVF index maintenance (VERDICT r8 directive 4 / r7
-directive 5): keep a TRAINED coarse quantizer serving under recurring
-vector ingest.
+"""Streaming IVF-PQ index maintenance (VERDICT r8 directive 4 / r7
+directive 5): keep a TRAINED index serving under recurring vector
+ingest.
 
-A FAISS-style IVF index is two relations (queries/ivf.py
-_shared_coarse): the trained centroids (k rows) and the posting
-assignment (vec_id, cell, dist).  Training is offline and occasional;
-ingest is continuous — so the streaming half must (a) extend the
-posting relation per micro-batch WITHOUT retraining, and (b) know when
-the frozen centroids have drifted far enough from the live corpus that
-search quality degrades and a retrain is due.
+A FAISS-style IVF-PQ index is four relations (operators/pq.py
+ivfpq_fit): the trained coarse centroids (k rows), the posting
+assignment (vec_id, cell, dist), the per-subspace residual codebooks
+and the residual codes (vec_id, c0..c{m-1}).  Training is offline and
+occasional; ingest is continuous — so the streaming half must (a)
+extend the postings and codes per micro-batch WITHOUT retraining, and
+(b) know when the frozen quantizers have drifted far enough from the
+live corpus that search quality degrades and a retrain is due.
 
 Per micro-batch of (vec_id, embedding) rows, the handler:
 
 1. appends the raw vectors to the standing vector store (the corpus a
    retrain will read), batch-id idempotent;
-2. assigns each new vector to its nearest TRAINED cell — broadcast of
-   the k-row centroid relation into the same BLAS argmin kernel the
-   batch index build uses (operators/kmeans.py assign_cells_blas), so
-   stream-assigned postings are bit-identical to what a batch rebuild
-   at the same centroids would produce (tests/test_ivf_stream.py pins
-   stream == batch on the full index);
-3. appends the (vec_id, cell, dist) postings, batch-id idempotent.
+2. in ONE pass of the operators/kmeans.py ``encode_blas`` kernel (the
+   one ``pq_encode`` and the batch build run — no shuffle, no
+   training) assigns each new vector to its nearest TRAINED cell and
+   encodes its RESIDUAL against the FROZEN codebooks, so streamed
+   postings are bit-identical to a batch ``assign_cells_blas`` at the
+   same centroids (tests/test_ivf_stream.py pins stream == batch on
+   the full index) and streamed codes to a batch ``pq_encode`` of the
+   residuals (tests/test_ivfpq_stream.py);
+3. appends the (vec_id, cell, dist) postings and the codes,
+   batch-id idempotent.  The standing (codes join assignments)
+   relation is exactly the ``members`` relation ``ivfpq_topk``
+   searches.
 
 Idempotency contract (the importer / neardup_stream batch-id
 discipline): every write lands under batch_id=<id> with dynamic
@@ -42,21 +48,24 @@ when either
   true neighbors straddle cell boundaries).
 
 Both metrics come from the posting relation alone (counts and an avg —
-no vector reads).  A silhouette recheck (queries/ivf.py
+no vector reads).  They cover the PQ half too: codebook quality
+degrades exactly when residual magnitude grows, which IS the
+assignment-distance trigger (residual norm = sqrt of the coarse
+assignment distance).  A silhouette recheck (queries/ivf.py
 sim_kmeans_silhouette) is the heavier confirmatory gate a deployment
 can schedule on flag, not per batch.
 
 ``retrain`` rebuilds from the standing vector store: corpus-adaptive
 k (queries/ivf.py coarse_k — cells stay ~250 rows as the corpus
-grows), fresh Lloyd chain, centroids + full posting rewrite under
-batch_id=-1, streamed posting partitions retired.  Like compaction,
-retrain MUST run with the ingest query stopped and its checkpoint
-quiescent: a batch replayed across a retrain would re-append postings
-the rewrite already covers (same reader/writer caveat the compactor
-documents — compaction.py).
+grows), fresh Lloyd chains, centroids + codebooks + full posting and
+code rewrite under batch_id=-1, streamed partitions retired.  Like
+compaction, retrain MUST run with the ingest query stopped and its
+checkpoint quiescent: a batch replayed across a retrain would
+re-append postings the rewrite already covers (same reader/writer
+caveat the compactor documents — compaction.py).
 
-At 100 TB: per-batch cost is one broadcast (k centroids) + one
-narrow 3-column append — no shuffle of the standing index, no vector
+At 100 TB: per-batch cost is one task-closure codebook shipment + two
+narrow appends — no shuffle of the standing index, no vector
 re-reads; drift metrics aggregate the posting relation (3 narrow
 columns); retrain is the one full-corpus job, and the gate exists
 precisely so it runs on evidence instead of on a timer.
@@ -64,13 +73,15 @@ precisely so it runs on evidence instead of on a timer.
 
 from __future__ import annotations
 
+import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.utils import AnalysisException
 
 from currency_market_pulse_spark.operators.kmeans import (
-    assign_cells_blas, encode_blas, kmeans_fit,
+    codebook, encode_blas,
 )
 
 _VECTORS_SCHEMA = "vec_id bigint, embedding array<double>, batch_id bigint"
@@ -83,8 +94,8 @@ TRAIN_BATCH_ID = -1
 
 
 @dataclass
-class StreamingIVFIndex:
-    """foreachBatch handler maintaining a trained IVF coarse index.
+class StreamingIVFPQIndex:
+    """foreachBatch handler maintaining a trained IVF-PQ index.
 
     ``train`` once (offline), ``attach`` to a (vec_id, embedding)
     stream, ``needs_retrain`` as the scheduled drift gate,
@@ -93,47 +104,62 @@ class StreamingIVFIndex:
     centroids_path: str
     assign_path: str
     vectors_path: str
+    codebooks_path: str
+    codes_path: str
     #: occupancy-skew gate: hottest cell vs ideal n/k
     skew_limit: float = 4.0
     #: distance-growth gate: streamed mean dist vs training mean dist
     dist_growth_limit: float = 1.5
+    m: int = 4
+    sub_dim: int = 16
+    pq_k: int = 8
+    pq_iter: int = 1
+
+    def _codes_schema(self) -> str:
+        cols = ", ".join(f"c{s} int" for s in range(self.m))
+        return f"vec_id bigint, {cols}, batch_id bigint"
 
     # -- offline training ---------------------------------------------
     def train(self, emb: DataFrame, k: int | None = None,
               n_iter: int = 2) -> None:
-        """Fit the coarse quantizer on ``emb`` (vec_id, embedding) and
-        write all three standing relations.  k defaults to the
-        corpus-adaptive coarse_k rule."""
+        """Fit the quantizers on ``emb`` (vec_id, embedding) and write
+        every standing relation.  k defaults to the corpus-adaptive
+        coarse_k rule."""
         self._write_partition(
             emb.select("vec_id", "embedding"), self.vectors_path,
             TRAIN_BATCH_ID)
         self._fit(emb, k, n_iter)
 
     def _fit(self, emb: DataFrame, k: int | None, n_iter: int) -> int:
-        """Train on ``emb`` and write the centroids, then the postings
-        under the training id.  Returns k."""
+        """Coarse quantizer + residual codebooks from one bounded
+        sample (operators/pq.py ivfpq_fit), then centroids, postings,
+        codebooks and codes from its single encode pass.  Returns k."""
+        from currency_market_pulse_spark.operators.pq import ivfpq_fit
+
         if k is None:
             from currency_market_pulse_spark.queries.ivf import coarse_k
             k = coarse_k(emb.count())
-        centroids, assigned = kmeans_fit(emb, k=k, n_iter=n_iter)
+        centroids, codebooks, encoded = ivfpq_fit(
+            emb, k, n_iter, self.m, self.sub_dim, self.pq_k, self.pq_iter)
         self._write_centroids(centroids)
-        self._write_partition(assigned, self.assign_path, TRAIN_BATCH_ID)
+        self._write_encoded(encoded, TRAIN_BATCH_ID)
+        self._write_codebooks(codebooks)
         return k
 
     # -- streaming maintenance ----------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        centroids = spark.read.schema(_CENTROID_SCHEMA).parquet(
-            self.centroids_path)
         vecs = batch.select(
             "vec_id",
             F.transform("embedding",
                         lambda x: x.cast("double")).alias("embedding"))
         self._write_partition(vecs, self.vectors_path, batch_id)
-        assigned = assign_cells_blas(vecs, centroids)
-        self._write_partition(
-            assigned.select("vec_id", "cell", "dist"), self.assign_path,
-            batch_id)
+        # one fused pass: coarse cell + dist and the residual codes
+        # against the FROZEN codebooks (pq_encode's kernel)
+        self._write_encoded(encode_blas(
+            vecs, codebook(self.read_centroids(spark)),
+            [codebook(cb) for cb in self.read_codebooks(spark)],
+            self.sub_dim), batch_id)
 
     def attach(self, stream_df: DataFrame, checkpoint_dir: str,
                trigger: str | None = None):
@@ -163,6 +189,27 @@ class StreamingIVFIndex:
         return (spark.read.schema(_VECTORS_SCHEMA)
                 .parquet(self.vectors_path)
                 .select("vec_id", "embedding"))
+
+    def read_codebooks(self, spark: SparkSession) -> list[DataFrame]:
+        stored = spark.read.schema(
+            "s int, cell int, centroid array<double>").parquet(
+            self.codebooks_path)
+        return [stored.filter(F.col("s") == s).select("cell", "centroid")
+                for s in range(self.m)]
+
+    def read_codes(self, spark: SparkSession) -> DataFrame:
+        try:
+            return spark.read.schema(self._codes_schema()).parquet(
+                self.codes_path)
+        except AnalysisException:
+            return spark.createDataFrame([], self._codes_schema())
+
+    def read_members(self, spark: SparkSession) -> DataFrame:
+        """(vec_id, c0.., cell) — the relation ivfpq_topk searches."""
+        code_cols = [f"c{s}" for s in range(self.m)]
+        return (self.read_codes(spark).select("vec_id", *code_cols)
+                .join(self.read_assignments(spark)
+                      .select("vec_id", "cell"), "vec_id"))
 
     # -- drift gate ----------------------------------------------------
     def drift_report(self, spark: SparkSession) -> dict:
@@ -227,12 +274,14 @@ class StreamingIVFIndex:
         """Full rebuild from the standing vector store.  MUST run with
         the ingest query stopped and checkpoint-quiescent (module
         docstring).  Returns the new k."""
-        # new centroids first (k rows, atomic enough for a stopped
-        # stream), then the posting rewrite under the training id,
-        # then retire the streamed posting partitions the rewrite
-        # superseded — the vector store is untouched (it IS the corpus)
+        # new centroids and codebooks first (small, atomic enough for
+        # a stopped stream), then the posting and code rewrite under
+        # the training id, then retire the streamed partitions the
+        # rewrite superseded — the vector store is untouched (it IS
+        # the corpus)
         k = self._fit(self.read_vectors(spark), k, n_iter)
         self._retire_streamed(self.assign_path)
+        self._retire_streamed(self.codes_path)
         return k
 
     # -- internals -----------------------------------------------------
@@ -240,126 +289,6 @@ class StreamingIVFIndex:
         (centroids.select("cell", "centroid")
          .write.mode("overwrite").parquet(self.centroids_path))
 
-    @staticmethod
-    def _retire_streamed(path: str) -> None:
-        import os
-        import shutil
-
-        for name in os.listdir(path):
-            if (name.startswith("batch_id=")
-                    and name != f"batch_id={TRAIN_BATCH_ID}"):
-                shutil.rmtree(os.path.join(path, name), ignore_errors=True)
-
-    @staticmethod
-    def _write_partition(df: DataFrame, path: str, batch_id: int) -> None:
-        (df.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(path))
-
-
-@dataclass
-class StreamingIVFPQIndex(StreamingIVFIndex):
-    """The full IVF-PQ index under recurring ingest: the coarse
-    maintenance above PLUS residual PQ codes per micro-batch.
-
-    Training persists the per-subspace codebooks alongside the coarse
-    relations; each micro-batch then, in ONE pass of the
-    operators/kmeans.py encode_blas kernel (the one ``pq_encode`` and
-    the batch build run — no shuffle, no training), coarse-assigns as
-    the parent does and encodes the batch's RESIDUALS against the
-    FROZEN codebooks, appending (vec_id, c0..c{m-1}) codes batch-id
-    idempotently.  The standing (codes join assignments)
-    relation is exactly the ``members`` relation ``ivfpq_topk``
-    searches (tests/test_ivfpq_stream.py probes it).
-
-    Drift: the parent's two gates cover the PQ half too — codebook
-    quality degrades exactly when residual magnitude grows, which IS
-    the assignment-distance-growth trigger (residual norm = sqrt of
-    the coarse assignment distance).  ``retrain`` rebuilds coarse +
-    codebooks + all codes from the standing vector store."""
-
-    codebooks_path: str = ""
-    codes_path: str = ""
-    m: int = 4
-    sub_dim: int = 16
-    pq_k: int = 8
-    pq_iter: int = 1
-
-    def __post_init__(self):
-        if not self.codebooks_path or not self.codes_path:
-            raise ValueError(
-                "StreamingIVFPQIndex needs codebooks_path and codes_path")
-
-    def _codes_schema(self) -> str:
-        cols = ", ".join(f"c{s} int" for s in range(self.m))
-        return f"vec_id bigint, {cols}, batch_id bigint"
-
-    # -- offline training ---------------------------------------------
-    def _fit(self, emb: DataFrame, k: int | None, n_iter: int) -> int:
-        """Coarse quantizer + residual codebooks from one bounded
-        sample (operators/pq.py ivfpq_fit), then centroids, postings,
-        codebooks and codes from its single encode pass."""
-        from currency_market_pulse_spark.operators.pq import ivfpq_fit
-
-        if k is None:
-            from currency_market_pulse_spark.queries.ivf import coarse_k
-            k = coarse_k(emb.count())
-        centroids, codebooks, encoded = ivfpq_fit(
-            emb, k, n_iter, self.m, self.sub_dim, self.pq_k, self.pq_iter)
-        self._write_centroids(centroids)
-        self._write_encoded(encoded, TRAIN_BATCH_ID)
-        self._write_codebooks(codebooks)
-        return k
-
-    # -- streaming maintenance ----------------------------------------
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from currency_market_pulse_spark.operators.kmeans import codebook
-
-        spark = batch.sparkSession
-        vecs = batch.select(
-            "vec_id",
-            F.transform("embedding",
-                        lambda x: x.cast("double")).alias("embedding"))
-        self._write_partition(vecs, self.vectors_path, batch_id)
-        # one fused pass: coarse cell + dist and the residual codes
-        # against the FROZEN codebooks (pq_encode's kernel)
-        self._write_encoded(encode_blas(
-            vecs, codebook(self.read_centroids(spark)),
-            [codebook(cb) for cb in self.read_codebooks(spark)],
-            self.sub_dim), batch_id)
-
-    # -- reads ---------------------------------------------------------
-    def read_codebooks(self, spark: SparkSession) -> list[DataFrame]:
-        stored = spark.read.schema(
-            "s int, cell int, centroid array<double>").parquet(
-            self.codebooks_path)
-        return [stored.filter(F.col("s") == s).select("cell", "centroid")
-                for s in range(self.m)]
-
-    def read_codes(self, spark: SparkSession) -> DataFrame:
-        try:
-            return spark.read.schema(self._codes_schema()).parquet(
-                self.codes_path)
-        except AnalysisException:
-            return spark.createDataFrame([], self._codes_schema())
-
-    def read_members(self, spark: SparkSession) -> DataFrame:
-        """(vec_id, c0.., cell) — the relation ivfpq_topk searches."""
-        code_cols = [f"c{s}" for s in range(self.m)]
-        return (self.read_codes(spark).select("vec_id", *code_cols)
-                .join(self.read_assignments(spark)
-                      .select("vec_id", "cell"), "vec_id"))
-
-    # -- retrain -------------------------------------------------------
-    def retrain(self, spark: SparkSession, k: int | None = None,
-                n_iter: int = 2) -> int:
-        new_k = super().retrain(spark, k, n_iter)
-        self._retire_streamed(self.codes_path)
-        return new_k
-
-    # -- internals -----------------------------------------------------
     def _write_encoded(self, encoded: DataFrame, batch_id: int) -> None:
         """Postings and codes: two projections of one encode pass."""
         encoded = encoded.persist()
@@ -381,8 +310,23 @@ class StreamingIVFPQIndex(StreamingIVFIndex):
             union = part if union is None else union.unionAll(part)
         union.write.mode("overwrite").parquet(self.codebooks_path)
 
+    @staticmethod
+    def _retire_streamed(path: str) -> None:
+        for name in os.listdir(path):
+            if (name.startswith("batch_id=")
+                    and name != f"batch_id={TRAIN_BATCH_ID}"):
+                shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
-def retrain_with_handover(index: StreamingIVFIndex, spark: SparkSession,
+    @staticmethod
+    def _write_partition(df: DataFrame, path: str, batch_id: int) -> None:
+        (df.withColumn("batch_id", F.lit(batch_id).cast("bigint"))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id")
+         .parquet(path))
+
+
+def retrain_with_handover(index: StreamingIVFPQIndex, spark: SparkSession,
                           reattach=None, query=None, force: bool = False,
                           k: int | None = None, n_iter: int = 2,
                           on_drained=None):

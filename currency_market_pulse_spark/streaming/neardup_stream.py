@@ -1129,20 +1129,6 @@ class StreamingNearDup:
             "jaccard": pa.array([r[2] for r in ranked], pa.float64()),
         }))
 
-    def _collect_cand_ids(self, cand: DataFrame) -> list[int]:
-        """Candidate corpus ids, deduped in PYTHON instead of a
-        distinct (one shuffle stage per trigger saved); the raw cap
-        guards the pathological fan-out case — if it truncates, fall
-        back to the exact distinct+limit job rather than risk a
-        missed candidate."""
-        raw_cap = 2_000_000
-        raw = (cand.select("corpus_id").limit(raw_cap)
-               .toArrow().column("corpus_id").to_pylist())
-        if len(raw) >= raw_cap:
-            return [r[0] for r in cand.select("corpus_id").distinct()
-                    .limit(_CAND_COLLECT_CAP + 1).collect()]
-        return list(set(raw))[:_CAND_COLLECT_CAP + 1]
-
     def _near_dup_local(self, spark, rem_docs: DataFrame,
                         batch_id: int, hits_py: list,
                         hash_rows: list[tuple[int, str]],

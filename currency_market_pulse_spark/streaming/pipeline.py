@@ -245,7 +245,6 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           neardup_max_segments: int = 8,
                           expected_rows_per_trigger: int | None = None,
                           txn_retain_manifests: int | None = 256,
-                          txn_publication: str = "rename",
                           ) -> ComposedPipeline:
     """Start the full composition and return its handles.
 
@@ -362,9 +361,6 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     gate = RateLimitGate(f"{out_dir}/gateway_state", window_ms, limit)
     # write-once txn sink: the live view's file stream is
     # exactly-once under crash-replay (module docstring; txn_sink.py)
-    # txn_publication="put" runs the object-store file-publication
-    # twin (copy+fsync, no cross-directory rename — txn_sink.py
-    # OBJECT-STORE PUBLICATION).
     # txn_retain_manifests: bound _txn/'s FILE COUNT too — manifests
     # below the durable checkpoint floor are deleted (re-derivable
     # from the checkpoint), keeping the log at O(interval + retain)
@@ -378,8 +374,7 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
     # even when never read.
     sink = TxnParquetTradesSink(trades_path,
                                 checkpoint_every=TXN_CHECKPOINT_EVERY,
-                                retain_manifests=txn_retain_manifests,
-                                publication=txn_publication)
+                                retain_manifests=txn_retain_manifests)
 
     def import_batch(batch: DataFrame, batch_id: int) -> None:
         # the gate caches its windowed relation, so the sink and the

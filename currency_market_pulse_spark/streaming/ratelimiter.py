@@ -48,6 +48,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from currency_market_pulse_spark.streaming.segment_store import (
+    fsync_path, replace_durably,
+)
+
 DEFAULT_WINDOW_MS = 1_000  # --ratelimit.duration 1s (compose.yml:6)
 DEFAULT_LIMIT = 100        # --ratelimit.limit 100  (compose.yml:6)
 
@@ -67,14 +71,6 @@ def admit_fold(recent: list[int], ts_ms: int, window_ms: int,
     if n <= limit:
         return recent, n, True, None
     return recent, n, False, recent[0] + window_ms - ts_ms
-
-
-def _fsync(path: str) -> None:
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
 
 
 @dataclass
@@ -228,9 +224,7 @@ class RateLimitGate:
         for i, name in enumerate(parts):
             dst = os.path.join(tmp, f"part-{i:05d}.parquet")
             os.rename(os.path.join(tmp, name), dst)
-            _fsync(dst)
-        _fsync(tmp)
+            fsync_path(dst)
         # a replay's earlier publish of this id holds identical content
         shutil.rmtree(final, ignore_errors=True)
-        os.replace(tmp, final)
-        _fsync(self.state_path)
+        replace_durably(tmp, final)

@@ -87,12 +87,38 @@ class InjectedCrash(RuntimeError):
     """Raised by a fault hook to simulate a crash between PUTs."""
 
 
-def _fsync_file(path: str) -> None:
+# -- durable-write helpers: the one place the streaming stores flush
+# (this module's marker store, the txn sink and the rate-limit gate's
+# snapshot) -----------------------------------------------------------
+
+def fsync_path(path: str) -> None:
+    """Flush a file's bytes, or a directory's entries, to disk."""
     fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
     finally:
         os.close(fd)
+
+
+def replace_durably(tmp: str, final: str) -> None:
+    """Atomic, durable publish of a fully written file or directory:
+    fsync ``tmp``, ``os.replace`` it onto ``final``, then fsync the
+    parent directory.  The rename alone orders nothing: without the
+    first fsync the target could surface empty after power loss, and
+    without the second the rename itself could vanish (ADVICE r8)."""
+    fsync_path(tmp)
+    os.replace(tmp, final)
+    fsync_path(os.path.dirname(final))
+
+
+def write_json_durably(path: str, obj) -> None:
+    """``obj`` as JSON at ``path`` through ``<path>.tmp`` and
+    ``replace_durably``: readers see the old document or the new one,
+    never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    replace_durably(tmp, path)
 
 
 @dataclass
@@ -119,8 +145,7 @@ class MarkerSegmentStore:
         manifest = os.path.join(root, _INTENT)
         with open(manifest, "w") as f:
             json.dump({"segment": segment_id, "consumed": consumed}, f)
-            f.flush()
-            os.fsync(f.fileno())
+        fsync_path(manifest)
 
     def read_intent(self, root: str) -> dict | None:
         try:
@@ -162,17 +187,14 @@ class MarkerSegmentStore:
                     self.fault(f"copy:{rel}")
                 out = os.path.join(out_dir, name)
                 shutil.copyfile(os.path.join(src_root, name), out)
-                _fsync_file(out)
+                fsync_path(out)
         if self.fault is not None:
             self.fault("before_marker")
         # the commit point: conditional PUT (create-if-absent) of the
         # single marker object — exactly one publisher can win it
-        fd = os.open(self._marker(root, segment_id),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
+        marker = self._marker(root, segment_id)
+        os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+        fsync_path(marker)
         if self.fault is not None:
             self.fault("after_marker")
         shutil.rmtree(staged_dir, ignore_errors=True)

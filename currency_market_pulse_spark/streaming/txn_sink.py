@@ -72,28 +72,13 @@ staged payload file and its directory is fsynced BEFORE the manifest
 is written, and the manifest tmp file and the ``_txn`` directory are
 fsynced around the rename, so a durable manifest only ever
 references durable staged bytes and the whole commit survives power
-loss on such filesystems.
-
-OBJECT-STORE PUBLICATION (``publication="put"``, r15): stores like
-S3 have no rename.  Inventory of renames in this protocol: (a) the
-manifest/checkpoint commits are SAME-DIRECTORY tmp+replace — the
-local emulation of one atomic object PUT, which a real store
-provides natively; (b) the only true CROSS-DIRECTORY rename is the
-staged -> final move in step 3.  ``publication="put"`` replaces (b)
-with a copy+fsync materialized atomically (hidden tmp + same-dir
-replace = the atomic-PUT emulation, exactly segment_store.py's fault
-model: a failed real PUT creates no object, so "torn final object"
-is out of scope; "some finals present, others not" is the window,
-and the fault hook drives every such point).  The recovery analysis
-is UNCHANGED because roll-forward was already copy-tolerant: a
-final's existence is the per-file done marker, staged files persist
-until the batch-level cleanup, and the staged+final-coexist window
-put-mode introduces is exactly the idempotent-skip branch.  Readers
-that must never see a half-published BATCH consult the manifests —
-the manifest-log view source (sources/txn_log_source.py) already
-does (existence probe = HEAD); plain listing-based batch reads see
-per-file-atomic but batch-partial state in EITHER mode (files
-publish one at a time), which is why the view is log-fed.
+loss on such filesystems.  Every flush goes through the durable-write
+helpers of streaming/segment_store.py.  A store without rename is out
+of scope: the near-dup segment store is the one rename-free store.
+Files publish one at a time, so a listing can see part of a batch;
+readers that must never see a half-published batch consult the
+manifests, as the manifest-log view source does
+(sources/txn_log_source.py).
 """
 
 from __future__ import annotations
@@ -106,6 +91,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from currency_market_pulse_spark.streaming.importer import Sink
+from currency_market_pulse_spark.streaming.segment_store import (
+    fsync_path, replace_durably, write_json_durably,
+)
 
 _TXN_DIR = "_txn"
 _STAGED_DIR = "_staged"
@@ -148,21 +136,8 @@ class TxnParquetTradesSink(Sink):
     #: how many newest checkpoint files to keep once a newer one is
     #: durable (the pointed-to checkpoint is never deleted).
     retain_checkpoints: int = 2
-    #: file publication mode: "rename" (one cross-directory
-    #: os.replace per file — POSIX/HDFS) or "put" (object-store twin:
-    #: copy+fsync materialized as one atomic PUT, no cross-directory
-    #: rename anywhere — module docstring OBJECT-STORE PUBLICATION).
-    publication: str = "rename"
-    #: optional fault hook for put-mode crash-window tests: called
-    #: with ``put:<final_rel>`` before each final object lands;
-    #: raising simulates the crash (tests/test_txn_sink.py).
-    fault: "object | None" = None
 
     def __post_init__(self):
-        if self.publication not in ("rename", "put"):
-            raise ValueError(f"unknown publication "
-                             f"{self.publication!r} "
-                             "(expected 'rename' or 'put')")
         if self.retain_manifests is not None:
             if not self.checkpoint_every:
                 raise ValueError(
@@ -226,16 +201,8 @@ class TxnParquetTradesSink(Sink):
             # corruption) or hitting the invariant IOError.
             for name in sorted(names):
                 if name.endswith(".parquet"):
-                    fd = os.open(os.path.join(root, name), os.O_RDONLY)
-                    try:
-                        os.fsync(fd)
-                    finally:
-                        os.close(fd)
-            dfd = os.open(root, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
+                    fsync_path(os.path.join(root, name))
+            fsync_path(root)
             for name in sorted(names):
                 if not name.endswith(".parquet"):
                     continue
@@ -252,22 +219,9 @@ class TxnParquetTradesSink(Sink):
                 pairs.append([staged_rel, final_rel])
 
         os.makedirs(os.path.dirname(manifest), exist_ok=True)
-        tmp = manifest + ".tmp"
-        # fsync the payload BEFORE the rename and the directory AFTER
-        # (ADVICE r8): os.replace alone orders the rename against
-        # nothing — on power loss the manifest could surface empty or
-        # the rename itself could vanish.  POSIX-filesystem scope only
-        # (module docstring).
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": int(batch_id), "files": pairs}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, manifest)   # <-- the commit point
-        dirfd = os.open(os.path.dirname(manifest), os.O_RDONLY)
-        try:
-            os.fsync(dirfd)
-        finally:
-            os.close(dirfd)
+        # the commit point: tmp, fsync, os.replace, fsync of _txn/
+        write_json_durably(
+            manifest, {"batch_id": int(batch_id), "files": pairs})
         self._publish(batch_id)
         self._maybe_checkpoint(batch_id)
 
@@ -329,12 +283,7 @@ class TxnParquetTradesSink(Sink):
         })
         tmp = cp_path + ".tmp"
         pq.write_table(table, tmp)
-        fd = os.open(tmp, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        os.replace(tmp, cp_path)
+        replace_durably(tmp, cp_path)
         self._update_pointer(batch_id, cp_name)
         self._apply_retention()
 
@@ -390,18 +339,8 @@ class TxnParquetTradesSink(Sink):
         cur = self.read_checkpoint_pointer()
         if cur is not None and cur["batch"] >= batch_id:
             return    # never move the pointer backwards (replays)
-        ptr = self._pointer_path()
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch": int(batch_id), "file": cp_name}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, ptr)
-        dirfd = os.open(os.path.dirname(ptr), os.O_RDONLY)
-        try:
-            os.fsync(dirfd)
-        finally:
-            os.close(dirfd)
+        write_json_durably(self._pointer_path(),
+                           {"batch": int(batch_id), "file": cp_name})
 
     def _publish(self, batch_id: int) -> None:
         """Step 3+4: idempotent, roll-forward-able file publication."""
@@ -418,27 +357,7 @@ class TxnParquetTradesSink(Sink):
                     f"{final_rel} is unpublished but its staged source "
                     f"{staged_rel} is gone — manual intervention needed")
             os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if self.publication == "rename":
-                os.replace(src, dst)   # atomic per file
-            else:
-                # object-store PUT twin: copy + fsync, materialized
-                # atomically (hidden tmp + same-dir replace emulates
-                # the store's per-object atomicity); staged persists
-                # until the batch-level cleanup below — the
-                # staged+final-coexist window is the idempotent-skip
-                # branch above
-                if self.fault is not None:
-                    self.fault(f"put:{final_rel}")
-                tmp = os.path.join(
-                    os.path.dirname(dst),
-                    "." + os.path.basename(dst) + ".put")
-                shutil.copyfile(src, tmp)
-                fd = os.open(tmp, os.O_RDONLY)
-                try:
-                    os.fsync(fd)
-                finally:
-                    os.close(fd)
-                os.replace(tmp, dst)
+            os.replace(src, dst)       # atomic per file
         shutil.rmtree(self._staged(batch_id), ignore_errors=True)
 
     # -- introspection (tests / ops) -----------------------------------

@@ -560,24 +560,6 @@ def test_substring_rolling_twin_shift_invariant_and_fast_path(spark):
         assert r.dup_frac == 0.0
 
 
-def test_substring_removal_plan_rolling_matches_merge_semantics(spark):
-    """Island-merge semantics: the non-owner copy of a planted run is
-    cut in merged spans bounded by the run, the owner and the distinct
-    doc emit no plan rows."""
-    run = "".join(chr(97 + (i * 7) % 26) + str((i * i) % 10)
-                  for i in range(60))
-    docs = spark.createDataFrame(
-        [(0, "x" * 37 + run + "z" * 13),
-         (1, run + "y" * 41),
-         (2, "unique text with no forty-char twin anywhere")],
-        "doc_id long, text string")
-    rows = {r.doc_id: r for r in
-            D.substring_removal_plan(docs).collect()}
-    assert set(rows) == {1}
-    assert D.SPAN_CHARS <= rows[1].removed_chars <= len(run)
-    assert rows[1].kept_chars == len(run) + 41 - rows[1].removed_chars
-
-
 def test_substring_removal_plan_rolling_honors_id_col(spark):
     """ADVICE r7: the rolling kernel once hardcoded doc_id and threw
     on a custom id_col; a renamed id column must give the same plan."""

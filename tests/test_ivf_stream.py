@@ -1,8 +1,10 @@
-"""Streaming IVF index maintenance (streaming/ivf_stream.py): the
-standing index a stream maintains must equal the batch index at the
-same centroids, replay must be idempotent, the drift gate must fire on
-the two documented conditions and clear after retrain, and the retrain
-must equal a fresh batch build over the full corpus."""
+"""Streaming IVF index maintenance (streaming/ivf_stream.py
+StreamingIVFPQIndex, coarse half): the standing postings a stream
+maintains must equal the batch assignment at the same centroids,
+replay must be idempotent, the drift gate must fire on the two
+documented conditions and clear after retrain, and the retrain must
+equal a fresh batch build over the full corpus (the coarse quantizer
+trains on the same Lloyd chain as ``kmeans_fit``)."""
 
 from __future__ import annotations
 
@@ -14,8 +16,11 @@ from currency_market_pulse_spark.operators.kmeans import (
     assign_cells_blas, kmeans_fit,
 )
 from currency_market_pulse_spark.streaming.ivf_stream import (
-    TRAIN_BATCH_ID, StreamingIVFIndex,
+    TRAIN_BATCH_ID, StreamingIVFPQIndex,
 )
+
+# 2-dim vectors = m 2 x sub_dim 1
+_PQ = dict(m=2, sub_dim=1, pq_k=2, pq_iter=1)
 
 
 def _vecs(spark, items):
@@ -36,10 +41,12 @@ def _clusters(n_per, centers, start_id=0):
 
 
 def _index(tmp_path, **kw):
-    return StreamingIVFIndex(
+    return StreamingIVFPQIndex(
         centroids_path=str(tmp_path / "centroids"),
         assign_path=str(tmp_path / "assign"),
-        vectors_path=str(tmp_path / "vectors"), **kw)
+        vectors_path=str(tmp_path / "vectors"),
+        codebooks_path=str(tmp_path / "codebooks"),
+        codes_path=str(tmp_path / "codes"), **_PQ, **kw)
 
 
 def _assign_map(df):

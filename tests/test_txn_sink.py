@@ -367,93 +367,3 @@ def test_live_view_equals_batch_across_crash_replay(spark, tmp_path):
             dict(batch_df.dtypes)
     finally:
         live.stop()
-
-
-# ---------------------------------------------------------------------
-# object-store publication twin (r15): publication="put"
-# ---------------------------------------------------------------------
-
-def test_put_publication_equals_rename(spark, tmp_path):
-    """publication="put" (copy+fsync, no cross-directory rename)
-    produces byte-identical visible content, layout, and manifests to
-    the rename mode — and the batch readers / introspection helpers
-    are oblivious to which mode published."""
-    ren = TxnParquetTradesSink(str(tmp_path / "ren"))
-    put = TxnParquetTradesSink(str(tmp_path / "put"),
-                               publication="put")
-    for b in range(3):
-        df = _batch(spark, range(4 * b, 4 * b + 4), day=1 + b)
-        ren.write(df, b)
-        put.write(df, b)
-    assert ren.visible_files() == put.visible_files()
-    assert _rows(spark, ren.path) == _rows(spark, put.path)
-    assert ren.committed_batches() == put.committed_batches()
-    # no staged leftovers (the empty _staged shell remains in both
-    # modes), no hidden .put tmp files
-    assert not os.listdir(os.path.join(put.path, "_staged"))
-    for root, _d, names in os.walk(put.path):
-        assert not [n for n in names if n.endswith(".put")]
-
-
-def test_put_publication_crash_windows(spark, tmp_path):
-    """Crash the put-mode publish at every per-object window (before
-    the first final lands, between finals, after all finals before
-    staged cleanup) — replay rolls forward from the recorded manifest
-    and the result is byte-equal to the crash-free run.  The
-    staged+final-coexist window unique to put mode (copy does not
-    consume the source) is exercised by every replay."""
-    clean = TxnParquetTradesSink(str(tmp_path / "clean"),
-                                 publication="put")
-    # two trade dates -> two final files per batch = 2 crash windows
-    clean.write(_batch(spark, range(3), day=1), 0)
-    df2 = (_batch(spark, range(3, 6), day=2)
-           .unionAll(_batch(spark, range(6, 9), day=3)))
-    clean.write(df2, 1)
-    clean_rows = _rows(spark, clean.path)
-    clean_files = clean.visible_files()
-
-    for crash_at in (1, 2):
-        calls = {"n": 0}
-
-        def fault(label):
-            calls["n"] += 1
-            if calls["n"] == crash_at:
-                raise RuntimeError(f"injected put crash at {label}")
-
-        root = str(tmp_path / f"crash{crash_at}")
-        sink = TxnParquetTradesSink(root, publication="put",
-                                    fault=fault)
-        calls["n"] = -10**9   # batch 0 publishes fault-free
-        sink.write(_batch(spark, range(3), day=1), 0)
-        import pytest as _pytest
-        calls["n"] = 0        # arm the fault for batch 1
-        with _pytest.raises(RuntimeError, match="injected put crash"):
-            sink.write(df2, 1)
-        # manifest is durable; some finals may exist, staged persists
-        assert os.path.exists(
-            os.path.join(root, "_txn", "batch=1.json"))
-        # restart: healthy sink, engine replays batch 1
-        sink2 = TxnParquetTradesSink(root, publication="put")
-        sink2.write(df2, 1)
-        assert _rows(spark, root) == clean_rows
-        assert sink2.visible_files() == clean_files
-        assert not os.listdir(os.path.join(root, "_staged"))
-
-
-def test_put_mode_feeds_manifest_view(spark, tmp_path):
-    """The manifest-log view source reads a put-published sink
-    exactly as a rename-published one (it never trusted listings)."""
-    from currency_market_pulse_spark.sources.txn_log_source import (
-        _ManifestStreamReader,
-    )
-
-    root = str(tmp_path / "trades")
-    sink = TxnParquetTradesSink(root, publication="put")
-    for b in range(3):
-        sink.write(_batch(spark, range(3 * b, 3 * b + 3), day=1 + b), b)
-    reader = _ManifestStreamReader({"path": root})
-    end = reader.latestOffset()
-    assert end == {"batch": 2}
-    parts = reader.partitions({"batch": -1}, end)
-    assert len(parts) == len(sink.visible_files())
-    assert all(os.path.exists(p.file_path) for p in parts)

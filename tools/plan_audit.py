@@ -6,7 +6,9 @@ Checks per query (where applicable):
 - column pruning (ReadSchema column count vs table width)
 - dimension joins are broadcast, fact-fact joins are not
 - top-k compiles to TakeOrderedAndProject (no global sort)
-- whole-stage codegen covers the plan (no interpreted hot path)
+- whole-stage codegen spans of the final adaptive plan (reported, not
+  asserted: the count of WholeStageCodegen stages after one ``noop``
+  write of the query)
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
@@ -165,14 +167,17 @@ EXPECTATIONS = {
          r"BroadcastHashJoin"),
         # r6: TRAINING runs the BLAS assignment kernel; the SEARCH
         # side still reads only the 4-int code relation (assertion
-        # below: the ADC distance sum exists as a projection, i.e.
-        # the corpus vectors never re-enter the plan after encoding).
+        # below: the ADC distance is one projection summing the
+        # per-query table lookups of the four code columns, i.e. the
+        # corpus vectors never re-enter the plan after encoding —
+        # operators/pq.py _adc_topk).
         ("ADC scoring is a code-relation projection",
-         r"_d0.*_d1.*_d2.*_d3"),
+         r"element_at\(_tab#\d+, c0#.*c1#.*c2#.*c3#"),
     ],
     "documents_token_budget": [
-        ("prefix sum starts with ONE range shuffle",
-         r"Exchange rangepartitioning"),
+        # the ONE range shuffle runs inside the lazily checkpointed
+        # relation (EXECUTION_NODES below), so this plan reads it as
+        # Scan ExistingRDD
         ("per-partition offsets broadcast back", r"BroadcastExchange"),
     ],
     "text_bigram_nll": [
@@ -232,6 +237,17 @@ EXACT_NODES = {
     # the rolling-hash kernel runs once per document
     "text_substring_dedup": ("kernel crosses the Python boundary once",
                              "MapInPandas", 1),
+}
+
+#: query -> (description, regex on a plan node's description, exact
+#: number of matching nodes) across EVERY SQL execution the query
+#: starts: its construction plus one ``noop`` write, final adaptive
+#: plans.  For shuffles that a lazily checkpointed intermediate
+#: (materialize.py ``shared``) runs in an execution of its own, which
+#: the consumer's plan only shows as ``Scan ExistingRDD``.
+EXECUTION_NODES = {
+    "documents_token_budget": ("prefix sum starts with ONE range shuffle",
+                               r"^Exchange rangepartitioning", 1),
 }
 
 # round-5 wave: the new operators' declared scale shapes
@@ -388,6 +404,33 @@ FRESH_BUILDERS = {
 }
 
 
+def _executions(spark) -> list:
+    """The SQL UI's retained executions, once the listener has caught
+    up with every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def _last_execution_id(spark) -> int:
+    return max((e.executionId() for e in _executions(spark)), default=-1)
+
+
+def _plan_nodes_after(spark, last_id: int) -> list[tuple[str, str]]:
+    """(name, description) of every node in the plan graphs of the SQL
+    executions after ``last_id`` (AQE replaces each graph with its
+    final plan)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    out = []
+    for e in _executions(spark):
+        if e.executionId() > last_id:
+            nodes = store.planGraph(e.executionId()).allNodes()
+            out += [(nodes.apply(j).name(), nodes.apply(j).desc())
+                    for j in range(nodes.size())]
+    return out
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(shuffle_partitions=8)
@@ -412,8 +455,12 @@ def main() -> int:
             else:
                 print(f"FAIL  {name}: {desc}  (pattern {rx!r} not found)")
                 failures += 1
-        # codegen spans: '*(n)' markers in simple mode (AQE initial plan)
-        wsc = len(set(re.findall(r"\*\((\d+)\)", qe.simpleString())))
+        # codegen spans exist only in the final adaptive plan: the
+        # unexecuted AQE plan carries no '*(n)' markers
+        last_id = _last_execution_id(spark)
+        df.write.format("noop").mode("overwrite").save()
+        wsc = sum(node.startswith("WholeStageCodegen")
+                  for node, _ in _plan_nodes_after(spark, last_id))
         print(f"      {name}: WholeStageCodegen spans={wsc}")
     for name, (desc, max_n) in MAX_EXCHANGES.items():
         tree = queries[name](spark, sf_dir)._jdf.queryExecution() \
@@ -432,6 +479,17 @@ def main() -> int:
             print(f"ok    {name}: {desc} ({n} {node})")
         else:
             print(f"FAIL  {name}: {desc}  ({n} {node} != {want})")
+            failures += 1
+    for name, (desc, rx, want) in EXECUTION_NODES.items():
+        last_id = _last_execution_id(spark)
+        queries[name](spark, sf_dir).write.format("noop") \
+            .mode("overwrite").save()
+        n = sum(bool(re.search(rx, d))
+                for _, d in _plan_nodes_after(spark, last_id))
+        if n == want:
+            print(f"ok    {name} [runtime]: {desc} ({n} {rx!r})")
+        else:
+            print(f"FAIL  {name} [runtime]: {desc}  ({n} {rx!r} != {want})")
             failures += 1
     # VERDICT r9 item 5: after the offline index phase has built the
     # simhash signatures, the registered query's SEARCH PATH must

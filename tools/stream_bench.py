@@ -227,11 +227,6 @@ def main() -> None:
                          "run, the HARDER case for probe latency")
     ap.add_argument("--neardup-max-segments", type=int, default=8,
                     help="segment budget before a tier (major) merge")
-    ap.add_argument("--txn-publication", choices=["rename", "put"],
-                    default="rename",
-                    help="trade-sink file publication: atomic rename "
-                         "or the object-store PUT twin (copy+fsync, "
-                         "no cross-directory rename — txn_sink.py)")
     ap.add_argument("--txn-retain-manifests", type=int, default=256,
                     help="txn commit-log retention: manifests below "
                          "the checkpoint floor minus N are deleted "
@@ -391,7 +386,6 @@ def main() -> None:
         doc_files_per_trigger=args.doc_files_per_trigger,
         neardup_compact_every=args.neardup_compact_every,
         neardup_max_segments=args.neardup_max_segments,
-        txn_publication=args.txn_publication,
         txn_retain_manifests=(args.txn_retain_manifests or None))
     # accumulate progress DURING the run (keyed by batchId): Spark
     # retains only the last 100 triggers per query, so a single drain
@@ -572,7 +566,6 @@ def main() -> None:
             "stream_shuffle_partitions": args.stream_shuffle_partitions,
             "burst_factor": args.burst_factor,
             "neardup_compact_every": args.neardup_compact_every,
-            "txn_publication": args.txn_publication,
             "txn_retain_manifests": args.txn_retain_manifests,
             "neardup_max_segments": args.neardup_max_segments,
             "fair_weights_env": "retired-r13",
