@@ -238,7 +238,7 @@ def minhash_bands(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     re-evaluate the signature aggregation once per band).  Tiny
     relation: MINHASH_BANDS rows per doc — worth persisting when
     several consumers (or both sides of the candidate self-join) read
-    it (see queries/dedup.py corpus cache)."""
+    it (see plans/prepare.py ``minhash_bands``)."""
     band_structs = F.array(*[
         F.struct(
             F.lit(band).alias("band"),
@@ -525,7 +525,7 @@ def pairs_from_simhash(sigs: DataFrame,
                        id_col: str = "doc_id") -> DataFrame:
     """Identical-signature pairs from a (id, simhash) relation — split
     out so the signature side can be persisted once and read by both
-    join sides (see queries/dedup.py corpus cache)."""
+    join sides (see plans/prepare.py ``simhash16_sigs``)."""
     a, b = sigs.alias("a"), sigs.alias("b")
     return (
         a.join(b, (F.col("a.simhash") == F.col("b.simhash"))

@@ -135,6 +135,27 @@ def lloyd(X: np.ndarray, k: int, n_iter: int):
     return cells, C
 
 
+KMEANS_K = 8
+KMEANS_ITER = 2
+
+#: Corpus-adaptive coarse-quantizer sizing (the SemDeDup contract:
+#: k grows with the corpus so cells stay executor-sized and the
+#: in-cell pair space stays ~n * CELL_TARGET instead of n^2/const —
+#: LINEAR-class dedup work).  k = max(8, ceil(n / COARSE_CELL_TARGET))
+#: — identical to the old fixed k=8 at the sf0.01 driver gate AND the
+#: sf0.1 bench (500 and 2000 vectors both floor at 8), 80 cells at
+#: sf1, 800 at sf10.  The Spark side computes it from one count at
+#: index-build time; every coarse oracle embeds the SAME rule as a
+#: scalar-subquery LIMIT so the differential holds at every SF.
+COARSE_CELL_TARGET = 250
+
+
+def coarse_k(n: int) -> int:
+    import math
+
+    return max(KMEANS_K, math.ceil(n / COARSE_CELL_TARGET))
+
+
 def centroid_frame(spark, cells: np.ndarray, C: np.ndarray) -> DataFrame:
     """(cell, centroid) relation of a driver-side codebook.  From pandas
     so that, with Arrow on (session.py), it is a LocalRelation: a list

@@ -478,7 +478,7 @@ def sq_topk(emb: DataFrame, query_filter, k: int = 5,
     scale = sq_train_scale(emb, id_col, vec_col)
     # pre-compute repartition: the compressed corpus is 1-2 input
     # splits while encode+score is ~dim work per row (input-split
-    # starvation fix, queries/dedup.py _corpus)
+    # starvation fix, plans/prepare.py _tokens)
     par = emb.sparkSession.sparkContext.defaultParallelism
     nz = (emb.repartition(par)
           .withColumn("_nrm", norm(F.col(vec_col)))

@@ -608,7 +608,7 @@ def _token_stream(docs: DataFrame, text_col: str = "text",
                   tokens_df: DataFrame | None = None) -> DataFrame:
     """The exploded (tok) occurrence stream.  ``tokens_df`` — an
     already-tokenized (id, _t array) relation, e.g. the dedup family's
-    session-shared persisted token pass (queries/dedup.py _corpus) —
+    session-shared persisted token pass (plans/prepare.py tokens) —
     skips the scan+tokenize entirely (r17: the CMS family re-tokenized
     the corpus once per subtree; one shared token pass per session is
     the whole point of that cache).  Identity argument: tokens() of
@@ -649,7 +649,7 @@ def cms_sketch(docs: DataFrame, rows: int = CMS_ROWS,
     # pre-explode repartition to full parallelism: compressed parquet
     # keeps the corpus at 1-2 input splits even at sf1 while the
     # per-row work (tokenize + 4 md5s per token) is heavy — the
-    # repo-wide input-split starvation fix (queries/dedup.py _corpus;
+    # repo-wide input-split starvation fix (plans/prepare.py _tokens;
     # measured here: sf1 20.4s -> 5.1s, sf0.1 2.5s -> 1.5s)
     occ = _token_stream(docs, text_col, tokens_df)
     rowed = occ.select(

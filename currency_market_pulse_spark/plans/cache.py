@@ -1,5 +1,8 @@
-"""Param-keyed TTL result cache — the engine twin of the reference's
-memcache layer (trends/listing/service.go:78-124).
+"""The engine's two caches: ``ResultCache`` for query results and
+``SessionStore`` for the relations a session builds once.
+
+``ResultCache`` is a param-keyed TTL result cache — the engine twin of
+the reference's memcache layer (trends/listing/service.go:78-124).
 
 The reference caches gob-encoded query results under the key
 "{fromMs}-{toMs}-{curFrom}-{curTo}" with a 60 s TTL (service.go:83,118)
@@ -15,7 +18,7 @@ from __future__ import annotations
 
 import time
 from collections import OrderedDict
-from threading import Lock
+from threading import Event, Lock
 
 DEFAULT_TTL_S = 60.0  # trends/listing/service.go:118
 
@@ -67,3 +70,84 @@ class ResultCache:
         value = compute()
         self.put(key, value)
         return value
+
+
+class SessionStore:
+    """The build-once cache: what a session derives from an ``sf_dir``
+    once and serves to every query — table plans (sources/catalog.py),
+    the dedup relations and the trained IVF index (plans/prepare.py).
+
+    One entry per (applicationId, sf_dir), so a restarted session never
+    sees another JVM's relations; inside it, one value per name.  At
+    most ``capacity`` entries, LRU.  Eviction unpersists the entry's
+    DataFrames (tuple members too) with ``blocking=False``: a consumer
+    still running over one recomputes it, never reads it corrupted.
+
+    Builds run outside the lock.  A caller that misses a name while
+    another caller builds it waits for that build: a second build
+    would train twice and leave the losing copy persisted.  A failed
+    build is retried by the next caller."""
+
+    def __init__(self, capacity: int = 4):
+        self.capacity = capacity
+        self._lock = Lock()
+        self._entries: OrderedDict[tuple[str, str], dict[str, object]] = \
+            OrderedDict()
+        self._building: dict[tuple, Event] = {}
+
+    @staticmethod
+    def _key(spark, sf_dir: str) -> tuple[str, str]:
+        return spark.sparkContext.applicationId, sf_dir
+
+    def get(self, spark, sf_dir: str, name: str, build):
+        """The value ``name`` of ``sf_dir``'s entry; on a miss,
+        ``build()`` makes it (once, however many callers miss)."""
+        key = self._key(spark, sf_dir)
+        while True:
+            with self._lock:
+                entry = self._entries.get(key)
+                if entry is not None:
+                    self._entries.move_to_end(key)
+                    if name in entry:
+                        return entry[name]
+                done = self._building.get((key, name))
+                if done is None:
+                    done = self._building[(key, name)] = Event()
+                    break
+            done.wait()     # then re-read: the build may have failed
+        try:
+            value = build()
+            with self._lock:
+                # an entry evicted while this build ran is re-created:
+                # the fresh value is the most recently used one
+                self._entries.setdefault(key, {})[name] = value
+                self._entries.move_to_end(key)
+                evicted = [self._entries.popitem(last=False)[1] for _ in
+                           range(len(self._entries) - self.capacity)]
+        finally:
+            with self._lock:
+                del self._building[(key, name)]
+            done.set()
+        for old in evicted:
+            _release(old)
+        return value
+
+    def evict(self, spark, sf_dir: str) -> None:
+        """Drop ``sf_dir``'s entry and unpersist its DataFrames."""
+        with self._lock:
+            old = self._entries.pop(self._key(spark, sf_dir), None)
+        if old is not None:
+            _release(old)
+
+
+def _release(entry: dict[str, object]) -> None:
+    from pyspark.sql import DataFrame
+
+    for value in entry.values():
+        for v in value if isinstance(value, tuple) else (value,):
+            if isinstance(v, DataFrame):
+                v.unpersist(blocking=False)
+
+
+#: the process's one store (see SessionStore)
+SESSION = SessionStore()

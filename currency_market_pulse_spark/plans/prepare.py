@@ -1,34 +1,23 @@
-"""Offline index-build phase: materialize the session-shared trained
-structures a production deployment builds ONCE, before queries run.
+"""The session's build-once structures by name (``BUILDS``), and the
+offline index-build phase that builds them before queries run.
 
-The engine keeps two kinds of state per (session, sf_dir):
+``index(spark, sf_dir, name)`` returns a structure from the session
+store (plans/cache.py ``SESSION``), building it on first use:
 
-- **trained indexes** — the corpus-adaptive coarse quantizer and the
-  IVF-PQ codebooks/codes (queries/ivf.py ``_shared_coarse`` /
-  ``_shared_ivfpq``).  Both quantizers train on the driver from one
-  bounded sample (at most ``TRAIN_ROWS`` hash-smallest vectors,
-  operators/kmeans.py — the whole corpus at every gated scale), and
-  one encode pass over the corpus yields the single persisted
-  (id, cell, dist, c0..c3) relation both handles project.  So the
-  ``coarse_quantizer`` timing carries the whole index build and
-  ``ivfpq_index`` is a cache hit.  These are the relations an ANN
-  deployment persists offline (FAISS trains its quantizer before
-  serving; an IVF index on 100 TB of embeddings is a batch job, not a
-  per-query side effect).
-- **shared scan relations** — the dedup family's token pass and its
-  derived candidate relations (queries/dedup.py ``_corpus``), built
-  lazily by the first consumer.
+- ``ivf_index`` — the trained ANN index: coarse quantizer and IVF-PQ
+  codebooks, trained on the driver from one bounded sample
+  (operators/kmeans.py ``TRAIN_ROWS``), and the one persisted
+  (id, cell, dist, c0..c3) relation of the single encode pass, which
+  the k-means, IVF, IVF-PQ and SemDeDup queries all project.  An ANN
+  deployment builds this offline (FAISS trains its quantizer before
+  serving), not as a per-query side effect.
+- the dedup family's ``tokens`` pass and the candidate relations
+  derived from it.
 
-Both are built lazily on first use, which is correct for ad-hoc
-sessions but smears the one-time build cost into whichever query
-happens to run first — bench.py run-1 measured ~20 s heavier than
-run-2 purely from these first-touch builds (BENCH_QUERIES.json
-``run_totals_sec``).  ``prepare_indexes`` makes the build phase
-explicit and separately timable; bench.py reports it as
-``index_build_sec`` in BENCH_QUERIES.json instead of silently charging
-it to the first unlucky query.  Query timings then measure what a
-deployed engine's queries cost: search over already-built indexes.
-
+Built lazily, the one-time cost would land in whichever query runs
+first (bench.py run-1 measured ~20 s heavier than run-2).
+``prepare_indexes`` makes the build phase explicit and separately
+timable, so query timings measure search over built indexes.
 Decontamination needs no build step: its query is one hash join over
 the split documents.
 """
@@ -37,37 +26,207 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from currency_market_pulse_spark.functions.text import tokens
+from currency_market_pulse_spark.operators import dedup as D
+from currency_market_pulse_spark.operators.kmeans import KMEANS_ITER, coarse_k
+from currency_market_pulse_spark.operators.pq import ivfpq_fit
+from currency_market_pulse_spark.plans.cache import SESSION
+from currency_market_pulse_spark.sources.catalog import (
+    _table_bytes, load_table,
+)
+
+#: Persist the shared TOKEN relation only above this on-disk
+#: documents.parquet size (VERDICT r4 item 1).  The amortization story
+#: is scale-dependent, and both regimes were MEASURED:
+#:   - sf1 (6 MB, 50k docs): the repartition+persist is the win that
+#:     fixed input-split starvation (minhash 15.5s -> 2.5s, SCALE.md);
+#:   - sf0.1 (0.6 MB, 5k docs): the same persist is net-NEGATIVE — the
+#:     first family consumer pays a tiny-corpus shuffle + cache
+#:     materialization + an InMemoryRelation boundary that blocks
+#:     whole-stage codegen fusion, for a relation whose recompute cost
+#:     at 5k docs is small (BENCH_r03->r04: ngram_jaccard 2.43->3.43s).
+#: The DERIVED relations (jaccard pairs, minhash bands, simhash sigs)
+#: stay persisted at every scale: they are tiny (near-dup pairs resp.
+#: rows/doc) so materialization is ~free, while recompute repeats the
+#: expensive candidate join / signature aggregation — unpersisting them
+#: at sf0.1 was measured strictly worse (components 1.9s -> 4.6s, the
+#: iterative closure re-deriving its edge relation).  The derived
+#: relations are persisted for a second reason too: the candidate
+#: self-joins read their signature relation TWICE, and AQE's exchange
+#: reuse does not fire across the persisted-token cache boundary (it
+#: cannot canonicalize two TableCacheQueryStages as equal — tools/
+#: plan_audit.py RUNTIME_EXPECTATIONS note).
+#: 2 MiB sits between the two measured regimes.  Unstatable sizes
+#: (remote paths, missing file) default to PERSIST — at 100 TB the
+#: cache is always the right call, small fixtures are the special case.
+_PERSIST_MIN_BYTES = 2 << 20
+
+
+def _ivf_index(spark: SparkSession, sf_dir: str):
+    """(centroids, codebooks, encoded): centroids and codebooks are
+    local relations, ``encoded`` is persisted and materialized here."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    k = coarse_k(emb.count())   # one count at index-BUILD time
+    cents, codebooks, encoded = ivfpq_fit(emb, k, KMEANS_ITER)
+    # compressed parquet makes the corpus 1-2 input splits even at sf1
+    # (the token relation's lesson): spread the persisted index so
+    # every search over it uses the full executor pool.  Spreading the
+    # narrow encoded rows, not the vectors, keeps the sample's
+    # TakeOrdered free of a shuffle.
+    encoded = encoded.repartition(
+        spark.sparkContext.defaultParallelism).persist()
+    encoded.count()   # materialize once; every consumer reuses
+    return cents, codebooks, encoded
+
+
+def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, token-array) — the pass every dedup family member
+    starts with (parquet scan + lower + regex split).  The PRE-EXPLODE
+    arrays are shared: the exploded string shingles were measured
+    SLOWER to cache than to recompute JVM-side (r2), so shingling stays
+    recompute-from-tokens."""
+    # repartition to full parallelism in EVERY regime: a text corpus is
+    # small ON DISK (compressed parquet — sf0.1's 5k docs are ONE input
+    # split, sf1's 50k two) but the family's derived work (shingle
+    # explode -> 3 md5/shingle) is heavy PER ROW, so scan-aligned
+    # partitioning strands 30+ of 32 cores (measured at sf1: minhash
+    # 15.5s -> 4.3s; at sf0.1 dropping the repartition cost minhash
+    # 1.4s -> 2.3s).  The shuffle itself is tiny (corpus rows,
+    # pre-explode).
+    toks = (load_table(spark, sf_dir, "documents")
+            .select("doc_id", tokens(F.col("text")).alias("_t"))
+            .repartition(spark.sparkContext.defaultParallelism))
+    size = _table_bytes(sf_dir, "documents")
+    if size is None or size >= _PERSIST_MIN_BYTES:
+        toks = toks.persist()
+    return toks
+
+
+def tokens_if_persisted(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+    """The shared token relation ONLY when it is actually persisted
+    (the >= _PERSIST_MIN_BYTES regime), else None so consumers fall
+    back to their own scan+tokenize.
+
+    r17 measurement: below the persist threshold the "shared" relation
+    is a plain unpersisted plan ending in a repartition — every
+    consumer subtree then re-runs scan+tokenize AND pays the
+    repartition exchange, which is strictly worse than the consumer's
+    own fused scan+tokenize (tfidf_top_terms regressed 1.3 -> 3.4 s at
+    sf0.1 when it consumed the unpersisted relation: its n_docs count,
+    previously a column-pruned scan-only count, became a full
+    tokenize+shuffle).  Above the threshold the relation is cached
+    once for the whole text/dedup family and sharing is the win the
+    family has measured since r2."""
+    toks = index(spark, sf_dir, "tokens")
+    return toks if toks.is_cached else None
+
+
+def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id_a, id_b, jaccard) — the expensive shingle self-join,
+    consumed verbatim by dedup_ngram_jaccard and both components
+    queries (VERDICT r2 item 7); tiny (near-dup candidates)."""
+    toks = index(spark, sf_dir, "tokens")
+    # materialize (r18, VERDICT r17 item 3) — SMALL regime only (the
+    # token relation unpersisted): below _PERSIST_MIN_BYTES the build
+    # is driver/scheduling-bound and one materialized copy of the
+    # capped shingle relation beats re-deriving it per self-join side
+    # (interleaved A/B at sf0.1, min of 5: 1.67 -> 1.35 s, -19%).
+    # ABOVE the threshold the derivation is parallel executor compute
+    # and recomputation wins — the barrier + block I/O cost more (sf1
+    # interleaved A/Bs: recompute 3.56 s vs localCheckpoint 4.78 vs
+    # persist 4.28, min-vs-min) — so the at-scale path keeps the
+    # two-sided derivation, exactly like the C5 token-sharing split.
+    return D.ngram_jaccard_pairs(
+        None, n=3, threshold=0.5,
+        shingles_df=D.shingles_from_tokens(toks, n=3),
+        materialize=not toks.is_cached,
+    ).persist()
+
+
+def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MINHASH_BANDS rows per doc, read twice by the band self-join."""
+    return D.minhash_bands(D.minhash_signatures(
+        None, shingles_df=D.shingles_from_tokens(
+            index(spark, sf_dir, "tokens"), n=3))).persist()
+
+
+def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MinHash-LSH candidate PAIR relation: `dedup_minhash_lsh`
+    returns it verbatim, the LSH pipeline probes it twice (semi-join
+    prune ids + verify join), and the recall gate compares against it
+    — without the share, each consumer re-runs the band self-join."""
+    return D.pairs_from_bands(
+        index(spark, sf_dir, "minhash_bands")).persist()
+
+
+def _simhash60_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return D.simhash(None, bits=D.SIMHASH64_BITS,
+                     tokens_df=index(spark, sf_dir, "tokens")).persist()
+
+
+def _simhash60_n(spark: SparkSession, sf_dir: str) -> int:
+    """Row count of ``simhash60_sigs``, counted at index-BUILD time
+    (VERDICT r9 item 5): the corpus-adaptive band geometry needs
+    n_docs, and counting inside the registered query made the search
+    path trigger an extra action per invocation.  The count IS the
+    action that materializes the persisted signatures, so it is free,
+    and ``dedup_simhash``'s search path is action-free once
+    ``prepare_indexes`` has run."""
+    return index(spark, sf_dir, "simhash60_sigs").count()
+
+
+def _simhash16_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return D.simhash(None,
+                     tokens_df=index(spark, sf_dir, "tokens")).persist()
+
+
+BUILDS = {
+    "ivf_index": _ivf_index,
+    "tokens": _tokens,
+    "jaccard_pairs": _jaccard_pairs,
+    "minhash_bands": _minhash_bands,
+    "minhash_pairs": _minhash_pairs,
+    "simhash60_sigs": _simhash60_sigs,
+    "simhash60_n": _simhash60_n,
+    "simhash16_sigs": _simhash16_sigs,
+}
+
+
+def index(spark: SparkSession, sf_dir: str, name: str):
+    """The session-shared structure ``name`` (a key of ``BUILDS``) of
+    ``sf_dir``, built on first use."""
+    build = BUILDS[name]
+    return SESSION.get(spark, sf_dir, name, lambda: build(spark, sf_dir))
 
 
 def prepare_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     """Build every session-shared trained structure for ``sf_dir`` and
     return {structure: build_seconds}.  Idempotent — rebuilding an
     already-cached structure is a cache hit (~0 s)."""
-    from currency_market_pulse_spark.queries import dedup as qd
-    from currency_market_pulse_spark.queries import ivf as qi
-
     times: dict[str, float] = {}
 
-    def _timed(name: str, fn) -> None:
+    def _timed(key: str, fn) -> None:
         t0 = time.time()
         fn()
-        times[name] = round(time.time() - t0, 3)
+        times[key] = round(time.time() - t0, 3)
 
-    # trained ANN index: one sample, one encode pass (see docstring)
-    _timed("coarse_quantizer", lambda: qi._shared_coarse(spark, sf_dir))
-    _timed("ivfpq_index", lambda: qi._shared_ivfpq(spark, sf_dir))
+    # the trained ANN index is ONE build (one sample, one encode pass),
+    # so ``coarse_quantizer`` carries all of it and ``ivfpq_index`` is
+    # a cache hit
+    _timed("coarse_quantizer", lambda: index(spark, sf_dir, "ivf_index"))
+    _timed("ivfpq_index", lambda: index(spark, sf_dir, "ivf_index"))
     # dedup family: token pass + persisted derived candidate relations
     _timed("token_relation",
-           lambda: qd._shared_tokens(spark, sf_dir).count())
+           lambda: index(spark, sf_dir, "tokens").count())
     _timed("jaccard_pairs",
-           lambda: qd._shared_jaccard_pairs(spark, sf_dir).count())
+           lambda: index(spark, sf_dir, "jaccard_pairs").count())
     _timed("minhash_bands",
-           lambda: qd._shared_band_pairs(spark, sf_dir).count())
+           lambda: index(spark, sf_dir, "minhash_pairs").count())
     # simhash signatures + the corpus count driving the adaptive band
-    # geometry (VERDICT r9 item 5): counting here makes dedup_simhash's
-    # search path action-free.
-    _timed("simhash_sigs",
-           lambda: qd._shared_simhash60(spark, sf_dir))
+    # geometry: counting here makes dedup_simhash's search path
+    # action-free
+    _timed("simhash_sigs", lambda: index(spark, sf_dir, "simhash60_n"))
     times["total"] = round(sum(times.values()), 3)
     return times

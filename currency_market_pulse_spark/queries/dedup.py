@@ -5,232 +5,20 @@ oracle that reproduces the identical (md5-family) hash math.
 
 from __future__ import annotations
 
-import os
-import threading
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from currency_market_pulse_spark.functions.text import tokens
 from currency_market_pulse_spark.materialize import shared
 from currency_market_pulse_spark.operators import dedup as D
+from currency_market_pulse_spark.plans.prepare import index
 from currency_market_pulse_spark.queries.registry import extra_query, query
 from currency_market_pulse_spark.sources.catalog import load_table
 from currency_market_pulse_spark.functions.vectors import ORACLE_EMB_CTE
 
-# Shared corpus relations, cached per (application, sf_dir): the whole
-# text-dedup family (jaccard, minhash, simhash, containment, both
-# components variants) runs over the same documents corpus, so the
-# common prefixes are computed ONCE and persisted:
-#
-# - "tokens": (doc_id, token-array).  Every family member starts with
-#   parquet-scan + lower + regex-split; persisting the PRE-EXPLODE
-#   arrays shares that pass (the exploded string shingles were measured
-#   SLOWER to cache than to recompute JVM-side — r2 negative result —
-#   so shingling stays recompute-from-tokens).
-# - "pairs": the (id_a, id_b, jaccard) relation — the expensive shingle
-#   self-join, consumed verbatim by dedup_ngram_jaccard and both
-#   components queries (VERDICT r2 item 7); tiny (near-dup candidates).
-#
-# Capacity 2, LRU (ADVICE r3 item 4): a single-slot cache thrashed when
-# two sf_dirs interleave, and eviction-under-lock could yank a persisted
-# block out from under a concurrently-running consumer in another
-# worker thread.  With 2 slots the interleaving pattern (driver gate at
-# one sf, pytest at another) never evicts a live entry; eviction uses
-# blocking=False so even a pathological third sf_dir only costs the
-# straggler a recompute, never corruption.
-_CACHE_CAP = 2
-_CORPUS_CACHE: OrderedDict[tuple[str, str], dict[str, object]] = OrderedDict()
-_CORPUS_LOCK = threading.Lock()
-
-#: Persist/repartition the shared TOKEN relation only above this
-#: on-disk documents.parquet size (VERDICT r4 item 1).  The
-#: amortization story is scale-dependent, and both regimes were
-#: MEASURED:
-#:   - sf1 (6 MB, 50k docs): the repartition+persist is the win that
-#:     fixed input-split starvation (minhash 15.5s -> 2.5s, SCALE.md);
-#:   - sf0.1 (0.6 MB, 5k docs): the same persist is net-NEGATIVE — the
-#:     first family consumer pays a tiny-corpus shuffle + cache
-#:     materialization + an InMemoryRelation boundary that blocks
-#:     whole-stage codegen fusion, for a relation whose recompute cost
-#:     at 5k docs is small (BENCH_r03->r04: ngram_jaccard 2.43->3.43s).
-#: The DERIVED relations (jaccard pairs, minhash bands, simhash sigs)
-#: stay persisted at every scale: they are tiny (near-dup pairs resp.
-#: rows/doc) so materialization is ~free, while recompute repeats the
-#: expensive candidate join / signature aggregation — unpersisting them
-#: at sf0.1 was measured strictly worse (components 1.9s -> 4.6s, the
-#: iterative closure re-deriving its edge relation).
-#: 2 MiB sits between the two measured regimes.  Unstatable sizes
-#: (remote paths, missing file) default to PERSIST — at 100 TB the
-#: cache is always the right call, small fixtures are the special case.
-_PERSIST_MIN_BYTES = 2 << 20
-
-
-def _corpus_is_small(sf_dir: str) -> bool:
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path))
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        return False
-    return size < _PERSIST_MIN_BYTES
-
-
-def _corpus(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _CORPUS_LOCK:  # harness may run queries from worker threads
-        entry = _CORPUS_CACHE.get(key)
-        if entry is None:
-            while len(_CORPUS_CACHE) >= _CACHE_CAP:
-                _, old = _CORPUS_CACHE.popitem(last=False)
-                for df in old.values():
-                    try:
-                        df.unpersist(blocking=False)
-                    except Exception:
-                        pass
-            docs = load_table(spark, sf_dir, "documents")
-            small = _corpus_is_small(sf_dir)
-            # repartition to full parallelism in EVERY regime: a text
-            # corpus is small ON DISK (compressed parquet — sf0.1's 5k
-            # docs are ONE input split, sf1's 50k two) but the family's
-            # derived work (shingle explode -> 3 md5/shingle) is heavy
-            # PER ROW, so scan-aligned partitioning strands 30+ of 32
-            # cores (measured at sf1: minhash 15.5s -> 4.3s; at sf0.1
-            # dropping the repartition cost minhash 1.4s -> 2.3s).  The
-            # shuffle itself is tiny (corpus rows, pre-explode).
-            toks = (docs
-                    .select("doc_id", tokens(F.col("text")).alias("_t"))
-                    .repartition(spark.sparkContext.defaultParallelism))
-            if not small:
-                # persist only above the size threshold — see
-                # _PERSIST_MIN_BYTES for both measured regimes.
-                toks = toks.persist()
-            entry = {"tokens": toks, "_small": small}
-            _CORPUS_CACHE[key] = entry
-        else:
-            _CORPUS_CACHE.move_to_end(key)
-        return entry
-
-
-def _shared_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _corpus(spark, sf_dir)["tokens"]
-
-
-def _shared_tokens_if_persisted(spark: SparkSession,
-                                sf_dir: str) -> DataFrame | None:
-    """The shared token relation ONLY when it is actually persisted
-    (the >= _PERSIST_MIN_BYTES regime), else None so consumers fall
-    back to their own scan+tokenize.
-
-    r17 measurement: below the persist threshold the "shared" relation
-    is a plain unpersisted plan ending in a repartition — every
-    consumer subtree then re-runs scan+tokenize AND pays the
-    repartition exchange, which is strictly worse than the consumer's
-    own fused scan+tokenize (tfidf_top_terms regressed 1.3 -> 3.4 s at
-    sf0.1 when it consumed the unpersisted relation: its n_docs count,
-    previously a column-pruned scan-only count, became a full
-    tokenize+shuffle).  Above the threshold the relation is cached
-    once for the whole text/dedup family and sharing is the win the
-    family has measured since r2."""
-    entry = _corpus(spark, sf_dir)
-    return None if entry.get("_small") else entry["tokens"]  # type: ignore[return-value]
-
-
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-gram shingle relation derived (NOT persisted — see cache note)
-    from the shared token arrays."""
-    return D.shingles_from_tokens(_shared_tokens(spark, sf_dir), n=3)
-
-
-def _shared_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    entry = _corpus(spark, sf_dir)
-    with _CORPUS_LOCK:
-        df = entry.get("pairs")
-        if df is None:
-            # materialize (r18, VERDICT r17 item 3) — SMALL regime
-            # only: below _PERSIST_MIN_BYTES the build is driver/
-            # scheduling-bound and one materialized copy of the capped
-            # shingle relation beats re-deriving it per self-join side
-            # (interleaved A/B at sf0.1, min of 5: 1.67 -> 1.35 s,
-            # -19%).  ABOVE the threshold the derivation is parallel
-            # executor compute and recomputation wins — the barrier +
-            # block I/O cost more (sf1 interleaved A/Bs: recompute
-            # 3.56 s vs localCheckpoint 4.78 vs persist 4.28,
-            # min-vs-min) — so the at-scale path keeps the two-sided
-            # derivation, exactly like the C5 token-sharing split.
-            df = D.ngram_jaccard_pairs(
-                None, n=3, threshold=0.5,
-                shingles_df=D.shingles_from_tokens(entry["tokens"], n=3),
-                materialize=bool(entry.get("_small")),
-            ).persist()
-            entry["pairs"] = df
-    return df
-
-
-def _shared_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MinHash-LSH candidate PAIR relation, persisted in the corpus
-    cache: `dedup_minhash_lsh` returns it verbatim, the LSH pipeline
-    probes it twice (semi-join prune ids + verify join), and the
-    recall gate compares against it — without the share, each consumer
-    re-runs the band self-join."""
-    bands = _shared_derived(
-        spark, sf_dir, "minhash_bands",
-        lambda toks: D.minhash_bands(D.minhash_signatures(
-            None, shingles_df=D.shingles_from_tokens(toks, n=3))))
-    entry = _corpus(spark, sf_dir)
-    with _CORPUS_LOCK:
-        df = entry.get("minhash_cand")
-        if df is None:
-            df = D.pairs_from_bands(bands).persist()
-            entry["minhash_cand"] = df
-    return df
-
-
-def _shared_simhash60(spark: SparkSession,
-                      sf_dir: str) -> tuple[DataFrame, int]:
-    """The 60-bit signature relation AND its row count, both computed
-    at index-BUILD time (VERDICT r9 item 5): the corpus-adaptive band
-    geometry needs n_docs, and counting inside the registered query
-    made the search path trigger an extra action per invocation.
-    Counting here — once, when the persisted relation materializes
-    (the count IS the materializing action, so it is free) — keeps
-    ``dedup_simhash``'s search path action-free after
-    ``plans.prepare.prepare_indexes`` has run."""
-    sigs = _shared_derived(
-        spark, sf_dir, "simhash60_sigs",
-        lambda toks: D.simhash(None, bits=D.SIMHASH64_BITS,
-                               tokens_df=toks))
-    entry = _corpus(spark, sf_dir)
-    with _CORPUS_LOCK:
-        n = entry.get("simhash60_n")
-    if n is None:
-        n = sigs.count()  # action outside the lock; a racing double
-        with _CORPUS_LOCK:  # count is idempotent (same relation)
-            entry["simhash60_n"] = n
-    return sigs, n
-
-
-def _shared_derived(spark: SparkSession, sf_dir: str, key: str,
-                    build) -> DataFrame:
-    """Persist a small derived relation (minhash bands, simhash sigs)
-    in the corpus cache.  Rationale: the candidate self-joins read
-    their signature relation TWICE, and AQE's exchange reuse does not
-    fire across the persisted-token cache boundary (it cannot
-    canonicalize two TableCacheQueryStages as equal — tools/
-    plan_audit.py RUNTIME_EXPECTATIONS note), so without this the
-    whole signature aggregation executes once per join side.  The
-    relations are tiny: MINHASH_BANDS rows/doc resp. 1 row/doc."""
-    entry = _corpus(spark, sf_dir)
-    with _CORPUS_LOCK:
-        df = entry.get(key)
-        if df is None:
-            df = build(entry["tokens"]).persist()
-            entry[key] = df
-    return df
+    """3-gram shingle relation derived (NOT persisted — see
+    plans/prepare.py ``_tokens``) from the shared token arrays."""
+    return D.shingles_from_tokens(index(spark, sf_dir, "tokens"), n=3)
 
 
 # shared oracle CTEs (DuckDB) — twins of functions/text.py primitives
@@ -299,7 +87,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Served from the shared persisted pair relation so the components
     queries reuse the join instead of recomputing it."""
-    return _shared_jaccard_pairs(spark, sf_dir)
+    return index(spark, sf_dir, "jaccard_pairs")
 
 
 def _minhash_band_ctes() -> str:
@@ -338,10 +126,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shingles come from the shared persisted token relation (one
     tokenize pass across the whole dedup family); the band relation is
     itself persisted so the candidate self-join's two sides read it
-    instead of re-running the signature aggregation (_shared_derived),
-    and the resulting PAIR relation is persisted for the pipeline and
-    recall-gate consumers (_shared_band_pairs)."""
-    return _shared_band_pairs(spark, sf_dir)
+    instead of re-running the signature aggregation (``minhash_bands``
+    in plans/prepare.py), and the resulting PAIR relation is persisted
+    for the pipeline and recall-gate consumers (``minhash_pairs``)."""
+    return index(spark, sf_dir, "minhash_pairs")
 
 
 def _simhash60_oracle() -> str:
@@ -420,10 +208,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= n/2^margin — linear-class at 10^9 docs, where the fixed 15-bit
     bands' n^2/2^15 collision term would go quadratic.  The count
     driving the rule is computed ONCE at signature-build time
-    (``_shared_simhash60``, part of ``prepare_indexes`` — VERDICT r9
+    (``simhash60_n``, part of ``prepare_indexes`` — VERDICT r9
     item 5), so the search path here triggers no extra action; the
     oracle computes the identical rule from count(sims) in SQL."""
-    sigs, n_docs = _shared_simhash60(spark, sf_dir)
+    sigs = index(spark, sf_dir, "simhash60_sigs")
+    n_docs = index(spark, sf_dir, "simhash60_n")
     n_bands = D.adaptive_simhash_bands(n_docs)
     return D.simhash_hamming_pairs(sigs, k=n_bands - 1,
                                    bits=D.SIMHASH64_BITS)
@@ -457,9 +246,7 @@ def dedup_simhash_bucket16(spark: SparkSession, sf_dir: str) -> DataFrame:
     outgrows 2^16 signatures.  Kept library-tier as the measured
     counter-example and for small-corpus use (sketch cost O(1)/doc
     where n << 2^bits)."""
-    sigs = _shared_derived(
-        spark, sf_dir, "simhash_sigs",
-        lambda toks: D.simhash(None, tokens_df=toks))
+    sigs = index(spark, sf_dir, "simhash16_sigs")
     return D.pairs_from_simhash(sigs)
 
 
@@ -495,7 +282,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation has not converged).  The oracle computes the same transitive
     closure with a recursive CTE — differential proof that the
     distributed iteration converges to the exact components."""
-    pairs = _shared_jaccard_pairs(spark, sf_dir)
+    pairs = index(spark, sf_dir, "jaccard_pairs")
     from currency_market_pulse_spark.operators.components import (
         connected_components,
     )
@@ -556,7 +343,7 @@ def dedup_lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    cand = _shared_band_pairs(spark, sf_dir)
+    cand = index(spark, sf_dir, "minhash_pairs")
     # r18 (VERDICT r17 item 4): connected_components now symmetrizes
     # via a single explode (components.py), so the verify subtree is
     # referenced — and executed — exactly once; no materialization of
@@ -734,7 +521,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    comp = connected_components(_shared_jaccard_pairs(spark, sf_dir))
+    comp = connected_components(index(spark, sf_dir, "jaccard_pairs"))
     dropped = (comp.filter(F.col("node") != F.col("comp"))
                .select(F.col("node").alias("doc_id"),
                        F.lit(True).alias("_drop")))
@@ -782,7 +569,7 @@ def dedup_survivors_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    comp = connected_components(_shared_jaccard_pairs(spark, sf_dir))
+    comp = connected_components(index(spark, sf_dir, "jaccard_pairs"))
     withq = comp.join(docs.select("doc_id", "n_chars"),
                       comp["node"] == F.col("doc_id")).drop("doc_id")
     w = Window.partitionBy("comp").orderBy(F.desc("n_chars"), "node")
@@ -850,7 +637,7 @@ def documents_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sp = hash_split(docs, "doc_id", SPLIT_WEIGHTS).select("doc_id", "split")
-    pairs = _shared_jaccard_pairs(spark, sf_dir)
+    pairs = index(spark, sf_dir, "jaccard_pairs")
     a = sp.select(F.col("doc_id").alias("id_a"),
                   F.col("split").alias("_sa"))
     b = sp.select(F.col("doc_id").alias("id_b"),
@@ -919,10 +706,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     family's shared one-pass token relation."""
     from currency_market_pulse_spark.operators.sampling import hash_fraction
 
-    bands = _shared_derived(
-        spark, sf_dir, "minhash_bands",
-        lambda toks: D.minhash_bands(D.minhash_signatures(
-            None, shingles_df=D.shingles_from_tokens(toks, n=3))))
+    bands = index(spark, sf_dir, "minhash_bands")
     is_new = hash_fraction(F.col("doc_id"), INCR_SEED) < INCR_NEW_FRAC
     cand = D.cross_corpus_candidates(bands.filter(is_new),
                                      bands.filter(~is_new))
@@ -1019,8 +803,8 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round, so a band/row re-tune that silently tanks recall
     fails the gate instead of shipping.  Both relations come from the
     family's shared token pass."""
-    exact = _shared_jaccard_pairs(spark, sf_dir).select("id_a", "id_b")
-    cand = _shared_band_pairs(spark, sf_dir)
+    exact = index(spark, sf_dir, "jaccard_pairs").select("id_a", "id_b")
+    cand = index(spark, sf_dir, "minhash_pairs")
     found = exact.join(cand, ["id_a", "id_b"], "left_semi")
     return (exact.agg(F.count(F.lit(1)).alias("n_exact"))
             .crossJoin(cand.agg(F.count(F.lit(1)).alias("n_candidates")))

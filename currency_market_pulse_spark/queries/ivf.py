@@ -21,7 +21,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from currency_market_pulse_spark.functions.vectors import (
     ORACLE_EMB_CTE, cosine, dot, norm, oracle_cosine_sql,
 )
-from currency_market_pulse_spark.operators.kmeans import TRAIN_ROWS
+from currency_market_pulse_spark.operators.kmeans import (
+    COARSE_CELL_TARGET, KMEANS_ITER, KMEANS_K, TRAIN_ROWS,
+)
+from currency_market_pulse_spark.plans.prepare import index
 from currency_market_pulse_spark.queries.registry import extra_query, query
 from currency_market_pulse_spark.sources.catalog import load_table
 
@@ -122,97 +125,20 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") <= 3))
 
 
-KMEANS_K = 8
-KMEANS_ITER = 2
 _DIM = 64
-
-#: Corpus-adaptive coarse-quantizer sizing (the SemDeDup contract:
-#: k grows with the corpus so cells stay executor-sized and the
-#: in-cell pair space stays ~n * CELL_TARGET instead of n^2/const —
-#: LINEAR-class dedup work).  k = max(8, ceil(n / COARSE_CELL_TARGET))
-#: — identical to the old fixed k=8 at the sf0.01 driver gate AND the
-#: sf0.1 bench (500 and 2000 vectors both floor at 8), 80 cells at
-#: sf1, 800 at sf10.  The Spark side computes it from one count at
-#: index-build time; every coarse oracle embeds the SAME rule as a
-#: scalar-subquery LIMIT so the differential holds at every SF.
-COARSE_CELL_TARGET = 250
-
-
-def coarse_k(n: int) -> int:
-    import math
-
-    return max(KMEANS_K, math.ceil(n / COARSE_CELL_TARGET))
 
 
 def _coarse_k_sql(emb: str = "emb") -> str:
     return (f"(SELECT greatest({KMEANS_K}, CAST(ceil(count(*) / "
             f"{COARSE_CELL_TARGET}.0) AS BIGINT)) FROM {emb})")
 
-# Session-shared trained IVF-PQ index (the queries/dedup.py corpus
-# cache pattern): six query families consume the SAME corpus-adaptive
-# (k = coarse_k(n), 2-iter) coarse quantizer over the same embeddings
-# table — k-means cells, the silhouette gate, trained-IVF search,
-# IVF-PQ, SemDeDup and the registered cell-bounded embedding dedup.
-# Training it once per (session, sf_dir) and persisting the ONE
-# relation the index stores — (id, cell, dist, c0..c3) from
-# operators/pq.py ivfpq_fit's single encode pass — is exactly what a
-# production deployment does: the quantizers are built offline once,
-# not retrained per query.  The coarse assignment and the IVF-PQ
-# members are projections of it.
-_COARSE_CACHE: "OrderedDict[tuple[str, str], dict]" = None  # type: ignore
-
-
-def _shared_index(spark: SparkSession, sf_dir: str) -> dict:
-    """{"centroids", "codebooks", "encoded"} for ``sf_dir``: centroids
-    and codebooks are local relations, ``encoded`` is persisted and
-    materialized on first use."""
-    global _COARSE_CACHE
-    from collections import OrderedDict
-
-    from currency_market_pulse_spark.operators.pq import ivfpq_fit
-
-    if _COARSE_CACHE is None:
-        _COARSE_CACHE = OrderedDict()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    entry = _COARSE_CACHE.get(key)
-    if entry is None:
-        while len(_COARSE_CACHE) >= 4:
-            _, old = _COARSE_CACHE.popitem(last=False)
-            old["encoded"].unpersist(blocking=False)
-        emb = load_table(spark, sf_dir, "embeddings")
-        k = coarse_k(emb.count())   # one count at index-BUILD time
-        cents, codebooks, encoded = ivfpq_fit(emb, k, KMEANS_ITER)
-        # compressed parquet makes the corpus 1-2 input splits even at
-        # sf1 (the queries/dedup.py corpus-cache lesson): spread the
-        # persisted index so every search over it uses the full
-        # executor pool.  Spreading the narrow encoded rows, not the
-        # vectors, keeps the sample's TakeOrdered free of a shuffle.
-        encoded = encoded.repartition(
-            spark.sparkContext.defaultParallelism).persist()
-        encoded.count()   # materialize once; every consumer reuses
-        entry = {"centroids": cents, "codebooks": codebooks,
-                 "encoded": encoded}
-        _COARSE_CACHE[key] = entry
-    else:
-        _COARSE_CACHE.move_to_end(key)
-    return entry
-
 
 def _shared_coarse(spark: SparkSession, sf_dir: str):
-    """(centroids, assigned) of the session-shared coarse quantizer;
-    assigned = (vec_id, cell, dist), a projection of the persisted
-    index relation."""
-    entry = _shared_index(spark, sf_dir)
-    return (entry["centroids"],
-            entry["encoded"].select("vec_id", "cell", "dist"))
-
-
-def _shared_ivfpq(spark: SparkSession, sf_dir: str):
-    """Session-shared IVF-PQ index: (coarse_centroids, codebooks,
-    members), members = the persisted (id, cell, dist, c0..c3)
-    relation itself."""
-    entry = _shared_index(spark, sf_dir)
-    return entry["centroids"], entry["codebooks"], entry["encoded"]
+    """(centroids, assigned) of the session-shared trained index
+    (plans/prepare.py ``ivf_index``); assigned = (vec_id, cell, dist),
+    a projection of the persisted index relation."""
+    centroids, _, encoded = index(spark, sf_dir, "ivf_index")
+    return centroids, encoded.select("vec_id", "cell", "dist")
 
 
 def _kmeans_ctes(k: int | str = KMEANS_K, n_iter: int = KMEANS_ITER,
@@ -965,7 +891,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(emb, F.col("vec_id") < 10, k_neighbors=3,
-                      index=_shared_ivfpq(spark, sf_dir))
+                      index=index(spark, sf_dir, "ivf_index"))
 
 
 @extra_query("sim_ivf_topk_probe2", oracle=_PROBE2_ORACLE)

@@ -934,16 +934,16 @@ def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session for the whole text family.  Below the threshold the
     # relation is an unpersisted repartition plan and consuming it is
     # strictly worse than the operator's own fused scan+tokenize
-    # (queries/dedup.py _shared_tokens_if_persisted), so small fixtures
+    # (plans/prepare.py tokens_if_persisted), so small fixtures
     # keep the raw path.  orderBy + limit stays: it compiles to
     # TakeOrderedAndProject (no global sort), and the top-20 cut IS
     # the query's semantics.
-    from currency_market_pulse_spark.queries.dedup import (
-        _shared_tokens_if_persisted,
+    from currency_market_pulse_spark.plans.prepare import (
+        tokens_if_persisted,
     )
     est = X.cms_estimates(
         load_table(spark, sf_dir, "documents"),
-        tokens_df=_shared_tokens_if_persisted(spark, sf_dir))
+        tokens_df=tokens_if_persisted(spark, sf_dir))
     return (est.select("tok", "est")
             .orderBy(F.desc("est"), "tok").limit(20))
 

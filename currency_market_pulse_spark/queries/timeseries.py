@@ -139,18 +139,18 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation is an unpersisted repartition plan and consuming it was
     # measured strictly worse (tfidf 1.3 -> 3.4 s at sf0.1: the n_docs
     # count, previously a column-pruned scan-only count, became a full
-    # tokenize+shuffle) — see queries/dedup.py
-    # _shared_tokens_if_persisted.  Same tokens() expression either
+    # tokenize+shuffle) — see plans/prepare.py
+    # tokens_if_persisted.  Same tokens() expression either
     # way (tokens() IS split(lower, \\s+)); tokens() of NULL text is a
     # NULL array and explode drops it, matching the raw path.  n_docs
     # always counts the raw scan (column-pruned — cheapest) and stays
     # a lazy broadcast-1-row join.
-    from currency_market_pulse_spark.queries.dedup import (
-        _shared_tokens_if_persisted,
+    from currency_market_pulse_spark.plans.prepare import (
+        tokens_if_persisted,
     )
     docs = load_table(spark, sf_dir, "documents")
     n = docs.agg(F.count("*").cast("double").alias("n_docs"))
-    shared = _shared_tokens_if_persisted(spark, sf_dir)
+    shared = tokens_if_persisted(spark, sf_dir)
     if shared is not None:
         toks = shared.select("doc_id", F.explode("_t").alias("tok"))
     else:

@@ -23,10 +23,10 @@ for free from the declarative plans built on top.
 from __future__ import annotations
 
 import os
-import threading
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from currency_market_pulse_spark.plans.cache import SESSION
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -35,19 +35,17 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Catalog metadata cache: ``spark.read.parquet`` re-lists the directory
-# and re-reads parquet footers for schema inference on EVERY call — a
-# driver-side job that costs 50-150 ms per table load, repeated for
-# every query in a 50-query gate run (measured ~0.1-0.25 s of each
-# query's wall was plan construction dominated by this).  A real
-# catalog resolves a table name to a cached relation; so does this one.
-# The cached object is only an analyzed LOGICAL PLAN (no data is
-# pinned); fixtures are immutable so staleness is not a concern, and
-# the key includes the applicationId so a restarted session never sees
-# another JVM's plan.
-_TABLE_CACHE: OrderedDict[tuple[str, str, str], DataFrame] = OrderedDict()
-_TABLE_CACHE_CAP = 64
-_TABLE_LOCK = threading.Lock()
+# Table plans live in the session store (plans/cache.py SESSION):
+# ``spark.read.parquet`` re-lists the directory and re-reads parquet
+# footers for schema inference on EVERY call — a driver-side job that
+# costs 50-150 ms per table load, repeated for every query in a
+# 50-query gate run (measured ~0.1-0.25 s of each query's wall was plan
+# construction dominated by this).  A real catalog resolves a table
+# name to a cached relation; so does this one.  The cached object is
+# only an analyzed LOGICAL PLAN (no data is pinned); fixtures are
+# immutable so staleness is not a concern, and the store's key
+# includes the applicationId so a restarted session never sees another
+# JVM's plan.
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
@@ -66,18 +64,17 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; normalizes event-time to ms-precision
-    TimestampType (see module docstring).  Cached per
-    (application, sf_dir, table) — see _TABLE_CACHE."""
+    TimestampType (see module docstring).  The plan is built once per
+    (application, sf_dir, table) — see the session-store note above."""
     # confs are (re)pinned on every load, cache hit or miss: the UTC
     # timezone is read at EXECUTION time, so a caller that reset it
     # between loads would otherwise execute a cached plan wrong
     ensure_session_confs(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    with _TABLE_LOCK:
-        df = _TABLE_CACHE.get(key)
-        if df is not None:
-            _TABLE_CACHE.move_to_end(key)
-            return df
+    return SESSION.get(spark, sf_dir, f"table/{name}",
+                       lambda: _read_table(spark, sf_dir, name))
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
     if name == "events":
@@ -104,10 +101,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     "(unix_micros(cast(ts as timestamp)) - "
                     "pmod(unix_micros(cast(ts as timestamp)), 1000)) "
                     "div 1000")))
-    with _TABLE_LOCK:
-        _TABLE_CACHE[key] = df
-        while len(_TABLE_CACHE) > _TABLE_CACHE_CAP:
-            _TABLE_CACHE.popitem(last=False)
     return df
 
 
@@ -146,10 +139,8 @@ def spread_small_scan(spark: SparkSession, sf_dir: str, name: str,
     SCALE-ADAPTIVE by construction: above the threshold the scan
     already yields >= parallelism splits and this is a NO-OP — at
     100 TB no shuffle is added (the r17 C5 conditional-regime
-    discipline, derived from the same stat the corpus cache uses)."""
-    if spark.conf.get("spark.currency_market_pulse.spreadSmallScan",
-                      "true") != "true":
-        return df
+    discipline, derived from the same stat the token relation's
+    persist rule uses)."""
     par = spark.sparkContext.defaultParallelism
     try:
         open_cost = int(spark.conf.get(
@@ -181,13 +172,13 @@ def load_events_ts_bounded(spark: SparkSession, sf_dir: str,
     scan-level pre-filter, so results are identical even if a future
     encoding made it merely conservative."""
     ensure_session_confs(spark)
-    key = (spark.sparkContext.applicationId, sf_dir,
-           f"events__ts_{from_ms}_{to_ms}")
-    with _TABLE_LOCK:
-        cached = _TABLE_CACHE.get(key)
-        if cached is not None:
-            _TABLE_CACHE.move_to_end(key)
-            return cached
+    return SESSION.get(
+        spark, sf_dir, f"table/events@{from_ms}-{to_ms}",
+        lambda: _read_events_ts_bounded(spark, sf_dir, from_ms, to_ms))
+
+
+def _read_events_ts_bounded(spark: SparkSession, sf_dir: str,
+                            from_ms: int, to_ms: int) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     t = dict(df.dtypes).get("ts")
     if t == "bigint":
@@ -215,10 +206,6 @@ def load_events_ts_bounded(spark: SparkSession, sf_dir: str,
         # as load_table (none applies — ts already TimestampType only
         # for the branches above)
         pass
-    with _TABLE_LOCK:
-        _TABLE_CACHE[key] = df
-        while len(_TABLE_CACHE) > _TABLE_CACHE_CAP:
-            _TABLE_CACHE.popitem(last=False)
     return df
 
 

@@ -56,7 +56,7 @@ sim_kmeans_silhouette) is the heavier confirmatory gate a deployment
 can schedule on flag, not per batch.
 
 ``retrain`` rebuilds from the standing vector store: corpus-adaptive
-k (queries/ivf.py coarse_k — cells stay ~250 rows as the corpus
+k (operators/kmeans.py coarse_k — cells stay ~250 rows as the corpus
 grows), fresh Lloyd chains, centroids + codebooks + full posting and
 code rewrite under batch_id=-1, streamed partitions retired.  Like
 compaction, retrain MUST run with the ingest query stopped and its
@@ -137,7 +137,7 @@ class StreamingIVFPQIndex:
         from currency_market_pulse_spark.operators.pq import ivfpq_fit
 
         if k is None:
-            from currency_market_pulse_spark.queries.ivf import coarse_k
+            from currency_market_pulse_spark.operators.kmeans import coarse_k
             k = coarse_k(emb.count())
         centroids, codebooks, encoded = ivfpq_fit(
             emb, k, n_iter, self.m, self.sub_dim, self.pq_k, self.pq_iter)

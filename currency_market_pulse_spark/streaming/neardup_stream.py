@@ -201,7 +201,12 @@ def _py_shingle_map(tbl) -> dict:
     (doc_id, n_sh, sh) Arrow table.  ``sh`` rows are distinct per doc
     by construction (shingles_from_tokens explodes array_distinct);
     the NULL row an empty doc carries (explode_outer) is skipped —
-    the JVM verify's equi-join never matches NULL either."""
+    the JVM verify's equi-join never matches NULL either.
+
+    The standing index holds ONE generation of each doc: rows of one
+    doc_id with two ``n_sh`` values raise, because the JVM verify
+    groups by (doc_id, n_sh) and would split such a doc where this map
+    merges it."""
     out: dict = {}
     for d, n, s in zip(tbl.column("doc_id").to_pylist(),
                        tbl.column("n_sh").to_pylist(),
@@ -209,6 +214,10 @@ def _py_shingle_map(tbl) -> dict:
         ent = out.get(d)
         if ent is None:
             ent = out[d] = (n, set())
+        elif ent[0] != n:
+            raise ValueError(
+                f"doc {d} has two generations in the shingle index "
+                f"(n_sh {ent[0]} and {n})")
         if s is not None:
             ent[1].add(s)
     return out
@@ -1217,10 +1226,12 @@ class StreamingNearDup:
                           touched: list[int]) -> list:
         """Cross-corpus hits for the dict path: ONE job probes the
         touched band buckets against the broadcast batch bands and
-        collects candidate PAIRS; one more fetches the candidates'
-        standing shingle rows for the driver-side jaccard.  Above
-        _STD_FETCH_CAP distinct corpus docs, the all-Spark verify plan
-        runs instead (unchanged semantics)."""
+        collects candidate PAIRS, at most _CAND_COLLECT_CAP of them;
+        one more fetches the candidates' standing shingle rows for the
+        driver-side jaccard.  Over _CAND_COLLECT_CAP pairs (a hot band
+        bucket fans out quadratically) or over _STD_FETCH_CAP distinct
+        corpus docs, the all-Spark verify plan runs instead (unchanged
+        semantics)."""
         t = time.time()
         idx_bands = self._read_index(
             spark, self.bands_path, _BANDS_DATA, "sig_bucket",
@@ -1229,9 +1240,13 @@ class StreamingNearDup:
             return []
         probe = bands.select(F.col("doc_id").alias("new_id"),
                              "band", "band_sig")
+        # the limit bounds what reaches the driver; it rides the same
+        # job (the collect's single-partition shuffle), so a normal
+        # trigger pays no extra job for it
         p_tbl = (idx_bands
                  .join(F.broadcast(probe), ["band", "band_sig"])
                  .select("new_id", F.col("doc_id").alias("corpus_id"))
+                 .limit(_CAND_COLLECT_CAP + 1)
                  .toArrow())
         cand_pairs = set(zip(p_tbl.column("new_id").to_pylist(),
                              p_tbl.column("corpus_id").to_pylist()))
@@ -1239,15 +1254,18 @@ class StreamingNearDup:
         if not cand_pairs:
             return []
         cand_ids = sorted({c for _, c in cand_pairs})
-        if len(cand_ids) > _STD_FETCH_CAP:
-            # volume hatch: the candidates' shingles are too much data
-            # for the driver — run the original Spark-side verify
-            # (cand relation rebuilt exactly as before)
+        truncated = p_tbl.num_rows > _CAND_COLLECT_CAP
+        if truncated or len(cand_ids) > _STD_FETCH_CAP:
+            # volume hatch: the candidates (or their shingles) are too
+            # much data for the driver — run the original Spark-side
+            # verify (cand relation rebuilt exactly as before); a
+            # truncated pair set names only some candidates, so the
+            # verify then reads every shingle bucket
             cand = D.cross_corpus_candidates(
                 F.broadcast(bands), idx_bands).persist()
             try:
                 vdf = self._verify_cross(
-                    spark, sh, cand, cand_ids[:_CAND_COLLECT_CAP + 1],
+                    spark, sh, cand, None if truncated else cand_ids,
                     batch_id)
                 return [(r.new_id, r.dup_of, r.jaccard)
                         for r in vdf.collect()]
@@ -1420,12 +1438,14 @@ class StreamingNearDup:
                 f.result()
 
     def _verify_cross(self, spark, sh: DataFrame, cand: DataFrame,
-                      cand_ids: list[int], batch_id: int) -> DataFrame:
+                      cand_ids: list[int] | None,
+                      batch_id: int) -> DataFrame:
         """Exact-jaccard verify of batch-vs-corpus candidates, reading
         only the shingle buckets the candidates live in (plus a pushed
-        doc_id IN filter when the candidate set was small enough to
-        collect in full)."""
-        capped = len(cand_ids) <= _CAND_COLLECT_CAP
+        doc_id IN filter) when ``cand_ids`` holds the whole candidate
+        set and it is small enough; else (None, or over
+        _CAND_COLLECT_CAP ids) every bucket."""
+        capped = cand_ids is not None and len(cand_ids) <= _CAND_COLLECT_CAP
         ns_s = (self._base_bucket_counts(self.shingles_path)
                 or [self.n_buckets])
         buckets = (sorted({i % n for i in cand_ids for n in ns_s})

@@ -49,3 +49,124 @@ def test_engine_trends_cached(spark):
         raise AssertionError("expected ValueError")
     except ValueError as e:
         assert "date_from" in str(e)
+
+
+def _app(app_id: str):
+    """A stand-in session: the store reads only its applicationId."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_store_keys_by_application():
+    """A new applicationId never sees another application's entries."""
+    from currency_market_pulse_spark.plans.cache import SessionStore
+
+    store = SessionStore()
+    assert store.get(_app("a"), "/d", "n", lambda: 1) == 1
+    assert store.get(_app("a"), "/d", "n", lambda: 99) == 1
+    assert store.get(_app("b"), "/d", "n", lambda: 2) == 2
+
+
+def test_store_concurrent_miss_builds_once():
+    """Two callers that miss one (entry, name) together share ONE
+    build; the second waits for it.  A failed build is retried by the
+    next caller rather than cached."""
+    import threading
+    import time
+
+    from currency_market_pulse_spark.plans.cache import SessionStore
+
+    store, calls, second_in = SessionStore(), [], threading.Event()
+
+    def build():
+        calls.append(1)
+        second_in.wait(5)
+        time.sleep(0.2)          # the second caller is now waiting
+        return object()
+
+    got = []
+    first = threading.Thread(
+        target=lambda: got.append(store.get(_app("a"), "/d", "x", build)))
+    first.start()
+    while not calls:
+        time.sleep(0.01)
+    second_in.set()
+    got.append(store.get(_app("a"), "/d", "x", build))
+    first.join()
+    assert len(calls) == 1 and got[0] is got[1]
+
+    def fail():
+        raise RuntimeError("boom")
+
+    try:
+        store.get(_app("a"), "/d", "y", fail)
+        raise AssertionError("expected RuntimeError")
+    except RuntimeError:
+        pass
+    assert store.get(_app("a"), "/d", "y", lambda: 3) == 3
+
+
+def test_store_eviction_unpersists_dataframes(spark):
+    """Evicting an sf_dir — explicitly or as the LRU entry past
+    capacity — unpersists its DataFrames (a tuple's too) and drops its
+    plain values."""
+    from currency_market_pulse_spark.plans.cache import SessionStore
+
+    store = SessionStore(capacity=2)
+
+    def fill(sf_dir):
+        df = store.get(spark, sf_dir, "df", lambda: spark.range(3).persist())
+        tup = store.get(spark, sf_dir, "tup",
+                        lambda: (1, spark.range(4).persist()))
+        store.get(spark, sf_dir, "n", lambda: df.count())
+        return df, tup[1]
+
+    a = fill("/a")
+    b = fill("/b")
+    assert all(df.is_cached for df in a + b)
+    store.evict(spark, "/b")
+    assert not any(df.is_cached for df in b) and all(df.is_cached for df in a)
+    fill("/c")
+    fill("/d")                       # capacity 2: /a is the LRU entry
+    assert not any(df.is_cached for df in a)
+    assert store.get(spark, "/a", "n", lambda: "rebuilt") == "rebuilt"
+    for sf_dir in ("/a", "/c", "/d"):
+        store.evict(spark, sf_dir)
+
+
+def test_ivf_index_concurrent_miss_trains_once(spark, monkeypatch):
+    """Two queries that miss the trained IVF index together train it
+    once and leave ONE persisted index relation."""
+    import threading
+
+    from currency_market_pulse_spark.plans import prepare
+    from currency_market_pulse_spark.plans.cache import SESSION
+    from tests.conftest import SF_DIR
+
+    SESSION.evict(spark, SF_DIR)
+    builds, build = [], prepare.BUILDS["ivf_index"]
+
+    def counted(spark, sf_dir):
+        builds.append(1)
+        return build(spark, sf_dir)
+
+    monkeypatch.setitem(prepare.BUILDS, "ivf_index", counted)
+    before = _persisted_rdds(spark)
+    got = [None, None]
+
+    def run(i):
+        got[i] = prepare.index(spark, SF_DIR, "ivf_index")
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(builds) == 1
+    assert got[0] is got[1]
+    assert _persisted_rdds(spark) - before == 1

@@ -505,8 +505,9 @@ def test_survivors_and_split_leakage_consistency(spark):
     """Survivor counts partition the corpus; the leakage matrix's pair
     total equals the family pair-relation count and contains at least
     one cross-split (leaking) cell at fixture scale."""
+    from currency_market_pulse_spark.plans.prepare import index
     from currency_market_pulse_spark.queries.dedup import (
-        _shared_jaccard_pairs, dedup_survivors, documents_split_leakage,
+        dedup_survivors, documents_split_leakage,
     )
     from currency_market_pulse_spark.sources.catalog import load_table
     from tests.conftest import SF_DIR
@@ -518,7 +519,7 @@ def test_survivors_and_split_leakage_consistency(spark):
     assert sum(r.n_dropped for r in surv) > 0  # fixture has near-dups
 
     leak = documents_split_leakage(spark, SF_DIR).collect()
-    n_pairs = _shared_jaccard_pairs(spark, SF_DIR).count()
+    n_pairs = index(spark, SF_DIR, "jaccard_pairs").count()
     assert sum(r.n_pairs for r in leak) == n_pairs
     assert any(r.is_leak for r in leak)
     assert all((r.split_lo != r.split_hi) == r.is_leak for r in leak)

@@ -111,7 +111,7 @@ def test_coarse_k_rule_floors_at_gate_scales():
     """Adaptive quantizer sizing: floors at 8 for the driver-gate and
     bench fixtures (result-identical to the historical fixed k), grows
     linearly past COARSE_CELL_TARGET rows per cell."""
-    from currency_market_pulse_spark.queries.ivf import (
+    from currency_market_pulse_spark.operators.kmeans import (
         COARSE_CELL_TARGET, coarse_k,
     )
 
@@ -172,20 +172,19 @@ def test_capped_sample_matches_capped_oracles(spark, monkeypatch):
     sample at 100 of sf0.01's 500 vectors: the shared index (coarse
     quantizer and IVF-PQ codebooks) must stay EXACT against oracles
     that replay the same cap — and the cap must change the answer."""
-    from collections import OrderedDict
-
     from currency_market_pulse_spark.operators import kmeans
     from currency_market_pulse_spark.oracle import (
         check_against_oracle, duck_con,
     )
+    from currency_market_pulse_spark.plans.cache import SESSION
     from currency_market_pulse_spark.queries import ivf
     from tests.conftest import EXTRA_SF_DIR
 
     cap = 100
     assert load_table(spark, EXTRA_SF_DIR, "embeddings").count() > cap
     monkeypatch.setattr(kmeans, "TRAIN_ROWS", cap)
-    # a private index cache: the capped index never serves other tests
-    monkeypatch.setattr(ivf, "_COARSE_CACHE", OrderedDict())
+    # the capped index is built fresh and never serves other tests
+    SESSION.evict(spark, EXTRA_SF_DIR)
     con = duck_con(EXTRA_SF_DIR)
     try:
         for fn, oracle in ((ivf.sim_kmeans_cells, ivf._kmeans_oracle),
@@ -198,5 +197,4 @@ def test_capped_sample_matches_capped_oracles(spark, monkeypatch):
             assert verdict == "EXACT" and n > 0, (fn.__name__, verdict)
     finally:
         con.close()
-        for entry in ivf._COARSE_CACHE.values():
-            entry["encoded"].unpersist()
+        SESSION.evict(spark, EXTRA_SF_DIR)

@@ -55,3 +55,16 @@ def test_shingle_map_skips_null_rows():
                     "sh": pa.array(["a", "b", None], pa.string())})
     m = _py_shingle_map(tbl)
     assert m == {1: (2, {"a", "b"}), 2: (0, set())}
+
+
+def test_shingle_map_refuses_two_generations_of_a_doc():
+    # the JVM verify groups by (doc_id, n_sh), so a doc_id carrying two
+    # n_sh values would split there and merge here: refuse it
+    import pyarrow as pa
+    import pytest
+
+    tbl = pa.table({"doc_id": pa.array([1, 1, 1], pa.int64()),
+                    "n_sh": pa.array([2, 2, 3], pa.int64()),
+                    "sh": pa.array(["a", "b", "c"], pa.string())})
+    with pytest.raises(ValueError, match="two generations"):
+        _py_shingle_map(tbl)

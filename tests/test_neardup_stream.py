@@ -542,6 +542,59 @@ def test_collect_cap_path_matches(spark, tmp_path, scenario):
     assert [d for d, _ in hashes] == [1, 2, 5, 6, 7]
 
 
+def test_hot_bucket_pair_collect_is_bounded(spark, tmp_path, monkeypatch):
+    """Every doc shares one band signature, so the cross-corpus probe
+    fans out to every (new, standing) pair.  The dict path must collect
+    at most _CAND_COLLECT_CAP + 1 of those pairs, then hand the batch
+    to the Spark-side verify — and write the distributed path's dup
+    log."""
+    from currency_market_pulse_spark.functions.text import tokens
+    from currency_market_pulse_spark.operators import dedup as D
+    from currency_market_pulse_spark.streaming import neardup_stream
+
+    base = " ".join(f"w{j}" for j in range(60))
+    batches = {b: [(d, f"{base} tail{d}") for d in range(b * 4, b * 4 + 4)]
+               for b in (0, 1)}
+    docs = spark.createDataFrame(batches[0] + batches[1],
+                                 "doc_id long, text string")
+    bands = D.minhash_bands(D.minhash_signatures(
+        None, shingles_df=D.shingles_from_tokens(
+            docs.select("doc_id", tokens("text").alias("_t")))))
+    assert bands.groupBy("band", "band_sig").count() \
+        .filter("count = 8").count() >= 1   # one hot bucket holds all
+
+    cap = 5                                 # 16 cross pairs > cap
+    monkeypatch.setattr(neardup_stream, "_CAND_COLLECT_CAP", cap)
+    frame = type(docs)
+    pair_rows, to_arrow = [], frame.toArrow
+
+    def spy(df):
+        tbl = to_arrow(df)
+        if tbl.column_names == ["new_id", "corpus_id"]:
+            pair_rows.append(tbl.num_rows)
+        return tbl
+
+    monkeypatch.setattr(frame, "toArrow", spy)
+
+    def run(tag, hash_cap):
+        nd = StreamingNearDup(
+            bands_path=str(tmp_path / tag / "bands"),
+            shingles_path=str(tmp_path / tag / "shingles"),
+            dups_path=str(tmp_path / tag / "dups"),
+            n_buckets=4, hash_collect_cap=hash_cap)
+        _run_batches(nd, spark, batches)
+        return nd
+
+    local = run("local", 50_000)
+    assert pair_rows == [cap + 1]           # bounded, then handed off
+    assert "std_shingle_fetch" not in local.last_stage_s
+    distributed = run("dist", 1)            # every batch distributed
+    assert pair_rows == [cap + 1]
+    dups = _dup_set(local, spark)
+    assert dups == _dup_set(distributed, spark)
+    assert {n for n, _, _ in dups} == set(range(1, 8))
+
+
 def test_carry_pick_properties():
     """Pure-function properties of the carry-merge selection (r12):
     always picks >=2 segments (so every merge strictly reduces the

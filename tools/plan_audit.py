@@ -497,8 +497,8 @@ def main() -> int:
     # build time, not per invocation).  Job-group bracketing makes the
     # assertion exact: any action inside the builder lands in the
     # group.
-    from currency_market_pulse_spark.queries import dedup as qd
-    qd._shared_simhash60(spark, sf_dir)          # offline build/warm
+    from currency_market_pulse_spark.plans.prepare import index
+    index(spark, sf_dir, "simhash60_n")          # offline build/warm
     sc = spark.sparkContext
     sc.setJobGroup("simhash_path_audit", "search path must be lazy")
     queries["dedup_simhash"](spark, sf_dir)      # build plan only
