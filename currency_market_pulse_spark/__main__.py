@@ -86,12 +86,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     pl.add_argument("--window-ms", type=int, default=1000)
     pl.add_argument("--once", action="store_true",
                     help="process available files then exit")
-    pl.add_argument("--txn-retain-manifests", type=int, default=256,
-                    help="bound the _txn/ commit log: manifests more "
-                         "than N below the durable checkpoint floor "
-                         "are deleted after each checkpoint "
-                         "(0 disables retention and keeps every "
-                         "manifest forever — the pre-r16 behavior)")
 
     bf = sub.add_parser(
         "backfill",
@@ -156,11 +150,13 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                                   "mean": r.mean, "median": r.median}))
         elif args.cmd == "import":
             from currency_market_pulse_spark.streaming.importer import (
-                ParquetTradesSink, run_import)
+                run_import)
             from currency_market_pulse_spark.streaming.ingest import (
                 read_trades_files)
+            from currency_market_pulse_spark.streaming.txn_sink import (
+                TxnParquetTradesSink)
             stream = read_trades_files(spark, args.source_dir)
-            query = run_import(stream, ParquetTradesSink(args.sink_path),
+            query = run_import(stream, TxnParquetTradesSink(args.sink_path),
                                args.checkpoint)
             if args.once:
                 query.processAllAvailable()
@@ -172,8 +168,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 run_composed_pipeline)
             pipe = run_composed_pipeline(
                 spark, args.requests_dir, args.docs_dir, args.out_dir,
-                window_ms=args.window_ms, limit=args.limit,
-                txn_retain_manifests=(args.txn_retain_manifests or None))
+                window_ms=args.window_ms, limit=args.limit)
             if args.once:
                 try:
                     (n_trades, n_dead, n_dups,

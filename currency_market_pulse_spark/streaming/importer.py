@@ -11,13 +11,13 @@ Spark mapping: Structured Streaming IS the accumulator+ticker
 (trigger(processingTime='1 second')); the checkpoint IS the offset
 commit (written after foreachBatch returns — same order).  We tighten
 at-least-once to effective exactly-once with a batch-id high-watermark:
-every sink write lands under batch_id=<id> and a replayed batch
-OVERWRITES its own partition instead of appending duplicates
-(dynamic partition overwrite).
+every sink write is keyed by its batch id, and a replayed batch is a
+no-op or an in-place redo, never an append of duplicates.
 
-Sinks are pluggable behind ``Sink``: partitioned parquet (self-
-contained default; date-partitioned + time-sorted to mirror MergeTree
-ORDER BY time_placed) and a JDBC sink skeleton for ClickHouse.
+Sinks are pluggable behind ``Sink``: the write-once parquet sink
+(streaming/txn_sink.py ``TxnParquetTradesSink``; date-partitioned +
+time-sorted to mirror MergeTree ORDER BY time_placed, one manifest
+commit per batch) and a JDBC sink for ClickHouse.
 """
 
 from __future__ import annotations
@@ -38,33 +38,6 @@ class Sink:
 
     def write(self, batch: DataFrame, batch_id: int) -> None:
         raise NotImplementedError
-
-
-@dataclass
-class ParquetTradesSink(Sink):
-    """Date-partitioned parquet, idempotent via batch-id partition
-    overwrite.
-
-    Layout: trade_date=YYYY-MM-DD/batch_id=N/*.parquet — the date
-    partition replicates the reference's primary-index time pruning
-    (db/clickhouse/init.sql:15: ORDER BY time_placed); the batch_id
-    sub-partition makes replay overwrite itself (dynamic partition
-    overwrite), turning at-least-once delivery into exactly-once
-    storage.  Rows are sorted by time_placed within files so parquet
-    row-group min/max stats give fine-grained time-range skipping.
-    """
-    path: str
-
-    def write(self, batch: DataFrame, batch_id: int) -> None:
-        (batch
-         .withColumn("trade_date", F.to_date("time_placed"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .sortWithinPartitions("time_placed")
-         .write
-         .mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("trade_date", "batch_id")
-         .parquet(self.path))
 
 
 @dataclass
@@ -139,23 +112,18 @@ class JdbcSink(Sink):
 
 
 def run_import(trades_stream: DataFrame, sink: Sink,
-               checkpoint_dir: str,
-               flush_interval: str = FLUSH_INTERVAL,
-               drop_invalid: bool = True) -> StreamingQuery:
+               checkpoint_dir: str) -> StreamingQuery:
     """Start the import query: normalized trades stream -> sink every
-    ``flush_interval``.
+    ``FLUSH_INTERVAL``.
 
     - invalid rows (unparseable time_placed -> NULL) are dropped like
-      the reference's HTTP 400 path (api.go:62-65); set
-      drop_invalid=False to keep them for a dead-letter sink.
+      the reference's HTTP 400 path (api.go:62-65).
     - the checkpoint commits AFTER sink.write returns, mirroring
       MarkMessage-after-saveTrades (importing/service.go:123-128).
     """
-    df = trades_stream
-    if drop_invalid:
-        df = df.filter(F.col("time_placed").isNotNull())
-    return (df.writeStream
-            .trigger(processingTime=flush_interval)
+    return (trades_stream.filter(F.col("time_placed").isNotNull())
+            .writeStream
+            .trigger(processingTime=FLUSH_INTERVAL)
             .option("checkpointLocation", checkpoint_dir)
             .foreachBatch(lambda b, i: sink.write(b, i))
             .start())

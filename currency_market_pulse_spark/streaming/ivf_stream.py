@@ -31,8 +31,8 @@ Per micro-batch of (vec_id, embedding) rows, the handler:
 Idempotency contract (the importer / neardup_stream batch-id
 discipline): every write lands under batch_id=<id> with dynamic
 partition overwrite, so a crash-replayed batch REPLACES its prior
-contribution.  Training-time relations live under batch_id=-1 (the
-compaction module's "not a stream batch" convention).
+contribution.  Training-time relations live under batch_id=-1, an id
+no stream batch takes.
 
 RETRAIN TRIGGER (the documented drift gate): ``needs_retrain`` flags
 when either
@@ -58,11 +58,12 @@ can schedule on flag, not per batch.
 ``retrain`` rebuilds from the standing vector store: corpus-adaptive
 k (operators/kmeans.py coarse_k — cells stay ~250 rows as the corpus
 grows), fresh Lloyd chains, centroids + codebooks + full posting and
-code rewrite under batch_id=-1, streamed partitions retired.  Like
-compaction, retrain MUST run with the ingest query stopped and its
-checkpoint quiescent: a batch replayed across a retrain would
-re-append postings the rewrite already covers (same reader/writer
-caveat the compactor documents — compaction.py).
+code rewrite under batch_id=-1, streamed partitions retired.
+Retrain MUST run with the ingest query stopped and its checkpoint
+quiescent: a batch replayed across a retrain would re-append postings
+the rewrite already covers, and a reader listing the relations
+mid-retrain can see a posting twice (the rewrite lands before the
+streamed partitions retire).
 
 At 100 TB: per-batch cost is one task-closure codebook shipment + two
 narrow appends — no shuffle of the standing index, no vector
@@ -88,8 +89,8 @@ _VECTORS_SCHEMA = "vec_id bigint, embedding array<double>, batch_id bigint"
 _ASSIGN_SCHEMA = "vec_id bigint, cell int, dist double, batch_id bigint"
 _CENTROID_SCHEMA = "cell int, centroid array<double>"
 
-#: batch_id for training-time (non-stream) writes — the compaction
-#: module's convention for "not a replayable stream batch".
+#: batch_id for training-time (non-stream) writes: no replayable
+#: stream batch takes a negative id.
 TRAIN_BATCH_ID = -1
 
 

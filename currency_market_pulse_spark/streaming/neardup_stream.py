@@ -79,9 +79,8 @@ union (correctness), and the only cost of mixed generations is a
 bounded over-read of old small segments until the next merge
 re-buckets them.
 
-Crash-safety is the manifest protocol of
-streaming/compaction.py adapted to append-only segments: write the
-new segment to a hidden tmp dir, durably record intent (a manifest
+Crash-safety is an intent-manifest protocol for append-only
+segments: write the new segment to a hidden tmp dir, durably record intent (a manifest
 listing the consumed dirs), PUBLISH through the segment store's
 commit point, THEN delete the consumed dirs.  Publication and
 discovery go through the ``segment_store`` seam

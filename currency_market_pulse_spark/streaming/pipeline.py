@@ -84,13 +84,6 @@ TRIGGER = "1 second"
 WATERMARK = "10 minutes"
 #: size of the uniform reservoir sample of ingested docs
 RESERVOIR_K = 32
-#: the txn sink writes a Delta-style columnar log checkpoint every N
-#: batches (~2 min at the 1 s trigger): the manifest view's rebuild
-#: reads one checkpoint + <= N manifests instead of O(committed
-#: batches) (txn_sink.py / txn_log_source.py; VERDICT r14 directive
-#: 2).  The write is driver-side, O(history) bytes, but off the
-#: per-trigger path for the other N-1 batches.
-TXN_CHECKPOINT_EVERY = 128
 
 #: how many per-trigger fused-doc timing dicts ComposedPipeline.doc_leg_s
 #: retains (newest wins) — bounds driver memory on long-lived pipelines
@@ -244,7 +237,6 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
                           neardup_compact_every: int = 32,
                           neardup_max_segments: int = 8,
                           expected_rows_per_trigger: int | None = None,
-                          txn_retain_manifests: int | None = 256,
                           ) -> ComposedPipeline:
     """Start the full composition and return its handles.
 
@@ -360,21 +352,10 @@ def run_composed_pipeline(spark: SparkSession, requests_dir: str,
      .filter(F.col("ts_ms").isNotNull())   # malformed -> 400 pre-gate
     gate = RateLimitGate(f"{out_dir}/gateway_state", window_ms, limit)
     # write-once txn sink: the live view's file stream is
-    # exactly-once under crash-replay (module docstring; txn_sink.py)
-    # txn_retain_manifests: bound _txn/'s FILE COUNT too — manifests
-    # below the durable checkpoint floor are deleted (re-derivable
-    # from the checkpoint), keeping the log at O(interval + retain)
-    # files instead of one JSON per batch forever (VERDICT r15
-    # directive 2).  None keeps everything.  Retention is ON by
-    # default since r17 (retain=256 with the 128-batch checkpoint
-    # interval bounds _txn/ at ~O(400) files at any uptime; the
-    # r17 soak measured the live file count flat while the view
-    # served) — the composed pipeline is the long-lived deployment
-    # surface, and an unbounded control log is an operational leak
-    # even when never read.
-    sink = TxnParquetTradesSink(trades_path,
-                                checkpoint_every=TXN_CHECKPOINT_EVERY,
-                                retain_manifests=txn_retain_manifests)
+    # exactly-once under crash-replay (module docstring; txn_sink.py),
+    # and its log checkpoints and manifest retention keep _txn/ at a
+    # bounded file count on this long-lived deployment surface
+    sink = TxnParquetTradesSink(trades_path)
 
     def import_batch(batch: DataFrame, batch_id: int) -> None:
         # the gate caches its windowed relation, so the sink and the

@@ -170,3 +170,30 @@ def test_ivf_index_concurrent_miss_trains_once(spark, monkeypatch):
     assert len(builds) == 1
     assert got[0] is got[1]
     assert _persisted_rdds(spark) - before == 1
+
+
+def test_prepare_indexes_repeat_call_runs_no_job(spark):
+    """Each build materializes what it persists, and the unpersisted
+    small-corpus token relation is not counted at all: a cold prepare
+    on sf0.01 runs fewer than 30 jobs (32 while prepare counted the
+    relations itself), and a repeat call is a store hit that runs no
+    Spark job (7 before)."""
+    from currency_market_pulse_spark.plans.cache import SESSION
+    from currency_market_pulse_spark.plans.prepare import prepare_indexes
+    from tests.conftest import SF_DIR
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    SESSION.evict(spark, SF_DIR)
+    try:
+        j0 = dag.numTotalJobs()
+        first = prepare_indexes(spark, SF_DIR)
+        j1 = dag.numTotalJobs()
+        again = prepare_indexes(spark, SF_DIR)
+        j2 = dag.numTotalJobs()
+    finally:
+        SESSION.evict(spark, SF_DIR)
+    assert set(first) == set(again) == {
+        "coarse_quantizer", "ivfpq_index", "token_relation",
+        "jaccard_pairs", "minhash_bands", "simhash_sigs", "total"}
+    assert 0 < j1 - j0 < 30
+    assert j2 - j1 == 0

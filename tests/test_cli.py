@@ -63,3 +63,41 @@ def test_cli_query_unknown_name_fails_with_listing(spark, capsys):
     rc = main(["query", "no_such_query"], spark=spark)
     assert rc == 2
     assert "trends_10min" in capsys.readouterr().err
+
+
+def test_cli_import_once_is_write_once_and_replay_free(spark, tmp_path):
+    """`import --once` writes through the write-once txn sink: the file
+    drop's valid rows are stored with a committed manifest, the row
+    with an unparseable timestamp is dropped, and a second run on the
+    same checkpoint adds no row and no visible path."""
+    import os
+
+    from currency_market_pulse_spark.streaming.txn_sink import (
+        TxnParquetTradesSink,
+    )
+
+    src, sink_path = tmp_path / "in", str(tmp_path / "trades")
+    src.mkdir()
+    trade = {"currencyFrom": "EUR", "currencyTo": "GBP",
+             "amountSell": 1000.0, "amountBuy": 747.1, "rate": 0.747,
+             "timePlaced": "24-JAN-18 10:27:44",
+             "originatingCountry": "FR"}
+    with open(src / "f1.json", "w") as f:
+        for i in range(4):
+            f.write(json.dumps({**trade, "userId": f"u{i}"}) + "\n")
+        f.write(json.dumps({**trade, "userId": "bad",
+                            "timePlaced": "not-a-timestamp"}) + "\n")
+    argv = ["import", "--source-dir", str(src), "--sink-path", sink_path,
+            "--checkpoint", str(tmp_path / "ckpt"), "--once"]
+
+    assert main(argv, spark=spark) == 0
+    assert os.path.exists(os.path.join(sink_path, "_txn", "batch=0.json"))
+    stored = sorted(r.user_id for r in
+                    spark.read.parquet(sink_path).select("user_id")
+                    .collect())
+    assert stored == ["u0", "u1", "u2", "u3"]   # bad timestamp dropped
+    visible = TxnParquetTradesSink(sink_path).visible_files()
+
+    assert main(argv, spark=spark) == 0
+    assert spark.read.parquet(sink_path).count() == 4
+    assert TxnParquetTradesSink(sink_path).visible_files() == visible

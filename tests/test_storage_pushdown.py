@@ -12,13 +12,16 @@ from pyspark.sql import functions as F
 
 from currency_market_pulse_spark.operators.trends import trends
 from currency_market_pulse_spark.sources.catalog import events_as_trades
-from currency_market_pulse_spark.streaming.importer import ParquetTradesSink
+from currency_market_pulse_spark.streaming.txn_sink import (
+    TxnParquetTradesSink,
+)
 from tests.conftest import SF_DIR
 
 
 def test_trends_pushdown_on_physical_storage(spark, tmp_path):
     out = str(tmp_path / "trades")
-    ParquetTradesSink(out).write(events_as_trades(spark, SF_DIR), batch_id=0)
+    TxnParquetTradesSink(out).write(events_as_trades(spark, SF_DIR),
+                                    batch_id=0)
 
     stored = spark.read.parquet(out)
     q = trends(stored,
@@ -46,7 +49,8 @@ def test_trends_pushdown_on_physical_storage(spark, tmp_path):
 
 def test_partition_pruning_reads_fewer_files(spark, tmp_path):
     out = str(tmp_path / "trades")
-    ParquetTradesSink(out).write(events_as_trades(spark, SF_DIR), batch_id=0)
+    TxnParquetTradesSink(out).write(events_as_trades(spark, SF_DIR),
+                                    batch_id=0)
     narrow = (spark.read.parquet(out)
               .filter(F.col("trade_date") == "2024-01-10"))
     # partition filter must appear in the scan, not a post-filter

@@ -6,10 +6,11 @@ from __future__ import annotations
 import json
 import time
 
-from currency_market_pulse_spark.streaming.importer import (
-    ParquetTradesSink, run_import,
-)
+from currency_market_pulse_spark.streaming.importer import run_import
 from currency_market_pulse_spark.streaming.ingest import read_trades_files
+from currency_market_pulse_spark.streaming.txn_sink import (
+    TxnParquetTradesSink,
+)
 
 
 def _write_ingest_file(path, rows):
@@ -43,7 +44,7 @@ def test_import_pipeline_end_to_end(spark, tmp_path):
                        + [_trade(99, ts="not-a-timestamp")])  # dead-letter
 
     stream = read_trades_files(spark, str(src))
-    q = run_import(stream, ParquetTradesSink(str(out)), str(ckpt))
+    q = run_import(stream, TxnParquetTradesSink(str(out)), str(ckpt))
     try:
         def count_rows():
             # reads race the sink's staged writes — treat transient
@@ -85,7 +86,7 @@ def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path):
 
     _write_ingest_file(src / "f1.json", [_trade(i) for i in range(5)])
     q1 = run_import(read_trades_files(spark, str(src)),
-                    ParquetTradesSink(str(out)), str(ckpt))
+                    TxnParquetTradesSink(str(out)), str(ckpt))
     try:
         assert _run_until(q1, lambda: count_rows() == 5)
     finally:
@@ -95,7 +96,7 @@ def test_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path):
     _write_ingest_file(src / "f2.json", [_trade(i + 10) for i in range(3)])
 
     q2 = run_import(read_trades_files(spark, str(src)),
-                    ParquetTradesSink(str(out)), str(ckpt))
+                    TxnParquetTradesSink(str(out)), str(ckpt))
     try:
         assert _run_until(q2, lambda: count_rows() == 8)
     finally:
@@ -115,7 +116,7 @@ def test_replay_same_batch_is_idempotent(spark, tmp_path):
         amount_sell_micros=10, amount_buy_micros=20, rate=2.0,
         originating_country="FR",
         time_placed=dt.datetime(2024, 1, 1, 12, 0, 0))])
-    sink = ParquetTradesSink(str(out))
+    sink = TxnParquetTradesSink(str(out))
     sink.write(batch, batch_id=7)
     sink.write(batch, batch_id=7)  # crash-replay of the same batch
     assert spark.read.parquet(str(out)).count() == 1  # no duplicates
@@ -155,7 +156,7 @@ def test_stream_static_enrichment_join(spark, tmp_path):
 
 def test_sink_parquet_roundtrip_through_catalog_normalization(spark, tmp_path):
     """Golden round-trip (VERDICT r4 item 7): the frame written by
-    ParquetTradesSink, re-read from disk, must equal the pre-write
+    TxnParquetTradesSink, re-read from disk, must equal the pre-write
     frame FIELD FOR FIELD — the fixture-regen incident (round 4:
     TIMESTAMP(NANOS)->MICROS re-encode silently broke every events
     query until the catalog normalized encodings) must be impossible
@@ -171,7 +172,7 @@ def test_sink_parquet_roundtrip_through_catalog_normalization(spark, tmp_path):
     before = {tuple(r) for r in trades.collect()}
 
     out = tmp_path / "sink"
-    ParquetTradesSink(str(out)).write(trades, batch_id=0)
+    TxnParquetTradesSink(str(out)).write(trades, batch_id=0)
 
     back = (spark.read.parquet(str(out))
             .drop("trade_date", "batch_id")

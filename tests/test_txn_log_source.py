@@ -335,7 +335,8 @@ def test_checkpoint_incremental_and_replay_safe(tmp_path):
 
     root = str(tmp_path / "trades")
     _fabricate_log(root, 32, files_per_batch=2)
-    sink = TxnParquetTradesSink(root, checkpoint_every=8)
+    sink = TxnParquetTradesSink(root, checkpoint_every=8,
+                                retain_manifests=None)
     for b in range(32):
         sink._maybe_checkpoint(b)
     assert sink.read_checkpoint_pointer()["batch"] == 31
@@ -545,7 +546,8 @@ def test_retention_validation():
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="checkpoint_every"):
-        TxnParquetTradesSink("x", retain_manifests=4)
+        TxnParquetTradesSink("x", checkpoint_every=None,
+                             retain_manifests=4)
     with _pytest.raises(ValueError, match="retain_manifests"):
         TxnParquetTradesSink("x", checkpoint_every=4,
                              retain_manifests=0)

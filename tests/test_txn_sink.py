@@ -14,11 +14,10 @@ Crash windows proven here (txn_sink.py module docstring):
   (c) crash after publish, before the checkpoint commit -> the
       replayed write is a byte-level no-op: no new paths, no rewrites.
 
-Also: compaction refuses a write-once tree (VERDICT r8 directive 6) —
-retiring visible paths would break the live view's path-keyed
-exactly-once — and the sink's introspection surface
-(committed_batches / visible_files) carries the same evidence the
-JDBC sink's replay test does (directive 7).
+Also: a tree written by the removed plain parquet sink is refused
+untouched, and the sink's introspection surface (committed_batches /
+visible_files) carries the same evidence the JDBC sink's replay test
+does (VERDICT r8 directive 7).
 """
 
 from __future__ import annotations
@@ -29,12 +28,9 @@ import os
 import time
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import Row, functions as F
 
 from currency_market_pulse_spark.streaming import txn_sink as ts
-from currency_market_pulse_spark.streaming.compaction import (
-    compact_date_partition,
-)
 from currency_market_pulse_spark.streaming.ingest import read_trades_files
 from currency_market_pulse_spark.streaming.importer import run_import
 from currency_market_pulse_spark.streaming.txn_sink import (
@@ -234,23 +230,43 @@ def test_distinct_batches_append_and_introspect(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------
-# compaction guard (VERDICT r8 directive 6)
+# upgrade guard: a tree written by the removed plain sink
 # ---------------------------------------------------------------------
 
-def test_compaction_refuses_txn_tree_unless_forced(spark, tmp_path):
-    sink = TxnParquetTradesSink(str(tmp_path / "out"))
-    sink.write(_batch(spark, range(4), day=1), batch_id=0)
-    sink.write(_batch(spark, range(4, 6), day=1), batch_id=1)
+def _file_bytes(root):
+    out = {}
+    for d, _dirs, names in os.walk(root):
+        for name in names:
+            p = os.path.join(d, name)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
 
-    with pytest.raises(ValueError, match="write-once"):
-        compact_date_partition(spark, sink.path, "2024-01-01")
-    # refusal left the tree untouched
-    assert len(sink.visible_files()) >= 2
 
-    # with readers stopped, force=True compacts normally
-    n = compact_date_partition(spark, sink.path, "2024-01-01", force=True)
-    assert n == 6
-    assert spark.read.schema(SINK_SCHEMA).parquet(sink.path).count() == 6
+def test_plain_sink_tree_is_refused_untouched(spark, tmp_path):
+    """The plain sink wrote trade_date=D/batch_id=B/part-*.parquet with
+    no _txn/ log.  Replaying its last uncommitted batch through this
+    sink would publish txn-0.parquet beside those part files and store
+    the batch twice, so such a root is refused before anything is
+    written, and every file in it is byte-for-byte unchanged."""
+    out = str(tmp_path / "out")
+    (_batch(spark, range(3), day=1)
+     .withColumn("trade_date", F.to_date("time_placed"))
+     .withColumn("batch_id", F.lit(0))
+     .write.partitionBy("trade_date", "batch_id").parquet(out))
+    before = _file_bytes(out)
+    assert any("trade_date=2024-01-01" in p for p in before)
+
+    with pytest.raises(ValueError, match="fresh --sink-path"):
+        TxnParquetTradesSink(out)
+    assert _file_bytes(out) == before
+
+    # a write-once tree (trade_date dirs beside its _txn/ log) and a
+    # fresh root still open
+    sink = TxnParquetTradesSink(str(tmp_path / "txn"))
+    sink.write(_batch(spark, range(2), day=1), batch_id=0)
+    TxnParquetTradesSink(sink.path)
+    TxnParquetTradesSink(str(tmp_path / "missing"))
 
 
 # ---------------------------------------------------------------------

@@ -44,8 +44,8 @@ def test_null_and_nan_encode_as_proto3_default():
 
 
 def test_null_numeric_row_survives_spark_encode(spark):
-    """End-to-end: a null time_placed row must not fail the write stage
-    when drop_invalid=False feeds the sink path."""
+    """End-to-end: a null time_placed row must not fail the proto
+    encode stage (the Kafka payload path does not drop invalid rows)."""
     df = spark.createDataFrame(
         [Row(user_id="u", currency_from="EUR", currency_to="GBP",
              amount_sell_micros=1, amount_buy_micros=2,

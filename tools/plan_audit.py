@@ -36,8 +36,8 @@ EXPECTATIONS = {
         # currency_from is DERIVED from event_type in the events-proxy
         # view, so parquet pushdown is impossible by construction; the
         # requirement is that the filter still runs scan-adjacent
-        # (pre-shuffle).  On real trades storage (streaming/importer.py
-        # sink) the pair columns are physical and do push down.
+        # (pre-shuffle).  On real trades storage (the write-once txn
+        # sink's tree) the pair columns are physical and do push down.
         ("pair filter pre-shuffle", r"Filter.*PUR"),
         ("partial+final agg", r"HashAggregate.*\n(.|\n)*HashAggregate"),
     ],

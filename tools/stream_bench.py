@@ -227,13 +227,6 @@ def main() -> None:
                          "run, the HARDER case for probe latency")
     ap.add_argument("--neardup-max-segments", type=int, default=8,
                     help="segment budget before a tier (major) merge")
-    ap.add_argument("--txn-retain-manifests", type=int, default=256,
-                    help="txn commit-log retention: manifests below "
-                         "the checkpoint floor minus N are deleted "
-                         "(0 keeps every manifest forever).  The run "
-                         "samples the live _txn/ file count every "
-                         "drain into txn_file_count_series so a soak "
-                         "can assert the log stays bounded.")
     ap.add_argument("--min-neardup-docs-per-sec", type=float,
                     default=0.0,
                     help="capacity gate (VERDICT r13 directive 5): "
@@ -385,8 +378,7 @@ def main() -> None:
         doc_trigger=args.doc_trigger,
         doc_files_per_trigger=args.doc_files_per_trigger,
         neardup_compact_every=args.neardup_compact_every,
-        neardup_max_segments=args.neardup_max_segments,
-        txn_retain_manifests=(args.txn_retain_manifests or None))
+        neardup_max_segments=args.neardup_max_segments)
     # accumulate progress DURING the run (keyed by batchId): Spark
     # retains only the last 100 triggers per query, so a single drain
     # at the end would truncate a soak run's early history
@@ -566,7 +558,6 @@ def main() -> None:
             "stream_shuffle_partitions": args.stream_shuffle_partitions,
             "burst_factor": args.burst_factor,
             "neardup_compact_every": args.neardup_compact_every,
-            "txn_retain_manifests": args.txn_retain_manifests,
             "neardup_max_segments": args.neardup_max_segments,
             "fair_weights_env": "retired-r13",
             "note": ("per-query percentiles cover the WHOLE run "
@@ -599,8 +590,8 @@ def main() -> None:
             "samples": txn_series,
             "max_files": max(s["txn_files"] for s in txn_series),
             "last_files": txn_series[-1]["txn_files"],
-            "note": ("live _txn/ listing size every drain; with "
-                     "retention on this must plateau at "
+            "note": ("live _txn/ listing size every drain; the "
+                     "sink's manifest retention must plateau it at "
                      "O(checkpoint interval + retain), not grow "
                      "one file per committed batch"),
         }
