@@ -208,9 +208,10 @@ def index(spark: SparkSession, sf_dir: str, name: str):
 
 def prepare_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     """Build every session-shared trained structure for ``sf_dir`` and
-    return {structure: build_seconds}.  Idempotent — every build in
-    ``BUILDS`` materializes what it persists, so an already-built
-    structure is a store hit that runs no Spark job."""
+    return {structure: build_seconds}.  Idempotent — each build called
+    here materializes what it persists (and with it the persisted
+    structures it derives from), so a repeat call is a store hit that
+    runs no Spark job."""
     times: dict[str, float] = {}
 
     def _timed(key: str, fn) -> None:

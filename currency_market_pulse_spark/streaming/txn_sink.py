@@ -119,8 +119,8 @@ class TxnParquetTradesSink(Sink):
     #: reader rebuilding from scratch then reads newest-checkpoint +
     #: manifest suffix instead of O(committed batches) tiny JSONs —
     #: the r14 verdict's ~1 min at a million batches becomes one
-    #: columnar read + <=N JSON reads.  None = off.
-    checkpoint_every: int | None = TXN_CHECKPOINT_EVERY
+    #: columnar read + <=N JSON reads.
+    checkpoint_every: int = TXN_CHECKPOINT_EVERY
     #: manifest retention bounded by checkpoints (VERDICT r15
     #: directive 2): once a checkpoint at batch B is durable (the
     #: ``_last_checkpoint`` pointer commits strictly after it),
@@ -136,29 +136,30 @@ class TxnParquetTradesSink(Sink):
     #: is untouched for retained ids; a replay of a retention-deleted
     #: batch id cannot occur (Structured Streaming replays only the
     #: LAST uncommitted batch, and the floor trails the tip by
-    #: >= max(retain_manifests, interval)).  Requires
-    #: checkpoint_every.  None = keep every manifest.  The default
-    #: 256 with the 128-batch interval keeps _txn/ at ~O(400) files at
-    #: any uptime (the r17 soak measured the live file count flat
-    #: while the view served).
-    retain_manifests: int | None = 256
+    #: >= max(retain_manifests, interval)).  The default 256 with
+    #: the 128-batch interval keeps _txn/ at ~O(400) files at any
+    #: uptime (the r17 soak measured the live file count flat while
+    #: the view served).
+    retain_manifests: int = 256
     #: how many newest checkpoint files to keep once a newer one is
     #: durable (the pointed-to checkpoint is never deleted).
     retain_checkpoints: int = 2
 
     def __post_init__(self):
-        if self.retain_manifests is not None:
-            if not self.checkpoint_every:
+        if "://" in self.path or self.path.startswith("file:"):
+            raise ValueError(
+                f"sink path {self.path!r} is a URI: the txn sink "
+                "commits by os.replace and needs a POSIX path (see "
+                "DURABILITY SCOPE in streaming/txn_sink.py)")
+        if not self.checkpoint_every or self.checkpoint_every < 1:
+            raise ValueError(
+                "checkpoint_every must be >= 1: manifests are only "
+                "deleted once a durable checkpoint makes them "
+                f"re-derivable (got {self.checkpoint_every})")
+        for name in ("retain_manifests", "retain_checkpoints"):
+            if getattr(self, name) < 1:
                 raise ValueError(
-                    "retain_manifests requires checkpoint_every: "
-                    "manifests may only be deleted once a durable "
-                    "checkpoint makes them re-derivable")
-            if self.retain_manifests < 1:
-                raise ValueError("retain_manifests must be >= 1 "
-                                 f"(got {self.retain_manifests})")
-        if self.retain_checkpoints < 1:
-            raise ValueError("retain_checkpoints must be >= 1 "
-                             f"(got {self.retain_checkpoints})")
+                    f"{name} must be >= 1 (got {getattr(self, name)})")
         self._refuse_plain_tree()
 
     def _refuse_plain_tree(self) -> None:
@@ -271,8 +272,7 @@ class TxnParquetTradesSink(Sink):
             return None
 
     def _maybe_checkpoint(self, batch_id: int) -> None:
-        every = self.checkpoint_every
-        if not every or (batch_id + 1) % every:
+        if (batch_id + 1) % self.checkpoint_every:
             return
         cp_name = f"checkpoint={batch_id}.parquet"
         cp_path = os.path.join(self.path, _TXN_DIR, cp_name)
@@ -291,18 +291,22 @@ class TxnParquetTradesSink(Sink):
         prev = self.read_checkpoint_pointer()
         if prev is not None and prev["batch"] > batch_id:
             # a newer checkpoint supersedes this (replayed) batch's:
-            # nothing to add, and with retention on, the manifests a
-            # from-scratch rebuild would walk may be deleted
+            # nothing to add, and retention may have deleted the
+            # manifests a from-scratch rebuild would walk
             return
         batches: list[int] = []
         rels: list[str] = []
-        lo = -1
-        if prev is not None and prev["batch"] <= batch_id:
+        if prev is not None:
             t = pq.read_table(
                 os.path.join(self.path, _TXN_DIR, prev["file"]))
             batches = t.column("batch_id").to_pylist()
             rels = t.column("final_rel").to_pylist()
             lo = prev["batch"]
+        else:
+            # the first checkpoint walks from the lowest manifest, not
+            # from 0: a stream checkpoint that resumes on a fresh root
+            # commits its first batch at N > 0
+            lo = min(self.committed_batches()) - 1
         for b in range(lo + 1, batch_id + 1):
             with open(self._manifest(b)) as f:
                 m = json.load(f)
@@ -326,8 +330,6 @@ class TxnParquetTradesSink(Sink):
         fsync (the pointer is the durability record deletion keys
         on); every step is idempotent and crash-tolerant — a partial
         sweep only leaves extra files, never a gap above the floor."""
-        if self.retain_manifests is None:
-            return
         ptr = self.read_checkpoint_pointer()
         if ptr is None:
             return

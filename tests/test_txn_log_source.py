@@ -336,7 +336,7 @@ def test_checkpoint_incremental_and_replay_safe(tmp_path):
     root = str(tmp_path / "trades")
     _fabricate_log(root, 32, files_per_batch=2)
     sink = TxnParquetTradesSink(root, checkpoint_every=8,
-                                retain_manifests=None)
+                                retain_checkpoints=4)
     for b in range(32):
         sink._maybe_checkpoint(b)
     assert sink.read_checkpoint_pointer()["batch"] == 31
@@ -410,7 +410,8 @@ def test_manifest_retention_bounds_file_count(tmp_path):
     planning over the retained log is bit-equal to the unretained
     twin's."""
     roots = {}
-    for tag, retain in (("ret", 6), ("full", None)):
+    # the unretained twin's retention reaches past the 40-batch log
+    for tag, retain in (("ret", 6), ("full", 40)):
         root = str(tmp_path / tag)
         _fabricate_log(root, 40, files_per_batch=2)
         sink = TxnParquetTradesSink(root, checkpoint_every=8,
@@ -457,7 +458,8 @@ def test_reader_resume_below_retention_floor(tmp_path):
     the gap from the checkpoint.  Planned files equal the unretained
     twin's for the same range."""
     roots = {}
-    for tag, retain in (("ret", 4), ("full", None)):
+    # the unretained twin's retention reaches past the 40-batch log
+    for tag, retain in (("ret", 4), ("full", 40)):
         root = str(tmp_path / tag)
         _fabricate_log(root, 40)
         sink = TxnParquetTradesSink(root, checkpoint_every=8,
@@ -540,9 +542,9 @@ def test_retention_crash_windows(tmp_path, monkeypatch):
 
 
 def test_retention_validation():
-    """retain_manifests without a checkpoint (nothing would make the
-    deleted manifests re-derivable) and degenerate retain values are
-    rejected up front."""
+    """Retention is always on, so a sink without a checkpoint interval
+    (nothing would make the deleted manifests re-derivable) and
+    degenerate retain values are rejected up front."""
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="checkpoint_every"):

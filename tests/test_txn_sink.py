@@ -15,7 +15,8 @@ Crash windows proven here (txn_sink.py module docstring):
       replayed write is a byte-level no-op: no new paths, no rewrites.
 
 Also: a tree written by the removed plain parquet sink is refused
-untouched, and the sink's introspection surface (committed_batches /
+untouched, a URI sink path is refused, a root whose first batch is
+past 0 checkpoints, and the sink's introspection surface (committed_batches /
 visible_files) carries the same evidence the JDBC sink's replay test
 does (VERDICT r8 directive 7).
 """
@@ -267,6 +268,40 @@ def test_plain_sink_tree_is_refused_untouched(spark, tmp_path):
     sink.write(_batch(spark, range(2), day=1), batch_id=0)
     TxnParquetTradesSink(sink.path)
     TxnParquetTradesSink(str(tmp_path / "missing"))
+
+
+def test_uri_sink_path_is_refused(tmp_path):
+    """The commit is os.replace on a POSIX path; a URI path would stage
+    through Spark, publish nothing and let the stream commit its
+    offsets, so it is refused up front."""
+    for uri in (f"file://{tmp_path}/out", f"file:{tmp_path}/out",
+                "s3a://bucket/trades"):
+        with pytest.raises(ValueError, match="POSIX path"):
+            TxnParquetTradesSink(uri)
+    assert os.listdir(tmp_path) == []
+
+
+def test_first_checkpoint_on_root_starting_past_batch_zero(spark, tmp_path):
+    """A stream checkpoint that resumes on a fresh root (the plain-sink
+    upgrade) commits its first batch at N > 0.  The first checkpoint
+    walks from the lowest manifest, and a replay of the checkpointing
+    batch rolls forward instead of failing on a batch=0 manifest that
+    never existed."""
+    sink = TxnParquetTradesSink(str(tmp_path / "out"), checkpoint_every=2)
+    for b in (1, 2, 3):
+        sink.write(_batch(spark, range(2 * b, 2 * b + 2), day=b), b)
+    assert sink.committed_batches() == [1, 2, 3]
+    ptr = sink.read_checkpoint_pointer()
+    assert ptr["batch"] == 3
+    import pyarrow.parquet as pq
+    t = pq.read_table(os.path.join(sink.path, "_txn", ptr["file"]))
+    assert sorted(set(t.column("batch_id").to_pylist())) == [1, 2, 3]
+    assert sorted(t.column("final_rel").to_pylist()) == \
+        sorted(sink.visible_files())
+    before = _tree_snapshot(sink)
+    sink.write(_batch(spark, range(40, 42), day=9), 3)    # replay
+    assert _tree_snapshot(sink) == before
+    assert len(_rows(spark, sink.path)) == 6
 
 
 # ---------------------------------------------------------------------
