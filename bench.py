@@ -112,7 +112,9 @@ def main() -> None:
     # Offline index-build phase (plans/prepare.py): train the shared
     # coarse quantizer / IVF-PQ index and materialize the dedup
     # family's persisted candidate relations for the TIMED sf_dir,
-    # timed SEPARATELY as index_build_sec.  A deployed engine builds
+    # timed SEPARATELY as index_build_sec: the wall time of the phase,
+    # whose builds overlap (the per-build times in BENCH_QUERIES.json
+    # overlap too, so they do not sum to it).  A deployed engine builds
     # these once offline (FAISS-style train-then-serve); charging the
     # build to whichever query runs first made run-1 totals ~20 s
     # heavier than steady state (BENCH_QUERIES.json run_totals_sec)

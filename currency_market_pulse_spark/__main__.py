@@ -2,7 +2,7 @@
 reference's two HTTP services plus the import pipeline.
 
     python -m currency_market_pulse_spark trends \
-        --trades-path PATH --from 2024-01-01T00:00:00 \
+        --trades-path PATH [PATH ...] --from 2024-01-01T00:00:00 \
         --to 2024-01-31T00:00:00 --cur-from PUR --cur-to USD
     python -m currency_market_pulse_spark import \
         --source-dir DIR --sink-path PATH --checkpoint DIR [--once]
@@ -54,8 +54,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     sub = p.add_subparsers(dest="cmd", required=True)
 
     t = sub.add_parser("trends", help="windowed min/max/mean/median for a pair")
-    t.add_argument("--trades-path", required=True,
-                   help="parquet path of normalized trades (importer output)")
+    t.add_argument("--trades-path", required=True, nargs="+",
+                   help="parquet root(s) of normalized trades (importer "
+                        "output); each root is read on its own and the "
+                        "roots are unioned")
     t.add_argument("--from", dest="date_from", required=True, type=_parse_ts)
     t.add_argument("--to", dest="date_to", required=True, type=_parse_ts)
     t.add_argument("--cur-from", required=True)
@@ -140,7 +142,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     try:
         if args.cmd == "trends":
             from currency_market_pulse_spark.api import PulseEngine
-            trades = spark.read.parquet(args.trades_path)
+            from functools import reduce
+            # one read per root: a single read over two sink roots
+            # fails partition discovery (CONFLICTING_DIRECTORY_STRUCTURES)
+            trades = reduce(lambda a, b: a.unionByName(b),
+                            [spark.read.parquet(r) for r in args.trades_path])
             eng = PulseEngine(spark, trades)
             rows = eng.trends(args.date_from, args.date_to,
                               args.cur_from, args.cur_to)

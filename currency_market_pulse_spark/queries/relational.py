@@ -26,17 +26,26 @@ from currency_market_pulse_spark.sources.catalog import (
 @query(
     "q1_pricing_summary",
     oracle="""
+WITH l AS (
+  SELECT l_returnflag, l_linestatus, l_quantity, l_extendedprice,
+         l_discount,
+         CAST(l_quantity AS DECIMAL(15,2)) AS qty,
+         CAST(l_extendedprice AS DECIMAL(15,2)) AS price,
+         CAST(l_discount AS DECIMAL(15,2)) AS disc,
+         CAST(l_tax AS DECIMAL(15,2)) AS tax
+  FROM lineitem
+  WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00')
 SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+       CAST(round(sum(qty), 2) AS DOUBLE) AS sum_qty,
+       CAST(round(sum(price), 2) AS DOUBLE) AS sum_base_price,
+       CAST(round(sum(price * (1 - disc)), 2) AS DOUBLE) AS sum_disc_price,
+       CAST(round(sum(price * (1 - disc) * (1 + tax)), 2) AS DOUBLE)
+         AS sum_charge,
        round(avg(l_quantity), 6) AS avg_qty,
        round(avg(l_extendedprice), 6) AS avg_price,
        round(avg(l_discount), 6) AS avg_disc,
        count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
+FROM l
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """,
@@ -45,17 +54,29 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-aggregate, the map-side-combine
     workhorse.  At 100 TB: partial aggregation reduces each scan task to
     ~6 rows before the (tiny) shuffle — plan must show two
-    HashAggregates around one Exchange."""
+    HashAggregates around one Exchange.
+
+    The four sums add exact decimals (the columns hold whole cents,
+    TPC-H's DECIMAL(15,2)): a sum of doubles depends on the order the
+    splits combine in, and one group of the generated sf1 sits on a
+    half-cent rounding boundary, so its rounded sum changed with the
+    split count."""
     l = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    qty, price, disc, tax = (F.col(c).cast("decimal(15,2)") for c in (
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax"))
+    disc_price = price * (1 - disc)
+
+    def cents(total):
+        return F.round(F.sum(total), 2).cast("double")
+
     return (
         l.filter(F.col("l_shipdate") <= F.lit("2000-12-01 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
+            cents(qty).alias("sum_qty"),
+            cents(price).alias("sum_base_price"),
+            cents(disc_price).alias("sum_disc_price"),
+            cents(disc_price * (1 + tax)).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),

@@ -175,9 +175,8 @@ def test_ivf_index_concurrent_miss_trains_once(spark, monkeypatch):
 def test_prepare_indexes_repeat_call_runs_no_job(spark):
     """Each build materializes what it persists, and the unpersisted
     small-corpus token relation is not counted at all: a cold prepare
-    on sf0.01 runs fewer than 30 jobs (32 while prepare counted the
-    relations itself), and a repeat call is a store hit that runs no
-    Spark job (7 before)."""
+    on sf0.001 runs exactly 29 jobs, overlapped or not, and a repeat
+    call is a store hit that runs no Spark job."""
     from currency_market_pulse_spark.plans.cache import SESSION
     from currency_market_pulse_spark.plans.prepare import prepare_indexes
     from tests.conftest import SF_DIR
@@ -195,5 +194,99 @@ def test_prepare_indexes_repeat_call_runs_no_job(spark):
     assert set(first) == set(again) == {
         "coarse_quantizer", "ivfpq_index", "token_relation",
         "jaccard_pairs", "minhash_bands", "simhash_sigs", "total"}
-    assert 0 < j1 - j0 < 30
+    assert j1 - j0 == 29
     assert j2 - j1 == 0
+
+
+def _index_rows(spark, sf_dir) -> dict[str, list]:
+    """Sorted rows of each structure prepare_indexes builds."""
+    from currency_market_pulse_spark.plans.prepare import index
+
+    return {name: sorted(map(tuple, df.collect())) for name, df in (
+        ("jaccard_pairs", index(spark, sf_dir, "jaccard_pairs")),
+        ("minhash_pairs", index(spark, sf_dir, "minhash_pairs")),
+        ("simhash60_sigs", index(spark, sf_dir, "simhash60_sigs")),
+        ("ivf_encoded", index(spark, sf_dir, "ivf_index")[2]))}
+
+
+def test_prepare_indexes_equals_each_build_alone(spark):
+    """The overlapped cold build yields the same rows as building each
+    structure on its own, one after another, in a fresh store entry."""
+    from currency_market_pulse_spark.plans.cache import SESSION
+    from currency_market_pulse_spark.plans.prepare import prepare_indexes
+    from tests.conftest import SF_DIR
+
+    SESSION.evict(spark, SF_DIR)
+    try:
+        prepare_indexes(spark, SF_DIR)
+        together = _index_rows(spark, SF_DIR)
+        SESSION.evict(spark, SF_DIR)
+        alone = _index_rows(spark, SF_DIR)
+    finally:
+        SESSION.evict(spark, SF_DIR)
+    assert all(together.values())
+    assert together == alone
+
+
+def test_prepare_indexes_jobs_carry_caller_group(spark):
+    """The builds run on worker threads, yet every job of a cold
+    prepare belongs to the job group the caller set."""
+    from currency_market_pulse_spark.plans.cache import SESSION
+    from currency_market_pulse_spark.plans.prepare import prepare_indexes
+    from tests.conftest import SF_DIR
+
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    SESSION.evict(spark, SF_DIR)
+    sc.setJobGroup("prepare-group", "prepare-group")
+    try:
+        j0 = dag.numTotalJobs()
+        prepare_indexes(spark, SF_DIR)
+        j1 = dag.numTotalJobs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        SESSION.evict(spark, SF_DIR)
+    grouped = sc.statusTracker().getJobIdsForGroup("prepare-group")
+    assert j1 - j0 > 0
+    assert len(grouped) == j1 - j0
+
+
+def test_prepare_indexes_failed_build_raises_and_retries(spark, monkeypatch):
+    """A build that raises makes prepare_indexes raise once the other
+    builds have finished; the next call rebuilds only what failed."""
+    import pytest
+
+    from currency_market_pulse_spark.plans import prepare
+    from currency_market_pulse_spark.plans.cache import SESSION
+    from tests.conftest import SF_DIR
+
+    calls: list[str] = []
+    fail_once = {"minhash_pairs"}
+
+    def counted(name):
+        build = prepare.BUILDS[name]
+
+        def run(spark, sf_dir):
+            calls.append(name)
+            if name in fail_once:
+                fail_once.discard(name)
+                raise RuntimeError("boom")
+            return build(spark, sf_dir)
+        return run
+
+    for name in ("ivf_index", "jaccard_pairs", "minhash_pairs",
+                 "simhash60_n"):
+        monkeypatch.setitem(prepare.BUILDS, name, counted(name))
+    SESSION.evict(spark, SF_DIR)
+    try:
+        with pytest.raises(RuntimeError, match="boom"):
+            prepare.prepare_indexes(spark, SF_DIR)
+        assert sorted(calls) == ["ivf_index", "jaccard_pairs",
+                                 "minhash_pairs", "simhash60_n"]
+        calls.clear()
+        times = prepare.prepare_indexes(spark, SF_DIR)
+        assert calls == ["minhash_pairs"]
+    finally:
+        SESSION.evict(spark, SF_DIR)
+    assert times["total"] > 0

@@ -49,6 +49,30 @@ def test_cli_trends_emits_json_page(spark, tmp_path, capsys):
     assert page["min"] == 2.0 and page["max"] == 2.000002
 
 
+def test_cli_trends_unions_trade_roots(spark, tmp_path, capsys):
+    """Two sink roots (an upgraded deployment's old and new root) are
+    read one by one and unioned: one window holds both roots' trades."""
+    from currency_market_pulse_spark.streaming.txn_sink import (
+        TxnParquetTradesSink,
+    )
+
+    roots = [str(tmp_path / name) for name in ("old", "new")]
+    for b, root in enumerate(roots):
+        TxnParquetTradesSink(root).write(spark.createDataFrame([Row(
+            user_id="u", currency_from="EUR", currency_to="GBP",
+            amount_sell_micros=1_000_000, amount_buy_micros=2_000_000,
+            rate=2.0 + b, originating_country="FR",
+            time_placed=dt.datetime(2024, 1, 1, 12, b))]), b)
+    rc = main(["trends", "--trades-path", *roots,
+               "--from", "2024-01-01T12:00:00Z",
+               "--to", "2024-01-01T13:00:00Z",
+               "--cur-from", "EUR", "--cur-to", "GBP"], spark=spark)
+    assert rc == 0
+    lines = [json.loads(ln) for ln in
+             capsys.readouterr().out.strip().splitlines()]
+    assert [(p["min"], p["max"]) for p in lines] == [(2.0, 3.0)]
+
+
 def test_cli_query_runs_registered_entry(spark, capsys):
     rc = main(["query", "q1_pricing_summary", "--sf-dir", SF_DIR,
                "--limit", "3"], spark=spark)

@@ -258,15 +258,16 @@ def test_fresh_reader_defers_mid_publish_tip_after_crash(spark, tmp_path):
 
 # ---- txn-log checkpoint compaction (VERDICT r14 directive 2) --------
 
-def _fabricate_log(root, n, files_per_batch=1, undated_at=()):
-    """Hand-build a txn log: n contiguous manifests, each recording
-    files_per_batch published (empty) data files; batches in
-    ``undated_at`` record a path with NO trade_date= partition."""
+def _fabricate_log(root, n, files_per_batch=1, undated_at=(), start=0):
+    """Hand-build a txn log: n contiguous manifests from batch
+    ``start``, each recording files_per_batch published (empty) data
+    files; batches in ``undated_at`` record a path with NO trade_date=
+    partition."""
     import json as _json
 
     txn = os.path.join(root, "_txn")
     os.makedirs(txn, exist_ok=True)
-    for b in range(n):
+    for b in range(start, start + n):
         files = []
         for k in range(files_per_batch):
             if b in undated_at:
@@ -284,6 +285,22 @@ def _fabricate_log(root, n, files_per_batch=1, undated_at=()):
 
 def _part_key(p):
     return (p.batch_id, p.file_path, p.trade_date)
+
+
+def test_log_starting_past_batch_zero_is_served(tmp_path):
+    """A root whose first manifest is batch 5 and that has no
+    checkpoint pointer yet (a stream checkpoint resumed onto a fresh
+    root): a fresh reader finds tip 8, a rebuild plans every file of
+    batches 5-8, and a resumed cursor plans only its suffix."""
+    root = str(tmp_path / "trades")
+    _fabricate_log(root, 4, start=5)
+    reader = _ManifestStreamReader({"path": root})
+    end = reader.latestOffset()
+    assert end == {"batch": 8}
+    assert sorted(p.batch_id for p in reader.partitions(
+        {"batch": -1}, end)) == [5, 6, 7, 8]
+    assert sorted(p.batch_id for p in reader.partitions(
+        {"batch": 6}, end)) == [7, 8]
 
 
 def test_checkpoint_bounds_rebuild_manifest_reads(tmp_path, monkeypatch):
